@@ -961,7 +961,7 @@ def q_av_features(spark, sf_dir):
 
 def q_cross_domain_discovery(spark, sf_dir):
     """Cross-domain discovery gate: cycle-1 edges → canonicalize → global
-    Bloom URL-seen admission → next-cycle atags (plans/discovery.py, the
+    cuckoo URL-seen admission → next-cycle atags (plans/discovery.py, the
     reference's anchor-tags side input).  The cycle-1 VISITED set is
     ingested into the URL-seen service first, so the admission step must
     genuinely REJECT the fixture's cross-domain links to already-visited
@@ -993,7 +993,7 @@ def q_cross_domain_discovery(spark, sf_dir):
     engine.run_waves(pages, wave_budget=None)
     fd = FrontierDedup(
         spark, tempfile.mkdtemp(prefix="msx_seen_"), n_buckets=8,
-        m_bits_per_bucket=1 << 16,
+        cuckoo_m_buckets=1 << 10,
     )
     # seed the global URL-seen service with everything cycle 1 visited —
     # the admission step below must reject those, not just pass everything

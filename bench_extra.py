@@ -47,11 +47,7 @@ def docs_with_copies(spark, sf_dir):
 def breakdown_minhash(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    from marginaliasearch_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        unpersist_transients,
-        with_minhash,
-    )
+    from marginaliasearch_spark.operators.dedup import minhash_lsh_pairs, with_minhash
 
     print("== minhash_lsh_pairs breakdown ==")
     allv = docs_with_copies(spark, sf_dir)
@@ -64,17 +60,13 @@ def breakdown_minhash(spark, sf_dir):
     sigp.unpersist()
     pairs = minhash_lsh_pairs(allv, jaccard_threshold=0.6)
     timed(spark, "full minhash_lsh_pairs count", lambda: pairs.count())
-    unpersist_transients()
     spark.catalog.clearCache()
 
 
 def breakdown_compose(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    from marginaliasearch_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        unpersist_transients,
-    )
+    from marginaliasearch_spark.operators.dedup import minhash_lsh_pairs
     from marginaliasearch_spark.operators.graph import connected_components
     from marginaliasearch_spark.operators.sampling import dedup_keep_best
     from marginaliasearch_spark.plans.corpus_pipeline import compose_training_set
@@ -117,7 +109,6 @@ def breakdown_compose(spark, sf_dir):
         "connected_components over pairs",
         lambda: (lambda g: (g, g.count()))(connected_components(pc))[0],
     )
-    unpersist_transients()
     timed(
         spark,
         "dedup_keep_best window",
@@ -138,11 +129,7 @@ def breakdown_compose(spark, sf_dir):
 def breakdown_simhash(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    from marginaliasearch_spark.operators.dedup import (
-        simhash_pairs,
-        unpersist_transients,
-        with_simhash,
-    )
+    from marginaliasearch_spark.operators.dedup import simhash_pairs, with_simhash
 
     print("== simhash_pairs breakdown ==")
     docs = (
@@ -157,26 +144,21 @@ def breakdown_simhash(spark, sf_dir):
     allv = docs.unionByName(copies)
     sig = with_simhash(allv).select("doc_id", "simhash")
     timed(spark, "signatures (with_simhash, noop)", lambda: noop(sig))
-    pairs = simhash_pairs(allv, max_hamming=3)
+    transients: list = []
+    pairs = simhash_pairs(allv, max_hamming=3, transients=transients)
     timed(spark, "full simhash_pairs count", lambda: pairs.count())
-    unpersist_transients()
+    for df in transients:
+        df.unpersist()
     spark.catalog.clearCache()
 
 
 def breakdown_cc(spark, sf_dir):
-    """Old label-propagation CC vs the round-6 scale-adaptive contraction
-    on the pathological pair graph: wall + Spark job count (the old form
-    paid ~2 jobs + 3 exchanges per round for 8+ rounds)."""
+    """Scale-adaptive CC on the pathological pair graph: wall + Spark
+    job count."""
     from pyspark.sql import functions as F
 
-    from marginaliasearch_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        unpersist_transients,
-    )
-    from marginaliasearch_spark.operators.graph import (
-        _cc_label_propagation,
-        connected_components,
-    )
+    from marginaliasearch_spark.operators.dedup import minhash_lsh_pairs
+    from marginaliasearch_spark.operators.graph import connected_components
 
     print("== connected_components breakdown (pathological pairs) ==")
     boiler = F.lit(
@@ -196,19 +178,15 @@ def breakdown_cc(spark, sf_dir):
         docs.unionByName(copies), jaccard_threshold=0.6
     ).persist()
     print(f"  pairs: {pairs.count()}")
-    unpersist_transients()
     sc = spark.sparkContext
-    for label, fn in (
-        ("old label-propagation CC", _cc_label_propagation),
-        ("round-6 contraction CC", connected_components),
-    ):
-        sc.setJobGroup(label, label)
-        t0 = time.perf_counter()
-        n = fn(pairs).count()
-        dt = time.perf_counter() - t0
-        jobs = len(sc.statusTracker().getJobIdsForGroup(label))
-        sc.setJobGroup(None, None)
-        print(f"  {label:46s} {dt:7.3f}s  rows={n}  spark_jobs={jobs}")
+    label = "connected_components"
+    sc.setJobGroup(label, label)
+    t0 = time.perf_counter()
+    n = connected_components(pairs).count()
+    dt = time.perf_counter() - t0
+    jobs = len(sc.statusTracker().getJobIdsForGroup(label))
+    sc.setJobGroup(None, None)
+    print(f"  {label:46s} {dt:7.3f}s  rows={n}  spark_jobs={jobs}")
     pairs.unpersist()
     spark.catalog.clearCache()
 

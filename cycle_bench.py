@@ -97,7 +97,7 @@ def main() -> None:
     ).collect()[0]
 
     # ---- discovery cycles: 3 × (crawl → edge harvest → canonicalize →
-    # global Bloom admission → next-cycle atags) against one persistent
+    # global cuckoo admission → next-cycle atags) against one persistent
     # URL-seen service.  Asserts the convergence invariants at bench
     # scale: monotone seen growth, zero re-admissions once seen.
     from marginaliasearch_spark.functions.udfs import canonicalize
@@ -106,7 +106,7 @@ def main() -> None:
 
     fd = FrontierDedup(
         spark, tempfile.mkdtemp(prefix="msx_fd_"), n_buckets=32,
-        m_bits_per_bucket=1 << 22,
+        cuckoo_m_buckets=1 << 16,
     )
     atags = None
     disc_cycles = []
@@ -182,7 +182,7 @@ def main() -> None:
         f"{int(meta['skipped'] or 0):,} sampler-skipped.  A static web with "
         "stored validators retains most documents via 304/header/LSH — the "
         "production steady state where bandwidth is spent only on change.\n\n"
-        "### Discovery cycles (crawl → harvest → Bloom admission ×3)\n\n"
+        "### Discovery cycles (crawl → harvest → cuckoo admission ×3)\n\n"
         "| cycle | wall s | visited | new seen keys | admitted discoveries | seen total | seen paths | load1 |\n"
         "|---|---|---|---|---|---|---|---|\n"
         + "".join(

@@ -4,7 +4,7 @@
 Exercises the scale-critical pieces of the north rule on a large
 generator-backed frontier (FIXTURES.md §6): Zipf-skewed domains, the
 *bit-exact* URL hash computed distributed (Arrow batches over the numpy
-murmur kernel), Bloom-prefiltered anti-join dedup vs the exact anti-join,
+murmur kernel), cuckoo-prefiltered anti-join dedup vs the exact anti-join,
 and politeness wave selection (rank-per-domain window).
 
 Nothing is materialized driver-side: rows derive from `spark.range(N)`
@@ -85,7 +85,10 @@ def main() -> None:
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from marginaliasearch_spark.operators.bloom import bloom_anti_join
+    from marginaliasearch_spark.operators.cuckoo import (
+        build_cuckoo_per_bucket,
+        cuckoo_anti_join,
+    )
 
     spark = build_spark(cpus)
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
@@ -99,7 +102,7 @@ def main() -> None:
     seen = frontier.select("bucket", "url_hash")
     # realistic discovery regime: a wave's candidate batch is a small
     # fraction of the historical seen-set (~5% here), ~half already seen —
-    # the exact join must shuffle ALL of seen every wave; the Bloom path
+    # the exact join must shuffle ALL of seen every wave; the cuckoo path
     # probes candidates and only scans seen for the maybe-positives
     n_cand = max(n_rows // 20, 10_000)
     cand_lo = n_rows - n_cand // 2
@@ -113,44 +116,22 @@ def main() -> None:
     t_exact = time.perf_counter() - t0
 
     # snapshot-amortized path: filters are maintained incrementally across
-    # waves (bloom_or_new_keys), so the steady-state wave cost is the probe
-    from marginaliasearch_spark.operators.bloom import build_bloom_per_bucket
-
-    t0 = time.perf_counter()
-    blooms = build_bloom_per_bucket(seen).cache()
-    blooms.count()
-    t_build = time.perf_counter() - t0
-
-    t0 = time.perf_counter()
-    bloom_new = bloom_anti_join(cands, seen, blooms=blooms).count()
-    t_bloom = time.perf_counter() - t0
-    assert bloom_new == exact_new, (bloom_new, exact_new)
-    from marginaliasearch_spark.operators.bloom import unpersist_transients
-
-    unpersist_transients()  # release the probe intermediate (result counted)
-
-    # cuckoo representation (north rule: "Bloom/cuckoo"): lower FPR per
-    # bit (fewer maybe-positives reach the exact check) + deletion; the
-    # batch-vectorized placement also out-builds Bloom's 7-probe
-    # bitwise_or.at scatter at 10^7 (measured ~6x)
-    from marginaliasearch_spark.operators.cuckoo import (
-        build_cuckoo_per_bucket,
-        cuckoo_anti_join,
-    )
-    from marginaliasearch_spark.operators.cuckoo import (
-        unpersist_transients as cuckoo_unpersist,
-    )
-
+    # waves (cuckoo_insert_new_keys), so the steady-state wave cost is the
+    # probe
     t0 = time.perf_counter()
     cfilters = build_cuckoo_per_bucket(seen).cache()
     cfilters.count()
     t_cbuild = time.perf_counter() - t0
 
+    transients: list = []
     t0 = time.perf_counter()
-    cuckoo_new = cuckoo_anti_join(cands, seen, filters=cfilters).count()
+    cuckoo_new = cuckoo_anti_join(
+        cands, seen, filters=cfilters, transients=transients
+    ).count()
     t_cuckoo = time.perf_counter() - t0
     assert cuckoo_new == exact_new, (cuckoo_new, exact_new)
-    cuckoo_unpersist()
+    for df in transients:  # release the probe intermediate (result counted)
+        df.unpersist()
 
     # politeness wave selection: first 5 queued URLs per domain
     t0 = time.perf_counter()
@@ -167,10 +148,7 @@ def main() -> None:
         "gen_hash_urls_per_sec": round(n / t_gen, 0),
         "candidates": n_cands,
         "exact_antijoin_sec": round(t_exact, 2),
-        "bloom_build_sec": round(t_build, 2),
-        "bloom_antijoin_sec": round(t_bloom, 2),
         "dedup_rows_per_sec_exact": round(n_cands / t_exact, 0),
-        "dedup_rows_per_sec_bloom": round(n_cands / t_bloom, 0),
         "cuckoo_build_sec": round(t_cbuild, 2),
         "cuckoo_antijoin_sec": round(t_cuckoo, 2),
         "dedup_rows_per_sec_cuckoo": round(n_cands / t_cuckoo, 0),
@@ -188,13 +166,10 @@ def main() -> None:
         f"- exact anti-join dedup ({n_cands:,} candidates, ~50% already seen, vs {n:,} seen; "
         f"full seen-set shuffled): {t_exact:.1f}s ({n_cands / t_exact:,.0f} URLs deduped/s) "
         f"→ {exact_new:,} new\n"
-        f"- Bloom build (once, then incremental OR per snapshot): {t_build:.1f}s\n"
-        f"- Bloom-cogrouped anti-join (steady-state wave cost; seen scanned, never "
-        f"shuffled): {t_bloom:.1f}s ({n_cands / t_bloom:,.0f} URLs deduped/s; result identical)\n"
         f"- Cuckoo build (16-bit fp, 4-slot buckets; once, then incremental "
         f"inserts per snapshot): {t_cbuild:.1f}s\n"
-        f"- Cuckoo-cogrouped anti-join (FPR ~0.01% vs Bloom ~0.3% -> ~25x "
-        f"fewer maybe-positives to the exact check; supports forget()): "
+        f"- Cuckoo-cogrouped anti-join (steady-state wave cost; seen scanned, "
+        f"never shuffled; FPR ~0.01%; supports forget()): "
         f"{t_cuckoo:.1f}s ({n_cands / t_cuckoo:,.0f} URLs deduped/s; result identical)\n"
         f"- politeness wave selection (top-5 per domain window): {t_wave:.1f}s\n"
     )

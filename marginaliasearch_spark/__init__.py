@@ -3,7 +3,7 @@ MarginaliaSearch crawler core (reference: MarginaliaSearch/MarginaliaSearch,
 studied read-only at /root/reference).
 
 Architecture: wave-iterative batch crawl over a bucketed frontier table,
-politeness enforced by per-top-domain grouped UDFs, dedup by Bloom-prefiltered
+politeness enforced by per-top-domain grouped UDFs, dedup by cuckoo-prefiltered
 anti-joins, payload validation in vectorized Arrow UDFs.  See SURVEY.md.
 """
 

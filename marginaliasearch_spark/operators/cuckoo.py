@@ -1,19 +1,18 @@
-"""Partitioned cuckoo-filter dedup — the second seen-set representation
-the north rule names ("partitioned Bloom/cuckoo filter keyed by
+"""Partitioned cuckoo-filter dedup — the URL-seen filter behind
+``FrontierDedup`` (north rule: "partitioned Bloom/cuckoo filter keyed by
 canonicalized-URL hash").
 
-Same plan shape as operators/bloom.py — one filter per frontier bucket,
-built/updated via ``applyInPandas``, candidates probed through a bucket
-cogroup, maybe-positives resolved by the scan-only exact check, result ≡
-the exact anti-join — with the two properties Bloom cannot offer:
+One filter per frontier bucket, built/updated via ``applyInPandas``,
+candidates probed through a bucket cogroup, maybe-positives resolved by
+the scan-only exact check — result ≡ the exact anti-join.  Two properties
+make it the seen-set representation:
 
 - **deletion** (``cuckoo_delete_keys``): a stored fingerprint can be
   removed, so the seen-set can forget (expired 404 memos, retracted
   domains) without a full rebuild;
-- **lower false-positive rate per bit**: 16-bit fingerprints in 4-slot
-  buckets give FPR ≈ 2·b·2⁻¹⁶ ≈ 0.012% at ~19 bits/key, an
-  order of magnitude below the 12-bit/key Bloom's ~0.3% — the exact-check
-  traffic (the only shuffle the admission pays) shrinks accordingly.
+- **low false-positive rate per bit**: 16-bit fingerprints in 4-slot
+  buckets give FPR ≈ 2·b·2⁻¹⁶ ≈ 0.012% at ~19 bits/key, so the
+  exact-check traffic (the only shuffle the admission pays) stays small.
 
 Construction is the standard partial-key cuckoo filter (Fan et al.,
 "Cuckoo Filter: Practically Better Than Bloom", CoNEXT 2014):
@@ -30,8 +29,7 @@ residue that found both buckets full (a few % at the 0.84 design load).
 Keys whose eviction walk exceeds the kick budget land in a per-filter
 STASH (serialized alongside the table and probed on lookup) — the filter
 therefore NEVER has false negatives, which is what makes
-``cuckoo_anti_join`` ≡ the exact anti-join, the same contract
-``bloom_anti_join`` carries.
+``cuckoo_anti_join`` ≡ the exact anti-join.
 """
 
 from __future__ import annotations
@@ -47,20 +45,6 @@ from pyspark.sql import types as T
 SLOTS = 4  # slots per bucket (b)
 _LOAD = 0.84  # design load factor for sizing
 _MAX_KICKS = 500
-
-_TRANSIENT: list = []
-
-
-def unpersist_transients() -> None:
-    """Release persisted probe intermediates (same contract as
-    operators/bloom.unpersist_transients)."""
-    while _TRANSIENT:
-        df = _TRANSIENT.pop()
-        try:
-            df.unpersist()
-        except Exception:  # noqa: BLE001
-            pass
-
 
 def size_for(n_keys: int) -> int:
     """Number of buckets (power of two) for ``n_keys`` at the design load."""
@@ -273,11 +257,11 @@ def cuckoo_insert_new_keys(
     new_seen: DataFrame,
     key_col: str = "url_hash",
     bucket_col: str = "bucket",
-    default_m_buckets: int = 1 << 18,
+    default_m_buckets: int = 1 << 17,
 ) -> DataFrame:
     """Incremental snapshot update: insert only the NEW keys into each
     bucket's existing table (cuckoo tables are mutable — the historical
-    seen-set is never rescanned, the Bloom-OR analogue)."""
+    seen-set is never rescanned)."""
 
     def merge(old_pdf: pd.DataFrame, new_pdf: pd.DataFrame) -> pd.DataFrame:
         if old_pdf.empty and new_pdf.empty:
@@ -319,10 +303,9 @@ def cuckoo_delete_keys(
     key_col: str = "url_hash",
     bucket_col: str = "bucket",
 ) -> DataFrame:
-    """Remove keys from the per-bucket filters (the operation Bloom cannot
-    do).  Caller contract (standard cuckoo semantics): only delete keys
-    that were actually inserted, else a same-fingerprint twin may lose its
-    slot.  Used for seen-set expiry sweeps (404 memo retirement)."""
+    """Remove keys from the per-bucket filters.  Caller contract
+    (standard cuckoo semantics): only delete keys that were actually
+    inserted, else a same-fingerprint twin may lose its slot.  Used for seen-set expiry sweeps (404 memo retirement)."""
 
     def drop(filt_pdf: pd.DataFrame, rm_pdf: pd.DataFrame) -> pd.DataFrame:
         if filt_pdf.empty:
@@ -358,8 +341,13 @@ def cuckoo_anti_join(
 ) -> DataFrame:
     """candidates ∖ seen on key_col, cuckoo-prefiltered per bucket —
     ≡ ``candidates.join(seen, key, "left_anti")`` (stash ⇒ no false
-    negatives).  Same two-stage shape and persist/release contract as
-    ``bloom_anti_join``."""
+    negatives).
+
+    The flagged probe output feeds both the definitely-new and the
+    exact-check branch, so it is persisted; pass ``transients`` to own
+    its release — the caller unpersists every entry once the result is
+    materialized.  Without a list the cache lives until the session
+    ends."""
     if filters is None:
         filters = build_cuckoo_per_bucket(seen, key_col, bucket_col)
 
@@ -387,7 +375,8 @@ def cuckoo_anti_join(
         .applyInPandas(probe, flagged_schema)
         .persist()
     )
-    (transients if transients is not None else _TRANSIENT).append(flagged)
+    if transients is not None:
+        transients.append(flagged)
     definitely_new = flagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
     needs_check = flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
 

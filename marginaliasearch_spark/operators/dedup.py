@@ -20,32 +20,14 @@ Scale notes: every family is a shuffle-on-key design —
 
 from __future__ import annotations
 
+from typing import Optional
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
-
-# persisted signature subtrees awaiting release (simhash_pairs persists
-# its chunked signature table because both self-join sides consume it;
-# minhash_lsh_pairs is single-consumer since round 6 and persists
-# nothing; same contract as operators/bloom.py — callers that
-# materialize the result release them via unpersist_transients(), so a
-# long-lived driver doesn't accumulate MEMORY_AND_DISK blocks)
-_TRANSIENT: list = []
-
-
-def unpersist_transients() -> None:
-    """Release persisted signature subtrees from prior minhash_lsh_pairs /
-    simhash_pairs calls.  Call once the pairs result is materialized
-    (written, collected, or folded into a committed table)."""
-    while _TRANSIENT:
-        df = _TRANSIENT.pop()
-        try:
-            df.unpersist()
-        except Exception:  # noqa: BLE001 — session may already be gone
-            pass
 
 
 # ---------------------------------------------------------------------------
@@ -444,6 +426,7 @@ def simhash_pairs(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     seed: int = 42,
+    transients: Optional[list] = None,
 ) -> DataFrame:
     """Near-dup pairs with hamming(simhash) ≤ max_hamming.
 
@@ -453,6 +436,11 @@ def simhash_pairs(
     verification, all JVM-side.  (Four per-chunk joins + a union compute
     the same pair set but pay 4× the join/stage fixed cost; the exploded
     single join shuffles the same bytes once.)
+
+    The signature table feeds both sides of the self-join, so it is
+    persisted; pass ``transients`` to own its release — the caller
+    unpersists every entry once the pairs are materialized.  Without a
+    list the cache lives until the session ends.
     """
     sigs = with_simhash(docs, text_col, seed=seed).select(id_col, "simhash")
     chunk_structs = [
@@ -464,8 +452,6 @@ def simhash_pairs(
         )
         for i in range(4)
     ]
-    # the signature subtree feeds both sides of the self-join; persist so
-    # the pandas UDF kernel runs once, not twice
     t = (
         sigs.select(
             id_col, "simhash", F.explode(F.array(*chunk_structs)).alias("c")
@@ -473,7 +459,8 @@ def simhash_pairs(
         .select(id_col, "simhash", "c.ci", "c.cv")
         .persist()
     )
-    _TRANSIENT.append(t)  # released by unpersist_transients()
+    if transients is not None:
+        transients.append(t)
 
     ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
     a = t.select(

@@ -8,8 +8,9 @@ operators a crawl pipeline builds on it:
   analogue: the new-domain queue orders candidates by a priority score —
   DomainTestingQueue.java:105-112; link-derived rank is the natural
   source of that score);
-- ``connected_components`` — small-label propagation, used to collapse
-  near-duplicate *pairs* (minhash/simhash/phash output) into dedup groups.
+- ``connected_components`` — min-id components by local contraction,
+  used to collapse near-duplicate *pairs* (minhash/simhash/phash output)
+  into dedup groups.
 
 Scale notes: each iteration is one shuffle on the join key; intermediate
 lineage is cut every few iterations (localCheckpoint) so plans stay flat;
@@ -17,6 +18,8 @@ convergence is detected with an aggregate, not a collect of the data.
 """
 
 from __future__ import annotations
+
+import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -122,9 +125,12 @@ def connected_components(
     - Large graphs: mixed-key local-contraction rounds — each mapping
       row (n, l) is hashed to BOTH partition(n) and partition(l), every
       task solves its local subgraph exactly (same numpy kernel) and
-      emits (node, local-root) star rows plus a changed flag.  One
-      exchange per round instead of three, and a round contracts whole
-      local subgraphs instead of single label hops.  The flag compares
+      emits (node, local-root) star rows plus a changed flag.  A round
+      that must continue pays two exchanges (the contraction repartition
+      plus the dedup of the star rows; the final round skips the dedup),
+      and contracts whole local subgraphs instead of single label hops.
+      Exhausting ``max_iterations`` before the fixpoint emits a
+      ``RuntimeWarning``: the labels are then not final.  The flag compares
       NON-TRIVIAL (n ≠ root) row sets only (a partition keyed by a
       member node legitimately emits the root's self-row it never
       received); all-tasks-unchanged ⇔ the relation is a function whose
@@ -140,11 +146,13 @@ def connected_components(
     capped (``max_bucket``), so component incident degree is capped by
     construction; ``rows_per_task`` sizes the average partition.
 
-    Non-integral id types take the previous min-label-propagation path
-    (``_cc_label_propagation``) unchanged."""
+    Ids must be integral; map other id types to longs first (e.g.
+    ``xxhash64``, as ``compose_training_set`` does)."""
     id_type = dict(pairs.dtypes).get(a_col)
     if id_type not in ("tinyint", "smallint", "int", "bigint"):
-        return _cc_label_propagation(pairs, a_col, b_col, max_iterations)
+        raise TypeError(
+            f"connected_components needs integral ids; {a_col!r} is {id_type}"
+        )
 
     import numpy as np
     import pandas as pd
@@ -219,7 +227,7 @@ def connected_components(
 
     R = edges
     nparts = max(2, -(-2 * ne // rows_per_task))
-    for _ in range(max_iterations):
+    for i in range(max_iterations):
         # duplicate (n,n) self-rows from the explode are harmless to the
         # UF kernel and excluded from the fixpoint compare (both sides of
         # ch go through np.unique), so no intra-round dedup exchange
@@ -232,10 +240,18 @@ def connected_components(
             .mapInPandas(contract, it_schema)
             .localCheckpoint()
         )
+        if i == 0:
+            edges.unpersist()  # round 1 is materialized; nothing reads edges again
         if R.agg(F.max("ch")).collect()[0][0] == 0:
             break
         R = R.dropDuplicates(["n", "l"])
-    edges.unpersist()
+    else:
+        warnings.warn(
+            f"connected_components: no fixpoint after {max_iterations} "
+            f"contraction rounds; component labels are not final",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     # at the fixpoint each id carries exactly one distinct component row;
     # min-agg (not dropDuplicates) keeps the extraction deterministic
     return _restore(
@@ -277,99 +293,6 @@ def _nontrivial_sorted(a, b):
     if len(arr) == 0:
         return arr
     return np.unique(arr, axis=0)
-
-
-def _cc_label_propagation(
-    pairs: DataFrame,
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-    max_iterations: int = 20,
-) -> DataFrame:
-    """Min-label propagation PLUS a pointer-jumping hop each round
-    (``component ← component[component]``, path doubling) — the generic
-    fallback for non-integral id types; an aggregate (not a collect)
-    checks the fixpoint."""
-    # both directions from ONE scan of pairs (a union of two selects
-    # would execute the upstream pair pipeline — often an expensive LSH
-    # plan — twice during cache materialization); pre-partitioned on the
-    # per-round join key so every iteration reuses the cached layout
-    # instead of re-shuffling the edge table
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(a_col).alias("a"), F.col(b_col).alias("b")),
-                    F.struct(F.col(b_col).alias("a"), F.col(a_col).alias("b")),
-                )
-            ).alias("e")
-        )
-        .select("e.a", "e.b")
-        .repartition(F.col("b"))
-        .dropDuplicates(["a", "b"])  # reuses the repartition layout: hash(b)
-        # clusters (a,b) well enough that EnsureRequirements inserts no
-        # second exchange — one shuffle where distinct-then-repartition paid two
-        .cache()
-    )
-    # seed component = min(id, min neighbor id): exactly what the first
-    # loop round would compute against identity labels, but as ONE
-    # aggregation instead of a join round (every node appears as `a`
-    # because edges carry both directions)
-    labels = edges.groupBy("a").agg(
-        F.least(F.col("a"), F.min("b")).alias("component")
-    ).withColumnRenamed("a", "id")
-
-    for i in range(max_iterations):
-        # self ∪ neighbor contributions → one min-aggregation (replaces
-        # the old groupBy + left-join pair: one shuffle fewer per round);
-        # the _self-tagged row carries the previous label through the agg
-        # so the fixpoint check needs no extra old⋈new join
-        contrib = (
-            edges.join(labels, edges.b == labels.id)
-            .select(F.col("a").alias("id"), "component", F.lit(False).alias("_self"))
-        )
-        stepped = (
-            contrib.unionByName(
-                labels.select("id", "component", F.lit(True).alias("_self"))
-            )
-            .groupBy("id")
-            .agg(
-                F.min("component").alias("component"),
-                F.min(F.when(F.col("_self"), F.col("component"))).alias(
-                    "old_component"
-                ),
-            )
-        )
-        # pointer jump: component ← component's own component (labels are
-        # node ids, so the label table doubles as the pointer table);
-        # measured note: a second jump per round does NOT help — the jump
-        # references `stepped` twice with no exchange reuse, so each extra
-        # jump doubles the per-round plan, and round counts on real pair
-        # graphs are propagation-limited, not chain-limited
-        ptr = stepped.select(
-            F.col("id").alias("p_id"), F.col("component").alias("p_comp")
-        )
-        stepped = stepped.join(ptr, stepped.component == ptr.p_id, "left").select(
-            "id",
-            F.least(
-                F.col("component"), F.coalesce(F.col("p_comp"), F.col("component"))
-            ).alias("component"),
-            "old_component",
-        )
-        # the fixpoint flag rides the checkpointed rows: detecting
-        # convergence is then a scan of materialized data, not an extra
-        # old⋈new join-shuffle per round
-        flagged = (
-            stepped.withColumn(
-                "_changed", F.col("component") != F.col("old_component")
-            )
-            .drop("old_component")
-            .localCheckpoint()
-        )
-        labels = flagged.drop("_changed")
-        if flagged.filter(F.col("_changed")).isEmpty():
-            break
-    edges.unpersist()  # labels are checkpointed — the cache is releasable
-    return labels
 
 
 def dedup_groups_from_pairs(

@@ -134,13 +134,6 @@ def compose_training_set(
     else:
         raise ValueError(f"unknown near-dup method {method!r}")
     groups = connected_components(pairs)
-    # connected_components checkpoints eagerly, so the pairs pipeline —
-    # and the signature subtree minhash_lsh_pairs persisted for its join
-    # branches — has been materialized: release it now instead of leaking
-    # a MEMORY_AND_DISK block per composition call
-    from ..operators.dedup import unpersist_transients
-
-    unpersist_transients()
     kept = dedup_keep_best(
         with_id, groups, quality_col=quality_col, id_col="_id"
     )

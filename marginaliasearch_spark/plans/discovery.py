@@ -11,14 +11,14 @@ that loop at cluster scale:
 2. cross-domain targets are canonicalized through the real kernel
    (vectorized pandas UDF → bit-exact url_hash);
 3. the global URL-seen service (plans/frontier_dedup.py — partitioned
-   incremental Bloom filters) admits only never-seen URLs, so a URL
+   incremental cuckoo filters) admits only never-seen URLs, so a URL
    discovered by thousands of referrers is fetched once, ever;
 4. the admitted URLs group per target domain into the ``atags_df``
    input of the next cycle's ``run_waves`` (with first-seen ordering).
 
 At 10^10 scale each step is shuffle-bounded by the NEW edges of one
 cycle, never the historical corpus: the edges scan is cycle-local, the
-Bloom probe is candidate-bound, and the atags regrouping shuffles only
+filter probe is candidate-bound, and the atags regrouping shuffles only
 admitted URLs.
 """
 

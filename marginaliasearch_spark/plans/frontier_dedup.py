@@ -10,38 +10,44 @@ partitioned Bloom/cuckoo filter keyed by canonicalized-URL hash").
 Design for 10^10 keys:
 - the seen-set is an append-only parquet table bucketed by
   pmod(url_hash, n_buckets) — a snapshot commit appends only the NEW keys;
-- one approximate filter per bucket, persisted as a table and updated
+- one cuckoo filter per bucket (operators/cuckoo.py: 16-bit fingerprints
+  in 4-slot buckets, FPR ~0.01%), persisted as a table and updated
   incrementally per snapshot from only the NEW keys — the historical
-  seen-set is never rescanned.  Two representations, selected by
-  ``filter_kind`` (north rule names both): "bloom" (operators/bloom.py,
-  FIXED m_bits, union = bitwise OR, ~12 bits/key at FPR ~0.3%) and
-  "cuckoo" (operators/cuckoo.py, mutable fingerprint table, ~19 bits/key
-  at FPR ~0.01% — an order of magnitude less exact-check traffic — plus
-  DELETION support for seen-set expiry, which Bloom cannot do);
-- admission = bloom_anti_join: Bloom negatives (the overwhelming majority
-  of genuinely-new URLs) never touch the seen-set; only maybe-positives
-  hit the per-bucket exact check.  No filter bytes pass through the driver.
+  seen-set is never rescanned.  Cuckoo tables support deletion, which is
+  what ``forget()`` (seen-set expiry) needs;
+- admission = cuckoo_anti_join: filter negatives (the overwhelming
+  majority of genuinely-new URLs) never touch the seen-set; only
+  maybe-positives hit the exact check.  No filter bytes pass through the
+  driver.
 - crash-safe: a snapshot manifest (JSON, atomic rename) lists the live
-  seen paths + the current blooms path; an interrupted ingest leaves only
-  an orphaned uncommitted directory.
+  seen paths + the current filter table path (``blooms_path``, the key
+  name older stores used); an interrupted ingest leaves only an orphaned
+  uncommitted directory.
+- stores written before the filter was cuckoo-only (manifest
+  ``filter_kind`` missing or "bloom") are migrated once: the filters are
+  rebuilt from the seen-set and committed as a new snapshot before the
+  store is used.
 
-Sizing: m_bits_per_bucket defaults to 2^23 (1 MiB/bucket); at 10^10 keys /
-12 bits/key total ≈ 15 GB, so a production run sizes n_buckets ≈ 16k to
-keep per-bucket filters ~1 MiB — one task's working set, never the
-driver's.
+Sizing: ``cuckoo_m_buckets`` defaults to 2^17 table buckets (1 MiB per
+frontier bucket, ~440k keys at the 0.84 design load); at 10^10 keys a
+production run sizes n_buckets ≥ 23k so each per-bucket filter stays one
+task's working set, never the driver's.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
+import warnings
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.bloom import bloom_anti_join, bloom_or_new_keys, build_bloom_per_bucket
 from ..operators.cuckoo import (
+    _LOAD,
+    SLOTS,
     build_cuckoo_per_bucket,
     cuckoo_anti_join,
     cuckoo_delete_keys,
@@ -55,21 +61,15 @@ class FrontierDedup:
         spark: SparkSession,
         root: str,
         n_buckets: int = 64,
-        m_bits_per_bucket: int = 1 << 23,
         key_col: str = "url_hash",
         max_seen_paths: int = 16,
-        filter_kind: str = "bloom",
-        cuckoo_m_buckets: int = 1 << 18,
+        cuckoo_m_buckets: int = 1 << 17,
     ):
-        if filter_kind not in ("bloom", "cuckoo"):
-            raise ValueError(f"filter_kind must be bloom|cuckoo, got {filter_kind!r}")
         self.spark = spark
         self.root = root
         self.n_buckets = n_buckets
-        self.m_bits = m_bits_per_bucket
         self.key_col = key_col
         self.max_seen_paths = max_seen_paths
-        self.filter_kind = filter_kind
         self.cuckoo_m_buckets = cuckoo_m_buckets
         os.makedirs(root, exist_ok=True)
 
@@ -86,6 +86,12 @@ class FrontierDedup:
         ]
         return max(snaps) if snaps else None
 
+    def _commit(self, manifest: dict) -> None:
+        tmp = self._manifest_path(manifest["snapshot"]) + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(manifest, f)
+        os.replace(tmp, self._manifest_path(manifest["snapshot"]))
+
     def _load(self) -> dict:
         n = self.latest_snapshot()
         if n is None:
@@ -94,22 +100,39 @@ class FrontierDedup:
                 "seen_paths": [],
                 "blooms_path": None,
                 "n_buckets": self.n_buckets,
-                "m_bits": self.m_bits,
-                "filter_kind": self.filter_kind,
+                "filter_kind": "cuckoo",
             }
         with open(self._manifest_path(n)) as f:
             m = json.load(f)
-        # the bucket layout (and filter representation) is a property of
-        # the PERSISTED table, not the instance: adopt it, or probes would
-        # hit the wrong buckets' filters and re-admit seen URLs
+        # the bucket layout is a property of the PERSISTED table, not the
+        # instance: adopt it, or probes would hit the wrong buckets'
+        # filters and re-admit seen URLs
         self.n_buckets = int(m.get("n_buckets", self.n_buckets))
-        self.m_bits = int(m.get("m_bits", self.m_bits))
-        # legacy manifests (pre-cuckoo) carry no filter_kind and are always
-        # bloom stores; falling back to the INSTANCE kind would make a
-        # cuckoo-configured engine read bloom-schema filter rows and fail
-        # with an executor-side KeyError instead of adopting the table
-        self.filter_kind = m.get("filter_kind", "bloom")
+        if m.get("filter_kind", "bloom") != "cuckoo":
+            m = self._migrate_legacy(m)
         return m
+
+    def _migrate_legacy(self, m: dict) -> dict:
+        """One-time upgrade of a store whose filters are Bloom bitsets:
+        rebuild cuckoo filters from the seen-set (already bucketed) and
+        commit them as a new snapshot; the Bloom table stays on disk as
+        part of the superseded snapshot."""
+        snap = m["snapshot"] + 1
+        bpath = os.path.join(self.root, f"blooms-{snap:06d}")
+        build_cuckoo_per_bucket(
+            self.spark.read.parquet(*m["seen_paths"]),
+            key_col=self.key_col,
+            m_buckets=self.cuckoo_m_buckets,
+        ).write.mode("overwrite").parquet(bpath)
+        manifest = {
+            "snapshot": snap,
+            "seen_paths": m["seen_paths"],
+            "blooms_path": bpath,
+            "n_buckets": self.n_buckets,
+            "filter_kind": "cuckoo",
+        }
+        self._commit(manifest)
+        return manifest
 
     def seen(self) -> Optional[DataFrame]:
         m = self._load()
@@ -117,18 +140,13 @@ class FrontierDedup:
             return None
         return self.spark.read.parquet(*m["seen_paths"])
 
-    def blooms(self) -> Optional[DataFrame]:
-        m = self._load()
-        if m["blooms_path"] is None:
-            return None
-        return self.spark.read.parquet(m["blooms_path"])
-
     # -- the operator --------------------------------------------------------
 
     def ingest(self, candidates: DataFrame) -> DataFrame:
         """Admit a batch: returns the accepted (never-seen) rows, appends
-        their keys to the seen-set and ORs them into the per-bucket Bloom
-        filters, all committed as one snapshot.  Only new keys are hashed."""
+        their keys to the seen-set and inserts them into the per-bucket
+        cuckoo filters, all committed as one snapshot.  Only new keys are
+        hashed."""
         m = self._load()
         snap = m["snapshot"] + 1
 
@@ -136,125 +154,69 @@ class FrontierDedup:
             "bucket", F.pmod(F.col(self.key_col), F.lit(self.n_buckets)).cast("int")
         ).dropDuplicates([self.key_col])
 
-        seen = self.seen()
-        blooms = self.blooms()
-        if seen is None:
-            accepted = cand
-        elif self.filter_kind == "cuckoo":
-            accepted = cuckoo_anti_join(cand, seen, key_col=self.key_col, filters=blooms)
-        else:
-            accepted = bloom_anti_join(cand, seen, key_col=self.key_col, blooms=blooms)
+        transients: list = []
+        filters, accepted = None, cand
+        if m["seen_paths"]:
+            filters = self.spark.read.parquet(m["blooms_path"])
+            accepted = cuckoo_anti_join(
+                cand,
+                self.spark.read.parquet(*m["seen_paths"]),
+                key_col=self.key_col,
+                filters=filters,
+                transients=transients,
+            )
 
         apath = os.path.join(self.root, f"accepted-{snap:06d}")
         accepted.write.mode("overwrite").parquet(apath)
         accepted_w = self.spark.read.parquet(apath)
-
-        from ..operators.bloom import unpersist_transients
-        from ..operators.cuckoo import unpersist_transients as cuckoo_unpersist
-
-        unpersist_transients()  # the probe intermediate is materialized now
-        cuckoo_unpersist()
+        for df in transients:  # the probe intermediate is materialized now
+            df.unpersist()
 
         # steady-state short-circuit: an ingest that admits nothing must
-        # not grow the table — no new seen path, no bloom rewrite, no new
+        # not grow the table — no new seen path, no filter rewrite, no new
         # snapshot.  Without this, idle recrawl cycles accumulate empty
         # seen files and rewrite the full filter table every cycle
         # (VERDICT r4 item 1: per-cycle cost must stay flat on a static web).
-        if seen is not None and accepted_w.isEmpty():
+        if filters is not None and accepted_w.isEmpty():
             return accepted_w.drop("bucket")
 
         new_keys = accepted_w.select("bucket", self.key_col)
         bpath = os.path.join(self.root, f"blooms-{snap:06d}")
-        if self.filter_kind == "cuckoo":
-            if blooms is None:
-                nb = build_cuckoo_per_bucket(
-                    new_keys, key_col=self.key_col, m_buckets=self.cuckoo_m_buckets
-                )
-            else:
-                nb = cuckoo_insert_new_keys(
-                    blooms,
-                    new_keys,
-                    key_col=self.key_col,
-                    default_m_buckets=self.cuckoo_m_buckets,
-                )
-        elif blooms is None:
-            nb = build_bloom_per_bucket(new_keys, key_col=self.key_col, m_bits=self.m_bits)
+        if filters is None:
+            nb = build_cuckoo_per_bucket(
+                new_keys, key_col=self.key_col, m_buckets=self.cuckoo_m_buckets
+            )
         else:
-            nb = bloom_or_new_keys(
-                blooms, new_keys, key_col=self.key_col, default_m_bits=self.m_bits
+            nb = cuckoo_insert_new_keys(
+                filters,
+                new_keys,
+                key_col=self.key_col,
+                default_m_buckets=self.cuckoo_m_buckets,
             )
         nb.write.mode("overwrite").parquet(bpath)
 
         spath = os.path.join(self.root, f"seen-{snap:06d}")
         new_keys.write.mode("overwrite").parquet(spath)
 
-        # saturation watch: with fixed m_bits the OR-union filter degrades
-        # gracefully (no false negatives) but its false-positive rate climbs
-        # once fill passes ~50%, silently shifting work onto the exact-check
-        # scan.  Track the worst bucket's estimated fill in the manifest and
-        # warn so operators rebuild at larger m_bits before it matters.
-        from ..operators.bloom import _K
-
-        if self.filter_kind == "cuckoo":
-            # cuckoo fill = n_keys / (m_buckets * SLOTS); past the design
-            # load the stash grows and inserts slow — same operator action
-            # (rebuild larger), different arithmetic than the Bloom curve
-            from ..operators.cuckoo import SLOTS
-
-            fill_row = (
-                self.spark.read.parquet(bpath)
-                .select(
-                    F.max(
-                        F.col("n_keys") / (F.col("m_buckets") * F.lit(float(SLOTS)))
-                    ).alias("max_fill")
-                )
-                .collect()[0]
-            )
-            max_fill = float(fill_row["max_fill"] or 0.0)
-            if max_fill > 0.84:
-                import warnings
-
-                warnings.warn(
-                    f"FrontierDedup cuckoo filter load ≈ {max_fill:.0%} (> 84%): "
-                    f"inserts will stash-overflow; rebuild with larger "
-                    f"cuckoo_m_buckets (current {self.cuckoo_m_buckets}).",
-                    stacklevel=2,
-                )
-            manifest = {
-                "snapshot": snap,
-                "seen_paths": m["seen_paths"] + [spath],
-                "blooms_path": bpath,
-                "n_buckets": self.n_buckets,
-                "m_bits": self.m_bits,
-                "filter_kind": self.filter_kind,
-                "max_fill_est": round(max_fill, 4),
-            }
-            tmp = self._manifest_path(snap) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(manifest, f)
-            os.replace(tmp, self._manifest_path(snap))
-            if len(manifest["seen_paths"]) > self.max_seen_paths:
-                self.compact_seen()
-            return accepted_w.drop("bucket")
-
+        # saturation watch: fill = n_keys / (m_buckets * SLOTS).  Past the
+        # design load the stash grows — no false negatives, but inserts
+        # slow and probes scan the stash — so track the worst bucket's
+        # fill in the manifest and warn before it matters.
         fill_row = (
             self.spark.read.parquet(bpath)
             .select(
                 F.max(
-                    F.lit(1.0)
-                    - F.exp(-F.lit(float(_K)) * F.col("n_keys") / F.col("m_bits"))
+                    F.col("n_keys") / (F.col("m_buckets") * F.lit(float(SLOTS)))
                 ).alias("max_fill")
             )
             .collect()[0]
         )
         max_fill = float(fill_row["max_fill"] or 0.0)
-        if max_fill > 0.5:
-            import warnings
-
+        if max_fill > _LOAD:
             warnings.warn(
-                f"FrontierDedup bucket filter fill ≈ {max_fill:.0%} (> 50%): "
-                f"false-positive rate is degrading the scan-only exact check; "
-                f"rebuild filters with larger m_bits (current {self.m_bits}).",
+                f"FrontierDedup cuckoo filter load ≈ {max_fill:.0%} (> {_LOAD:.0%}): "
+                f"inserts will stash-overflow; rebuild with larger "
+                f"cuckoo_m_buckets (current {self.cuckoo_m_buckets}).",
                 stacklevel=2,
             )
 
@@ -263,14 +225,10 @@ class FrontierDedup:
             "seen_paths": m["seen_paths"] + [spath],
             "blooms_path": bpath,
             "n_buckets": self.n_buckets,
-            "m_bits": self.m_bits,
-            "filter_kind": self.filter_kind,
+            "filter_kind": "cuckoo",
             "max_fill_est": round(max_fill, 4),
         }
-        tmp = self._manifest_path(snap) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path(snap))
+        self._commit(manifest)
 
         # keep the live-path list bounded: many small ingests (one per
         # crawl cycle) would otherwise make every later probe's exact
@@ -280,18 +238,12 @@ class FrontierDedup:
         return accepted_w.drop("bucket")
 
     def forget(self, removed: DataFrame) -> int:
-        """Expire keys from the seen-set — the operation that justifies the
-        cuckoo representation (Bloom cannot delete; its only expiry path is
-        a full rebuild).  Rewrites the seen table without the removed keys,
-        deletes their fingerprints from the per-bucket filters, and commits
-        both as one snapshot.  Returns the number of keys actually
-        forgotten.  Use case: 404-memo retirement and domain retraction,
-        so a future recrawl re-admits the URL instead of skipping it."""
-        if self.filter_kind != "cuckoo":
-            raise ValueError(
-                "forget() requires filter_kind='cuckoo' (Bloom filters "
-                "cannot delete; rebuild instead)"
-            )
+        """Expire keys from the seen-set without a full rebuild.  Rewrites
+        the seen table without the removed keys, deletes their
+        fingerprints from the per-bucket filters, and commits both as one
+        snapshot.  Returns the number of keys actually forgotten.  Use
+        case: 404-memo retirement and domain retraction, so a future
+        recrawl re-admits the URL instead of skipping it."""
         m = self._load()
         if not m["seen_paths"]:
             return 0
@@ -300,7 +252,7 @@ class FrontierDedup:
             "bucket", F.pmod(F.col(self.key_col), F.lit(self.n_buckets)).cast("int")
         ).dropDuplicates([self.key_col])
 
-        seen = self.seen()
+        seen = self.spark.read.parquet(*m["seen_paths"])
         # only keys actually present may be deleted from the filters
         # (standard cuckoo contract: deleting a never-inserted key could
         # evict a same-fingerprint twin)
@@ -314,8 +266,6 @@ class FrontierDedup:
         if n_forgotten == 0:
             # nothing to forget: remove the empty present-keys dir so the
             # zero path leaves no orphan parquet no manifest references
-            import shutil
-
             shutil.rmtree(ppath, ignore_errors=True)
             return 0
 
@@ -327,29 +277,23 @@ class FrontierDedup:
             .parquet(spath)
         )
         bpath = os.path.join(self.root, f"blooms-{snap:06d}")
-        cuckoo_delete_keys(self.blooms(), present_w, key_col=self.key_col).write.mode(
-            "overwrite"
-        ).parquet(bpath)
+        cuckoo_delete_keys(
+            self.spark.read.parquet(m["blooms_path"]), present_w, key_col=self.key_col
+        ).write.mode("overwrite").parquet(bpath)
 
-        manifest = dict(
-            m, snapshot=snap, seen_paths=[spath], blooms_path=bpath,
-            filter_kind=self.filter_kind,
-        )
+        manifest = dict(m, snapshot=snap, seen_paths=[spath], blooms_path=bpath)
         # deletion lowers the actual fill: carrying the pre-forget estimate
         # forward would overstate saturation to future ingests' compaction
         # heuristics — drop it rather than commit a stale number
         manifest.pop("max_fill_est", None)
-        tmp = self._manifest_path(snap) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path(snap))
+        self._commit(manifest)
         return n_forgotten
 
     def compact_seen(self) -> Optional[str]:
         """Fold all live seen paths into one (Iceberg rewrite_data_files
         analogue): rewrites the key table bucket-partitioned, commits a
         snapshot whose ``seen_paths`` is the single compacted path, and
-        deletes the superseded per-ingest files.  Bloom filters are
+        deletes the superseded per-ingest files.  The filters are
         untouched (they are already one consolidated table per snapshot)."""
         m = self._load()
         if len(m["seen_paths"]) <= 1:
@@ -362,13 +306,7 @@ class FrontierDedup:
             .write.mode("overwrite")
             .parquet(cpath)
         )
-        manifest = dict(m, snapshot=snap, seen_paths=[cpath])
-        tmp = self._manifest_path(snap) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path(snap))
-        import shutil
-
+        self._commit(dict(m, snapshot=snap, seen_paths=[cpath]))
         for p in m["seen_paths"]:
             if p != cpath:
                 shutil.rmtree(p, ignore_errors=True)

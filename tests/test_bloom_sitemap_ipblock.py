@@ -1,9 +1,4 @@
-"""Bloom-prefiltered anti-join (north-rule dedup path), sitemap walker
-caps, IP/Geo domain blocklist."""
-
-import numpy as np
-import pytest
-from pyspark.sql import functions as F
+"""Sitemap walker caps, IP/Geo domain blocklist."""
 
 from marginaliasearch_spark.functions.sitemap import parse_sitemap_xml, walk_sitemaps
 from marginaliasearch_spark.operators.ipblocklist import (
@@ -12,38 +7,6 @@ from marginaliasearch_spark.operators.ipblocklist import (
     ip_to_int,
     is_domain_blocked,
 )
-
-
-def test_bloom_anti_join_equals_exact(spark):
-    from marginaliasearch_spark.operators.bloom import bloom_anti_join
-
-    rng = np.random.default_rng(7)
-    seen_keys = rng.integers(-(2**62), 2**62, size=5000).tolist()
-    cand_keys = seen_keys[:1500] + rng.integers(-(2**62), 2**62, size=3500).tolist()
-
-    seen = spark.createDataFrame(
-        [(int(k), int(k) % 8) for k in seen_keys], "url_hash long, bucket int"
-    )
-    cand = spark.createDataFrame(
-        [(int(k), int(k) % 8) for k in cand_keys], "url_hash long, bucket int"
-    )
-    got = sorted(r["url_hash"] for r in bloom_anti_join(cand, seen).collect())
-    want = sorted(
-        r["url_hash"] for r in cand.join(seen.select("url_hash").distinct(), "url_hash", "left_anti").collect()
-    )
-    assert got == want
-
-
-def test_bloom_no_false_negatives_unit():
-    from marginaliasearch_spark.operators.bloom import _build_filter, _might_contain
-
-    keys = np.random.default_rng(1).integers(0, 2**63, size=10_000, dtype=np.uint64)
-    m = len(keys) * 12
-    bloom = np.frombuffer(_build_filter(keys, m), dtype=np.uint8)
-    assert _might_contain(bloom, keys, m).all()  # zero false negatives
-    other = np.random.default_rng(2).integers(0, 2**63, size=10_000, dtype=np.uint64)
-    fp = _might_contain(bloom, other, m).mean()
-    assert fp < 0.01  # ~0.3% expected at 12 bits/key, k=7
 
 
 def test_sitemap_parse_kinds():
@@ -185,41 +148,3 @@ def test_cidr_filter_df(spark):
     )
     kept = [r["domain"] for r in filter_blocked_by_cidr(doms, cidr).collect()]
     assert kept == ["b.com"]
-
-
-def test_bloom_incremental_or_union_equals_exact(spark):
-    """Snapshot-incremental filters: build on seen₀, OR in seen₁'s new keys,
-    probe — result must equal the exact anti-join vs seen₀ ∪ seen₁, with
-    only the new keys hashed in the update."""
-    from marginaliasearch_spark.operators.bloom import (
-        bloom_anti_join,
-        bloom_or_new_keys,
-        build_bloom_per_bucket,
-    )
-
-    n_buckets = 8
-    m_bits = 1 << 16
-    seen0 = spark.range(0, 3000).select(
-        (F.xxhash64("id")).alias("url_hash"),
-        F.pmod(F.col("id"), F.lit(n_buckets)).cast("int").alias("bucket"),
-    )
-    seen1 = spark.range(3000, 5000).select(
-        (F.xxhash64("id")).alias("url_hash"),
-        F.pmod(F.col("id"), F.lit(n_buckets)).cast("int").alias("bucket"),
-    )
-    seen = seen0.unionByName(seen1)
-    cand = spark.range(2000, 9000).select(
-        (F.xxhash64("id")).alias("url_hash"),
-        F.pmod(F.col("id"), F.lit(n_buckets)).cast("int").alias("bucket"),
-    )
-
-    blooms0 = build_bloom_per_bucket(seen0, m_bits=m_bits)
-    blooms1 = bloom_or_new_keys(blooms0, seen1, default_m_bits=m_bits)
-
-    got = sorted(
-        r["url_hash"] for r in bloom_anti_join(cand, seen, blooms=blooms1).collect()
-    )
-    want = sorted(
-        r["url_hash"] for r in cand.join(seen, "url_hash", "left_anti").collect()
-    )
-    assert got == want

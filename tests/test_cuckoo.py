@@ -1,15 +1,14 @@
-"""Cuckoo-filter seen-set (operators/cuckoo.py + FrontierDedup
-filter_kind='cuckoo') — the second representation the north rule names
-("partitioned Bloom/cuckoo filter keyed by canonicalized-URL hash").
+"""Cuckoo-filter seen-set (operators/cuckoo.py, the filter behind
+FrontierDedup).
 
 Contracts pinned here:
 - the filter NEVER has false negatives (stash overflow path included), so
-  cuckoo_anti_join ≡ the exact left-anti join — the same equivalence the
-  Bloom path carries;
+  cuckoo_anti_join ≡ the exact left-anti join;
 - deletion really removes (and only removes) the requested keys;
-- FrontierDedup ingests are representation-agnostic: bloom and cuckoo
-  stores admit the exact same rows over multi-snapshot histories, and
-  forget() makes the cuckoo store re-admit expired keys.
+- FrontierDedup admits exactly the never-seen rows over multi-snapshot
+  histories, forget() makes it re-admit expired keys, a reopened store
+  adopts the persisted bucket layout, and a store written with Bloom
+  filters is migrated before its first probe.
 """
 
 from __future__ import annotations
@@ -27,7 +26,6 @@ from marginaliasearch_spark.operators.cuckoo import (
     _serialize,
     cuckoo_anti_join,
     size_for,
-    unpersist_transients,
 )
 from marginaliasearch_spark.plans.frontier_dedup import FrontierDedup
 
@@ -131,51 +129,48 @@ def dedup_frames(spark):
 
 def test_cuckoo_anti_join_equals_exact(spark, dedup_frames):
     seen, cand = dedup_frames
+    transients: list = []
     got = set(
         r["url_hash"]
-        for r in cuckoo_anti_join(cand, seen, key_col="url_hash").collect()
+        for r in cuckoo_anti_join(
+            cand, seen, key_col="url_hash", transients=transients
+        ).collect()
     )
     want = set(
         r["url_hash"] for r in cand.join(seen, "url_hash", "left_anti").collect()
     )
-    unpersist_transients()
+    assert len(transients) == 1
+    for df in transients:
+        df.unpersist()
     assert got == want
 
 
-def _ingest_rows(store, spark, keys, n_buckets=8):
+def _ingest_rows(store, spark, keys):
     df = spark.createDataFrame([(int(k),) for k in keys], "url_hash long")
     return store.ingest(df)
 
 
-def test_frontier_dedup_cuckoo_equals_bloom(spark, tmp_path):
+def test_frontier_dedup_multi_snapshot_equals_exact(spark, tmp_path):
     rng = np.random.default_rng(5)
     batches = [rng.integers(0, 2**62, 4_000, dtype=np.int64) for _ in range(3)]
     batches[1][:1_000] = batches[0][:1_000]  # cross-snapshot dupes
     batches[2][:500] = batches[1][2_000:2_500]
 
-    stores = {
-        kind: FrontierDedup(
-            spark, str(tmp_path / kind), n_buckets=8, filter_kind=kind,
-            cuckoo_m_buckets=1 << 12,
-        )
-        for kind in ("bloom", "cuckoo")
-    }
+    store = FrontierDedup(
+        spark, str(tmp_path / "c"), n_buckets=8, cuckoo_m_buckets=1 << 12
+    )
     exact_seen: set[int] = set()
     for batch in batches:
-        admitted = {}
-        for kind, store in stores.items():
-            out = _ingest_rows(store, spark, batch)
-            admitted[kind] = set(r["url_hash"] for r in out.collect())
+        admitted = set(r["url_hash"] for r in _ingest_rows(store, spark, batch).collect())
         want = set(int(k) for k in batch) - exact_seen
-        assert admitted["bloom"] == want
-        assert admitted["cuckoo"] == want
+        assert admitted == want
         exact_seen |= want
+    assert store._load()["snapshot"] == 2
 
 
 def test_frontier_dedup_forget_readmits(spark, tmp_path):
     store = FrontierDedup(
-        spark, str(tmp_path / "c"), n_buckets=4, filter_kind="cuckoo",
-        cuckoo_m_buckets=1 << 10,
+        spark, str(tmp_path / "c"), n_buckets=4, cuckoo_m_buckets=1 << 10
     )
     keys = list(range(1000, 2000))
     out1 = _ingest_rows(store, spark, keys)
@@ -194,20 +189,80 @@ def test_frontier_dedup_forget_readmits(spark, tmp_path):
     ) == 0
 
 
-def test_frontier_dedup_forget_requires_cuckoo(spark, tmp_path):
-    store = FrontierDedup(spark, str(tmp_path / "b"), n_buckets=4, filter_kind="bloom")
-    _ingest_rows(store, spark, [1, 2, 3])
-    with pytest.raises(ValueError, match="cuckoo"):
-        store.forget(spark.createDataFrame([(1,)], "url_hash long"))
+def test_reopen_adopts_persisted_bucket_layout(spark, tmp_path):
+    root = str(tmp_path / "c2")
+    store = FrontierDedup(spark, root, n_buckets=4, cuckoo_m_buckets=1 << 10)
+    _ingest_rows(store, spark, range(0, 300))
+    # a new instance constructed with a DIFFERENT bucket count must probe
+    # the persisted 4-bucket filters, not re-bucket candidates by 16
+    again = FrontierDedup(spark, root, n_buckets=16, cuckoo_m_buckets=1 << 10)
+    got = set(r["url_hash"] for r in _ingest_rows(again, spark, range(200, 400)).collect())
+    assert got == set(range(300, 400))
+    assert again.n_buckets == 4
+    assert again._load()["n_buckets"] == 4
 
 
-def test_filter_kind_persisted_in_manifest(spark, tmp_path):
-    store = FrontierDedup(
-        spark, str(tmp_path / "c2"), n_buckets=4, filter_kind="cuckoo",
-        cuckoo_m_buckets=1 << 10,
+@pytest.mark.parametrize("legacy_kind", [None, "bloom"])
+def test_legacy_bloom_store_is_migrated(spark, tmp_path, legacy_kind):
+    """A store written when Bloom was the default (manifest filter_kind
+    missing or "bloom", Bloom-schema filter rows) gets cuckoo filters
+    rebuilt from its seen-set and committed before the first probe; the
+    next ingests keep exact set semantics."""
+    import json
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = tmp_path / "legacy"
+    n_buckets = 4
+    seen_keys = list(range(0, 3000, 3))
+    spath, bpath = root / "seen-000000", root / "blooms-000000"
+    os.makedirs(spath)
+    os.makedirs(bpath)
+    pq.write_table(
+        pa.table(
+            {
+                "bucket": pa.array([k % n_buckets for k in seen_keys], pa.int32()),
+                "url_hash": pa.array(seen_keys, pa.int64()),
+            }
+        ),
+        spath / "part-0.parquet",
     )
-    _ingest_rows(store, spark, [10, 20, 30])
-    # a new instance constructed with the WRONG kind adopts the persisted one
-    again = FrontierDedup(spark, str(tmp_path / "c2"), n_buckets=4, filter_kind="bloom")
-    assert _ingest_rows(again, spark, [10, 20, 40]).count() == 1
-    assert again.filter_kind == "cuckoo"
+    # Bloom-schema rows: probing these as cuckoo tables would fail
+    pq.write_table(
+        pa.table(
+            {
+                "bucket": pa.array(range(n_buckets), pa.int32()),
+                "n_keys": pa.array([250] * n_buckets, pa.int64()),
+                "m_bits": pa.array([1 << 16] * n_buckets, pa.int64()),
+                "bloom": pa.array([b"\xff" * 8192] * n_buckets, pa.binary()),
+            }
+        ),
+        bpath / "part-0.parquet",
+    )
+    manifest = {
+        "snapshot": 0,
+        "seen_paths": [str(spath)],
+        "blooms_path": str(bpath),
+        "n_buckets": n_buckets,
+        "m_bits": 1 << 16,
+        "max_fill_est": 0.0233,
+    }
+    if legacy_kind is not None:
+        manifest["filter_kind"] = legacy_kind
+    with open(root / "dedup-snap-000000.json", "w") as f:
+        json.dump(manifest, f)
+
+    store = FrontierDedup(spark, str(root), n_buckets=8, cuckoo_m_buckets=1 << 10)
+    exact_seen = set(seen_keys)
+    for batch in (range(0, 4000), range(3500, 4500)):
+        got = set(r["url_hash"] for r in _ingest_rows(store, spark, batch).collect())
+        want = set(batch) - exact_seen
+        assert got == want
+        exact_seen |= want
+    m = store._load()
+    assert m["filter_kind"] == "cuckoo" and "m_bits" not in m
+    assert m["snapshot"] == 3  # migration + two admitting ingests
+    assert store.n_buckets == n_buckets
+    assert set(spark.read.parquet(m["blooms_path"]).columns) >= {"cuckoo", "m_buckets"}

@@ -1,4 +1,4 @@
-"""Cross-domain discovery loop: cycle-1 edges → global Bloom URL-seen →
+"""Cross-domain discovery loop: cycle-1 edges → global cuckoo URL-seen →
 next-cycle atags → cycle-2 actually crawls the discovered URLs
 (plans/discovery.py; the reference's anchor-tags side input,
 CrawlerMain.java:675)."""
@@ -63,7 +63,7 @@ def test_discovery_loop_feeds_next_cycle(spark, tmp_path):
     assert "https://b.example.org/orphan.html" not in v1  # orphan unreachable
 
     fd = FrontierDedup(spark, str(tmp_path / "seen"), n_buckets=8,
-                       m_bits_per_bucket=1 << 16)
+                       cuckoo_m_buckets=1 << 10)
     atags = next_cycle_atags(e1.read_table("edges"), fd).cache()
     got = {(r["domain"], r["url"]) for r in atags.collect()}
     assert ("b.example.org", "https://b.example.org/orphan.html") in got
@@ -89,7 +89,7 @@ def test_multi_cycle_discovery_converges(spark, tmp_path):
     pages, doms = _web(spark)
     specs = doms.select("domain", "crawl_depth", "seed_urls")
     fd = FrontierDedup(spark, str(tmp_path / "seen"), n_buckets=8,
-                       m_bits_per_bucket=1 << 16)
+                       cuckoo_m_buckets=1 << 10)
 
     seen_sizes, admitted_counts = [], []
     atags = None

@@ -1,4 +1,4 @@
-"""Global URL-seen dedup plan: snapshot-incremental Bloom admission
+"""Global URL-seen dedup plan: snapshot-incremental cuckoo-filter admission
 (plans/frontier_dedup.py) — correctness vs exact set semantics, resume
 from disk, and only-new-keys snapshot appends."""
 
@@ -16,7 +16,7 @@ def _cand(spark, lo, hi):
 
 
 def test_ingest_admits_only_never_seen(spark, tmp_path):
-    fd = FrontierDedup(spark, str(tmp_path / "fd"), n_buckets=8, m_bits_per_bucket=1 << 16)
+    fd = FrontierDedup(spark, str(tmp_path / "fd"), n_buckets=8, cuckoo_m_buckets=1 << 10)
 
     a1 = fd.ingest(_cand(spark, 0, 5000))
     assert a1.count() == 5000
@@ -37,11 +37,11 @@ def test_ingest_admits_only_never_seen(spark, tmp_path):
 
 def test_resume_from_disk(spark, tmp_path):
     root = str(tmp_path / "fd2")
-    fd1 = FrontierDedup(spark, root, n_buckets=8, m_bits_per_bucket=1 << 16)
+    fd1 = FrontierDedup(spark, root, n_buckets=8, cuckoo_m_buckets=1 << 10)
     fd1.ingest(_cand(spark, 0, 3000))
 
     # a fresh instance over the same root sees the committed seen-set
-    fd2 = FrontierDedup(spark, root, n_buckets=8, m_bits_per_bucket=1 << 16)
+    fd2 = FrontierDedup(spark, root, n_buckets=8, cuckoo_m_buckets=1 << 10)
     a = fd2.ingest(_cand(spark, 1000, 4000))
     assert a.count() == 1000  # only [3000, 4000)
     assert fd2.seen().count() == 4000
@@ -49,7 +49,7 @@ def test_resume_from_disk(spark, tmp_path):
 
 def test_snapshot_appends_only_new_keys(spark, tmp_path):
     root = str(tmp_path / "fd3")
-    fd = FrontierDedup(spark, root, n_buckets=8, m_bits_per_bucket=1 << 16)
+    fd = FrontierDedup(spark, root, n_buckets=8, cuckoo_m_buckets=1 << 10)
     fd.ingest(_cand(spark, 0, 2000))
     fd.ingest(_cand(spark, 0, 2100))  # 100 new
     m = fd._load()
@@ -60,11 +60,11 @@ def test_snapshot_appends_only_new_keys(spark, tmp_path):
 
 def test_empty_ingest_is_a_noop(spark, tmp_path):
     """Steady-state flatness: a replay that admits nothing must not grow
-    the table — no new seen path, no bloom rewrite, no new snapshot."""
+    the table — no new seen path, no filter rewrite, no new snapshot."""
     import os
 
     root = str(tmp_path / "fd4")
-    fd = FrontierDedup(spark, root, n_buckets=8, m_bits_per_bucket=1 << 16)
+    fd = FrontierDedup(spark, root, n_buckets=8, cuckoo_m_buckets=1 << 10)
     fd.ingest(_cand(spark, 0, 2000))
     m0 = fd._load()
     before = sorted(os.listdir(root))
@@ -85,7 +85,7 @@ def test_empty_ingest_is_a_noop(spark, tmp_path):
 
 def test_compact_seen_folds_paths(spark, tmp_path):
     root = str(tmp_path / "fd5")
-    fd = FrontierDedup(spark, root, n_buckets=8, m_bits_per_bucket=1 << 16)
+    fd = FrontierDedup(spark, root, n_buckets=8, cuckoo_m_buckets=1 << 10)
     for i in range(4):
         fd.ingest(_cand(spark, i * 500, (i + 1) * 500))
     assert len(fd._load()["seen_paths"]) == 4
@@ -101,7 +101,7 @@ def test_compact_seen_folds_paths(spark, tmp_path):
     # auto-compaction keeps the list bounded
     fd2 = FrontierDedup(
         spark, str(tmp_path / "fd6"), n_buckets=8,
-        m_bits_per_bucket=1 << 16, max_seen_paths=3,
+        cuckoo_m_buckets=1 << 10, max_seen_paths=3,
     )
     for i in range(6):
         fd2.ingest(_cand(spark, i * 100, (i + 1) * 100))

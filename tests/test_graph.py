@@ -118,6 +118,21 @@ def test_connected_components_contraction_path(spark):
     assert multi == want
 
 
+def test_connected_components_warns_when_iterations_run_out(spark):
+    """The 400-chain cannot contract to its fixpoint in one round: the
+    capped loop must say so instead of returning plausible labels."""
+    pairs = [(1000 + i, 1000 + i + 1) for i in range(400)]
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    with pytest.warns(RuntimeWarning, match="no fixpoint after 1"):
+        connected_components(df, rows_per_task=50, max_iterations=1).collect()
+
+
+def test_connected_components_rejects_string_ids(spark):
+    df = spark.createDataFrame([("a", "b"), ("b", "c")], "id_a string, id_b string")
+    with pytest.raises(TypeError, match="integral ids"):
+        connected_components(df)
+
+
 def test_numpy_cc_kernel():
     """The in-task kernel alone: chain, ring, clique, self-loop, dup edges."""
     from marginaliasearch_spark.operators.graph import _numpy_cc

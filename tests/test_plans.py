@@ -50,7 +50,10 @@ def test_simhash_exact_check_is_jvm_side(spark):
     from marginaliasearch_spark.operators.dedup import simhash_pairs
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = _plan(simhash_pairs(docs))
+    transients: list = []
+    plan = _plan(simhash_pairs(docs, transients=transients))
+    for df in transients:
+        df.unpersist()
     assert "ArrowEvalPython" in plan  # signature computation
     assert "bit_count" in plan
     assert "CartesianProduct" not in plan
@@ -80,10 +83,7 @@ def test_cuckoo_anti_join_plan(spark):
     never appear on the build side of a shuffled join."""
     import numpy as np
 
-    from marginaliasearch_spark.operators.cuckoo import (
-        cuckoo_anti_join,
-        unpersist_transients,
-    )
+    from marginaliasearch_spark.operators.cuckoo import cuckoo_anti_join
 
     rng = np.random.default_rng(1)
     seen = spark.createDataFrame(
@@ -94,8 +94,10 @@ def test_cuckoo_anti_join_plan(spark):
         [(int(k), int(k % 4), "u") for k in rng.integers(0, 2**40, 500)],
         "url_hash long, bucket int, url string",
     )
-    plan = _plan(cuckoo_anti_join(cand, seen))
-    unpersist_transients()
+    transients: list = []
+    plan = _plan(cuckoo_anti_join(cand, seen, transients=transients))
+    for df in transients:
+        df.unpersist()
     assert plan.count("BroadcastHashJoin") >= 2
     assert "FlatMapCoGroupsInPandas" in plan
     assert "SortMergeJoin" not in plan  # seen is never shuffle-joined

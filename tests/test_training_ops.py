@@ -117,7 +117,13 @@ def test_simhash_pairs(spark, docs):
         ],
         schema=docs.schema,
     )
-    pairs = simhash_pairs(docs.union(extra), max_hamming=3).collect()
+    transients: list = []
+    pairs = simhash_pairs(
+        docs.union(extra), max_hamming=3, transients=transients
+    ).collect()
+    assert len(transients) == 1
+    for df in transients:
+        df.unpersist()
     assert any(r["id_a"] == 99990001 and r["id_b"] == 99990002 for r in pairs)
 
 
@@ -245,7 +251,6 @@ def test_minhash_lsh_pairs_matches_numpy_banded_reference(spark, docs):
     from marginaliasearch_spark.operators.dedup import (
         minhash_lsh_pairs,
         minhash_signature_batch,
-        unpersist_transients,
     )
 
     base = docs.select("doc_id", "text")
@@ -295,7 +300,6 @@ def test_minhash_lsh_pairs_matches_numpy_banded_reference(spark, docs):
                     allv, jaccard_threshold=0.6, max_bucket=cap
                 ).collect()
             }
-            unpersist_transients()
             assert set(got) == set(want), f"cap={cap}"
             assert all(abs(got[k] - want[k]) < 1e-12 for k in got), f"cap={cap}"
             if cap == 8:
@@ -305,7 +309,6 @@ def test_minhash_lsh_pairs_matches_numpy_banded_reference(spark, docs):
     finally:
         if old_batch is not None:
             spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old_batch)
-        unpersist_transients()
 
 
 def test_spread_for_compute_kernel_weight(spark, docs, tmp_path):
@@ -315,9 +318,15 @@ def test_spread_for_compute_kernel_weight(spark, docs, tmp_path):
     (threshold checked by monkey-shrinking the light cutoff via a large
     synthetic is too slow here, so we assert the decision on the real
     small file + the non-file fallback)."""
+    import os
+
     from marginaliasearch_spark.operators.dedup import _spread_for_compute
 
     small = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    # precondition of the light-mode branch below: the fixture must stay
+    # under the light kernel's 32 MB un-spread cutoff
+    size = sum(os.path.getsize(f.removeprefix("file:")) for f in small.inputFiles())
+    assert size < (32 << 20), f"fixture documents.parquet is {size} B, not < 32 MB"
     heavy = _spread_for_compute(small, always_spread_small=True)
     light = _spread_for_compute(small, always_spread_small=False)
     n = spark.sparkContext.defaultParallelism

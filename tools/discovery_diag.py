@@ -49,7 +49,7 @@ def main() -> None:
 
     fd = FrontierDedup(
         spark, tempfile.mkdtemp(prefix="msx_fdd_"), n_buckets=32,
-        m_bits_per_bucket=1 << 22,
+        cuckoo_m_buckets=1 << 16,
     )
     atags = None
     rows = []

@@ -297,7 +297,7 @@ def run(names=None, sf_dir: str = LADDER_DIR, out_json: str | None = None):
         rec["sec"] = round(time.perf_counter() - t0, 2)
         results[name] = rec
         # 52 queries share one session: release per-query persisted
-        # subtrees (LSH/simhash signatures, bloom probe intermediates)
+        # subtrees (LSH/simhash signatures, filter probe intermediates)
         spark.catalog.clearCache()
         status = (
             "ERR"
