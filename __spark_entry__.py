@@ -4,7 +4,7 @@
 through the wave engine — at tiny scale and returns the crawl_data result.
 
 ``queries()`` exposes every SURVEY.md §2 operator family plus the
-training-data pipeline operators; ``oracle_sql()`` covers ALL 41 entries
+training-data pipeline operators; ``oracle_sql()`` covers ALL 61 entries
 (zero rows-only since round 3).  Non-SQL-expressible semantics get
 INDEPENDENT oracles instead of rows-only checks: ground-truth fixture
 exports + recursive-CTE closure for the crawl set/order gates,
@@ -42,26 +42,39 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def entry(spark: SparkSession) -> DataFrame:
-    """Tiny end-to-end crawl: synthetic web → wave engine → crawl_data."""
+def _crawl(
+    spark: SparkSession,
+    pages_rows,
+    domains_rows,
+    *,
+    wave_budget=None,
+    prev_crawl_df=None,
+    **engine_kw,
+):
+    """Crawl a fixture web (page/domain row lists or pandas frames) to
+    completion through the wave engine; returns the engine for reads."""
     from marginaliasearch_spark.plans.crawl import SparkCrawlEngine
     from marginaliasearch_spark.sources.synthetic_web import (
-        generate_web,
+        normalize_pages_pdf,
         spark_schemas,
-        web_to_frames,
     )
 
-    web, _ = generate_web(seed=42, n_domains=6, mean_pages=8)
-    pages_pdf, domains_pdf = web_to_frames(web)
-    pages_schema, domains_schema = spark_schemas()
-    pages = spark.createDataFrame(pages_pdf, schema=pages_schema)
-    domains = spark.createDataFrame(domains_pdf, schema=domains_schema)
-    specs = domains.select("domain", "crawl_depth", "seed_urls")
+    ps, dms = spark_schemas()
+    pages = spark.createDataFrame(normalize_pages_pdf(pd.DataFrame(pages_rows)), schema=ps)
+    domains = spark.createDataFrame(pd.DataFrame(domains_rows), schema=dms)
+    out_dir = tempfile.mkdtemp(prefix="msx_crawl_")
+    engine = SparkCrawlEngine(spark, out_dir, seed=42, **engine_kw)
+    engine.init_run(domains, domains.select("domain", "crawl_depth", "seed_urls"))
+    engine.run_waves(pages, wave_budget=wave_budget, prev_crawl_df=prev_crawl_df)
+    return engine
 
-    out_dir = tempfile.mkdtemp(prefix="msx_entry_")
-    engine = SparkCrawlEngine(spark, out_dir, seed=42, n_buckets=4)
-    engine.init_run(domains, specs)
-    engine.run_waves(pages, wave_budget=None)
+
+def entry(spark: SparkSession) -> DataFrame:
+    """Tiny end-to-end crawl: synthetic web → wave engine → crawl_data."""
+    from marginaliasearch_spark.sources.synthetic_web import generate_web, web_to_frames
+
+    web, _ = generate_web(seed=42, n_domains=6, mean_pages=8)
+    engine = _crawl(spark, *web_to_frames(web), n_buckets=4)
     return engine.read_table("crawl_data").select(
         "domain", "url", "http_status", "content_type", "image_id"
     )
@@ -747,25 +760,10 @@ def q_crawl_visited_set(spark, sf_dir):
     first-wins dedup, seed injection + forced root, 301 re-entry,
     cross-domain redirect drops, mediawiki link filter, and excluded
     domains (probe error/redirect, robots full block)."""
-    import tempfile
+    from marginaliasearch_spark.sources.gate_web import generate_gate_web
 
-    from marginaliasearch_spark.plans.crawl import SparkCrawlEngine
-    from marginaliasearch_spark.sources.gate_web import ensure_export, gate_web_frames
-    from marginaliasearch_spark.sources.synthetic_web import (
-        normalize_pages_pdf,
-        spark_schemas,
-    )
-
-    ensure_export()
-    pages_pdf, domains_pdf = gate_web_frames()
-    ps, dms = spark_schemas()
-    pages = spark.createDataFrame(pages_pdf, schema=ps)
-    domains = spark.createDataFrame(domains_pdf, schema=dms)
-    specs = domains.select("domain", "crawl_depth", "seed_urls")
-    out_dir = tempfile.mkdtemp(prefix="msx_q_")
-    engine = SparkCrawlEngine(spark, out_dir, seed=42, n_buckets=4)
-    engine.init_run(domains, specs)
-    engine.run_waves(pages, wave_budget=None)
+    pages_rows, domains_rows, _, _ = generate_gate_web()
+    engine = _crawl(spark, pages_rows, domains_rows, n_buckets=4)
     v = engine.read_table("visits")
     return v.select("domain", "url").distinct()
 
@@ -779,29 +777,10 @@ def q_link_filter_kinds(spark, sf_dir):
     cherry-picking predicate beyond the root; the DuckDB oracle
     re-derives the visited set as a recursive reachability closure with
     the predicates mirrored as plain SQL — no engine code."""
-    import tempfile
+    from marginaliasearch_spark.sources.gate_web import generate_linkfilter_fixture
 
-    from marginaliasearch_spark.plans.crawl import SparkCrawlEngine
-    from marginaliasearch_spark.sources.gate_web import (
-        ensure_linkfilter_export,
-        generate_linkfilter_fixture,
-    )
-    from marginaliasearch_spark.sources.synthetic_web import (
-        normalize_pages_pdf,
-        spark_schemas,
-    )
-    import pandas as pd
-
-    ensure_linkfilter_export()
     pages_rows, domains_rows, _, _ = generate_linkfilter_fixture()
-    ps, dms = spark_schemas()
-    pages = spark.createDataFrame(normalize_pages_pdf(pd.DataFrame(pages_rows)), schema=ps)
-    domains = spark.createDataFrame(pd.DataFrame(domains_rows), schema=dms)
-    specs = domains.select("domain", "crawl_depth", "seed_urls")
-    out_dir = tempfile.mkdtemp(prefix="msx_q_")
-    engine = SparkCrawlEngine(spark, out_dir, seed=42, n_buckets=2)
-    engine.init_run(domains, specs)
-    engine.run_waves(pages, wave_budget=None)
+    engine = _crawl(spark, pages_rows, domains_rows, n_buckets=2)
     v = engine.read_table("visits")
     return v.select("domain", "url").distinct()
 
@@ -855,12 +834,8 @@ def q_robots_allowed(spark, sf_dir):
     from pyspark.sql import types as T
     from pyspark.sql.pandas.functions import pandas_udf
 
-    from marginaliasearch_spark.sources.gate_web import (
-        ensure_robots_export,
-        generate_robots_fixture,
-    )
+    from marginaliasearch_spark.sources.gate_web import generate_robots_fixture
 
-    ensure_robots_export()
     rows = generate_robots_fixture()
     df = spark.createDataFrame(
         [(r["case_id"], r["robots_txt"], r["user_agent"], r["url"]) for r in rows],
@@ -893,12 +868,8 @@ def q_connected_components(spark, sf_dir):
     INDEPENDENTLY as min-reachable-id over a recursive transitive
     closure of the same exported edges."""
     from marginaliasearch_spark.operators.graph import connected_components
-    from marginaliasearch_spark.sources.gate_web import (
-        ensure_cc_export,
-        generate_cc_fixture,
-    )
+    from marginaliasearch_spark.sources.gate_web import generate_cc_fixture
 
-    ensure_cc_export()
     edges = spark.createDataFrame(
         [(e["id_a"], e["id_b"]) for e in generate_cc_fixture()],
         "id_a long, id_b long",
@@ -920,11 +891,9 @@ def q_pagerank_order(spark, sf_dir):
     from marginaliasearch_spark.operators.graph import pagerank
     from marginaliasearch_spark.sources.gate_web import (
         PR_N_HUBS,
-        ensure_pagerank_export,
         generate_pagerank_fixture,
     )
 
-    ensure_pagerank_export()
     edge_rows, _ = generate_pagerank_fixture()
     edges = spark.createDataFrame(
         [(e["src"], e["dst"]) for e in edge_rows], "src long, dst long"
@@ -968,29 +937,12 @@ def q_cross_domain_discovery(spark, sf_dir):
     pages and admit only the planted orphans (duplicated in the fixture,
     so global dedup must also collapse them); the oracle is the planted
     (domain, url) set."""
-    import pandas as pd
-
-    from marginaliasearch_spark.plans.crawl import SparkCrawlEngine
     from marginaliasearch_spark.plans.discovery import next_cycle_atags
     from marginaliasearch_spark.plans.frontier_dedup import FrontierDedup
-    from marginaliasearch_spark.sources.gate_web import (
-        ensure_discovery_export,
-        generate_discovery_fixture,
-    )
-    from marginaliasearch_spark.sources.synthetic_web import (
-        normalize_pages_pdf,
-        spark_schemas,
-    )
+    from marginaliasearch_spark.sources.gate_web import generate_discovery_fixture
 
-    ensure_discovery_export()
     pages_rows, domains_rows, _ = generate_discovery_fixture()
-    ps, dms = spark_schemas()
-    pages = spark.createDataFrame(normalize_pages_pdf(pd.DataFrame(pages_rows)), schema=ps)
-    domains = spark.createDataFrame(pd.DataFrame(domains_rows), schema=dms)
-    out_dir = tempfile.mkdtemp(prefix="msx_disc_")
-    engine = SparkCrawlEngine(spark, out_dir, seed=42, n_buckets=4)
-    engine.init_run(domains, domains.select("domain", "crawl_depth", "seed_urls"))
-    engine.run_waves(pages, wave_budget=None)
+    engine = _crawl(spark, pages_rows, domains_rows, n_buckets=4)
     fd = FrontierDedup(
         spark, tempfile.mkdtemp(prefix="msx_seen_"), n_buckets=8,
         cuckoo_m_buckets=1 << 10,
@@ -1013,29 +965,12 @@ def q_crawl_visit_order(spark, sf_dir):
     the planted (domain, rank, url) table.  Certifies the queue
     discipline — BFS FIFO appends, redirect targets jumping the queue —
     through the distributed wave path."""
-    import pandas as pd
+    from marginaliasearch_spark.sources.gate_web import generate_order_web
 
-    from marginaliasearch_spark.plans.crawl import SparkCrawlEngine
-    from marginaliasearch_spark.sources.gate_web import (
-        ensure_order_export,
-        generate_order_web,
-    )
-    from marginaliasearch_spark.sources.synthetic_web import (
-        normalize_pages_pdf,
-        spark_schemas,
-    )
-
-    ensure_order_export()
     pages_rows, domains_rows, _ = generate_order_web()
-    ps, dms = spark_schemas()
-    pages = spark.createDataFrame(normalize_pages_pdf(pd.DataFrame(pages_rows)), schema=ps)
-    domains = spark.createDataFrame(pd.DataFrame(domains_rows), schema=dms)
-    out_dir = tempfile.mkdtemp(prefix="msx_ord_")
-    engine = SparkCrawlEngine(spark, out_dir, seed=42, n_buckets=4)
-    engine.init_run(domains, domains.select("domain", "crawl_depth", "seed_urls"))
     # wave_budget=2 forces multi-wave execution: the order must survive
     # frontier serialization/rehydration across snapshots
-    engine.run_waves(pages, wave_budget=2)
+    engine = _crawl(spark, pages_rows, domains_rows, wave_budget=2, n_buckets=4)
     v = engine.read_table("visits")
     w = Window.partitionBy("domain").orderBy("wave", "idx")
     return v.withColumn("rank", F.row_number().over(w).cast("long")).select(
@@ -1138,21 +1073,9 @@ def q_recrawl_retention(spark, sf_dir):
     The oracle is a plain scan of the planted truth."""
     import pandas as pd
 
-    from marginaliasearch_spark.plans.crawl import SparkCrawlEngine
-    from marginaliasearch_spark.sources.gate_web import (
-        ensure_recrawl_export,
-        generate_recrawl_fixture,
-    )
-    from marginaliasearch_spark.sources.synthetic_web import (
-        normalize_pages_pdf,
-        spark_schemas,
-    )
+    from marginaliasearch_spark.sources.gate_web import generate_recrawl_fixture
 
-    ensure_recrawl_export()
     pages_rows, domains_rows, prev_rows, _ = generate_recrawl_fixture()
-    ps, dms = spark_schemas()
-    pages = spark.createDataFrame(normalize_pages_pdf(pd.DataFrame(pages_rows)), schema=ps)
-    domains = spark.createDataFrame(pd.DataFrame(domains_rows), schema=dms)
     # dtype=object: pandas would otherwise decay int64+None to float64 and
     # silently corrupt the 64-bit fingerprints
     prev = spark.createDataFrame(
@@ -1160,11 +1083,7 @@ def q_recrawl_retention(spark, sf_dir):
         "domain string, pos long, url string, http_status int, image_id string,"
         " etag string, last_modified string, lsh64 long",
     )
-    specs = domains.select("domain", "crawl_depth", "seed_urls")
-    out_dir = tempfile.mkdtemp(prefix="msx_rc_")
-    engine = SparkCrawlEngine(spark, out_dir, seed=42, n_buckets=4)
-    engine.init_run(domains, specs)
-    engine.run_waves(pages, wave_budget=None, prev_crawl_df=prev)
+    engine = _crawl(spark, pages_rows, domains_rows, prev_crawl_df=prev, n_buckets=4)
 
     log = engine.read_table("fetch_log")
     outcome = (
@@ -1200,27 +1119,10 @@ def q_retry_ladder(spark, sf_dir):
     ones with the planted retry count.  Outcome and retry count are
     derived from the fetch_log audit trail (FETCH final status +
     FETCH_RETRY rows); the oracle is the planted truth table."""
-    import pandas as pd
+    from marginaliasearch_spark.sources.gate_web import generate_retry_fixture
 
-    from marginaliasearch_spark.plans.crawl import SparkCrawlEngine
-    from marginaliasearch_spark.sources.gate_web import (
-        ensure_retry_export,
-        generate_retry_fixture,
-    )
-    from marginaliasearch_spark.sources.synthetic_web import (
-        normalize_pages_pdf,
-        spark_schemas,
-    )
-
-    ensure_retry_export()
     pages_rows, domains_rows, _ = generate_retry_fixture()
-    ps, dms = spark_schemas()
-    pages = spark.createDataFrame(normalize_pages_pdf(pd.DataFrame(pages_rows)), schema=ps)
-    domains = spark.createDataFrame(pd.DataFrame(domains_rows), schema=dms)
-    out_dir = tempfile.mkdtemp(prefix="msx_rl_")
-    engine = SparkCrawlEngine(spark, out_dir, seed=42, n_buckets=4)
-    engine.init_run(domains, domains.select("domain", "crawl_depth", "seed_urls"))
-    engine.run_waves(pages, wave_budget=None)
+    engine = _crawl(spark, pages_rows, domains_rows, n_buckets=4)
 
     log = engine.read_table("fetch_log").filter(F.col("url").contains("/r/"))
     finals = log.filter(F.col("action") == "FETCH").select(
@@ -1257,27 +1159,10 @@ def q_cookie_markers(spark, sf_dir):
     WarcRecorder.java:114,140: jar updates from the response BEFORE the
     record is written).  Oracle = the planted truth table derived from the
     jar's public parse contract."""
-    import pandas as pd
+    from marginaliasearch_spark.sources.gate_web import generate_cookie_fixture
 
-    from marginaliasearch_spark.plans.crawl import SparkCrawlEngine
-    from marginaliasearch_spark.sources.gate_web import (
-        ensure_cookie_export,
-        generate_cookie_fixture,
-    )
-    from marginaliasearch_spark.sources.synthetic_web import (
-        normalize_pages_pdf,
-        spark_schemas,
-    )
-
-    ensure_cookie_export()
     pages_rows, domains_rows, _ = generate_cookie_fixture()
-    ps, dms = spark_schemas()
-    pages = spark.createDataFrame(normalize_pages_pdf(pd.DataFrame(pages_rows)), schema=ps)
-    domains = spark.createDataFrame(pd.DataFrame(domains_rows), schema=dms)
-    out_dir = tempfile.mkdtemp(prefix="msx_ck_")
-    engine = SparkCrawlEngine(spark, out_dir, seed=42, n_buckets=4)
-    engine.init_run(domains, domains.select("domain", "crawl_depth", "seed_urls"))
-    engine.run_waves(pages, wave_budget=None)
+    engine = _crawl(spark, pages_rows, domains_rows, n_buckets=4)
     return (
         engine.read_table("crawl_data")
         .select(
@@ -1299,27 +1184,10 @@ def q_sitemap_scan(spark, sf_dir):
     functions/sitemap.py).  The engine crawls the fixture; each planted
     orphan's visited flag is derived by joining the engine's visits
     table; the oracle is the planted truth table."""
-    import pandas as pd
+    from marginaliasearch_spark.sources.gate_web import generate_sitemap_fixture
 
-    from marginaliasearch_spark.plans.crawl import SparkCrawlEngine
-    from marginaliasearch_spark.sources.gate_web import (
-        ensure_sitemap_export,
-        generate_sitemap_fixture,
-    )
-    from marginaliasearch_spark.sources.synthetic_web import (
-        normalize_pages_pdf,
-        spark_schemas,
-    )
-
-    ensure_sitemap_export()
     pages_rows, domains_rows, expected_rows = generate_sitemap_fixture()
-    ps, dms = spark_schemas()
-    pages = spark.createDataFrame(normalize_pages_pdf(pd.DataFrame(pages_rows)), schema=ps)
-    domains = spark.createDataFrame(pd.DataFrame(domains_rows), schema=dms)
-    out_dir = tempfile.mkdtemp(prefix="msx_sm_")
-    engine = SparkCrawlEngine(spark, out_dir, seed=42, n_buckets=4)
-    engine.init_run(domains, domains.select("domain", "crawl_depth", "seed_urls"))
-    engine.run_waves(pages, wave_budget=None)
+    engine = _crawl(spark, pages_rows, domains_rows, n_buckets=4)
     # candidates are the planted orphan set (an INPUT of the fixture);
     # the visited flag is earned from the engine's visits table alone
     cands = spark.createDataFrame(
@@ -1344,27 +1212,10 @@ def q_xrobots_store(spark, sf_dir):
     functions/xrobots.py).  Flags are earned from the engine's visits
     and crawl_data tables; oracle = planted truth from the published
     algebra."""
-    import pandas as pd
+    from marginaliasearch_spark.sources.gate_web import generate_xrobots_fixture
 
-    from marginaliasearch_spark.plans.crawl import SparkCrawlEngine
-    from marginaliasearch_spark.sources.gate_web import (
-        ensure_xrobots_export,
-        generate_xrobots_fixture,
-    )
-    from marginaliasearch_spark.sources.synthetic_web import (
-        normalize_pages_pdf,
-        spark_schemas,
-    )
-
-    ensure_xrobots_export()
     pages_rows, domains_rows, expected_rows = generate_xrobots_fixture()
-    ps, dms = spark_schemas()
-    pages = spark.createDataFrame(normalize_pages_pdf(pd.DataFrame(pages_rows)), schema=ps)
-    domains = spark.createDataFrame(pd.DataFrame(domains_rows), schema=dms)
-    out_dir = tempfile.mkdtemp(prefix="msx_xr_")
-    engine = SparkCrawlEngine(spark, out_dir, seed=42, n_buckets=4)
-    engine.init_run(domains, domains.select("domain", "crawl_depth", "seed_urls"))
-    engine.run_waves(pages, wave_budget=None)
+    engine = _crawl(spark, pages_rows, domains_rows, n_buckets=4)
     cands = spark.createDataFrame(
         [(r["domain"], r["url"]) for r in expected_rows], "domain string, url string"
     )
@@ -1392,27 +1243,10 @@ def q_domain_meta_discovery(spark, sf_dir):
     with 200-only persist (CrawlerRetreiver.java:333-339,404-441;
     DomainStateDb.saveIcon).  Values read from the engine's crawl_meta
     domain summary; oracle = the planted truth table."""
-    import pandas as pd
+    from marginaliasearch_spark.sources.gate_web import generate_domain_meta_fixture
 
-    from marginaliasearch_spark.plans.crawl import SparkCrawlEngine
-    from marginaliasearch_spark.sources.gate_web import (
-        ensure_domain_meta_export,
-        generate_domain_meta_fixture,
-    )
-    from marginaliasearch_spark.sources.synthetic_web import (
-        normalize_pages_pdf,
-        spark_schemas,
-    )
-
-    ensure_domain_meta_export()
     pages_rows, domains_rows, _ = generate_domain_meta_fixture()
-    ps, dms = spark_schemas()
-    pages = spark.createDataFrame(normalize_pages_pdf(pd.DataFrame(pages_rows)), schema=ps)
-    domains = spark.createDataFrame(pd.DataFrame(domains_rows), schema=dms)
-    out_dir = tempfile.mkdtemp(prefix="msx_dm_")
-    engine = SparkCrawlEngine(spark, out_dir, seed=42, n_buckets=4)
-    engine.init_run(domains, domains.select("domain", "crawl_depth", "seed_urls"))
-    engine.run_waves(pages, wave_budget=None)
+    engine = _crawl(spark, pages_rows, domains_rows, n_buckets=4)
     return engine.crawl_meta().select(
         "domain", "feed_url", "favicon_url", "favicon_content_type"
     )
@@ -1427,27 +1261,10 @@ def q_content_probe(spark, sf_dir):
     probable-good extensions skip the probe entirely).  Derived from the
     fetch_log audit actions; oracle = the planted truth table
     (HttpFetcherImpl.probeContentType:332-400, ContentTypeLogic.java:13-59)."""
-    import pandas as pd
+    from marginaliasearch_spark.sources.gate_web import generate_content_probe_fixture
 
-    from marginaliasearch_spark.plans.crawl import SparkCrawlEngine
-    from marginaliasearch_spark.sources.gate_web import (
-        ensure_content_probe_export,
-        generate_content_probe_fixture,
-    )
-    from marginaliasearch_spark.sources.synthetic_web import (
-        normalize_pages_pdf,
-        spark_schemas,
-    )
-
-    ensure_content_probe_export()
     pages_rows, domains_rows, _ = generate_content_probe_fixture()
-    ps, dms = spark_schemas()
-    pages = spark.createDataFrame(normalize_pages_pdf(pd.DataFrame(pages_rows)), schema=ps)
-    domains = spark.createDataFrame(pd.DataFrame(domains_rows), schema=dms)
-    out_dir = tempfile.mkdtemp(prefix="msx_ct_")
-    engine = SparkCrawlEngine(spark, out_dir, seed=42, n_buckets=4)
-    engine.init_run(domains, domains.select("domain", "crawl_depth", "seed_urls"))
-    engine.run_waves(pages, wave_budget=None)
+    engine = _crawl(spark, pages_rows, domains_rows, n_buckets=4)
 
     log = engine.read_table("fetch_log").filter(F.col("url").contains("/r/"))
     outcome = (
@@ -1518,30 +1335,10 @@ def q_crawl_meta(spark, sf_dir):
     — the engine earns phase/visited_cnt/good_status_count/crawl_changes/
     error_count through the real probe, robots, retry-ladder and
     error-budget machinery; the oracle is a scan of declared truth."""
-    import tempfile
+    from marginaliasearch_spark.sources.gate_web import generate_crawl_meta_fixture
 
-    import pandas as pd
-
-    from marginaliasearch_spark.plans.crawl import SparkCrawlEngine
-    from marginaliasearch_spark.sources.gate_web import (
-        ensure_crawl_meta_export,
-        generate_crawl_meta_fixture,
-    )
-    from marginaliasearch_spark.sources.synthetic_web import (
-        normalize_pages_pdf,
-        spark_schemas,
-    )
-
-    ensure_crawl_meta_export()
     pages_rows, domains_rows, _ = generate_crawl_meta_fixture()
-    ps, dms = spark_schemas()
-    pages = spark.createDataFrame(normalize_pages_pdf(pd.DataFrame(pages_rows)), schema=ps)
-    domains = spark.createDataFrame(pd.DataFrame(domains_rows), schema=dms)
-    specs = domains.select("domain", "crawl_depth", "seed_urls")
-    out_dir = tempfile.mkdtemp(prefix="msx_q_")
-    engine = SparkCrawlEngine(spark, out_dir, seed=42, n_buckets=2)
-    engine.init_run(domains, specs)
-    engine.run_waves(pages, wave_budget=None)
+    engine = _crawl(spark, pages_rows, domains_rows, n_buckets=2)
     meta = engine.crawl_meta()
     return meta.select(
         "domain",
@@ -1561,34 +1358,17 @@ def q_body_cap_clip(spark, sf_dir):
     (no hash values in the export) and the engine runs with the cap set
     to the fixture's test boundary — the session default stays the
     reference's 32 MB constant."""
-    import tempfile
-
-    import pandas as pd
     from pyspark.sql import Window
 
-    from marginaliasearch_spark.plans.crawl import SparkCrawlEngine
     from marginaliasearch_spark.sources.gate_web import (
         BODYCAP_TEST_CAP,
-        ensure_bodycap_export,
         generate_bodycap_fixture,
     )
-    from marginaliasearch_spark.sources.synthetic_web import (
-        normalize_pages_pdf,
-        spark_schemas,
-    )
 
-    ensure_bodycap_export()
     pages_rows, domains_rows, _ = generate_bodycap_fixture()
-    ps, dms = spark_schemas()
-    pages = spark.createDataFrame(normalize_pages_pdf(pd.DataFrame(pages_rows)), schema=ps)
-    domains = spark.createDataFrame(pd.DataFrame(domains_rows), schema=dms)
-    specs = domains.select("domain", "crawl_depth", "seed_urls")
-    out_dir = tempfile.mkdtemp(prefix="msx_q_")
-    engine = SparkCrawlEngine(
-        spark, out_dir, seed=42, n_buckets=2, body_cap_bytes=BODYCAP_TEST_CAP
+    engine = _crawl(
+        spark, pages_rows, domains_rows, n_buckets=2, body_cap_bytes=BODYCAP_TEST_CAP
     )
-    engine.init_run(domains, specs)
-    engine.run_waves(pages, wave_budget=None)
     cd = engine.read_table("crawl_data").filter(F.col("lsh64").isNotNull())
     return cd.select(
         "url",
@@ -1615,17 +1395,13 @@ def q_live_rollup(spark, sf_dir):
     import pandas as pd
 
     from marginaliasearch_spark.functions.udfs import canonicalize
-    from marginaliasearch_spark.sources.gate_web import (
-        ensure_stream_export,
-        generate_stream_fixture,
-    )
+    from marginaliasearch_spark.sources.gate_web import generate_stream_fixture
     from marginaliasearch_spark.streaming.livecrawl import (
         FEED_ITEM_SCHEMA,
         ingest_rollup,
         live_candidates,
     )
 
-    ensure_stream_export()
     rows = generate_stream_fixture()
     pdf = pd.DataFrame(rows)
     pdf["ts"] = pd.to_datetime(pdf["ts_iso"])
@@ -1787,23 +1563,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql() -> dict[str, str]:
     from marginaliasearch_spark.sources.gate_web import (
         discovery_oracle_sql,
-        ensure_discovery_export,
-        ensure_export,
-        ensure_order_export,
-        ensure_content_probe_export,
-        ensure_cookie_export,
-        ensure_recrawl_export,
-        ensure_retry_export,
-        ensure_sitemap_export,
-        ensure_xrobots_export,
-        ensure_domain_meta_export,
-        ensure_linkfilter_export,
-        ensure_robots_export,
-        ensure_cc_export,
-        ensure_pagerank_export,
-        ensure_crawl_meta_export,
-        ensure_bodycap_export,
-        ensure_stream_export,
         crawl_meta_oracle_sql,
         bodycap_oracle_sql,
         stream_oracle_sql,
@@ -1834,23 +1593,6 @@ def oracle_sql() -> dict[str, str]:
     from marginaliasearch_spark.operators.sampling import hash32_sql
 
     h32 = hash32_sql("doc_id")
-    gate_dir = ensure_export()
-    rc_dir = ensure_recrawl_export()
-    ord_dir = ensure_order_export()
-    disc_dir = ensure_discovery_export()
-    retry_dir = ensure_retry_export()
-    ck_dir = ensure_cookie_export()
-    sm_dir = ensure_sitemap_export()
-    xr_dir = ensure_xrobots_export()
-    dm_dir = ensure_domain_meta_export()
-    ct_dir = ensure_content_probe_export()
-    lf_dir = ensure_linkfilter_export()
-    rob_dir = ensure_robots_export()
-    cc_dir = ensure_cc_export()
-    pr_dir = ensure_pagerank_export()
-    gm_dir = ensure_crawl_meta_export()
-    bc_dir = ensure_bodycap_export()
-    st_dir = ensure_stream_export()
     _qp_gold = _os.path.join(
         _os.path.dirname(_os.path.abspath(__file__)),
         "tests", "golden", "queryparams_diff.tsv",
@@ -1876,8 +1618,8 @@ def oracle_sql() -> dict[str, str]:
                                     'url': 'VARCHAR'}})
             WHERE seq NOT IN ('ERR', 'EMPTY')
         """,
-        "crawl_visited_set": gate_oracle_sql(gate_dir),
-        "link_filter_kinds": linkfilter_oracle_sql(lf_dir),
+        "crawl_visited_set": gate_oracle_sql(),
+        "link_filter_kinds": linkfilter_oracle_sql(),
         "queryparams_sanitize": f"""
             SELECT path, params, NULLIF(expected, '<null>') AS sanitized
             FROM read_csv('{_qp_gold}', delim='\t', header=false,
@@ -1885,18 +1627,18 @@ def oracle_sql() -> dict[str, str]:
                                     'expected': 'VARCHAR'}},
                           nullstr='\x01', quote='')
         """,
-        "robots_allowed": robots_oracle_sql(rob_dir),
-        "connected_components": cc_oracle_sql(cc_dir),
-        "pagerank_order": pagerank_oracle_sql(pr_dir),
-        "recrawl_retention": recrawl_oracle_sql(rc_dir),
-        "crawl_visit_order": order_oracle_sql(ord_dir),
-        "cross_domain_discovery": discovery_oracle_sql(disc_dir),
-        "retry_ladder": retry_oracle_sql(retry_dir),
-        "cookie_markers": cookie_oracle_sql(ck_dir),
-        "sitemap_scan": sitemap_oracle_sql(sm_dir),
-        "xrobots_store": xrobots_oracle_sql(xr_dir),
-        "domain_meta_discovery": domain_meta_oracle_sql(dm_dir),
-        "content_probe": content_probe_oracle_sql(ct_dir),
+        "robots_allowed": robots_oracle_sql(),
+        "connected_components": cc_oracle_sql(),
+        "pagerank_order": pagerank_oracle_sql(),
+        "recrawl_retention": recrawl_oracle_sql(),
+        "crawl_visit_order": order_oracle_sql(),
+        "cross_domain_discovery": discovery_oracle_sql(),
+        "retry_ladder": retry_oracle_sql(),
+        "cookie_markers": cookie_oracle_sql(),
+        "sitemap_scan": sitemap_oracle_sql(),
+        "xrobots_store": xrobots_oracle_sql(),
+        "domain_meta_discovery": domain_meta_oracle_sql(),
+        "content_probe": content_probe_oracle_sql(),
         "stratified_sample": f"""
             SELECT lang, doc_id FROM documents
             WHERE {h32} < CAST(floor(CASE lang
@@ -1905,9 +1647,9 @@ def oracle_sql() -> dict[str, str]:
                     WHEN 'fr' THEN 0.1 * 4294967296
                     ELSE 0 END) AS BIGINT)
         """,
-        "crawl_meta": crawl_meta_oracle_sql(gm_dir),
-        "body_cap_clip": bodycap_oracle_sql(bc_dir),
-        "live_rollup": stream_oracle_sql(st_dir),
+        "crawl_meta": crawl_meta_oracle_sql(),
+        "body_cap_clip": bodycap_oracle_sql(),
+        "live_rollup": stream_oracle_sql(),
         "balanced_sample": f"""
             SELECT lang, doc_id FROM (
                 SELECT lang, doc_id,

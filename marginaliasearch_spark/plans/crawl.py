@@ -40,7 +40,6 @@ from __future__ import annotations
 
 import json
 import os
-import sys
 from typing import Optional
 
 import pandas as pd
@@ -107,12 +106,22 @@ WAVE_OUT_SCHEMA = T.StructType(
 _OUT_COLS = [f.name for f in WAVE_OUT_SCHEMA.fields]
 
 
-def _row(row_kind: str, domain: str, **kw) -> dict:
-    base = {c: None for c in _OUT_COLS}
-    base["row_kind"] = row_kind
-    base["domain"] = domain
-    base.update(kw)
-    return base
+def _state_rows(df: DataFrame, kind: str, **cols) -> DataFrame:
+    """One state-side input of the wave cogroup, in STATE_IN_SCHEMA column
+    order: ``domain`` from ``df``, ``row_kind`` = ``kind``, each given
+    column (a name or Column) cast to its schema type.  A column not given
+    is a typed null for strings and literal 0 for long/int fields — never
+    null, so Arrow→pandas cannot decay lsh64/url_hash to float64."""
+    given = {"domain": "domain", "row_kind": F.lit(kind), **cols}
+    out = []
+    for f in STATE_IN_SCHEMA.fields:
+        c = given.get(f.name)
+        if c is None:
+            c = F.lit(None) if isinstance(f.dataType, T.StringType) else F.lit(0)
+        elif isinstance(c, str):
+            c = F.col(c)
+        out.append(c.cast(f.dataType).alias(f.name))
+    return df.select(*out)
 
 
 _INT64_COLS = ("url_hash", "seq", "virtual_ms", "idx", "phash", "lsh64", "timestamp")
@@ -192,15 +201,10 @@ def _make_wave_fn(
             ds_rows = state_pdf[state_pdf.row_kind == "domain_state"]
             domain = ds_rows["domain"].iloc[0] if not ds_rows.empty else "?"
             err = json.dumps({"phase": "error", "exception": repr(ex)[:500]})
-            pdf = pd.DataFrame(
-                [_row("domain_state", domain, state="error", state_json=err)],
-                columns=_OUT_COLS,
-                dtype=object,
+            return _assemble_out(
+                domain,
+                [(1, {"row_kind": "domain_state", "state": "error", "state_json": err})],
             )
-            for col in ("url_hash", "seq", "virtual_ms", "idx"):
-                pdf[col] = pdf[col].astype("Int64")
-            pdf["http_status"] = pdf["http_status"].astype("Int32")
-            return pdf
 
     def _wave_fn_inner(state_pdf: pd.DataFrame, pages_pdf: pd.DataFrame) -> pd.DataFrame:
         if state_pdf.empty:
@@ -556,11 +560,16 @@ class SparkCrawlEngine:
         opens only fetch_log files, not every wave's every kind.  A
         compaction snapshot (compact_wave_out) folds prior waves into one
         row_kind-partitioned table that unions in here."""
+        df = self._wave_out_all()
+        if df is None:
+            return None
+        return df.filter(F.col("row_kind") == (kind or table)).select(*cols)
+
+    def _wave_out_all(self) -> Optional[DataFrame]:
+        """Every committed wave_out row: the per-wave dirs unioned with any
+        compacted table (None when there are neither)."""
         paths = self.catalog.paths("wave_out")
         cpaths = self.catalog.paths("wave_out_compacted")
-        if not paths and not cpaths:
-            return None
-        kind = kind or table
         parts = []
         if paths:
             parts.append(
@@ -570,10 +579,12 @@ class SparkCrawlEngine:
             )
         for p in cpaths:
             parts.append(self.spark.read.option("basePath", p).parquet(p))
+        if not parts:
+            return None
         df = parts[0]
         for extra in parts[1:]:
             df = df.unionByName(extra)
-        return df.filter(F.col("row_kind") == kind).select(*cols)
+        return df
 
     def read_table(self, table: str) -> Optional[DataFrame]:
         return self._read(table)
@@ -745,16 +756,6 @@ class SparkCrawlEngine:
 
         waves_done = 0
         t_start = _time.monotonic()
-        trace = os.environ.get("SPARK_GRAFT_WAVE_TIMING") == "1"
-        _tp = [_time.monotonic()]
-
-        def _mark(label: str) -> None:
-            # opt-in per-phase wall trace (guide §1.5) — stderr only
-            if trace:
-                now = _time.monotonic()
-                print(f"[wave-timing] {label}: {now - _tp[0]:.3f}s", file=sys.stderr)
-                _tp[0] = now
-
         while waves_done < max_waves:
             if deadline_s is not None and _time.monotonic() - t_start >= deadline_s:
                 break  # timed-run deadline: stop submitting waves, stay resumable
@@ -828,44 +829,23 @@ class SparkCrawlEngine:
                 .distinct()
                 .collect()
             )
-            _mark("state read + runnable set build")
             if not dirty:  # no dirty buckets ⇔ no runnable domains
                 active.unpersist()
                 break
 
-            left = active.select(
-                "domain",
-                F.lit("domain_state").alias("row_kind"),
-                F.lit(0).cast("long").alias("url_hash"),
-                F.lit(None).cast("string").alias("url"),
-                F.lit(0).cast("long").alias("seq"),
-                F.lit(None).cast("string").alias("state"),
-                "state_json",
-                "info_json",
-                F.lit(0).cast("int").alias("http_status"),
-                F.lit(None).cast("string").alias("image_id"),
-                F.lit(None).cast("string").alias("etag"),
-                F.lit(None).cast("string").alias("last_modified"),
-                F.lit(0).cast("long").alias("lsh64"),
+            left = _state_rows(
+                active, "domain_state", state_json="state_json", info_json="info_json"
             )
             frontier = self._read("frontier")
             if frontier is not None:
-                fr = frontier.join(active.select("domain"), "domain", "left_semi").select(
-                    "domain",
-                    F.lit("frontier").alias("row_kind"),
-                    "url_hash",
-                    "url",
-                    "seq",
-                    "state",
-                    F.lit(None).cast("string").alias("state_json"),
-                    F.lit(None).cast("string").alias("info_json"),
-                    F.lit(0).cast("int").alias("http_status"),
-                    F.lit(None).cast("string").alias("image_id"),
-                    F.lit(None).cast("string").alias("etag"),
-                    F.lit(None).cast("string").alias("last_modified"),
-                    F.lit(0).cast("long").alias("lsh64"),
+                fr = frontier.join(active.select("domain"), "domain", "left_semi")
+                left = left.unionByName(
+                    _state_rows(
+                        fr, "frontier", url_hash="url_hash", url="url", seq="seq",
+                        state="state",
+                    )
                 )
-                left = left.unionByName(fr)
+            pending = active.filter(F.col("phase") == "pending").select("domain")
             if prev_crawl_df is not None:
                 pcd = prev_crawl_df
                 # older prev-crawl tables may lack the validator columns
@@ -873,41 +853,18 @@ class SparkCrawlEngine:
                     pcd = pcd.withColumn("last_modified", F.lit(None).cast("string"))
                 if "lsh64" not in pcd.columns:
                     pcd = pcd.withColumn("lsh64", F.lit(None).cast("long"))
-                pending = active.filter(F.col("phase") == "pending").select("domain")
-                pc = pcd.join(pending, "domain", "left_semi").select(
-                    "domain",
-                    F.lit("prev_crawl").alias("row_kind"),
-                    F.lit(0).cast("long").alias("url_hash"),
-                    "url",
-                    F.col("pos").cast("long").alias("seq"),
-                    F.lit(None).cast("string").alias("state"),
-                    F.lit(None).cast("string").alias("state_json"),
-                    F.lit(None).cast("string").alias("info_json"),
-                    F.col("http_status").cast("int").alias("http_status"),
-                    "image_id",
-                    "etag",
-                    "last_modified",
-                    F.coalesce(F.col("lsh64").cast("long"), F.lit(0)).alias("lsh64"),
+                pc = pcd.join(pending, "domain", "left_semi")
+                left = left.unionByName(
+                    _state_rows(
+                        pc, "prev_crawl", url="url", seq="pos",
+                        http_status="http_status", image_id="image_id", etag="etag",
+                        last_modified="last_modified",
+                        lsh64=F.coalesce(F.col("lsh64").cast("long"), F.lit(0)),
+                    )
                 )
-                left = left.unionByName(pc)
             if atags_df is not None:
-                pending = active.filter(F.col("phase") == "pending").select("domain")
-                at = atags_df.join(pending, "domain", "left_semi").select(
-                    "domain",
-                    F.lit("atag").alias("row_kind"),
-                    F.lit(0).cast("long").alias("url_hash"),
-                    "url",
-                    F.col("pos").cast("long").alias("seq"),
-                    F.lit(None).cast("string").alias("state"),
-                    F.lit(None).cast("string").alias("state_json"),
-                    F.lit(None).cast("string").alias("info_json"),
-                    F.lit(0).cast("int").alias("http_status"),
-                    F.lit(None).cast("string").alias("image_id"),
-                    F.lit(None).cast("string").alias("etag"),
-                    F.lit(None).cast("string").alias("last_modified"),
-                    F.lit(0).cast("long").alias("lsh64"),
-                )
-                left = left.unionByName(at)
+                at = atags_df.join(pending, "domain", "left_semi")
+                left = left.unionByName(_state_rows(at, "atag", url="url", seq="pos"))
 
             # prune the pages side to ACTIVE domains before the cogroup:
             # terminal domains' pages would otherwise be shuffled every
@@ -941,9 +898,7 @@ class SparkCrawlEngine:
             # directories; frontier/domain_state replacements re-read only
             # their own kind's files (no recompute).
             opath = self.catalog.wave_path("wave_out", wave)
-            _mark("wave plan build")
             out.write.partitionBy("row_kind").mode("overwrite").parquet(opath)
-            _mark("cogroup crawl + wave_out write")
             table_paths: dict[str, Optional[str]] = {"wave_out": opath}
             out_w = self.spark.read.parquet(opath)
 
@@ -995,6 +950,8 @@ class SparkCrawlEngine:
             # below), so a failure in either leaves the snapshot intact.
             from concurrent.futures import ThreadPoolExecutor
 
+            from pyspark import inheritable_thread_target
+
             def _write_frontier():
                 new_frontier.repartition(
                     self.n_buckets, "bucket"
@@ -1003,11 +960,17 @@ class SparkCrawlEngine:
             def _write_domain_state():
                 new_ds.write.mode("overwrite").parquet(dpath)
 
+            # PySpark pins each Python thread to its own JVM thread, so a
+            # pool thread would not carry the caller's job group or job
+            # description; the wrapper copies them into the writes.
+            targets = [
+                inheritable_thread_target(t)
+                for t in (_write_frontier, _write_domain_state)
+            ]
             with ThreadPoolExecutor(max_workers=2) as ex:
-                futs = [ex.submit(_write_frontier), ex.submit(_write_domain_state)]
+                futs = [ex.submit(t) for t in targets]
                 for f in futs:
                     f.result()  # re-raises either failure before commit
-            _mark("frontier + domain_state writes")
 
             frontier_buckets = {}
             for b in dirty:
@@ -1044,7 +1007,6 @@ class SparkCrawlEngine:
             self.catalog.commit(wave, table_paths, frontier_buckets=frontier_buckets)
             active.unpersist()
             waves_done += 1
-            _mark("commit")
             # termination is detected by the NEXT iteration's runnable-set
             # materialization (one bounded action per wave) — a dedicated
             # post-wave none-active read-back would re-read domain_state a
@@ -1066,19 +1028,9 @@ class SparkCrawlEngine:
         bounds the views' file listing at O(kinds) instead of
         O(waves × kinds)."""
         manifest = self.catalog.load()
-        paths = manifest["tables"].get("wave_out", [])
-        if not paths:
+        if not manifest["tables"].get("wave_out"):
             return None  # nothing new to fold
-        parts = [
-            self.spark.read.option(
-                "basePath", os.path.join(self.out_dir, "wave_out")
-            ).parquet(*paths)
-        ]
-        for p in manifest["tables"].get("wave_out_compacted", []):
-            parts.append(self.spark.read.option("basePath", p).parquet(p))
-        df = parts[0]
-        for extra in parts[1:]:
-            df = df.unionByName(extra)
+        df = self._wave_out_all()
         snap = manifest["wave"] + 1
         cpath = os.path.join(self.out_dir, "wave_out_compacted", f"v={snap:06d}")
         df.write.partitionBy("row_kind").mode("overwrite").parquet(cpath)

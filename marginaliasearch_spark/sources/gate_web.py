@@ -44,21 +44,36 @@ GATE_SEED = 7
 N_DOMAINS = 12  # 10=internal-redirect root, 11=HEAD-405 root (probe walk arms)
 
 
-def _fingerprinted_dir(tag: str, rows) -> str:
-    """Export dir keyed by a content fingerprint of the ground-truth rows —
-    a fixture change can never silently reuse a stale /tmp export."""
+def _export(tag: str, **tables) -> dict[str, str]:
+    """Write each table (a list of row dicts) as one parquet file and return
+    {table: parquet path}.  The dir name carries a fingerprint of the row
+    lists (not of DataFrames: pandas truncates their repr), so a fixture
+    edit can never reuse a stale export; the content is deterministic, so
+    concurrent writers produce identical files and race only on the
+    commit."""
     import hashlib
 
-    h = hashlib.sha256(repr(rows).encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"msx_{tag}_{h}")
+    import pandas as pd
+
+    h = hashlib.sha256(repr(tables).encode()).hexdigest()[:12]
+    target = os.path.join(tempfile.gettempdir(), f"msx_{tag}_{h}")
+    marker = os.path.join(target, "_COMPLETE")
+    if not os.path.exists(marker):
+        tmp = tempfile.mkdtemp(prefix=f"msx_{tag}_tmp_")
+        for name, rows in tables.items():
+            pd.DataFrame(rows).to_parquet(os.path.join(tmp, f"{name}.parquet"))
+        with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
+            f.write("ok\n")
+        _commit_export_dir(tmp, target, marker)
+    return {name: os.path.join(target, f"{name}.parquet") for name in tables}
 
 
-def _commit_export_dir(tmp: str, export_dir: str, marker: str) -> None:
+def _commit_export_dir(tmp: str, target: str, marker: str) -> None:
     """Atomic-rename commit with lost-race tolerance: the loser of a
     concurrent export race discards its tmp dir (identical content); any
     other rename failure re-raises."""
     try:
-        os.rename(tmp, export_dir)
+        os.rename(tmp, target)
     except OSError:
         import shutil
 
@@ -256,44 +271,13 @@ def generate_gate_web():
     return pages_rows, domains_rows, gw_domains, gw_links
 
 
-def gate_web_frames():
-    """(pages_pdf, domains_pdf) in the engine's synthetic-web frame schema."""
-    import pandas as pd
-
-    from .synthetic_web import normalize_pages_pdf
-
-    pages_rows, domains_rows, _, _ = generate_gate_web()
-    return normalize_pages_pdf(pd.DataFrame(pages_rows)), pd.DataFrame(domains_rows)
-
-
-def ensure_export(export_dir: str | None = None) -> str:
-    """Write the ground-truth facts as parquet (atomic, idempotent —
-    content is deterministic so concurrent writers produce identical files;
-    the dir name carries a content fingerprint so fixture edits can never
-    hit a stale export)."""
-    import pandas as pd
-
-    _, _, gw_domains, gw_links = generate_gate_web()
-    if export_dir is None:
-        export_dir = _fingerprinted_dir("gate", (gw_domains, gw_links))
-    marker = os.path.join(export_dir, "_COMPLETE")
-    if os.path.exists(marker):
-        return export_dir
-    tmp = tempfile.mkdtemp(prefix="msx_gate_tmp_")
-    pd.DataFrame(gw_domains).to_parquet(os.path.join(tmp, "gw_domains.parquet"))
-    pd.DataFrame(gw_links).to_parquet(os.path.join(tmp, "gw_links.parquet"))
-    with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
-        f.write("ok\n")
-    _commit_export_dir(tmp, export_dir, marker)
-    return export_dir
-
-
-def oracle_sql(export_dir: str) -> str:
+def oracle_sql() -> str:
     """The independent DuckDB oracle: recursive reachability closure over
     the ground-truth link facts with the admission gates mirrored as plain
     SQL predicates.  Shares no code with the engine."""
-    dd = os.path.join(export_dir, "gw_domains.parquet")
-    ll = os.path.join(export_dir, "gw_links.parquet")
+    _, _, gw_domains, gw_links = generate_gate_web()
+    paths = _export("gate", gw_domains=gw_domains, gw_links=gw_links)
+    dd, ll = paths["gw_domains"], paths["gw_links"]
     return f"""
         WITH RECURSIVE
         doms AS (
@@ -472,25 +456,9 @@ def generate_recrawl_fixture():
     return pages_rows, domains_rows, prev_rows, expected_rows
 
 
-def ensure_recrawl_export(export_dir: str | None = None) -> str:
-    import pandas as pd
-
+def recrawl_oracle_sql() -> str:
     _, _, _, expected = generate_recrawl_fixture()
-    if export_dir is None:
-        export_dir = _fingerprinted_dir("recrawl", expected)
-    marker = os.path.join(export_dir, "_COMPLETE")
-    if os.path.exists(marker):
-        return export_dir
-    tmp = tempfile.mkdtemp(prefix="msx_rc_tmp_")
-    pd.DataFrame(expected).to_parquet(os.path.join(tmp, "gw_recrawl.parquet"))
-    with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
-        f.write("ok\n")
-    _commit_export_dir(tmp, export_dir, marker)
-    return export_dir
-
-
-def recrawl_oracle_sql(export_dir: str) -> str:
-    p = os.path.join(export_dir, "gw_recrawl.parquet")
+    p = _export("recrawl", gw_recrawl=expected)["gw_recrawl"]
     return (
         f"SELECT domain, url, outcome, CAST(n_retries AS BIGINT) AS n_retries"
         f" FROM read_parquet('{p}')"
@@ -569,25 +537,9 @@ def generate_retry_fixture():
     return pages_rows, domains_rows, expected_rows
 
 
-def ensure_retry_export(export_dir: str | None = None) -> str:
-    import pandas as pd
-
+def retry_oracle_sql() -> str:
     _, _, expected = generate_retry_fixture()
-    if export_dir is None:
-        export_dir = _fingerprinted_dir("retry", expected)
-    marker = os.path.join(export_dir, "_COMPLETE")
-    if os.path.exists(marker):
-        return export_dir
-    tmp = tempfile.mkdtemp(prefix="msx_retry_tmp_")
-    pd.DataFrame(expected).to_parquet(os.path.join(tmp, "gw_retry.parquet"))
-    with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
-        f.write("ok\n")
-    _commit_export_dir(tmp, export_dir, marker)
-    return export_dir
-
-
-def retry_oracle_sql(export_dir: str) -> str:
-    p = os.path.join(export_dir, "gw_retry.parquet")
+    p = _export("retry", gw_retry=expected)["gw_retry"]
     return (
         f"SELECT domain, url, outcome, CAST(n_retries AS BIGINT) AS n_retries"
         f" FROM read_parquet('{p}')"
@@ -691,25 +643,9 @@ def generate_cookie_fixture():
     return pages_rows, domains_rows, expected_rows
 
 
-def ensure_cookie_export(export_dir: str | None = None) -> str:
-    import pandas as pd
-
+def cookie_oracle_sql() -> str:
     _, _, expected = generate_cookie_fixture()
-    if export_dir is None:
-        export_dir = _fingerprinted_dir("cookie", expected)
-    marker = os.path.join(export_dir, "_COMPLETE")
-    if os.path.exists(marker):
-        return export_dir
-    tmp = tempfile.mkdtemp(prefix="msx_cookie_tmp_")
-    pd.DataFrame(expected).to_parquet(os.path.join(tmp, "gw_cookie.parquet"))
-    with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
-        f.write("ok\n")
-    _commit_export_dir(tmp, export_dir, marker)
-    return export_dir
-
-
-def cookie_oracle_sql(export_dir: str) -> str:
-    p = os.path.join(export_dir, "gw_cookie.parquet")
+    p = _export("cookie", gw_cookie=expected)["gw_cookie"]
     return (
         f"SELECT domain, url, CAST(has_cookies AS BIGINT) AS has_cookies,"
         f" ip, CAST(request_time_ms AS BIGINT) AS request_time_ms, header"
@@ -856,25 +792,9 @@ def generate_sitemap_fixture():
     return pages_rows, domains_rows, expected_rows
 
 
-def ensure_sitemap_export(export_dir: str | None = None) -> str:
-    import pandas as pd
-
+def sitemap_oracle_sql() -> str:
     _, _, expected = generate_sitemap_fixture()
-    if export_dir is None:
-        export_dir = _fingerprinted_dir("sitemap", expected)
-    marker = os.path.join(export_dir, "_COMPLETE")
-    if os.path.exists(marker):
-        return export_dir
-    tmp = tempfile.mkdtemp(prefix="msx_sitemap_tmp_")
-    pd.DataFrame(expected).to_parquet(os.path.join(tmp, "gw_sitemap.parquet"))
-    with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
-        f.write("ok\n")
-    _commit_export_dir(tmp, export_dir, marker)
-    return export_dir
-
-
-def sitemap_oracle_sql(export_dir: str) -> str:
-    p = os.path.join(export_dir, "gw_sitemap.parquet")
+    p = _export("sitemap", gw_sitemap=expected)["gw_sitemap"]
     return (
         f"SELECT domain, url, CAST(visited AS BIGINT) AS visited"
         f" FROM read_parquet('{p}')"
@@ -963,25 +883,9 @@ def generate_xrobots_fixture():
     return pages_rows, domains_rows, expected_rows
 
 
-def ensure_xrobots_export(export_dir: str | None = None) -> str:
-    import pandas as pd
-
+def xrobots_oracle_sql() -> str:
     _, _, expected = generate_xrobots_fixture()
-    if export_dir is None:
-        export_dir = _fingerprinted_dir("xrobots", expected)
-    marker = os.path.join(export_dir, "_COMPLETE")
-    if os.path.exists(marker):
-        return export_dir
-    tmp = tempfile.mkdtemp(prefix="msx_xrobots_tmp_")
-    pd.DataFrame(expected).to_parquet(os.path.join(tmp, "gw_xrobots.parquet"))
-    with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
-        f.write("ok\n")
-    _commit_export_dir(tmp, export_dir, marker)
-    return export_dir
-
-
-def xrobots_oracle_sql(export_dir: str) -> str:
-    p = os.path.join(export_dir, "gw_xrobots.parquet")
+    p = _export("xrobots", gw_xrobots=expected)["gw_xrobots"]
     return (
         f"SELECT domain, url, CAST(visited AS BIGINT) AS visited,"
         f" CAST(stored AS BIGINT) AS stored"
@@ -1083,25 +987,9 @@ def generate_domain_meta_fixture():
     return pages_rows, domains_rows, expected_rows
 
 
-def ensure_domain_meta_export(export_dir: str | None = None) -> str:
-    import pandas as pd
-
+def domain_meta_oracle_sql() -> str:
     _, _, expected = generate_domain_meta_fixture()
-    if export_dir is None:
-        export_dir = _fingerprinted_dir("domainmeta", expected)
-    marker = os.path.join(export_dir, "_COMPLETE")
-    if os.path.exists(marker):
-        return export_dir
-    tmp = tempfile.mkdtemp(prefix="msx_dmeta_tmp_")
-    pd.DataFrame(expected).to_parquet(os.path.join(tmp, "gw_domainmeta.parquet"))
-    with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
-        f.write("ok\n")
-    _commit_export_dir(tmp, export_dir, marker)
-    return export_dir
-
-
-def domain_meta_oracle_sql(export_dir: str) -> str:
-    p = os.path.join(export_dir, "gw_domainmeta.parquet")
+    p = _export("domainmeta", gw_domainmeta=expected)["gw_domainmeta"]
     return (
         f"SELECT domain, feed_url, favicon_url, favicon_content_type"
         f" FROM read_parquet('{p}')"
@@ -1192,25 +1080,9 @@ def generate_content_probe_fixture():
     return pages_rows, domains_rows, expected_rows
 
 
-def ensure_content_probe_export(export_dir: str | None = None) -> str:
-    import pandas as pd
-
+def content_probe_oracle_sql() -> str:
     _, _, expected = generate_content_probe_fixture()
-    if export_dir is None:
-        export_dir = _fingerprinted_dir("ctprobe", expected)
-    marker = os.path.join(export_dir, "_COMPLETE")
-    if os.path.exists(marker):
-        return export_dir
-    tmp = tempfile.mkdtemp(prefix="msx_ct_tmp_")
-    pd.DataFrame(expected).to_parquet(os.path.join(tmp, "gw_ctprobe.parquet"))
-    with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
-        f.write("ok\n")
-    _commit_export_dir(tmp, export_dir, marker)
-    return export_dir
-
-
-def content_probe_oracle_sql(export_dir: str) -> str:
-    p = os.path.join(export_dir, "gw_ctprobe.parquet")
+    p = _export("ctprobe", gw_ctprobe=expected)["gw_ctprobe"]
     return f"SELECT domain, url, outcome FROM read_parquet('{p}')"
 
 
@@ -1309,25 +1181,9 @@ def generate_order_web():
     return pages_rows, domains_rows, expected_rows
 
 
-def ensure_order_export(export_dir: str | None = None) -> str:
-    import pandas as pd
-
+def order_oracle_sql() -> str:
     _, _, expected = generate_order_web()
-    if export_dir is None:
-        export_dir = _fingerprinted_dir("order", expected)
-    marker = os.path.join(export_dir, "_COMPLETE")
-    if os.path.exists(marker):
-        return export_dir
-    tmp = tempfile.mkdtemp(prefix="msx_ord_tmp_")
-    pd.DataFrame(expected).to_parquet(os.path.join(tmp, "gw_order.parquet"))
-    with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
-        f.write("ok\n")
-    _commit_export_dir(tmp, export_dir, marker)
-    return export_dir
-
-
-def order_oracle_sql(export_dir: str) -> str:
-    p = os.path.join(export_dir, "gw_order.parquet")
+    p = _export("order", gw_order=expected)["gw_order"]
     return f"SELECT domain, rank, url FROM read_parquet('{p}')"
 
 
@@ -1390,25 +1246,9 @@ def generate_discovery_fixture():
     return pages_rows, domains_rows, expected_rows
 
 
-def ensure_discovery_export(export_dir: str | None = None) -> str:
-    import pandas as pd
-
+def discovery_oracle_sql() -> str:
     _, _, expected = generate_discovery_fixture()
-    if export_dir is None:
-        export_dir = _fingerprinted_dir("disc", expected)
-    marker = os.path.join(export_dir, "_COMPLETE")
-    if os.path.exists(marker):
-        return export_dir
-    tmp = tempfile.mkdtemp(prefix="msx_disc_tmp_")
-    pd.DataFrame(expected).to_parquet(os.path.join(tmp, "gw_discovery.parquet"))
-    with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
-        f.write("ok\n")
-    _commit_export_dir(tmp, export_dir, marker)
-    return export_dir
-
-
-def discovery_oracle_sql(export_dir: str) -> str:
-    p = os.path.join(export_dir, "gw_discovery.parquet")
+    p = _export("disc", gw_discovery=expected)["gw_discovery"]
     return f"SELECT domain, url FROM read_parquet('{p}')"
 
 # ---------------------------------------------------------------------------
@@ -1542,29 +1382,12 @@ def generate_linkfilter_fixture():
     return pages_rows, domains_rows, lf_domains, lf_links
 
 
-def ensure_linkfilter_export(export_dir: str | None = None) -> str:
-    import pandas as pd
-
-    _, _, lf_domains, lf_links = generate_linkfilter_fixture()
-    if export_dir is None:
-        export_dir = _fingerprinted_dir("lf", (lf_domains, lf_links))
-    marker = os.path.join(export_dir, "_COMPLETE")
-    if os.path.exists(marker):
-        return export_dir
-    tmp = tempfile.mkdtemp(prefix="msx_lf_tmp_")
-    pd.DataFrame(lf_domains).to_parquet(os.path.join(tmp, "lf_domains.parquet"))
-    pd.DataFrame(lf_links).to_parquet(os.path.join(tmp, "lf_links.parquet"))
-    with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
-        f.write("ok\n")
-    _commit_export_dir(tmp, export_dir, marker)
-    return export_dir
-
-
-def linkfilter_oracle_sql(export_dir: str) -> str:
+def linkfilter_oracle_sql() -> str:
     """Recursive reachability closure with the per-kind cherry-picking
     predicates as plain SQL (LinkFilterSelector.java:15-66)."""
-    dd = os.path.join(export_dir, "lf_domains.parquet")
-    ll = os.path.join(export_dir, "lf_links.parquet")
+    _, _, lf_domains, lf_links = generate_linkfilter_fixture()
+    paths = _export("lf", lf_domains=lf_domains, lf_links=lf_links)
+    dd, ll = paths["lf_domains"], paths["lf_links"]
     return f"""
         WITH RECURSIVE
         doms AS (SELECT domain, kind FROM read_parquet('{dd}')),
@@ -1658,26 +1481,12 @@ def generate_robots_fixture():
     ]
 
 
-def ensure_robots_export(export_dir: str | None = None) -> str:
-    import pandas as pd
-
-    rows = generate_robots_fixture()
-    expected = [{"case_id": r["case_id"], "allowed": r["exp_allowed"]} for r in rows]
-    if export_dir is None:
-        export_dir = _fingerprinted_dir("rob", expected)
-    marker = os.path.join(export_dir, "_COMPLETE")
-    if os.path.exists(marker):
-        return export_dir
-    tmp = tempfile.mkdtemp(prefix="msx_rob_tmp_")
-    pd.DataFrame(expected).to_parquet(os.path.join(tmp, "gw_robots.parquet"))
-    with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
-        f.write("ok\n")
-    _commit_export_dir(tmp, export_dir, marker)
-    return export_dir
-
-
-def robots_oracle_sql(export_dir: str) -> str:
-    p = os.path.join(export_dir, "gw_robots.parquet")
+def robots_oracle_sql() -> str:
+    expected = [
+        {"case_id": r["case_id"], "allowed": r["exp_allowed"]}
+        for r in generate_robots_fixture()
+    ]
+    p = _export("rob", gw_robots=expected)["gw_robots"]
     return f"SELECT case_id, allowed FROM read_parquet('{p}')"
 
 
@@ -1738,27 +1547,11 @@ def generate_cc_fixture():
     return edges
 
 
-def ensure_cc_export(export_dir: str | None = None) -> str:
-    import pandas as pd
-
-    edges = generate_cc_fixture()
-    if export_dir is None:
-        export_dir = _fingerprinted_dir("cc", edges)
-    marker = os.path.join(export_dir, "_COMPLETE")
-    if os.path.exists(marker):
-        return export_dir
-    tmp = tempfile.mkdtemp(prefix="msx_cc_tmp_")
-    pd.DataFrame(edges).to_parquet(os.path.join(tmp, "gw_cc_edges.parquet"))
-    with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
-        f.write("ok\n")
-    _commit_export_dir(tmp, export_dir, marker)
-    return export_dir
-
-
-def cc_oracle_sql(export_dir: str) -> str:
+def cc_oracle_sql() -> str:
     """Independent derivation: component(id) = MIN(reachable id) via a
     recursive transitive closure — no label propagation, no engine code."""
-    p = os.path.join(export_dir, "gw_cc_edges.parquet")
+    expected = generate_cc_fixture()
+    p = _export("cc", gw_cc_edges=expected)["gw_cc_edges"]
     return f"""
         WITH RECURSIVE
         e AS (
@@ -1801,25 +1594,9 @@ def generate_pagerank_fixture():
     return edges, expected
 
 
-def ensure_pagerank_export(export_dir: str | None = None) -> str:
-    import pandas as pd
-
+def pagerank_oracle_sql() -> str:
     _, expected = generate_pagerank_fixture()
-    if export_dir is None:
-        export_dir = _fingerprinted_dir("pr", expected)
-    marker = os.path.join(export_dir, "_COMPLETE")
-    if os.path.exists(marker):
-        return export_dir
-    tmp = tempfile.mkdtemp(prefix="msx_pr_tmp_")
-    pd.DataFrame(expected).to_parquet(os.path.join(tmp, "gw_pr_order.parquet"))
-    with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
-        f.write("ok\n")
-    _commit_export_dir(tmp, export_dir, marker)
-    return export_dir
-
-
-def pagerank_oracle_sql(export_dir: str) -> str:
-    p = os.path.join(export_dir, "gw_pr_order.parquet")
+    p = _export("pr", gw_pr_order=expected)["gw_pr_order"]
     return f"SELECT node, pos FROM read_parquet('{p}')"
 
 
@@ -1933,26 +1710,9 @@ def generate_crawl_meta_fixture():
     return pages_rows, domains_rows, expected_rows
 
 
-def ensure_crawl_meta_export(export_dir: str | None = None) -> str:
-    import pandas as pd
-
+def crawl_meta_oracle_sql() -> str:
     _, _, expected = generate_crawl_meta_fixture()
-    if export_dir is None:
-        export_dir = _fingerprinted_dir("gatemeta", expected)
-    marker = os.path.join(export_dir, "_EXPORTED")
-    if os.path.exists(marker):
-        return export_dir
-    tmp = export_dir + ".tmp" + str(os.getpid())
-    os.makedirs(tmp, exist_ok=True)
-    pd.DataFrame(expected).to_parquet(os.path.join(tmp, "gm_expected.parquet"))
-    with open(os.path.join(tmp, "_EXPORTED"), "w") as f:
-        f.write("ok")
-    _commit_export_dir(tmp, export_dir, marker)
-    return export_dir
-
-
-def crawl_meta_oracle_sql(export_dir: str) -> str:
-    p = os.path.join(export_dir, "gm_expected.parquet")
+    p = _export("gatemeta", gm_expected=expected)["gm_expected"]
     return f"""
         SELECT domain, phase,
                CAST(visited_cnt AS BIGINT) AS visited_cnt,
@@ -2030,26 +1790,9 @@ def generate_bodycap_fixture():
     return pages_rows, domains_rows, expected_rows
 
 
-def ensure_bodycap_export(export_dir: str | None = None) -> str:
-    import pandas as pd
-
+def bodycap_oracle_sql() -> str:
     _, _, expected = generate_bodycap_fixture()
-    if export_dir is None:
-        export_dir = _fingerprinted_dir("gatebodycap", expected)
-    marker = os.path.join(export_dir, "_EXPORTED")
-    if os.path.exists(marker):
-        return export_dir
-    tmp = export_dir + ".tmp" + str(os.getpid())
-    os.makedirs(tmp, exist_ok=True)
-    pd.DataFrame(expected).to_parquet(os.path.join(tmp, "bc_expected.parquet"))
-    with open(os.path.join(tmp, "_EXPORTED"), "w") as f:
-        f.write("ok")
-    _commit_export_dir(tmp, export_dir, marker)
-    return export_dir
-
-
-def bodycap_oracle_sql(export_dir: str) -> str:
-    p = os.path.join(export_dir, "bc_expected.parquet")
+    p = _export("gatebodycap", bc_expected=expected)["bc_expected"]
     return f"SELECT url, group_rep FROM read_parquet('{p}')"
 
 
@@ -2113,28 +1856,15 @@ def generate_stream_fixture():
     return rows
 
 
-def ensure_stream_export(export_dir: str | None = None) -> str:
+def stream_oracle_sql() -> str:
     import pandas as pd
 
-    rows = generate_stream_fixture()
-    if export_dir is None:
-        export_dir = _fingerprinted_dir("gatestream", rows)
-    marker = os.path.join(export_dir, "_EXPORTED")
-    if os.path.exists(marker):
-        return export_dir
-    tmp = export_dir + ".tmp" + str(os.getpid())
-    os.makedirs(tmp, exist_ok=True)
-    pdf = pd.DataFrame(rows)
-    pdf["ts"] = pd.to_datetime(pdf["ts_iso"])
-    pdf.to_parquet(os.path.join(tmp, "stream_expected.parquet"))
-    with open(os.path.join(tmp, "_EXPORTED"), "w") as f:
-        f.write("ok")
-    _commit_export_dir(tmp, export_dir, marker)
-    return export_dir
-
-
-def stream_oracle_sql(export_dir: str) -> str:
-    p = os.path.join(export_dir, "stream_expected.parquet")
+    # the ts parse is a pandas step, so the parquet column is a real
+    # timestamp for time_bucket
+    expected = [
+        {**r, "ts": pd.Timestamp(r["ts_iso"])} for r in generate_stream_fixture()
+    ]
+    p = _export("gatestream", stream_expected=expected)["stream_expected"]
     return f"""
         SELECT time_bucket(INTERVAL '5 minutes', ts) AS window_start,
                feed_domain AS domain,

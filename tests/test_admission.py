@@ -182,13 +182,9 @@ def test_linkfilter_gate_oracle_truth():
     fixture truth itself so a fixture edit can't silently shift the gate."""
     import duckdb
 
-    from marginaliasearch_spark.sources.gate_web import (
-        ensure_linkfilter_export,
-        linkfilter_oracle_sql,
-    )
+    from marginaliasearch_spark.sources.gate_web import linkfilter_oracle_sql
 
-    d = ensure_linkfilter_export()
-    rows = duckdb.sql(linkfilter_oracle_sql(d)).fetchall()
+    rows = duckdb.sql(linkfilter_oracle_sql()).fetchall()
     by_dom: dict = {}
     for dom, url in rows:
         by_dom.setdefault(dom, set()).add(url.split(dom, 1)[1])
@@ -210,6 +206,46 @@ def test_linkfilter_gate_oracle_truth():
     assert by_dom["plain.example.org"] == {
         "/", "/feeds/x.html", "/p/a/comments", "/u/bob", "/anything.html",
     }
+
+
+def test_gate_fixture_export_commit(tmp_path, monkeypatch):
+    """The gate-fixture export helper: a repeat call reuses the committed
+    dir without writing, a changed row lands in a new dir, a writer that
+    loses the commit race to a complete export discards its tmp dir
+    quietly, and a target that exists without the marker is an error."""
+    import os
+    import tempfile
+
+    import pandas as pd
+
+    from marginaliasearch_spark.sources import gate_web
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    rows = [{"k": 1, "v": "a"}, {"k": 2, "v": "b"}]
+    p = gate_web._export("t", tab=rows)["tab"]
+    d = os.path.dirname(p)
+    assert pd.read_parquet(p).to_dict("records") == rows
+
+    def no_write(*a, **k):
+        raise AssertionError("a complete export was written again")
+
+    with monkeypatch.context() as m:
+        m.setattr(tempfile, "mkdtemp", no_write)
+        assert gate_web._export("t", tab=rows)["tab"] == p
+
+    changed = gate_web._export("t", tab=[rows[0], {"k": 2, "v": "c"}])["tab"]
+    assert os.path.dirname(changed) != d
+
+    loser = tempfile.mkdtemp(prefix="msx_t_tmp_")
+    pd.DataFrame(rows).to_parquet(os.path.join(loser, "tab.parquet"))
+    gate_web._commit_export_dir(loser, d, os.path.join(d, "_COMPLETE"))
+    assert not os.path.exists(loser)
+    assert pd.read_parquet(p).to_dict("records") == rows
+
+    os.remove(os.path.join(d, "_COMPLETE"))
+    with pytest.raises(OSError):
+        gate_web._export("t", tab=rows)
+    assert not [n for n in os.listdir(tmp_path) if n.startswith("msx_t_tmp_")]
 
 
 def test_robots_gate_vectors():

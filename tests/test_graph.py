@@ -197,11 +197,10 @@ def test_cc_gate_oracle_matches_union_find():
 
     from marginaliasearch_spark.sources.gate_web import (
         cc_oracle_sql,
-        ensure_cc_export,
         generate_cc_fixture,
     )
 
-    rows = dict(duckdb.sql(cc_oracle_sql(ensure_cc_export())).fetchall())
+    rows = dict(duckdb.sql(cc_oracle_sql()).fetchall())
     parent: dict = {}
 
     def find(x):

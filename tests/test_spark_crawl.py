@@ -146,6 +146,27 @@ def test_kill_and_resume(spark, web_dfs, golden, tmp_path_factory):
     _assert_matches_oracle(engine2, golden)
 
 
+def test_wave_jobs_carry_caller_job_group(spark, web_dfs, tmp_path_factory):
+    """Every job of a wave — including the frontier/domain_state writes the
+    engine submits from pool threads — belongs to the caller's job group,
+    so cancelJobGroup and per-group job accounting cover the whole wave."""
+    pages, domains, specs = web_dfs
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("wave-job-group-test", "two-wave crawl")
+    try:
+        out = str(tmp_path_factory.mktemp("crawl_job_group"))
+        engine = SparkCrawlEngine(spark, out, seed=SEED, n_buckets=8)
+        engine.init_run(domains, specs)
+        assert engine.run_waves(pages, wave_budget=4, max_waves=2) == 2
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert tracker.getJobIdsForGroup("wave-job-group-test")
+    assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
+
+
 def test_crawl_meta(spark, web_dfs, golden, tmp_path_factory):
     pages, domains, specs = web_dfs
     out = str(tmp_path_factory.mktemp("crawl_meta"))
