@@ -2,7 +2,7 @@
 ``FrontierDedup`` (north rule: "partitioned Bloom/cuckoo filter keyed by
 canonicalized-URL hash").
 
-One filter per frontier bucket, built/updated via ``applyInPandas``,
+One filter per frontier bucket, built/updated via ``applyInArrow``,
 candidates probed through a bucket cogroup, maybe-positives resolved by
 the scan-only exact check — result ≡ the exact anti-join.  Two properties
 make it the seen-set representation:
@@ -37,10 +37,11 @@ from __future__ import annotations
 from typing import Optional
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 SLOTS = 4  # slots per bucket (b)
 _LOAD = 0.84  # design load factor for sizing
@@ -220,6 +221,29 @@ CUCKOO_SCHEMA = T.StructType(
         T.StructField("cuckoo", T.BinaryType()),
     ]
 )
+_CUCKOO_ARROW = to_arrow_schema(CUCKOO_SCHEMA)
+
+
+def _u64(table: pa.Table, key_col: str) -> np.ndarray:
+    """One group's key column as uint64 (the bits of the signed long)."""
+    return table[key_col].to_numpy().astype(np.int64, copy=False).view(np.uint64)
+
+
+def _keys(table: pa.Table, key_col: str) -> np.ndarray:
+    """The distinct keys of one group as uint64."""
+    return np.unique(_u64(table, key_col))
+
+
+def _filter_row(bucket, n_keys: int, m: int, table: np.ndarray, stash: list[int]) -> pa.Table:
+    return pa.Table.from_pydict(
+        {
+            "bucket": [bucket],
+            "n_keys": [n_keys],
+            "m_buckets": [m],
+            "cuckoo": [_serialize(table, stash)],
+        },
+        schema=_CUCKOO_ARROW,
+    )
 
 
 def build_cuckoo_per_bucket(
@@ -232,22 +256,15 @@ def build_cuckoo_per_bucket(
     ``m_buckets`` fixes the table size (required for incremental inserts
     across snapshots); None sizes each to its key count."""
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = np.unique(pdf[key_col].to_numpy(dtype=np.int64).view(np.uint64))
+    def build(key, seen_t):
+        keys = _keys(seen_t, key_col)
         m = m_buckets if m_buckets else size_for(len(keys))
         table = np.zeros((m, SLOTS), dtype=np.uint16)
         stash: list[int] = []
         _insert_all(table, stash, keys)
-        return pd.DataFrame(
-            {
-                "bucket": [int(pdf[bucket_col].iloc[0])],
-                "n_keys": [len(keys)],
-                "m_buckets": [m],
-                "cuckoo": [_serialize(table, stash)],
-            }
-        )
+        return _filter_row(key[0].as_py(), len(keys), m, table, stash)
 
-    return seen.select(bucket_col, key_col).groupBy(bucket_col).applyInPandas(
+    return seen.select(bucket_col, key_col).groupBy(bucket_col).applyInArrow(
         build, CUCKOO_SCHEMA
     )
 
@@ -263,37 +280,26 @@ def cuckoo_insert_new_keys(
     bucket's existing table (cuckoo tables are mutable — the historical
     seen-set is never rescanned)."""
 
-    def merge(old_pdf: pd.DataFrame, new_pdf: pd.DataFrame) -> pd.DataFrame:
-        if old_pdf.empty and new_pdf.empty:
-            return pd.DataFrame(columns=["bucket", "n_keys", "m_buckets", "cuckoo"])
-        if new_pdf.empty:
-            return old_pdf[["bucket", "n_keys", "m_buckets", "cuckoo"]]
-        keys = np.unique(new_pdf[key_col].to_numpy(dtype=np.int64).view(np.uint64))
-        if old_pdf.empty:
-            bucket = int(new_pdf[bucket_col].iloc[0])
+    def merge(key, old, new):
+        if new.num_rows == 0:
+            return old.select(_CUCKOO_ARROW.names)
+        keys = _keys(new, key_col)
+        if old.num_rows == 0:
             m = default_m_buckets
             table = np.zeros((m, SLOTS), dtype=np.uint16)
             stash: list[int] = []
             n_old = 0
         else:
-            bucket = int(old_pdf["bucket"].iloc[0])
-            m = int(old_pdf["m_buckets"].iloc[0])
-            table, stash = _deserialize(bytes(old_pdf["cuckoo"].iloc[0]))
-            n_old = int(old_pdf["n_keys"].iloc[0])
+            m = old["m_buckets"][0].as_py()
+            table, stash = _deserialize(old["cuckoo"][0].as_py())
+            n_old = old["n_keys"][0].as_py()
         _insert_all(table, stash, keys)
-        return pd.DataFrame(
-            {
-                "bucket": [bucket],
-                "n_keys": [n_old + len(keys)],
-                "m_buckets": [m],
-                "cuckoo": [_serialize(table, stash)],
-            }
-        )
+        return _filter_row(key[0].as_py(), n_old + len(keys), m, table, stash)
 
     return (
         filters.groupBy("bucket")
         .cogroup(new_seen.select(bucket_col, key_col).groupBy(bucket_col))
-        .applyInPandas(merge, CUCKOO_SCHEMA)
+        .applyInArrow(merge, CUCKOO_SCHEMA)
     )
 
 
@@ -307,27 +313,23 @@ def cuckoo_delete_keys(
     (standard cuckoo semantics): only delete keys that were actually
     inserted, else a same-fingerprint twin may lose its slot.  Used for seen-set expiry sweeps (404 memo retirement)."""
 
-    def drop(filt_pdf: pd.DataFrame, rm_pdf: pd.DataFrame) -> pd.DataFrame:
-        if filt_pdf.empty:
-            return pd.DataFrame(columns=["bucket", "n_keys", "m_buckets", "cuckoo"])
-        if rm_pdf.empty:
-            return filt_pdf[["bucket", "n_keys", "m_buckets", "cuckoo"]]
-        table, stash = _deserialize(bytes(filt_pdf["cuckoo"].iloc[0]))
-        keys = np.unique(rm_pdf[key_col].to_numpy(dtype=np.int64).view(np.uint64))
-        n_removed = _delete(table, stash, keys)
-        return pd.DataFrame(
-            {
-                "bucket": [int(filt_pdf["bucket"].iloc[0])],
-                "n_keys": [max(0, int(filt_pdf["n_keys"].iloc[0]) - n_removed)],
-                "m_buckets": [int(filt_pdf["m_buckets"].iloc[0])],
-                "cuckoo": [_serialize(table, stash)],
-            }
+    def drop(key, filt, rm):
+        if filt.num_rows == 0 or rm.num_rows == 0:
+            return filt.select(_CUCKOO_ARROW.names)
+        table, stash = _deserialize(filt["cuckoo"][0].as_py())
+        n_removed = _delete(table, stash, _keys(rm, key_col))
+        return _filter_row(
+            key[0].as_py(),
+            max(0, filt["n_keys"][0].as_py() - n_removed),
+            filt["m_buckets"][0].as_py(),
+            table,
+            stash,
         )
 
     return (
         filters.groupBy("bucket")
         .cogroup(removed.select(bucket_col, key_col).groupBy(bucket_col))
-        .applyInPandas(drop, CUCKOO_SCHEMA)
+        .applyInArrow(drop, CUCKOO_SCHEMA)
     )
 
 
@@ -351,28 +353,22 @@ def cuckoo_anti_join(
     if filters is None:
         filters = build_cuckoo_per_bucket(seen, key_col, bucket_col)
 
-    cand_fields = candidates.schema.fields
-    cand_cols = [f.name for f in cand_fields]
     flagged_schema = T.StructType(
-        list(cand_fields) + [T.StructField("_maybe_seen", T.BooleanType())]
+        list(candidates.schema.fields) + [T.StructField("_maybe_seen", T.BooleanType())]
     )
 
-    def probe(cand_pdf: pd.DataFrame, filt_pdf: pd.DataFrame) -> pd.DataFrame:
-        if cand_pdf.empty:
-            return pd.DataFrame(columns=cand_cols + ["_maybe_seen"])
-        out = cand_pdf[cand_cols].copy()
-        if filt_pdf.empty:
-            out["_maybe_seen"] = False
-            return out
-        table, stash = _deserialize(bytes(filt_pdf["cuckoo"].iloc[0]))
-        keys = cand_pdf[key_col].to_numpy(dtype=np.int64).view(np.uint64)
-        out["_maybe_seen"] = _contains(table, np.array(stash, dtype=np.int64), keys)
-        return out
+    def probe(cand, filt):
+        if cand.num_rows and filt.num_rows:
+            table, stash = _deserialize(filt["cuckoo"][0].as_py())
+            maybe = _contains(table, np.array(stash, dtype=np.int64), _u64(cand, key_col))
+        else:
+            maybe = np.zeros(cand.num_rows, dtype=bool)
+        return cand.append_column("_maybe_seen", pa.array(maybe))
 
     flagged = (
         candidates.groupBy(bucket_col)
         .cogroup(filters.groupBy("bucket"))
-        .applyInPandas(probe, flagged_schema)
+        .applyInArrow(probe, flagged_schema)
         .persist()
     )
     if transients is not None:

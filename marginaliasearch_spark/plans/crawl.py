@@ -42,10 +42,12 @@ import json
 import os
 from typing import Optional
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..oracle.session import DomainCrawlSession, DomainInfo
 from ..sources.synthetic_web import DomainPagesWeb
@@ -103,60 +105,53 @@ WAVE_OUT_SCHEMA = T.StructType(
     ]
 )
 
-_OUT_COLS = [f.name for f in WAVE_OUT_SCHEMA.fields]
-
-
 def _state_rows(df: DataFrame, kind: str, **cols) -> DataFrame:
     """One state-side input of the wave cogroup, in STATE_IN_SCHEMA column
     order: ``domain`` from ``df``, ``row_kind`` = ``kind``, each given
-    column (a name or Column) cast to its schema type.  A column not given
-    is a typed null for strings and literal 0 for long/int fields — never
-    null, so Arrow→pandas cannot decay lsh64/url_hash to float64."""
+    column (a name or Column) cast to its schema type; a column not given
+    is a typed null."""
     given = {"domain": "domain", "row_kind": F.lit(kind), **cols}
     out = []
     for f in STATE_IN_SCHEMA.fields:
-        c = given.get(f.name)
-        if c is None:
-            c = F.lit(None) if isinstance(f.dataType, T.StringType) else F.lit(0)
-        elif isinstance(c, str):
+        c = given.get(f.name, F.lit(None))
+        if isinstance(c, str):
             c = F.col(c)
         out.append(c.cast(f.dataType).alias(f.name))
     return df.select(*out)
 
 
-_INT64_COLS = ("url_hash", "seq", "virtual_ms", "idx", "phash", "lsh64", "timestamp")
-_INT32_COLS = ("http_status", "psnr_ok", "has_cookies", "request_time_ms")
+def _kind_rows(state: pa.Table, kind: str, cols: list) -> list[dict]:
+    """The ``kind`` rows of a wave's state side as dicts in ``seq`` order
+    (nulls stay None, longs keep all 64 bits)."""
+    rows = state.filter(pc.equal(state["row_kind"], kind)).sort_by("seq")
+    return rows.select(cols).to_pylist()
 
 
-def _assemble_out(domain: str, blocks: list) -> pd.DataFrame:
+_OUT_ARROW = to_arrow_schema(WAVE_OUT_SCHEMA)
+
+
+def _assemble_out(domain: str, blocks: list) -> pa.Table:
     """Columnar wave-output builder: each block is (n_rows, {col: list |
     scalar}) for one homogeneous row kind; absent columns fill with
     nulls.  Replaces the per-row 25-key dict assembly (measured ~2/3 of
     the whole wave UDF wall at 512 domains — guide §1.2 step 2, per-task
-    work).  Int columns go straight to pandas nullable Int64/Int32 so a
-    null can never decay the column to float64 and corrupt 64-bit
-    hashes — the same invariant the old dtype=object + astype path
-    enforced, minus the object detour."""
-    data = {}
-    for c in _OUT_COLS:
+    work).  Each column is built straight against the Arrow output
+    schema, so int columns keep real nulls and all 64 bits."""
+    n = sum(b[0] for b in blocks)
+    arrays = []
+    for f in _OUT_ARROW:
+        if f.name == "domain":
+            arrays.append(pa.array([domain] * n, f.type))
+            continue
         vals: list = []
         for cnt, cols in blocks:
-            v = cols.get(c)
-            if v is None:
-                vals.extend([None] * cnt)
-            elif isinstance(v, (list, range)):
+            v = cols.get(f.name)
+            if isinstance(v, (list, range)):
                 vals.extend(v)
             else:
                 vals.extend([v] * cnt)
-        if c == "domain":
-            data[c] = pd.Series([domain] * sum(b[0] for b in blocks), dtype=object)
-        elif c in _INT64_COLS:
-            data[c] = pd.array(vals, dtype="Int64")
-        elif c in _INT32_COLS:
-            data[c] = pd.array(vals, dtype="Int32")
-        else:
-            data[c] = pd.Series(vals, dtype=object)
-    return pd.DataFrame(data, columns=_OUT_COLS)
+        arrays.append(pa.array(vals, f.type))
+    return pa.Table.from_arrays(arrays, schema=_OUT_ARROW)
 
 
 def _schedule_offsets(durations: list[tuple[str, int]], permits: int) -> dict[str, int]:
@@ -194,27 +189,22 @@ def _make_wave_fn(
     fails the whole wave task (the reference likewise catches per-domain
     exceptions in CrawlTask — CrawlerMain.java:700-716)."""
 
-    def wave_fn(state_pdf: pd.DataFrame, pages_pdf: pd.DataFrame) -> pd.DataFrame:
+    def wave_fn(key, state, pages):
+        domain = key[0].as_py()
         try:
-            return _wave_fn_inner(state_pdf, pages_pdf)
+            return _wave_fn_inner(domain, state, pages)
         except Exception as ex:  # noqa: BLE001 — per-domain fault barrier
-            ds_rows = state_pdf[state_pdf.row_kind == "domain_state"]
-            domain = ds_rows["domain"].iloc[0] if not ds_rows.empty else "?"
             err = json.dumps({"phase": "error", "exception": repr(ex)[:500]})
             return _assemble_out(
                 domain,
                 [(1, {"row_kind": "domain_state", "state": "error", "state_json": err})],
             )
 
-    def _wave_fn_inner(state_pdf: pd.DataFrame, pages_pdf: pd.DataFrame) -> pd.DataFrame:
-        if state_pdf.empty:
-            return pd.DataFrame(columns=_OUT_COLS)
-
-        ds_rows = state_pdf[state_pdf.row_kind == "domain_state"]
-        if ds_rows.empty:
-            return pd.DataFrame(columns=_OUT_COLS)
-        ds = ds_rows.iloc[0]
-        domain = ds["domain"]
+    def _wave_fn_inner(domain: str, state: pa.Table, pages: pa.Table) -> pa.Table:
+        ds_rows = _kind_rows(state, "domain_state", ["state_json", "info_json"])
+        if not ds_rows:
+            return _OUT_ARROW.empty_table()
+        ds = ds_rows[0]
         info_d = json.loads(ds["info_json"])
         info = DomainInfo(
             domain=domain,
@@ -232,46 +222,28 @@ def _make_wave_fn(
         if transport is not None and transport.get("kind") == "http":
             # REAL-SOCKET transport (sources/httpweb.py): the executor's
             # Python worker opens live HTTP connections instead of reading
-            # the cogrouped pandas slice; pages_pdf degenerates to routing
+            # the cogrouped Arrow slice; ``pages`` degenerates to routing
             # ballast (pass an empty pages DF to run_waves in this mode).
             # tests/test_httpweb_engine.py proves the wave outputs are
-            # byte-identical to the pandas transport on the same web.
+            # byte-identical to the in-process transport on the same web.
             from ..sources.httpweb import HttpWeb
 
             web = HttpWeb(
                 transport["ports"], host=transport.get("host", "127.0.0.1")
             )
         else:
-            web = DomainPagesWeb(domain, info.proto, pages_pdf)
+            web = DomainPagesWeb(domain, info.proto, pages)
 
         state_json = ds["state_json"]
-        if state_json is None or (isinstance(state_json, float)):
+        if state_json is None:
             # fresh domain: setup (+ recrawl replay if prev data present)
             # replay order = stored order (the reference iterates the prior
             # Slop table sequentially); `seq` carries the position
-            prev_rows = state_pdf[state_pdf.row_kind == "prev_crawl"].sort_values("seq")
-            if not prev_rows.empty:
-                pr = prev_rows[
-                    ["url", "http_status", "image_id", "etag", "last_modified", "lsh64"]
-                ].copy()
-                pr["http_status"] = pr["http_status"].astype(int)
-                # NaN (pandas null) → None so the session sees real absent tags
-                pr = pr.astype(object).where(pd.notnull(pr), None)
-                # lsh64 travels as a never-null long (sentinel 0 = absent) so
-                # Arrow→pandas cannot decay it to float64 and corrupt the bits
-                prev = [
-                    {
-                        **r,
-                        "lsh64": (
-                            int(r["lsh64"]) if r["lsh64"] not in (None, 0) else None
-                        ),
-                    }
-                    for r in pr.to_dict("records")
-                ]
-            else:
-                prev = None
-            atag_rows = state_pdf[state_pdf.row_kind == "atag"].sort_values("seq")
-            atags = atag_rows["url"].tolist() if not atag_rows.empty else None
+            prev = _kind_rows(
+                state, "prev_crawl",
+                ["url", "http_status", "image_id", "etag", "last_modified", "lsh64"],
+            )
+            atags = [r["url"] for r in _kind_rows(state, "atag", ["url"])]
             sess = DomainCrawlSession(
                 info,
                 web,
@@ -279,10 +251,9 @@ def _make_wave_fn(
                 validate_payload=validate_payload,
                 **({"body_cap_bytes": body_cap_bytes} if body_cap_bytes else {}),
             )
-            phase = sess.setup(prev_crawl=prev, atag_urls=atags)
+            phase = sess.setup(prev_crawl=prev or None, atag_urls=atags or None)
         else:
-            fr = state_pdf[state_pdf.row_kind == "frontier"]
-            frontier_rows = fr[["url_hash", "url", "seq", "state"]].to_dict("records")
+            frontier_rows = _kind_rows(state, "frontier", ["url_hash", "url", "seq", "state"])
             sess = DomainCrawlSession.rehydrate(
                 info,
                 web,
@@ -410,16 +381,16 @@ def _make_offsets_fn():
     thousands of members into one task (the wave groups by domain)."""
     from ..operators.scheduling import DEFAULT_PERMITS, TOP_DOMAIN_PERMITS
 
-    def offsets_fn(key, pdf):  # (key, pdf) form — no hints, or Spark warns
-        top = key[0]
-        permits = TOP_DOMAIN_PERMITS.get(top, DEFAULT_PERMITS)
-        durations = [
-            (r["domain"], int(max(r["dur_ms"], 0)))
-            for _, r in pdf.sort_values("domain").iterrows()
-        ]
+    def offsets_fn(key, table):
+        permits = TOP_DOMAIN_PERMITS.get(key[0].as_py(), DEFAULT_PERMITS)
+        durations = sorted(
+            (d, max(int(ms), 0))
+            for d, ms in zip(table["domain"].to_pylist(), table["dur_ms"].to_pylist())
+        )
         offs = _schedule_offsets(durations, permits)
-        return pd.DataFrame(
-            {"domain": list(offs.keys()), "offset_ms": list(offs.values())}
+        return pa.Table.from_pydict(
+            {"domain": list(offs.keys()), "offset_ms": list(offs.values())},
+            schema=to_arrow_schema(OFFSETS_SCHEMA),
         )
 
     return offsets_fn
@@ -473,7 +444,7 @@ class SparkCrawlEngine:
             )
         self.global_request_cap = global_request_cap
         self.conn_launches_per_wave = conn_launches_per_wave
-        # fetch transport for the wave UDF: None = the cogrouped pandas
+        # fetch transport for the wave UDF: None = the cogrouped Arrow
         # slice (hermetic default); {"kind": "http", "ports": {proto:
         # port}, "host": ...} = real sockets via sources/httpweb.HttpWeb
         # (executors dial the address — on a cluster this must be a
@@ -858,8 +829,7 @@ class SparkCrawlEngine:
                     _state_rows(
                         pc, "prev_crawl", url="url", seq="pos",
                         http_status="http_status", image_id="image_id", etag="etag",
-                        last_modified="last_modified",
-                        lsh64=F.coalesce(F.col("lsh64").cast("long"), F.lit(0)),
+                        last_modified="last_modified", lsh64="lsh64",
                     )
                 )
             if atags_df is not None:
@@ -888,7 +858,7 @@ class SparkCrawlEngine:
             out = (
                 left.groupby("domain")
                 .cogroup(pages_active.groupby("domain"))
-                .applyInPandas(wave_fn, WAVE_OUT_SCHEMA)
+                .applyInArrow(wave_fn, WAVE_OUT_SCHEMA)
             )
 
             # ONE physical write per wave: the unified output log,
@@ -997,7 +967,7 @@ class SparkCrawlEngine:
                     )
                     .filter(F.col("dur_ms") > 0)  # never-started domains hold no slot
                 )
-                offsets = durs.groupBy("top_domain").applyInPandas(
+                offsets = durs.groupBy("top_domain").applyInArrow(
                     _make_offsets_fn(), OFFSETS_SCHEMA
                 )
                 offpath = self.catalog.wave_path("wave_offsets", wave)

@@ -762,46 +762,40 @@ def spark_schemas():
 
 
 class DomainPagesWeb:
-    """WebLike view over one domain's pages (the cogrouped pandas slice a
-    Spark wave UDF receives).  Same fetch semantics as SyntheticWeb."""
+    """WebLike view over one domain's pages (the cogrouped Arrow slice a
+    Spark wave UDF receives, a ``pyarrow.Table`` in the pages schema).
+    Same fetch semantics as SyntheticWeb."""
 
-    def __init__(self, domain: str, proto: str, pages_pdf):
+    def __init__(self, domain: str, proto: str, pages):
         self.domain = domain
         self.proto = proto
         self._pages: dict = {}
-        def _nn(v):
-            if v is None:
-                return None
-            if isinstance(v, float) and np.isnan(v):
-                return None
-            return v
-
-        for rec in pages_pdf.to_dict("records"):
+        for rec in pages.to_pylist():
             links = rec.get("links")
             feeds = rec.get("feed_links")
             page = Page(
                 url=rec["url"],
                 domain=rec["domain"],
                 path=rec["path"],
-                param=_nn(rec.get("param")),
+                param=rec.get("param"),
                 status=int(rec["status"]),
-                redirect_to=_nn(rec.get("redirect_to")),
-                content_type=_nn(rec.get("content_type")) or HTML,
-                image_id=_nn(rec.get("image_id")),
-                base_href=_nn(rec.get("base_href")),
+                redirect_to=rec.get("redirect_to"),
+                content_type=rec.get("content_type") or HTML,
+                image_id=rec.get("image_id"),
+                base_href=rec.get("base_href"),
                 links=list(links) if links is not None else [],
                 feed_links=list(feeds) if feeds is not None else [],
-                body_marker=_nn(rec.get("body_marker")),
-                etag=_nn(rec.get("etag")),
-                last_modified=_nn(rec.get("last_modified")),
-                body_text=_nn(rec.get("body_text")),
-                transient_status=int(_nn(rec.get("transient_status")) or 0),
-                transient_count=int(_nn(rec.get("transient_count")) or 0),
-                retry_after=_nn(rec.get("retry_after")),
-                head_status=int(_nn(rec.get("head_status")) or 0),
-                icon_href=_nn(rec.get("icon_href")),
-                set_cookie=_nn(rec.get("set_cookie")),
-                x_robots=_nn(rec.get("x_robots")),
+                body_marker=rec.get("body_marker"),
+                etag=rec.get("etag"),
+                last_modified=rec.get("last_modified"),
+                body_text=rec.get("body_text"),
+                transient_status=int(rec.get("transient_status") or 0),
+                transient_count=int(rec.get("transient_count") or 0),
+                retry_after=rec.get("retry_after"),
+                head_status=int(rec.get("head_status") or 0),
+                icon_href=rec.get("icon_href"),
+                set_cookie=rec.get("set_cookie"),
+                x_robots=rec.get("x_robots"),
             )
             self._pages[(page.domain, page.path, page.param)] = page
 

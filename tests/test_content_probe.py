@@ -3,6 +3,7 @@ ContentTypeLogic.java:13-59) — arm coverage mirrors the reference's
 HttpFetcherImplContentTypeProbeTest."""
 
 import pandas as pd
+import pyarrow as pa
 
 from marginaliasearch_spark.canon.url import EdgeUrl
 from marginaliasearch_spark.functions.contenttype import (
@@ -49,9 +50,10 @@ def _session(rows):
         "last_modified": None, "body_text": None,
     }
     full = [{**base, **r, "url": f"https://{NAME}{r['path']}"} for r in rows]
-    web = DomainPagesWeb(
-        NAME, "https", normalize_pages_pdf(pd.DataFrame(full, dtype=object))
+    pages = pa.Table.from_pandas(
+        normalize_pages_pdf(pd.DataFrame(full, dtype=object)), preserve_index=False
     )
+    web = DomainPagesWeb(NAME, "https", pages)
     return DomainCrawlSession(DomainInfo(domain=NAME, crawl_depth=100), web)
 
 

@@ -11,7 +11,7 @@
 """
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from marginaliasearch_spark.canon import EdgeUrl, parse_url
@@ -36,6 +36,7 @@ hosts = st.from_regex(r"[a-z0-9]{1,8}(\.[a-z0-9]{1,8}){0,3}", fullmatch=True)
     path=url_chars,
     query=url_chars,
 )
+@example(scheme="http", host="0", path="/", query="")  # http://0//
 def test_canonical_roundtrip_fixpoint(scheme, host, path, query):
     # '*' is excluded: Java URLEncoder keeps '*' raw while needsUrlEncode
     # treats it as unsafe, so the REFERENCE re-encodes '%' on every queue
@@ -49,6 +50,15 @@ def test_canonical_roundtrip_fixpoint(scheme, host, path, query):
     u = parse_url(raw)
     if u is None:
         return
+    # Empty path segments are excluded: EdgeUrl.parse keeps the path as
+    # java.net.URI gives it ('//' stays '//'; the reference normalizes
+    # only on the link path, URI.normalize — tests/golden/uri_normalize.tsv
+    # '/a//b' → '/a/b', linkparse_diff.tsv '/a//b.html'), while toString's
+    # urlencodePath splits with StringUtils.split, which drops empty
+    # segments.  The reference's own queue round-trip therefore collapses
+    # them — see test_empty_segment_collapses_in_str_only.
+    if "//" in u.path:
+        return
     s = str(u)
     u2 = parse_url(s)
     assert u2 is not None, f"canonical form must re-parse: {s!r}"
@@ -58,6 +68,15 @@ def test_canonical_roundtrip_fixpoint(scheme, host, path, query):
         u.param,
     ), raw
     assert str(u2) == s, raw  # string fixpoint: the queue round-trip is stable
+
+
+def test_empty_segment_collapses_in_str_only():
+    """EdgeUrl.parse keeps an empty segment; str() drops it (urlencodePath's
+    StringUtils.split), so the first queue round-trip collapses '//'."""
+    u = parse_url("http://0//")
+    assert u.path == "//"
+    assert str(u) == "http://0/"
+    assert parse_url(str(u)).path == "/"
 
 
 def test_star_requeue_matches_reference():

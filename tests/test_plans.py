@@ -99,5 +99,6 @@ def test_cuckoo_anti_join_plan(spark):
     for df in transients:
         df.unpersist()
     assert plan.count("BroadcastHashJoin") >= 2
-    assert "FlatMapCoGroupsInPandas" in plan
+    assert "FlatMapCoGroupsInArrow" in plan
+    assert "InPandas" not in plan
     assert "SortMergeJoin" not in plan  # seen is never shuffle-joined

@@ -3,6 +3,7 @@ HttpFetcherImpl.probeDomain:236-323): redirect hops, GET retry,
 https→http fallback, hop cap."""
 
 import pandas as pd
+import pyarrow as pa
 
 from marginaliasearch_spark.canon.url import EdgeUrl
 from marginaliasearch_spark.oracle.session import DomainCrawlSession, DomainInfo
@@ -22,7 +23,10 @@ def _web(rows, proto="https"):
         "last_modified": None, "body_text": None,
     }
     full = [{**base, **r, "url": f"{proto}://{NAME}{r['path']}"} for r in rows]
-    return DomainPagesWeb(NAME, proto, normalize_pages_pdf(pd.DataFrame(full)))
+    pages = pa.Table.from_pandas(
+        normalize_pages_pdf(pd.DataFrame(full)), preserve_index=False
+    )
+    return DomainPagesWeb(NAME, proto, pages)
 
 
 def _session(web, proto="https"):

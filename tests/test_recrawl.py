@@ -42,11 +42,14 @@ def test_oracle_recrawl_replays_prior(web, round1):
 
 
 def test_spark_recrawl_matches_oracle(spark, web, round1, tmp_path_factory):
-    oracle = OracleCrawler(web, seed=SEED)
-    golden = {
-        d: oracle.crawl_domain(d, prev_crawl=(r1.crawl_data or None))
+    # every fifth prior record is stored without a content fingerprint (as
+    # a bodiless document is), so the replay input carries null lsh64s
+    prev = {
+        d: [{**rec, "lsh64": None} if i % 5 == 0 else rec for i, rec in enumerate(r1.crawl_data)]
         for d, r1 in round1.items()
     }
+    oracle = OracleCrawler(web, seed=SEED)
+    golden = {d: oracle.crawl_domain(d, prev_crawl=(prev[d] or None)) for d in prev}
 
     pages_pdf, domains_pdf = web_to_frames(web)
     ps, ds = spark_schemas()
@@ -55,8 +58,8 @@ def test_spark_recrawl_matches_oracle(spark, web, round1, tmp_path_factory):
     specs = domains.select("domain", "crawl_depth", "seed_urls")
 
     prev_rows = []
-    for d, r1 in round1.items():
-        for i, rec in enumerate(r1.crawl_data):
+    for d, recs in prev.items():
+        for i, rec in enumerate(recs):
             prev_rows.append(
                 (
                     d,
@@ -69,6 +72,12 @@ def test_spark_recrawl_matches_oracle(spark, web, round1, tmp_path_factory):
                     rec["lsh64"],
                 )
             )
+    # the replay input must hold a null lsh64 and one past float64's exact
+    # range: losing either at the UDF boundary changes the replay's
+    # RECRAWL_RETAINED_LSH decisions, which the fetch-log check below sees
+    lsh = [r[7] for r in prev_rows]
+    assert any(v is None for v in lsh)
+    assert any(v is not None and abs(v) >= 2**53 for v in lsh)
     prev_df = spark.createDataFrame(
         prev_rows,
         "domain string, pos long, url string, http_status int, image_id string,"
@@ -94,6 +103,14 @@ def test_spark_recrawl_matches_oracle(spark, web, round1, tmp_path_factory):
     spark_visits = {r["domain"]: list(r["urls"]) for r in visits}
     for d, g in golden.items():
         assert spark_visits.get(d, []) == g.visited_order, f"recrawl visit order {d}"
+
+    log = engine.read_table("fetch_log").orderBy("domain", "wave", "idx").collect()
+    spark_log: dict = {}
+    for r in log:
+        spark_log.setdefault(r["domain"], []).append((r["url"], r["action"]))
+    for d, g in golden.items():
+        want = [(r["url"], r["action"]) for r in g.fetch_log]
+        assert spark_log.get(d, []) == want, f"recrawl fetch log {d}"
 
     fr = engine.read_table("frontier").collect()
     spark_seen: dict = {}

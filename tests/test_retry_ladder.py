@@ -2,6 +2,7 @@
 arithmetic, attempt caps, and the virtual-clock audit trail."""
 
 import pandas as pd
+import pyarrow as pa
 
 from marginaliasearch_spark.oracle.session import DomainCrawlSession, DomainInfo
 from marginaliasearch_spark.sources.gate_web import _RETRY_CASES, generate_retry_fixture
@@ -16,13 +17,13 @@ def _session_for_domain(i: int = 0) -> DomainCrawlSession:
     pages_rows, domains_rows, _ = generate_retry_fixture()
     d = domains_rows[i]
     pdf = normalize_pages_pdf(pd.DataFrame(pages_rows))
-    pdf = pdf[pdf.domain == d["domain"]]
+    pages = pa.Table.from_pandas(pdf[pdf.domain == d["domain"]], preserve_index=False)
     info = DomainInfo(
         domain=d["domain"], proto=d["proto"], probe=d["probe"],
         robots_txt=d["robots_txt"], site_kind=d["site_kind"],
         crawl_depth=d["crawl_depth"], seed_urls=d["seed_urls"],
     )
-    return DomainCrawlSession(info, DomainPagesWeb(d["domain"], d["proto"], pdf))
+    return DomainCrawlSession(info, DomainPagesWeb(d["domain"], d["proto"], pages))
 
 
 def test_retry_interval_arithmetic():
