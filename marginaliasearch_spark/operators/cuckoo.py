@@ -29,7 +29,8 @@ residue that found both buckets full (a few % at the 0.84 design load).
 Keys whose eviction walk exceeds the kick budget land in a per-filter
 STASH (serialized alongside the table and probed on lookup) — the filter
 therefore NEVER has false negatives, which is what makes
-``cuckoo_anti_join`` ≡ the exact anti-join.
+``cuckoo_anti_join`` ≡ the exact anti-join.  Table and stash travel as
+one zstd-compressed blob per filter row.
 """
 
 from __future__ import annotations
@@ -201,11 +202,22 @@ def _delete(table: np.ndarray, stash: list[int], keys: np.ndarray) -> int:
 
 
 def _serialize(table: np.ndarray, stash: list[int]) -> bytes:
+    """Table + stash, zstd-compressed behind their uncompressed length: a
+    lightly loaded table is mostly empty (zero) slots, and every probe,
+    insert and delete ships the whole blob through a shuffle and the
+    Arrow boundary."""
     head = np.array([table.shape[0], len(stash)], dtype=np.int64).tobytes()
-    return head + table.tobytes() + np.array(stash, dtype=np.int64).tobytes()
+    raw = head + table.tobytes() + np.array(stash, dtype=np.int64).tobytes()
+    return np.int64(len(raw)).tobytes() + pa.compress(raw, codec="zstd", asbytes=True)
 
 
-def _deserialize(raw: bytes) -> tuple[np.ndarray, list[int]]:
+def _deserialize(blob: bytes) -> tuple[np.ndarray, list[int]]:
+    raw = pa.decompress(
+        blob[8:],
+        decompressed_size=int(np.frombuffer(blob[:8], dtype=np.int64)[0]),
+        codec="zstd",
+        asbytes=True,
+    )
     head = np.frombuffer(raw[:16], dtype=np.int64)
     m, n_stash = int(head[0]), int(head[1])
     body = np.frombuffer(raw[16 : 16 + m * SLOTS * 2], dtype=np.uint16).reshape(m, SLOTS)
@@ -277,8 +289,8 @@ def cuckoo_insert_new_keys(
     default_m_buckets: int = 1 << 17,
 ) -> DataFrame:
     """Incremental snapshot update: insert only the NEW keys into each
-    bucket's existing table (cuckoo tables are mutable — the historical
-    seen-set is never rescanned)."""
+    bucket's existing table (cuckoo tables are mutable — the filter update
+    never rescans the historical seen-set)."""
 
     def merge(key, old, new):
         if new.num_rows == 0:

@@ -8,30 +8,36 @@ the bit-exact canonicalized-URL hash (north rule: "URL-seen dedup uses a
 partitioned Bloom/cuckoo filter keyed by canonicalized-URL hash").
 
 Design for 10^10 keys:
-- the seen-set is an append-only parquet table bucketed by
-  pmod(url_hash, n_buckets) — a snapshot commit appends only the NEW keys;
+- the seen-set is append-only and bucketed by pmod(url_hash, n_buckets):
+  an admitting ingest's accepted-* output (the rows it returns) is the
+  snapshot's seen delta, and every seen reader selects only its
+  ``(bucket, url_hash)`` columns;
 - one cuckoo filter per bucket (operators/cuckoo.py: 16-bit fingerprints
-  in 4-slot buckets, FPR ~0.01%), persisted as a table and updated
-  incrementally per snapshot from only the NEW keys — the historical
-  seen-set is never rescanned.  Cuckoo tables support deletion, which is
-  what ``forget()`` (seen-set expiry) needs;
+  in 4-slot buckets, FPR ~0.01%), one zstd-compressed blob row per
+  bucket, updated per snapshot from only the NEW keys — the filter update
+  never rescans the historical seen-set.  Cuckoo tables support
+  deletion, which is what ``forget()`` (seen-set expiry) needs;
 - admission = cuckoo_anti_join: filter negatives (the overwhelming
-  majority of genuinely-new URLs) never touch the seen-set; only
-  maybe-positives hit the exact check.  No filter bytes pass through the
-  driver.
+  majority of genuinely-new URLs) never touch the seen-set, but an
+  ingest with any maybe-positive scans the key columns of every live
+  seen path for the exact check.  No filter bytes pass through the
+  driver;
+- the per-bucket kernels run in min(n_buckets, default parallelism)
+  tasks behind one explicit ``repartition``, so neither AQE coalescing
+  nor ``spark.sql.shuffle.partitions`` sets their width;
 - crash-safe: a snapshot manifest (JSON, atomic rename) lists the live
   seen paths + the current filter table path (``blooms_path``, the key
   name older stores used); an interrupted ingest leaves only an orphaned
   uncommitted directory.
-- stores written before the filter was cuckoo-only (manifest
-  ``filter_kind`` missing or "bloom") are migrated once: the filters are
-  rebuilt from the seen-set and committed as a new snapshot before the
-  store is used.
+- stores written in an older filter format (manifest ``filter_kind``
+  missing or "bloom", or cuckoo blobs without ``filter_codec`` "zstd")
+  are migrated once: the filters are rebuilt from the seen-set and
+  committed as a new snapshot before the store is used.
 
-Sizing: ``cuckoo_m_buckets`` defaults to 2^17 table buckets (1 MiB per
-frontier bucket, ~440k keys at the 0.84 design load); at 10^10 keys a
-production run sizes n_buckets ≥ 23k so each per-bucket filter stays one
-task's working set, never the driver's.
+Sizing: ``cuckoo_m_buckets`` defaults to 2^17 table buckets (1 MiB
+uncompressed per frontier bucket, ~440k keys at the 0.84 design load); at
+10^10 keys a production run sizes n_buckets ≥ 23k so each per-bucket
+filter stays one task's working set, never the driver's.
 """
 
 from __future__ import annotations
@@ -42,17 +48,22 @@ import shutil
 import warnings
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.cuckoo import (
     _LOAD,
+    CUCKOO_SCHEMA,
     SLOTS,
     build_cuckoo_per_bucket,
     cuckoo_anti_join,
     cuckoo_delete_keys,
     cuckoo_insert_new_keys,
 )
+
+# the persisted filter format; a manifest that differs in any field is
+# migrated by rebuilding its filters from the seen-set
+_FORMAT = {"filter_kind": "cuckoo", "filter_codec": "zstd"}
 
 
 class FrontierDedup:
@@ -100,7 +111,7 @@ class FrontierDedup:
                 "seen_paths": [],
                 "blooms_path": None,
                 "n_buckets": self.n_buckets,
-                "filter_kind": "cuckoo",
+                **_FORMAT,
             }
         with open(self._manifest_path(n)) as f:
             m = json.load(f)
@@ -108,37 +119,81 @@ class FrontierDedup:
         # instance: adopt it, or probes would hit the wrong buckets'
         # filters and re-admit seen URLs
         self.n_buckets = int(m.get("n_buckets", self.n_buckets))
-        if m.get("filter_kind", "bloom") != "cuckoo":
+        if any(m.get(k) != v for k, v in _FORMAT.items()):
             m = self._migrate_legacy(m)
         return m
 
     def _migrate_legacy(self, m: dict) -> dict:
-        """One-time upgrade of a store whose filters are Bloom bitsets:
-        rebuild cuckoo filters from the seen-set (already bucketed) and
-        commit them as a new snapshot; the Bloom table stays on disk as
-        part of the superseded snapshot."""
+        """One-time upgrade of a store whose filters are in an older format
+        (Bloom bitsets, uncompressed cuckoo blobs): rebuild cuckoo filters
+        from the seen-set (already bucketed) and commit them as a new
+        snapshot; the old filter table stays on disk as part of the
+        superseded snapshot."""
         snap = m["snapshot"] + 1
         bpath = os.path.join(self.root, f"blooms-{snap:06d}")
-        build_cuckoo_per_bucket(
-            self.spark.read.parquet(*m["seen_paths"]),
-            key_col=self.key_col,
-            m_buckets=self.cuckoo_m_buckets,
-        ).write.mode("overwrite").parquet(bpath)
+        max_fill = self._write_filters(
+            build_cuckoo_per_bucket(
+                self._by_bucket(self._seen(m)),
+                key_col=self.key_col,
+                m_buckets=self.cuckoo_m_buckets,
+            ),
+            bpath,
+        )
         manifest = {
             "snapshot": snap,
             "seen_paths": m["seen_paths"],
             "blooms_path": bpath,
             "n_buckets": self.n_buckets,
-            "filter_kind": "cuckoo",
+            **_FORMAT,
+            "max_fill_est": max_fill,
         }
         self._commit(manifest)
         return manifest
+
+    # -- the store's own reads and writes ----------------------------------
+
+    def _seen(self, m: dict) -> DataFrame:
+        """The ``(bucket, key)`` columns of every live seen path.  The
+        store's reads pin their schemas: inference costs a job per read."""
+        return self.spark.read.schema(f"bucket int, `{self.key_col}` long").parquet(
+            *m["seen_paths"]
+        )
+
+    def _filters(self, m: dict) -> DataFrame:
+        return self.spark.read.schema(CUCKOO_SCHEMA).parquet(m["blooms_path"])
+
+    def _by_bucket(self, df: DataFrame) -> DataFrame:
+        """AQE does not coalesce a repartition with an explicit count, and
+        byte-light kernel stages are exactly what it would coalesce."""
+        n = min(self.n_buckets, self.spark.sparkContext.defaultParallelism)
+        return df.repartition(n, "bucket")
+
+    def _write_filters(self, filters: DataFrame, bpath: str) -> float:
+        """Write a filter table; return the worst bucket's fill = n_keys /
+        (m_buckets * SLOTS), observed over every written row (untouched
+        buckets included) by the write job itself.  Past the design load
+        the stash grows — no false negatives, but inserts slow and probes
+        scan the stash — so the manifest tracks it and this warns."""
+        obs = Observation()
+        filters.observe(
+            obs,
+            F.max(F.col("n_keys") / (F.col("m_buckets") * F.lit(float(SLOTS)))).alias("fill"),
+        ).write.mode("overwrite").parquet(bpath)
+        max_fill = float(obs.get["fill"] or 0.0)
+        if max_fill > _LOAD:
+            warnings.warn(
+                f"FrontierDedup cuckoo filter load ≈ {max_fill:.0%} (> {_LOAD:.0%}): "
+                f"inserts will stash-overflow; rebuild with larger "
+                f"cuckoo_m_buckets (current {self.cuckoo_m_buckets}).",
+                stacklevel=3,
+            )
+        return round(max_fill, 4)
 
     def seen(self) -> Optional[DataFrame]:
         m = self._load()
         if not m["seen_paths"]:
             return None
-        return self.spark.read.parquet(*m["seen_paths"])
+        return self._seen(m)
 
     # -- the operator --------------------------------------------------------
 
@@ -150,25 +205,31 @@ class FrontierDedup:
         m = self._load()
         snap = m["snapshot"] + 1
 
-        cand = candidates.withColumn(
-            "bucket", F.pmod(F.col(self.key_col), F.lit(self.n_buckets)).cast("int")
-        ).dropDuplicates([self.key_col])
+        # one exchange feeds both the in-batch dedup and the probe cogroup
+        cand = self._by_bucket(
+            candidates.withColumn(
+                "bucket", F.pmod(F.col(self.key_col), F.lit(self.n_buckets)).cast("int")
+            )
+        ).dropDuplicates(["bucket", self.key_col])
 
         transients: list = []
         filters, accepted = None, cand
         if m["seen_paths"]:
-            filters = self.spark.read.parquet(m["blooms_path"])
+            filters = self._filters(m)
             accepted = cuckoo_anti_join(
                 cand,
-                self.spark.read.parquet(*m["seen_paths"]),
+                self._seen(m),
                 key_col=self.key_col,
                 filters=filters,
                 transients=transients,
             )
 
         apath = os.path.join(self.root, f"accepted-{snap:06d}")
-        accepted.write.mode("overwrite").parquet(apath)
-        accepted_w = self.spark.read.parquet(apath)
+        n_accepted = Observation()
+        accepted.observe(n_accepted, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).parquet(apath)
+        accepted_w = self.spark.read.schema(cand.schema).parquet(apath)
         for df in transients:  # the probe intermediate is materialized now
             df.unpersist()
 
@@ -177,10 +238,10 @@ class FrontierDedup:
         # snapshot.  Without this, idle recrawl cycles accumulate empty
         # seen files and rewrite the full filter table every cycle
         # (VERDICT r4 item 1: per-cycle cost must stay flat on a static web).
-        if filters is not None and accepted_w.isEmpty():
+        if filters is not None and n_accepted.get["n"] == 0:
             return accepted_w.drop("bucket")
 
-        new_keys = accepted_w.select("bucket", self.key_col)
+        new_keys = self._by_bucket(accepted_w.select("bucket", self.key_col))
         bpath = os.path.join(self.root, f"blooms-{snap:06d}")
         if filters is None:
             nb = build_cuckoo_per_bucket(
@@ -193,40 +254,16 @@ class FrontierDedup:
                 key_col=self.key_col,
                 default_m_buckets=self.cuckoo_m_buckets,
             )
-        nb.write.mode("overwrite").parquet(bpath)
-
-        spath = os.path.join(self.root, f"seen-{snap:06d}")
-        new_keys.write.mode("overwrite").parquet(spath)
-
-        # saturation watch: fill = n_keys / (m_buckets * SLOTS).  Past the
-        # design load the stash grows — no false negatives, but inserts
-        # slow and probes scan the stash — so track the worst bucket's
-        # fill in the manifest and warn before it matters.
-        fill_row = (
-            self.spark.read.parquet(bpath)
-            .select(
-                F.max(
-                    F.col("n_keys") / (F.col("m_buckets") * F.lit(float(SLOTS)))
-                ).alias("max_fill")
-            )
-            .collect()[0]
-        )
-        max_fill = float(fill_row["max_fill"] or 0.0)
-        if max_fill > _LOAD:
-            warnings.warn(
-                f"FrontierDedup cuckoo filter load ≈ {max_fill:.0%} (> {_LOAD:.0%}): "
-                f"inserts will stash-overflow; rebuild with larger "
-                f"cuckoo_m_buckets (current {self.cuckoo_m_buckets}).",
-                stacklevel=2,
-            )
+        max_fill = self._write_filters(nb, bpath)
 
         manifest = {
             "snapshot": snap,
-            "seen_paths": m["seen_paths"] + [spath],
+            # the accepted dir is the seen delta: its keys are the new ones
+            "seen_paths": m["seen_paths"] + [apath],
             "blooms_path": bpath,
             "n_buckets": self.n_buckets,
-            "filter_kind": "cuckoo",
-            "max_fill_est": round(max_fill, 4),
+            **_FORMAT,
+            "max_fill_est": max_fill,
         }
         self._commit(manifest)
 
@@ -252,16 +289,15 @@ class FrontierDedup:
             "bucket", F.pmod(F.col(self.key_col), F.lit(self.n_buckets)).cast("int")
         ).dropDuplicates([self.key_col])
 
-        seen = self.spark.read.parquet(*m["seen_paths"])
+        seen = self._seen(m)
         # only keys actually present may be deleted from the filters
         # (standard cuckoo contract: deleting a never-inserted key could
-        # evict a same-fingerprint twin)
-        present = rm.join(
-            seen.select(self.key_col).distinct(), self.key_col, "left_semi"
-        )
+        # evict a same-fingerprint twin); a left-semi join already ignores
+        # duplicate keys on its right side
+        present = rm.join(seen.select(self.key_col), self.key_col, "left_semi")
         ppath = os.path.join(self.root, f"forgotten-{snap:06d}")
         present.write.mode("overwrite").parquet(ppath)
-        present_w = self.spark.read.parquet(ppath)
+        present_w = self.spark.read.schema(rm.schema).parquet(ppath)
         n_forgotten = present_w.count()
         if n_forgotten == 0:
             # nothing to forget: remove the empty present-keys dir so the
@@ -277,37 +313,38 @@ class FrontierDedup:
             .parquet(spath)
         )
         bpath = os.path.join(self.root, f"blooms-{snap:06d}")
-        cuckoo_delete_keys(
-            self.spark.read.parquet(m["blooms_path"]), present_w, key_col=self.key_col
-        ).write.mode("overwrite").parquet(bpath)
-
-        manifest = dict(m, snapshot=snap, seen_paths=[spath], blooms_path=bpath)
-        # deletion lowers the actual fill: carrying the pre-forget estimate
-        # forward would overstate saturation to future ingests' compaction
-        # heuristics — drop it rather than commit a stale number
-        manifest.pop("max_fill_est", None)
-        self._commit(manifest)
+        # deletion lowers the fill: the manifest records the new one
+        max_fill = self._write_filters(
+            cuckoo_delete_keys(self._filters(m), present_w, key_col=self.key_col), bpath
+        )
+        self._commit(
+            dict(
+                m, snapshot=snap, seen_paths=[spath], blooms_path=bpath, max_fill_est=max_fill
+            )
+        )
         return n_forgotten
 
     def compact_seen(self) -> Optional[str]:
         """Fold all live seen paths into one (Iceberg rewrite_data_files
         analogue): rewrites the key table bucket-partitioned, commits a
         snapshot whose ``seen_paths`` is the single compacted path, and
-        deletes the superseded per-ingest files.  The filters are
-        untouched (they are already one consolidated table per snapshot)."""
+        deletes the superseded store-owned key files.  accepted-* dirs are
+        kept: they are also the DataFrames ``ingest`` returned, which their
+        callers read lazily.  The filters are untouched (they are already
+        one consolidated table per snapshot)."""
         m = self._load()
         if len(m["seen_paths"]) <= 1:
             return None
         snap = m["snapshot"] + 1
         cpath = os.path.join(self.root, f"seen-compact-{snap:06d}")
         (
-            self.spark.read.parquet(*m["seen_paths"])
+            self._seen(m)
             .repartition(self.n_buckets, "bucket")
             .write.mode("overwrite")
             .parquet(cpath)
         )
         self._commit(dict(m, snapshot=snap, seen_paths=[cpath]))
         for p in m["seen_paths"]:
-            if p != cpath:
+            if not os.path.basename(p).startswith("accepted-"):
                 shutil.rmtree(p, ignore_errors=True)
         return cpath

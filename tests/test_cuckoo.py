@@ -8,7 +8,8 @@ Contracts pinned here:
 - FrontierDedup admits exactly the never-seen rows over multi-snapshot
   histories, forget() makes it re-admit expired keys, a reopened store
   adopts the persisted bucket layout, and a store written with Bloom
-  filters is migrated before its first probe.
+  filters or uncompressed cuckoo blobs is migrated before its first
+  probe.
 """
 
 from __future__ import annotations
@@ -18,6 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from marginaliasearch_spark.operators.cuckoo import (
+    _CUCKOO_ARROW,
     SLOTS,
     _contains,
     _delete,
@@ -202,12 +204,13 @@ def test_reopen_adopts_persisted_bucket_layout(spark, tmp_path):
     assert again._load()["n_buckets"] == 4
 
 
-@pytest.mark.parametrize("legacy_kind", [None, "bloom"])
+@pytest.mark.parametrize("legacy_kind", [None, "bloom", "cuckoo"])
 def test_legacy_bloom_store_is_migrated(spark, tmp_path, legacy_kind):
-    """A store written when Bloom was the default (manifest filter_kind
-    missing or "bloom", Bloom-schema filter rows) gets cuckoo filters
-    rebuilt from its seen-set and committed before the first probe; the
-    next ingests keep exact set semantics."""
+    """A store written in an older filter format gets cuckoo filters
+    rebuilt from its seen-set and committed before the first probe: Bloom
+    (manifest filter_kind missing or "bloom", Bloom-schema filter rows) or
+    uncompressed cuckoo blobs (filter_kind "cuckoo", no filter_codec).
+    The next ingests keep exact set semantics."""
     import json
     import os
 
@@ -229,28 +232,44 @@ def test_legacy_bloom_store_is_migrated(spark, tmp_path, legacy_kind):
         ),
         spath / "part-0.parquet",
     )
-    # Bloom-schema rows: probing these as cuckoo tables would fail
-    pq.write_table(
-        pa.table(
+    manifest = {
+        "snapshot": 0,
+        "seen_paths": [str(spath)],
+        "blooms_path": str(bpath),
+        "n_buckets": n_buckets,
+    }
+    if legacy_kind == "cuckoo":
+        # the raw blob layout: [m, n_stash] int64, the uint16 table, the
+        # int64 stash, uncompressed — decoding it as a compressed blob
+        # would fail
+        m_raw = 1 << 10
+        rows = {"bucket": [], "n_keys": [], "m_buckets": [], "cuckoo": []}
+        for b in range(n_buckets):
+            keys = np.array([k for k in seen_keys if k % n_buckets == b], dtype=np.uint64)
+            table = np.zeros((m_raw, SLOTS), dtype=np.uint16)
+            stash: list[int] = []
+            _insert_all(table, stash, keys)
+            head = np.array([m_raw, len(stash)], dtype=np.int64).tobytes()
+            rows["bucket"].append(b)
+            rows["n_keys"].append(len(keys))
+            rows["m_buckets"].append(m_raw)
+            rows["cuckoo"].append(head + table.tobytes() + np.array(stash, np.int64).tobytes())
+        filters = pa.table(rows, schema=_CUCKOO_ARROW)
+        manifest.update(filter_kind="cuckoo", max_fill_est=0.0623)
+    else:
+        # Bloom-schema rows: probing these as cuckoo tables would fail
+        filters = pa.table(
             {
                 "bucket": pa.array(range(n_buckets), pa.int32()),
                 "n_keys": pa.array([250] * n_buckets, pa.int64()),
                 "m_bits": pa.array([1 << 16] * n_buckets, pa.int64()),
                 "bloom": pa.array([b"\xff" * 8192] * n_buckets, pa.binary()),
             }
-        ),
-        bpath / "part-0.parquet",
-    )
-    manifest = {
-        "snapshot": 0,
-        "seen_paths": [str(spath)],
-        "blooms_path": str(bpath),
-        "n_buckets": n_buckets,
-        "m_bits": 1 << 16,
-        "max_fill_est": 0.0233,
-    }
-    if legacy_kind is not None:
-        manifest["filter_kind"] = legacy_kind
+        )
+        manifest.update(m_bits=1 << 16, max_fill_est=0.0233)
+        if legacy_kind is not None:
+            manifest["filter_kind"] = legacy_kind
+    pq.write_table(filters, bpath / "part-0.parquet")
     with open(root / "dedup-snap-000000.json", "w") as f:
         json.dump(manifest, f)
 
@@ -263,6 +282,7 @@ def test_legacy_bloom_store_is_migrated(spark, tmp_path, legacy_kind):
         exact_seen |= want
     m = store._load()
     assert m["filter_kind"] == "cuckoo" and "m_bits" not in m
+    assert m["filter_codec"] == "zstd"
     assert m["snapshot"] == 3  # migration + two admitting ingests
     assert store.n_buckets == n_buckets
     assert set(spark.read.parquet(m["blooms_path"]).columns) >= {"cuckoo", "m_buckets"}

@@ -1,8 +1,12 @@
 """Global URL-seen dedup plan: snapshot-incremental cuckoo-filter admission
 (plans/frontier_dedup.py) — correctness vs exact set semantics, resume
-from disk, and only-new-keys snapshot appends."""
+from disk, only-new-keys snapshot appends, the fill watch, and
+compaction that never deletes a returned accepted-* dir."""
+
+import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from marginaliasearch_spark.plans.frontier_dedup import FrontierDedup
 
@@ -61,8 +65,6 @@ def test_snapshot_appends_only_new_keys(spark, tmp_path):
 def test_empty_ingest_is_a_noop(spark, tmp_path):
     """Steady-state flatness: a replay that admits nothing must not grow
     the table — no new seen path, no filter rewrite, no new snapshot."""
-    import os
-
     root = str(tmp_path / "fd4")
     fd = FrontierDedup(spark, root, n_buckets=8, cuckoo_m_buckets=1 << 10)
     fd.ingest(_cand(spark, 0, 2000))
@@ -76,7 +78,8 @@ def test_empty_ingest_is_a_noop(spark, tmp_path):
     assert m1["snapshot"] == m0["snapshot"]
     assert m1["seen_paths"] == m0["seen_paths"]
     assert m1["blooms_path"] == m0["blooms_path"]
-    # only the transient accepted-* output may differ
+    # only the non-admitting ingests' accepted-* outputs (the empty
+    # DataFrames they returned, in no seen path) may differ
     grown = set(sorted(os.listdir(root))) - set(before)
     assert all(f.startswith("accepted-") for f in grown)
     # and admission still works afterwards
@@ -107,3 +110,63 @@ def test_compact_seen_folds_paths(spark, tmp_path):
         fd2.ingest(_cand(spark, i * 100, (i + 1) * 100))
     assert len(fd2._load()["seen_paths"]) <= 4
     assert fd2.seen().count() == 600
+
+
+def _keys(spark, keys):
+    return spark.createDataFrame([(int(k),) for k in keys], "url_hash long")
+
+
+def test_fill_warning_and_exact_max_fill(spark, tmp_path):
+    """Plant an overloaded filter (64 slots per frontier bucket, ~100+
+    keys each): the fill watch must warn, and the manifest's max_fill_est
+    must be the worst bucket's n_keys / (m_buckets·SLOTS) read back from
+    the committed filter table — also after an ingest that touches only
+    bucket 0, when the worst bucket is an untouched (passed-through) one."""
+    from marginaliasearch_spark.operators.cuckoo import SLOTS
+
+    fd = FrontierDedup(spark, str(tmp_path / "fill"), n_buckets=4, cuckoo_m_buckets=1 << 4)
+
+    def committed_max_fill():
+        m = fd._load()
+        t = spark.read.parquet(m["blooms_path"]).collect()
+        return m["max_fill_est"], max(r["n_keys"] / (r["m_buckets"] * SLOTS) for r in t)
+
+    # bucket 1 (k % 4 == 1) gets 40 extra keys: the worst bucket
+    first = list(range(400)) + [1001 + 4 * i for i in range(40)]
+    with pytest.warns(UserWarning, match="cuckoo filter load"):
+        assert fd.ingest(_keys(spark, first)).count() == len(first)
+    est, worst = committed_max_fill()
+    assert worst == 140 / 64 and est == round(worst, 4)
+
+    # bucket-0-only ingest: bucket 0 rises to 108 keys, bucket 1 is
+    # untouched but stays the worst
+    second = [2000 + 4 * i for i in range(8)]
+    with pytest.warns(UserWarning, match="cuckoo filter load"):
+        got = {r["url_hash"] for r in fd.ingest(_keys(spark, second + first[:50])).collect()}
+    assert got == set(second)  # overloaded (stashing) filters stay exact
+    est, worst = committed_max_fill()
+    assert worst == 140 / 64 and est == round(worst, 4)
+
+
+def test_compaction_keeps_returned_accepted_dirs(spark, tmp_path):
+    """The seen-set's paths are the ingests' own accepted-* dirs, which are
+    also the DataFrames ingest returned: auto-compaction must fold them
+    without deleting any, so an ingest that triggers it still returns a
+    collectable, exact result."""
+    root = str(tmp_path / "fd7")
+    fd = FrontierDedup(spark, root, n_buckets=8, cuckoo_m_buckets=1 << 10, max_seen_paths=2)
+    returned = [fd.ingest(_cand(spark, 0, 300)), fd.ingest(_cand(spark, 200, 500))]
+    assert len(fd._load()["seen_paths"]) == 2
+
+    # the third admitting ingest makes 3 > max_seen_paths live paths
+    last = fd.ingest(_cand(spark, 400, 700))
+    m = fd._load()
+    assert len(m["seen_paths"]) == 1 and "seen-compact-" in m["seen_paths"][0]
+    got = sorted(r["url_hash"] for r in last.collect())
+    assert got == sorted(r["url_hash"] for r in _cand(spark, 500, 700).collect())
+    assert [d.count() for d in returned] == [300, 200]
+    assert sorted(f for f in os.listdir(root) if f.startswith("accepted-")) == [
+        "accepted-000000", "accepted-000001", "accepted-000002",
+    ]
+    assert fd.seen().columns == ["bucket", "url_hash"]
+    assert fd.seen().count() == 700
