@@ -388,7 +388,8 @@ def cuckoo_anti_join(
     definitely_new = flagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
     needs_check = flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
 
-    maybe_keys = needs_check.select(key_col).distinct()
+    # no distinct(): a semi-join's build side ignores duplicates
+    maybe_keys = needs_check.select(key_col)
     true_dupes = seen.select(key_col).join(F.broadcast(maybe_keys), key_col, "left_semi")
     checked = needs_check.join(F.broadcast(true_dupes), key_col, "left_anti")
     return definitely_new.unionByName(checked)

@@ -12,12 +12,14 @@ so the same mechanics are provided over plain parquet:
   the next run ignores (atomic commit = manifest write + rename).
 
 In production this maps 1:1 onto Iceberg: appends → AppendFiles, replaces
-→ partition-overwrite/MERGE, the manifest → the snapshot metadata, and
-``version_of``/``rollback`` → time travel.  The analogue of the
-reference's WorkLog+WARC-resync resume (ref: code/processes/
-crawling-process/java/nu/marginalia/crawl/CrawlerMain.java:652-673,
-CrawlerWarcResynchronizer.java:31-103) comes for free: the frontier and
-crawl tables at the last snapshot *are* the resync state.
+→ ReplaceTable, the merge-on-read frontier/domain_state views over
+``wave_out`` → Iceberg v2 merge-on-read, compaction → rewrite_data_files,
+the manifest → the snapshot metadata, and ``load(n)``/``rollback_to`` →
+time travel.  The analogue of the reference's WorkLog+WARC-resync resume
+(ref: code/processes/crawling-process/java/nu/marginalia/crawl/
+CrawlerMain.java:652-673, CrawlerWarcResynchronizer.java:31-103) comes
+for free: the state views at the last snapshot *are* the resync state,
+and they are a function of the snapshot's path lists alone.
 """
 
 from __future__ import annotations
@@ -30,17 +32,19 @@ from typing import Optional
 APPEND_TABLES = ("wave_out",)  # unified append log; crawl_data/fetch_log/
 # visits are row_kind-filtered views over it (one physical write per wave)
 REPLACE_TABLES = ("domain_state", "wave_offsets", "wave_out_compacted")
+# domain_state is init_run's base table, never rewritten by a wave: the
+# crawl state (frontier and each domain's phase/state_json) is read
+# merge-on-read from wave_out
 # wave_out_compacted: the rewrite_data_files analogue — a compaction
-# snapshot folds all committed wave_out dirs into one row_kind-partitioned
-# table (wave carried as a data column) and truncates the wave_out append
-# list; older snapshots keep referencing the original files (time travel
-# intact) until expire_snapshots reclaims them
+# snapshot folds the committed wave_out dirs (each domain's latest state
+# rows only) into one row_kind-partitioned table (wave carried as a data
+# column) and truncates the wave_out append list; older snapshots keep
+# referencing the original files (time travel intact) until
+# expire_snapshots reclaims them
 # wave_offsets is REPLACED: the token-budget schedule is recomputed each
 # wave from cumulative per-domain durations (one offset per domain for
 # the whole run — the reference's semaphore is held for a domain's entire
 # crawl), so only the latest table is live
-# the frontier is tracked per bucket (manifest key "frontier_buckets") —
-# Iceberg partition-overwrite semantics: a wave only rewrites dirty buckets
 
 
 class SnapshotCatalog:
@@ -85,16 +89,12 @@ class SnapshotCatalog:
         self,
         wave: int,
         table_paths: dict[str, Optional[str]],
-        frontier_buckets: Optional[dict[int, str]] = None,
         truncate_append: Optional[set] = None,
     ) -> dict:
         """Commit wave N: append-table paths accumulate, replace-table paths
-        supersede.  ``frontier_buckets`` maps *dirty* bucket ids to their new
-        per-bucket data path (Iceberg partition-overwrite semantics: clean
-        buckets keep pointing at their previous files).
-        ``truncate_append`` names append tables whose accumulated path list
-        restarts at this snapshot (compaction folded them elsewhere).
-        Atomic via write-to-temp + rename."""
+        supersede.  ``truncate_append`` names append tables whose
+        accumulated path list restarts at this snapshot (compaction folded
+        them elsewhere).  Atomic via write-to-temp + rename."""
         prev = self.load()
         manifest = {"wave": wave, "tables": {}}
         for t in APPEND_TABLES:
@@ -110,22 +110,11 @@ class SnapshotCatalog:
                 manifest["tables"][t] = [table_paths[t]]
             else:
                 manifest["tables"][t] = list(prev["tables"].get(t, []))
-        buckets = dict(prev.get("frontier_buckets", {}))
-        if frontier_buckets:
-            for b, p in frontier_buckets.items():
-                if p is None:  # dirty bucket emptied out this wave
-                    buckets.pop(str(b), None)
-                else:
-                    buckets[str(b)] = p
-        manifest["frontier_buckets"] = buckets
         tmp = self._snap_path(wave) + ".tmp"
         with open(tmp, "w") as f:
             json.dump(manifest, f)
         os.replace(tmp, self._snap_path(wave))
         return manifest
-
-    def frontier_bucket_paths(self, snapshot: Optional[int] = None) -> dict[str, str]:
-        return self.load(snapshot).get("frontier_buckets", {})
 
     # -- table IO helpers -------------------------------------------------
 
@@ -147,55 +136,29 @@ class SnapshotCatalog:
         keep, drop = snaps[-keep_last:], snaps[:-keep_last]
         live: set[str] = set()
         for n in keep:
-            m = self.load(n)
-            for ps in m["tables"].values():
-                live.update(ps)
-            live.update(m.get("frontier_buckets", {}).values())
+            live.update(self._live_paths(n))
         removed: list[str] = []
         for n in drop:
-            m = self.load(n)
-            doomed = [p for ps in m["tables"].values() for p in ps] + list(
-                m.get("frontier_buckets", {}).values()
-            )
-            for path in doomed:
-                if path in live or not os.path.exists(path):
-                    continue
-                # keep dirs that contain (or live inside) a live path;
-                # compare whole path components (seen-1 is not a prefix
-                # of seen-10) by appending the separator before testing
-                psep = path.rstrip(os.sep) + os.sep
-                if any(
-                    (l.rstrip(os.sep) + os.sep).startswith(psep)
-                    or psep.startswith(l.rstrip(os.sep) + os.sep)
-                    for l in live
-                ):
-                    continue
-                shutil.rmtree(path, ignore_errors=True)
-                removed.append(path)
+            for path in self._live_paths(n):
+                if path not in live and os.path.exists(path):
+                    shutil.rmtree(path, ignore_errors=True)
+                    removed.append(path)
             os.remove(self._snap_path(n))
         return removed
+
+    def _live_paths(self, n: int) -> list[str]:
+        return [p for ps in self.load(n)["tables"].values() for p in ps]
 
     def rollback_to(self, n: int) -> None:
         """Delete manifests (and orphaned data dirs) newer than snapshot n."""
         latest = self.latest_snapshot()
         if latest is None:
             return
-        keep = self.load(n)
-        live: set[str] = set()
-        for t, ps in keep["tables"].items():
-            live.update(ps)
-        live.update(keep.get("frontier_buckets", {}).values())
+        live = set(self._live_paths(n))
         for m in range(n + 1, latest + 1):
             p = self._snap_path(m)
             if os.path.exists(p):
-                doomed = self.load(m)
-                doomed_paths = [
-                    path for ps in doomed["tables"].values() for path in ps
-                ] + list(doomed.get("frontier_buckets", {}).values())
-                for path in doomed_paths:
+                for path in self._live_paths(m):
                     if path not in live and os.path.exists(path):
-                        # skip bucket dirs whose parent wave is still live
-                        if any(l.startswith(path) or path.startswith(l) for l in live):
-                            continue
                         shutil.rmtree(path, ignore_errors=True)
                 os.remove(p)

@@ -16,18 +16,29 @@ UDF against the live site) and advances every active domain's
 DomainCrawlSession by up to ``wave_budget`` fetches.  Domains never link
 to each other inside a job (the reference's key invariant — cp/readme.md
 §1), so the grouping key ``domain`` makes the whole crawl embarrassingly
-parallel: the only shuffles are the cogroup hash-partitioning per wave,
-exactly one wide stage.
+parallel: a wave shuffles only for the per-domain state merge and the
+cogroup's hash-partitioning.
 
 Each wave boundary is an atomic snapshot commit (plans/checkpoints.py) —
 kill the driver at any point and ``resume()`` continues from the last
 committed wave with identical results (tested).
 
+State is merge-on-read over the wave output log (the Iceberg v2
+merge-on-read shape): the wave UDF emits each advanced domain's complete
+new frontier and domain_state rows into ``wave_out``, and that write is
+the wave's only state write.  Domains are independent, so each domain's
+latest rows are its whole state: ``domain_state`` is init_run's base row
+overlaid with the domain's latest ``domain_state`` row, and ``frontier``
+is the domain's rows from the latest wave that emitted any.  A domain
+that emits no frontier rows (faulted, permit-held, or terminal with an
+empty seen-set) keeps its previous rows.  ``compact_wave_out`` folds
+only those latest rows forward, which bounds the merge read.
+
 Scale notes (10^10-URL frontier / 1000 executors):
-- frontier and the wave cogroup hash-partition on ``domain``; AQE splits
-  skewed partitions; the ``bucket`` column (xxhash64(domain) % n_buckets)
-  is the Iceberg partition spec so a wave's COW replace only rewrites
-  dirty buckets;
+- the wave cogroup hash-partitions on ``domain`` at an explicit width,
+  min(runnable domains, defaultParallelism), which AQE leaves alone; the
+  frontier view's ``bucket`` column (xxhash64(domain) % n_buckets) is
+  the partition spec of a production Iceberg table;
 - per-domain state is bounded by the reference's own frontier cap
   (depth + 10_000 rows — DomainCrawlFrontier.java:167-169), so a group
   never exceeds ~20k rows no matter how large the site;
@@ -44,7 +55,7 @@ from typing import Optional
 
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -105,6 +116,24 @@ WAVE_OUT_SCHEMA = T.StructType(
     ]
 )
 
+# the engine's own reads pin their schemas (no inference job per read):
+# wave_out dirs and the compacted table carry ``wave`` (a partition
+# column of the per-wave dirs, a data column of the compacted table)
+WAVE_OUT_READ_SCHEMA = T.StructType(
+    WAVE_OUT_SCHEMA.fields + [T.StructField("wave", T.IntegerType())]
+)
+
+DOMAIN_STATE_SCHEMA = T.StructType(
+    [
+        T.StructField("domain", T.StringType()),
+        T.StructField("top_domain", T.StringType()),
+        T.StructField("info_json", T.StringType()),
+        T.StructField("phase", T.StringType()),
+        T.StructField("state_json", T.StringType()),
+    ]
+)
+
+
 def _state_rows(df: DataFrame, kind: str, **cols) -> DataFrame:
     """One state-side input of the wave cogroup, in STATE_IN_SCHEMA column
     order: ``domain`` from ``df``, ``row_kind`` = ``kind``, each given
@@ -125,6 +154,15 @@ def _kind_rows(state: pa.Table, kind: str, cols: list) -> list[dict]:
     (nulls stay None, longs keep all 64 bits)."""
     rows = state.filter(pc.equal(state["row_kind"], kind)).sort_by("seq")
     return rows.select(cols).to_pylist()
+
+
+def _pinned(wave_out: DataFrame, kind: str, pin: DataFrame) -> DataFrame:
+    """The ``kind`` rows of ``wave_out`` that come from each domain's wave
+    in ``pin`` (domain, wave); a broadcast semi-join, so only those rows
+    reach any later shuffle."""
+    return wave_out.filter(F.col("row_kind") == kind).join(
+        F.broadcast(pin), ["domain", "wave"], "left_semi"
+    )
 
 
 _OUT_ARROW = to_arrow_schema(WAVE_OUT_SCHEMA)
@@ -375,7 +413,7 @@ def _make_offsets_fn():
     slots with the 1 s grant cadence.  Offsets land in a side table the
     fetch_log view applies — the audit-trail timestamps reflect the
     semaphore's grant times.  The permit bound itself is enforced
-    PHYSICALLY by the per-wave slot claim in ``_run_waves_inner`` (≤
+    PHYSICALLY by the per-wave slot claim in ``run_waves`` (≤
     permits members advance per wave); this pass adds the clock model on
     top, and a blogspot.com-scale top-domain never serializes its
     thousands of members into one task (the wave groups by domain)."""
@@ -455,7 +493,7 @@ class SparkCrawlEngine:
         self.body_cap_bytes = body_cap_bytes
         # the bucket layout is a property of the PERSISTED run, not the
         # instance: a resume engine constructed with a different n_buckets
-        # would re-derive wrong bucket keys and corrupt the frontier COW
+        # would give the frontier view different bucket keys mid-run
         self._ctor_n_buckets, self._ctor_seed = n_buckets, seed
         cfg = os.path.join(out_dir, "engine.json")
         if os.path.exists(cfg):
@@ -492,7 +530,7 @@ class SparkCrawlEngine:
                 # token-budget offsets (top_domain mode): ONE offset per
                 # domain for the whole run (latest replaced table), shifting
                 # the audit trail by the domain's semaphore-grant time
-                off = self.spark.read.parquet(*offp)
+                off = self.spark.read.schema(OFFSETS_SCHEMA).parquet(*offp)
                 v = (
                     v.join(F.broadcast(off), ["domain"], "left")
                     .withColumn(
@@ -509,14 +547,25 @@ class SparkCrawlEngine:
             if v is None:
                 return None
             return v.withColumnRenamed("url", "src").withColumnRenamed("url2", "dst")
-        if table == "frontier":
-            bucket_paths = self.catalog.frontier_bucket_paths()
-            if not bucket_paths:
+        tables = self.catalog.load()["tables"]
+        if table == "domain_state":
+            if not tables.get("domain_state"):
                 return None
-            df = self.spark.read.parquet(*bucket_paths.values())
-            # the bucket partition column is re-derived (deterministic hash)
-            return df.withColumn("bucket", self._bucket(F.col("domain")))
-        paths = self.catalog.paths(table)
+            return self._state(tables, self._wave_out_all(tables)).select(
+                *DOMAIN_STATE_SCHEMA.names
+            )
+        if table == "frontier":
+            w = self._wave_out_all(tables)
+            if w is None:
+                return None
+            pin = self._state(tables, w).select(
+                "domain", F.col("frontier_wave").alias("wave")
+            )
+            return _pinned(w, "frontier", pin).select(
+                "domain", "url_hash", "url", "seq", "state",
+                self._bucket(F.col("domain")).alias("bucket"),
+            )
+        paths = tables.get(table)
         if not paths:
             return None
         return self.spark.read.parquet(*paths)
@@ -536,26 +585,73 @@ class SparkCrawlEngine:
             return None
         return df.filter(F.col("row_kind") == (kind or table)).select(*cols)
 
-    def _wave_out_all(self) -> Optional[DataFrame]:
-        """Every committed wave_out row: the per-wave dirs unioned with any
-        compacted table (None when there are neither)."""
-        paths = self.catalog.paths("wave_out")
-        cpaths = self.catalog.paths("wave_out_compacted")
+    def _wave_out_all(self, tables: Optional[dict] = None) -> Optional[DataFrame]:
+        """Every wave_out row of ``tables`` (default: the latest snapshot's):
+        the per-wave dirs unioned with any compacted table (None when there
+        are neither)."""
+        if tables is None:
+            tables = self.catalog.load()["tables"]
+        reader = self.spark.read.schema(WAVE_OUT_READ_SCHEMA)
         parts = []
-        if paths:
+        if tables.get("wave_out"):
             parts.append(
-                self.spark.read.option(
-                    "basePath", os.path.join(self.out_dir, "wave_out")
-                ).parquet(*paths)
+                reader.option("basePath", os.path.join(self.out_dir, "wave_out")).parquet(
+                    *tables["wave_out"]
+                )
             )
-        for p in cpaths:
-            parts.append(self.spark.read.option("basePath", p).parquet(p))
+        for p in tables.get("wave_out_compacted", []):
+            parts.append(reader.option("basePath", p).parquet(p))
         if not parts:
             return None
         df = parts[0]
         for extra in parts[1:]:
             df = df.unionByName(extra)
         return df
+
+    def _state(self, tables: dict, w: Optional[DataFrame]) -> DataFrame:
+        """domain_state merge-on-read over the base table of ``tables`` and
+        its wave_out rows ``w``, with two more columns: ``state_wave``
+        (the wave of the domain's latest domain_state row, 0 for init_run's
+        base row) and ``frontier_wave`` (the latest wave that emitted
+        frontier rows for the domain; null when none has).
+
+        One per-domain aggregate over the base rows and the wave_out
+        domain_state/frontier rows: ``top_domain``/``info_json`` come from
+        the base row (the only one that carries them), ``phase``/
+        ``state_json`` from the newest domain_state row."""
+        base = self.spark.read.schema(DOMAIN_STATE_SCHEMA).parquet(*tables["domain_state"])
+        if w is None:
+            return base.withColumn("state_wave", F.lit(0)).withColumn(
+                "frontier_wave", F.lit(None).cast("int")
+            )
+        none = F.lit(None).cast("string")
+        rows = base.select(
+            "domain", "top_domain", "info_json", "phase", "state_json",
+            F.lit("domain_state").alias("row_kind"), F.lit(0).alias("wave"),
+        ).unionByName(
+            w.filter(F.col("row_kind") == "domain_state").select(
+                "domain", none.alias("top_domain"), none.alias("info_json"),
+                F.col("state").alias("phase"), "state_json", "row_kind", "wave",
+            )
+        ).unionByName(
+            # a scan of its own, so the frontier files give only ``domain``
+            w.filter(F.col("row_kind") == "frontier").select(
+                "domain", none.alias("top_domain"), none.alias("info_json"),
+                none.alias("phase"), none.alias("state_json"), "row_kind", "wave",
+            )
+        )
+        is_ds = F.col("row_kind") == "domain_state"
+        ds_wave = F.when(is_ds, F.col("wave"))
+        return rows.groupBy("domain").agg(
+            F.max("top_domain").alias("top_domain"),
+            F.max("info_json").alias("info_json"),
+            F.max_by(F.struct("phase", "state_json"), ds_wave).alias("_s"),
+            F.max(ds_wave).alias("state_wave"),
+            F.max(F.when(~is_ds, F.col("wave"))).alias("frontier_wave"),
+        ).select(
+            "domain", "top_domain", "info_json", "_s.phase", "_s.state_json",
+            "state_wave", "frontier_wave",
+        )
 
     def read_table(self, table: str) -> Optional[DataFrame]:
         return self._read(table)
@@ -694,35 +790,13 @@ class SparkCrawlEngine:
         still groups by domain, so a giant top-domain's runnable members
         stay spread across tasks.
 
-        AQE partition coalescing is disabled for the wave jobs: it merges
-        shuffle partitions by *byte size*, and the wave groups are tiny in
-        bytes but heavy in compute (the per-domain crawl loop), so
-        coalescing collapses the whole wave into one task and serializes
-        the crawl.  Restored afterwards — for the scan/join/agg queries
-        AQE coalescing is exactly right.
+        The wave sets its own width: both cogroup sides are hash-partitioned
+        on ``domain`` into min(runnable domains, defaultParallelism)
+        partitions.  The wave groups are tiny in bytes but heavy in compute
+        (the per-domain crawl loop); AQE does not coalesce a repartition
+        with an explicit partition count, and ``spark.sql.shuffle.partitions``
+        does not set the number of Python tasks.
         """
-        conf = self.spark.conf
-        key = "spark.sql.adaptive.coalescePartitions.enabled"
-        old_coalesce = conf.get(key, "true")
-        conf.set(key, "false")
-        try:
-            return self._run_waves_inner(
-                web_pages_df, wave_budget, max_waves, prev_crawl_df, atags_df,
-                group_key, deadline_s,
-            )
-        finally:
-            conf.set(key, old_coalesce)
-
-    def _run_waves_inner(
-        self,
-        web_pages_df: DataFrame,
-        wave_budget: Optional[int],
-        max_waves: int,
-        prev_crawl_df: Optional[DataFrame],
-        atags_df: Optional[DataFrame] = None,
-        group_key: str = "domain",
-        deadline_s: Optional[float] = None,
-    ) -> int:
         import time as _time
 
         waves_done = 0
@@ -733,8 +807,11 @@ class SparkCrawlEngine:
             manifest = self.catalog.load()
             wave = manifest["wave"] + 1
 
-            domain_state = self._read("domain_state")
-            active = domain_state.filter(F.col("phase").isin("pending", "active"))
+            tables = manifest["tables"]
+            # one listing of this snapshot's wave_out files serves the state
+            # merge and the frontier pin
+            w = self._wave_out_all(tables)
+            active = self._state(tables, w).filter(F.col("phase").isin("pending", "active"))
             if group_key == "top_domain":
                 # PHYSICAL permit enforcement (the reference's semaphore is
                 # held for a domain's whole crawl —
@@ -745,7 +822,7 @@ class SparkCrawlEngine:
                 # deterministic domain order (the lock-retry loop of
                 # CrawlerMain.java:405-457, with domain order as the
                 # determinism pin).  Held domains simply skip the wave —
-                # their state rows are carried forward untouched.  The
+                # they emit no rows, so their latest rows stay their state.  The
                 # offsets side table below stays as the 1 s-cadence
                 # virtual-clock audit model of the same semaphore.
                 from pyspark.sql import Window
@@ -779,37 +856,30 @@ class SparkCrawlEngine:
                 # global request semaphore: at most N domains in flight
                 # per quantum; holders (phase='active') outrank waiters,
                 # ties broken by domain — the same grant discipline as the
-                # per-top-domain permits above.  Skipped domains carry
-                # their state rows forward untouched and retry next wave.
+                # per-top-domain permits above.  Skipped domains emit no
+                # rows, keep their latest state and retry next wave.
                 active = active.orderBy(
                     F.desc((F.col("phase") == "active").cast("int")),
                     F.col("domain"),
                 ).limit(int(self.global_request_cap))
-            # the runnable set is consumed by ~6 downstream plans this wave
-            # (left build, frontier semi-join, pages semi-join, dirty
-            # collect, carry anti-join) — cache it so each doesn't re-scan
-            # the domain_state parquet
+            # the runnable set feeds the state side, the frontier pin and
+            # the pages semi-join: cache it, and count it once — the count
+            # is both the wave's width and the termination test
             active = active.persist()
-            # ONE bounded action materializes the runnable set AND yields
-            # the dirty-bucket list (≤ n_buckets rows): the former
-            # separate isEmpty + post-wave collect were two extra jobs
-            # per wave for the same information
-            dirty = sorted(
-                r["bucket"]
-                for r in active.select(self._bucket(F.col("domain")).alias("bucket"))
-                .distinct()
-                .collect()
-            )
-            if not dirty:  # no dirty buckets ⇔ no runnable domains
+            n_active = active.count()
+            if not n_active:
                 active.unpersist()
                 break
+            width = min(n_active, self.spark.sparkContext.defaultParallelism)
 
             left = _state_rows(
                 active, "domain_state", state_json="state_json", info_json="info_json"
             )
-            frontier = self._read("frontier")
-            if frontier is not None:
-                fr = frontier.join(active.select("domain"), "domain", "left_semi")
+            if w is not None:
+                # each runnable domain's frontier is its rows from its latest
+                # frontier wave; older waves' rows never reach the shuffle
+                pin = active.select("domain", F.col("frontier_wave").alias("wave"))
+                fr = _pinned(w, "frontier", pin)
                 left = left.unionByName(
                     _state_rows(
                         fr, "frontier", url_hash="url_hash", url="url", seq="seq",
@@ -856,97 +926,30 @@ class SparkCrawlEngine:
                 self.body_cap_bytes,
             )
             out = (
-                left.groupby("domain")
-                .cogroup(pages_active.groupby("domain"))
+                left.repartition(width, "domain")
+                .groupby("domain")
+                .cogroup(pages_active.repartition(width, "domain").groupby("domain"))
                 .applyInArrow(wave_fn, WAVE_OUT_SCHEMA)
             )
 
-            # ONE physical write per wave: the unified output log,
-            # partitioned by row_kind (the wave=NNNNNN dir name is the
-            # outer partition).  The append tables (crawl_data/fetch_log/
-            # visits) are row_kind-filtered views that prune whole
-            # directories; frontier/domain_state replacements re-read only
-            # their own kind's files (no recompute).
+            # ONE physical write per wave, and the wave's only state write:
+            # the unified output log, partitioned by row_kind (the
+            # wave=NNNNNN dir name is the outer partition).  The append
+            # tables are row_kind-filtered views; frontier and domain_state
+            # are merge-on-read views over it.
+            # the write also counts the domains still runnable after this
+            # wave (observed in the same job)
+            still_runnable = Observation()
+            out = out.observe(
+                still_runnable,
+                F.count_if(
+                    (F.col("row_kind") == "domain_state")
+                    & F.col("state").isin("pending", "active")
+                ).alias("n"),
+            )
             opath = self.catalog.wave_path("wave_out", wave)
             out.write.partitionBy("row_kind").mode("overwrite").parquet(opath)
             table_paths: dict[str, Optional[str]] = {"wave_out": opath}
-            out_w = self.spark.read.parquet(opath)
-
-
-            # frontier: per-bucket COW (Iceberg partition-overwrite).  Only
-            # buckets containing an active domain are rewritten; rows of
-            # inactive domains that share a dirty bucket are carried over;
-            # clean buckets keep their previous files via the manifest.
-            new_frontier = (
-                out_w.filter(F.col("row_kind") == "frontier")
-                .select("domain", "url_hash", "url", "seq", "state")
-                .withColumn("bucket", self._bucket(F.col("domain")))
-            )
-            if frontier is not None:
-                # carry forward dirty-bucket rows of every domain that did
-                # NOT emit replacement rows this wave — inactive domains
-                # sharing the bucket, and faulted domains (the per-domain
-                # error barrier emits only a domain_state row; dropping
-                # their rows would erase the accumulated seen/REFUSED
-                # lineage)
-                replaced = new_frontier.select("domain").distinct()
-                carry = frontier.filter(F.col("bucket").isin(dirty)).join(
-                    F.broadcast(replaced), "domain", "left_anti"
-                )
-                new_frontier = carry.select(*new_frontier.columns).unionByName(
-                    new_frontier
-                )
-            fpath = self.catalog.wave_path("frontier", wave)
-
-            # domain_state: replace.  The carry side keeps terminal domains
-            # AND permit-held members that skipped this wave (their rows
-            # pass through untouched).
-            new_ds = out_w.filter(F.col("row_kind") == "domain_state").select(
-                "domain",
-                F.col("state").alias("phase"),
-                "state_json",
-            ).join(domain_state.select("domain", "info_json", "top_domain"), "domain", "left")
-            carried = domain_state.join(active.select("domain"), "domain", "left_anti")
-            new_ds = new_ds.select(*carried.columns).unionByName(carried)
-            dpath = self.catalog.wave_path("domain_state", wave)
-
-            # the frontier and domain_state replacements are independent
-            # once wave_out is on disk (both only read out_w + prior
-            # tables and write DISJOINT paths), so submit them from two
-            # threads: their per-job fixed costs (scheduling, shuffle
-            # setup) overlap instead of serializing — this is the
-            # dominant non-scaling cost of a wave at low core counts.
-            # Nothing is committed until BOTH finish (catalog.commit
-            # below), so a failure in either leaves the snapshot intact.
-            from concurrent.futures import ThreadPoolExecutor
-
-            from pyspark import inheritable_thread_target
-
-            def _write_frontier():
-                new_frontier.repartition(
-                    self.n_buckets, "bucket"
-                ).write.partitionBy("bucket").mode("overwrite").parquet(fpath)
-
-            def _write_domain_state():
-                new_ds.write.mode("overwrite").parquet(dpath)
-
-            # PySpark pins each Python thread to its own JVM thread, so a
-            # pool thread would not carry the caller's job group or job
-            # description; the wrapper copies them into the writes.
-            targets = [
-                inheritable_thread_target(t)
-                for t in (_write_frontier, _write_domain_state)
-            ]
-            with ThreadPoolExecutor(max_workers=2) as ex:
-                futs = [ex.submit(t) for t in targets]
-                for f in futs:
-                    f.result()  # re-raises either failure before commit
-
-            frontier_buckets = {}
-            for b in dirty:
-                bdir = os.path.join(fpath, f"bucket={b}")
-                frontier_buckets[b] = bdir if os.path.isdir(bdir) else None
-            table_paths["domain_state"] = dpath
 
             if group_key == "top_domain":
                 # Token-budget schedule, recomputed each wave from the
@@ -955,8 +958,9 @@ class SparkCrawlEngine:
                 # is held for a domain's entire crawl, so per-wave
                 # scheduling would both violate the permits invariant and
                 # break per-domain clock monotonicity across waves.
+                merged = {**tables, "wave_out": tables.get("wave_out", []) + [opath]}
                 durs = (
-                    self.spark.read.parquet(dpath)
+                    self._state(merged, self._wave_out_all(merged))
                     .select(
                         "top_domain",
                         "domain",
@@ -974,13 +978,18 @@ class SparkCrawlEngine:
                 offsets.write.mode("overwrite").parquet(offpath)
                 table_paths["wave_offsets"] = offpath
 
-            self.catalog.commit(wave, table_paths, frontier_buckets=frontier_buckets)
+            self.catalog.commit(wave, table_paths)
             active.unpersist()
             waves_done += 1
-            # termination is detected by the NEXT iteration's runnable-set
-            # materialization (one bounded action per wave) — a dedicated
-            # post-wave none-active read-back would re-read domain_state a
-            # second time every wave to save work only on the last one
+            # termination: when no permit or cap held a runnable domain
+            # back, every runnable domain ran this wave, and the observed
+            # count says whether any is left; otherwise the NEXT
+            # iteration's runnable-set count decides
+            uncapped = group_key != "top_domain" and (
+                self.conn_launches_per_wave is None and self.global_request_cap is None
+            )
+            if uncapped and not still_runnable.get["n"]:
+                break
 
         return waves_done
 
@@ -996,11 +1005,27 @@ class SparkCrawlEngine:
         snapshots still reference the original files (time travel intact)
         until ``expire_snapshots()`` reclaims them.  At 10^4 waves this
         bounds the views' file listing at O(kinds) instead of
-        O(waves × kinds)."""
+        O(waves × kinds).
+
+        Only each domain's latest domain_state row and latest frontier
+        rows are folded forward (the rows the merge-on-read views use), so
+        the merge read after a compaction is bounded by the live state,
+        not by the number of waves before it."""
         manifest = self.catalog.load()
-        if not manifest["tables"].get("wave_out"):
+        tables = manifest["tables"]
+        if not tables.get("wave_out"):
             return None  # nothing new to fold
-        df = self._wave_out_all()
+        w = self._wave_out_all(tables)
+        state = self._state(tables, w)
+        df = (
+            w.filter(~F.col("row_kind").isin("domain_state", "frontier"))
+            .unionByName(
+                _pinned(w, "domain_state", state.select("domain", F.col("state_wave").alias("wave")))
+            )
+            .unionByName(
+                _pinned(w, "frontier", state.select("domain", F.col("frontier_wave").alias("wave")))
+            )
+        )
         snap = manifest["wave"] + 1
         cpath = os.path.join(self.out_dir, "wave_out_compacted", f"v={snap:06d}")
         df.write.partitionBy("row_kind").mode("overwrite").parquet(cpath)
@@ -1022,8 +1047,9 @@ class SparkCrawlEngine:
 
     def lineage(self) -> list[dict]:
         """Per-partition lineage: every committed snapshot with its table
-        paths and per-bucket frontier files (north rule: 'resumable from
-        Iceberg snapshot checkpoints with per-partition lineage')."""
+        paths — the wave_out dirs are partitioned by wave and row_kind
+        (north rule: 'resumable from Iceberg snapshot checkpoints with
+        per-partition lineage')."""
         out = []
         latest = self.catalog.latest_snapshot()
         if latest is None:
@@ -1033,14 +1059,7 @@ class SparkCrawlEngine:
                 m = self.catalog.load(n)
             except FileNotFoundError:
                 continue
-            out.append(
-                {
-                    "snapshot": n,
-                    "wave": m["wave"],
-                    "tables": m["tables"],
-                    "frontier_buckets": m.get("frontier_buckets", {}),
-                }
-            )
+            out.append({"snapshot": n, "wave": m["wave"], "tables": m["tables"]})
         return out
 
     def refused_reprobe_candidates(self, probe_fraction: float = 0.1) -> DataFrame:

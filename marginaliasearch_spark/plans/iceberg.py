@@ -1,6 +1,6 @@
 """Real-Iceberg wiring for the snapshot checkpoint layer.
 
-`plans/checkpoints.py` implements the snapshot/COW/rollback semantics
+`plans/checkpoints.py` implements the snapshot/merge-on-read/rollback semantics
 the north rule requires over plain parquet, because the Iceberg runtime
 jars are not in this sandbox image (no network, no jar install).  This
 module is the production adapter: when the Iceberg Spark runtime IS on
@@ -12,20 +12,20 @@ SnapshotCatalog operation maps onto the corresponding Iceberg call.
 | checkpoints.py operation | Iceberg call | semantic notes |
 |---|---|---|
 | `commit()` append-table path accumulation (`wave_out`) | `df.writeTo(t).append()` (AppendFiles) | both are O(new files); old files untouched |
-| `commit()` replace tables (`domain_state`, `wave_offsets`) | `df.writeTo(t).createOrReplace()` (ReplaceTable as one snapshot) | whole-table supersede; prior version still time-travelable |
-| `commit()` dirty `frontier_buckets` only | `df.writeTo(t).overwrite(col("bucket").isin(dirty))` (OverwriteByRowFilter) | Iceberg rewrites only matching partitions = our per-bucket COW; clean buckets' files carry over |
+| `commit()` replace tables (`domain_state` base, `wave_offsets`) | `df.writeTo(t).createOrReplace()` (ReplaceTable as one snapshot) | whole-table supersede; prior version still time-travelable |
+| frontier / domain_state views: each domain's latest rows in `wave_out` | merge-on-read (format v2 `write.merge.mode=merge-on-read`): the wave's rows are the delta, readers merge them at scan time | no wave rewrites state it already wrote, so `commit_wave` has no partition-overwrite arm |
 | manifest write + `os.replace` atomicity | Iceberg snapshot commit (atomic metadata swap) | identical all-or-nothing visibility |
 | wave number in manifest | `ALTER TABLE t CREATE TAG wave_N` | a named ref per wave pins every table version for resume |
 | `load(n)` / `paths(table, n)` | `SELECT … VERSION AS OF 'wave_N'` | time travel read |
 | `latest_snapshot()` + resume | read current table state (+ `t.refs` metadata table for the newest wave tag) | a killed run's uncommitted write never produced a snapshot → invisible, exactly like our ignored uncommitted wave dir |
-| `compact_wave_out()` + `truncate_append` | `CALL cat.system.rewrite_data_files(table => t)` | same contract: rewrites data, older snapshots keep referencing originals |
+| `compact_wave_out()` + `truncate_append` | `CALL cat.system.rewrite_data_files(table => t)` | same contract: rewrites data (each domain's latest state rows only, as rewriting applies a merge-on-read table's deletes), older snapshots keep referencing originals |
 | `expire_snapshots(keep_last)` | `CALL cat.system.expire_snapshots(table => t, retain_last => k)` | deletes manifests + data files only reachable from expired snapshots |
 | `rollback_to(n)` | `CALL cat.system.rollback_to_snapshot(t, <id of tag wave_N>)` per table | newer snapshots become unreferenced (then expire reclaims) |
 | ignored uncommitted wave dir on resume | `resume_cleanup()`: roll each table back to its newest `wave_N` tag | Iceberg writes commit immediately — a crash mid-`commit_wave` leaves tagless orphan snapshots that MUST be rolled off before the wave re-runs (the parquet layer gets this for free) |
-| per-bucket lineage (`frontier_buckets` map) | the `t.files`/`t.partitions` metadata tables | per-partition file lineage is first-class in Iceberg |
+| per-partition lineage (`wave_out` paths by wave and row_kind) | the `t.files`/`t.partitions` metadata tables | per-partition file lineage is first-class in Iceberg |
 
 No semantic gaps: every checkpoints.py contract (atomic per-wave
-commit, append vs replace vs partition-overwrite, time travel, expiry
+commit, append vs replace, merge-on-read state, time travel, expiry
 reclaiming only unreachable files, rollback) has a one-call Iceberg
 equivalent above, and `tests/test_iceberg_mapping.py` drives this
 adapter through a recording stub to pin the exact call sequence per
@@ -76,36 +76,19 @@ class IcebergCheckpointAdapter:
         wave: int,
         wave_out_df=None,
         replace_dfs: Optional[dict] = None,
-        frontier_df=None,
-        dirty_buckets: Optional[list] = None,
     ) -> None:
-        """SnapshotCatalog.commit(): append + replace + per-bucket
-        overwrite, then tag the wave so every table version is pinned."""
+        """SnapshotCatalog.commit(): append + replace, then tag the wave so
+        every table version is pinned."""
         if wave_out_df is not None:
             wave_out_df.writeTo(self._t("wave_out")).append()
         for name, df in (replace_dfs or {}).items():
             df.writeTo(self._t(name)).createOrReplace()
-        if frontier_df is not None and dirty_buckets:
-            from pyspark.sql import functions as F
-
-            frontier_df.writeTo(self._t("frontier")).overwrite(
-                F.col("bucket").isin([int(b) for b in dirty_buckets])
-            )
-        for table in self._committed_tables(wave_out_df, replace_dfs, frontier_df):
+        tables = (["wave_out"] if wave_out_df is not None else []) + list(replace_dfs or {})
+        for table in tables:
             self.spark.sql(
                 f"ALTER TABLE {self._t(table)} "
                 f"CREATE OR REPLACE TAG `wave_{wave:06d}`"
             )
-
-    @staticmethod
-    def _committed_tables(wave_out_df, replace_dfs, frontier_df) -> list:
-        out = []
-        if wave_out_df is not None:
-            out.append("wave_out")
-        out.extend((replace_dfs or {}).keys())
-        if frontier_df is not None:
-            out.append("frontier")
-        return out
 
     def read_at(self, table: str, wave: int):
         """SnapshotCatalog.paths(table, n) + read → time travel."""

@@ -32,9 +32,6 @@ class _FakeWriterV2:
     def createOrReplace(self):
         self.rec.calls.append(("createOrReplace", self.table))
 
-    def overwrite(self, cond):
-        self.rec.calls.append(("overwrite", self.table, str(cond)))
-
 
 class _FakeDF:
     def __init__(self, rec):
@@ -55,27 +52,22 @@ def rig():
 
 def test_commit_wave_sequence(rig, spark):
     """commit(): append table → AppendFiles; replace tables →
-    createOrReplace; dirty frontier buckets → OverwriteByRowFilter on the
-    bucket column; then one wave tag per committed table."""
+    createOrReplace; then one wave tag per committed table.  The state is
+    merge-on-read over wave_out, so no partition overwrite is issued."""
     rec, a = rig
     a.commit_wave(
         7,
         wave_out_df=_FakeDF(rec),
         replace_dfs={"domain_state": _FakeDF(rec), "wave_offsets": _FakeDF(rec)},
-        frontier_df=_FakeDF(rec),
-        dirty_buckets=[3, 11],
     )
     kinds = [c[0] for c in rec.calls]
     assert kinds == ["append", "createOrReplace", "createOrReplace",
-                     "overwrite", "sql", "sql", "sql", "sql"]
+                     "sql", "sql", "sql"]
     assert rec.calls[0][1] == "msx.crawl.wave_out"
-    assert rec.calls[3][1] == "msx.crawl.frontier"
-    assert "bucket" in rec.calls[3][2] and "3" in rec.calls[3][2]
     tags = [c[1] for c in rec.calls if c[0] == "sql"]
     assert all("CREATE OR REPLACE TAG `wave_000007`" in t for t in tags)
     assert {t.split(" ")[2] for t in tags} == {
-        "msx.crawl.wave_out", "msx.crawl.domain_state",
-        "msx.crawl.wave_offsets", "msx.crawl.frontier",
+        "msx.crawl.wave_out", "msx.crawl.domain_state", "msx.crawl.wave_offsets",
     }
 
 
@@ -93,11 +85,11 @@ def test_maintenance_procedures(rig):
     rec, a = rig
     a.compact()
     a.expire_snapshots("wave_out", keep_last=2)
-    a.rollback_to("frontier", 5)
+    a.rollback_to("domain_state", 5)
     assert rec.calls == [
         ("sql", "CALL msx.system.rewrite_data_files(table => 'crawl.wave_out')"),
         ("sql", "CALL msx.system.expire_snapshots(table => 'crawl.wave_out', retain_last => 2)"),
-        ("sql", "CALL msx.system.set_current_snapshot(table => 'crawl.frontier', ref => 'wave_000005')"),
+        ("sql", "CALL msx.system.set_current_snapshot(table => 'crawl.domain_state', ref => 'wave_000005')"),
     ]
 
 
@@ -144,10 +136,6 @@ class _IceTable:
 
     def replace(self, rows):
         self._commit(list(rows))
-
-    def overwrite_buckets(self, dirty, rows):
-        kept = [r for r in self.cur_rows() if r.get("bucket") not in dirty]
-        self._commit(kept + list(rows))
 
     def tag(self, name):
         assert self.current is not None, "tagging an empty table"
@@ -257,11 +245,6 @@ class _IceWriter:
         self._boom()
         self.cat.t(self.table).replace(self.rows)
 
-    def overwrite(self, cond):
-        self._boom()
-        dirty = {int(x) for x in re.findall(r"\d+", str(cond))}
-        self.cat.t(self.table).overwrite_buckets(dirty, self.rows)
-
 
 class _IceData:
     def __init__(self, cat, rows, fail=False):
@@ -275,10 +258,6 @@ def _wave_rows(w, n=3):
     return [{"wave": w, "idx": i} for i in range(n)]
 
 
-def _frontier_rows(w, buckets):
-    return [{"bucket": b, "wave": w} for b in buckets]
-
-
 def test_kill_resume_rollback_scenario(spark):
     """End-to-end protocol replay: 2 committed waves; crash mid-wave-2
     AFTER the wave_out append committed but BEFORE domain_state/tags;
@@ -287,7 +266,7 @@ def test_kill_resume_rollback_scenario(spark):
     + expiry, with tagged snapshots protected."""
     cat = _FakeIceberg()
     a = IcebergCheckpointAdapter(cat, catalog="msx", namespace="crawl")
-    ALL = ["wave_out", "domain_state", "frontier"]
+    ALL = ["wave_out", "domain_state"]
 
     def commit(w, fail_from=None):
         a.commit_wave(
@@ -298,8 +277,6 @@ def test_kill_resume_rollback_scenario(spark):
                     cat, [{"wave": w}], fail=(fail_from == "domain_state")
                 )
             },
-            frontier_df=_IceData(cat, _frontier_rows(w, [w % 2])),
-            dirty_buckets=[w % 2],
         )
 
     commit(0)
@@ -308,8 +285,6 @@ def test_kill_resume_rollback_scenario(spark):
     # wave-1 state via time travel
     assert a.read_at("wave_out", 1).collect() == _wave_rows(0) + _wave_rows(1)
     assert a.read_at("domain_state", 1).collect() == [{"wave": 1}]
-    # frontier: bucket 0 written at wave 0, bucket 1 overwritten at wave 1
-    assert sorted(r["bucket"] for r in a.read_at("frontier", 1).collect()) == [0, 1]
 
     # ---- CRASH mid-wave-2: wave_out append commits, domain_state raises
     with pytest.raises(RuntimeError):
@@ -336,7 +311,6 @@ def test_kill_resume_rollback_scenario(spark):
         a.rollback_to(t, 0)
     assert cat.t("wave_out").cur_rows() == _wave_rows(0)
     assert cat.t("domain_state").cur_rows() == [{"wave": 0}]
-    assert [r["bucket"] for r in cat.t("frontier").cur_rows()] == [0]
 
     # ---- compaction + expiry: logical rows stable, tagged snaps protected
     a.compact("wave_out")

@@ -30,8 +30,10 @@ def test_lineage_and_dedup_metrics(spark, tmp_path):
     assert all("tables" in x for x in lin)
     # later snapshots accumulate wave_out paths
     assert len(lin[-1]["tables"]["wave_out"]) >= len(lin[1]["tables"]["wave_out"])
-    # frontier buckets tracked per partition
-    assert isinstance(lin[-1]["frontier_buckets"], dict)
+    # state is merge-on-read over wave_out: no wave rewrites domain_state
+    # and no snapshot lists per-bucket frontier files
+    assert all(set(x) == {"snapshot", "wave", "tables"} for x in lin)
+    assert lin[-1]["tables"]["domain_state"] == lin[0]["tables"]["domain_state"]
 
     dm = {r["domain"]: r for r in engine.dedup_metrics().collect()}
     assert dm

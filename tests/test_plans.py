@@ -18,6 +18,32 @@ def _plan(df) -> str:
     return buf.getvalue()
 
 
+def _children(node) -> list:
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _names(node) -> set:
+    """Node names of a physical plan subtree (an adaptive plan counts as
+    its current plan)."""
+    if node.nodeName() == "AdaptiveSparkPlan":
+        return _names(node.executedPlan())
+    out = {node.nodeName()}
+    for c in _children(node):
+        out |= _names(c)
+    return out
+
+
+def _nodes(node, name: str) -> list:
+    """Every node called ``name`` in a physical plan tree."""
+    if node.nodeName() == "AdaptiveSparkPlan":
+        return _nodes(node.executedPlan(), name)
+    found = [node] if node.nodeName() == name else []
+    for c in _children(node):
+        found += _nodes(c, name)
+    return found
+
+
 def test_filter_and_projection_pushdown(spark):
     li = spark.read.parquet(f"{SF}/lineitem.parquet")
     q = li.filter(F.col("l_shipdate") <= "1995-01-01").select("l_orderkey", "l_quantity")
@@ -95,10 +121,20 @@ def test_cuckoo_anti_join_plan(spark):
         "url_hash long, bucket int, url string",
     )
     transients: list = []
-    plan = _plan(cuckoo_anti_join(cand, seen, transients=transients))
+    out = cuckoo_anti_join(cand, seen, transients=transients)
+    plan = _plan(out)
+    # the exact check's broadcast build sides read the persisted probe
+    # output directly: no aggregate and no shuffle on that branch
+    exact_check = [
+        b for b in _nodes(out._jdf.queryExecution().executedPlan(), "BroadcastExchange")
+        if "InMemoryTableScan" in _names(b)
+    ]
     for df in transients:
         df.unpersist()
     assert plan.count("BroadcastHashJoin") >= 2
     assert "FlatMapCoGroupsInArrow" in plan
     assert "InPandas" not in plan
     assert "SortMergeJoin" not in plan  # seen is never shuffle-joined
+    assert exact_check
+    for b in exact_check:
+        assert not {"HashAggregate", "Exchange"} & _names(b)

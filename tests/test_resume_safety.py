@@ -91,9 +91,10 @@ def test_fault_barrier_preserves_frontier_lineage(spark, tmp_path):
     ).count()
     assert rows_before > 0
 
-    # corrupt the victim's persisted state_json so the next wave's UDF
-    # throws and the per-domain fault barrier fires
-    dpath = e.catalog.paths("domain_state")[-1]
+    # corrupt the victim's persisted state_json (its latest domain_state
+    # row, in wave_out) so the next wave's UDF throws and the per-domain
+    # fault barrier fires
+    dpath = os.path.join(e.catalog.paths("wave_out")[-1], "row_kind=domain_state")
     ds = spark.read.parquet(dpath)
     mangled = ds.withColumn(
         "state_json",

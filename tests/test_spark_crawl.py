@@ -4,6 +4,7 @@ crawl_data rows — under the same seed, for both run-to-completion and
 budgeted multi-wave execution, and across a kill/resume boundary."""
 
 import json
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -147,9 +148,8 @@ def test_kill_and_resume(spark, web_dfs, golden, tmp_path_factory):
 
 
 def test_wave_jobs_carry_caller_job_group(spark, web_dfs, tmp_path_factory):
-    """Every job of a wave — including the frontier/domain_state writes the
-    engine submits from pool threads — belongs to the caller's job group,
-    so cancelJobGroup and per-group job accounting cover the whole wave."""
+    """Every job of a wave belongs to the caller's job group, so
+    cancelJobGroup and per-group job accounting cover the whole wave."""
     pages, domains, specs = web_dfs
     sc = spark.sparkContext
     tracker = sc.statusTracker()
@@ -165,6 +165,74 @@ def test_wave_jobs_carry_caller_job_group(spark, web_dfs, tmp_path_factory):
         sc.setLocalProperty("spark.job.description", None)
     assert tracker.getJobIdsForGroup("wave-job-group-test")
     assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
+
+
+def _first_exchanges_under_cogroup(plan: str) -> list[str]:
+    """Arguments of the first Exchange on each side of the wave cogroup, in
+    a formatted plan's Initial Plan tree."""
+    tree = plan.split("+- == Initial Plan ==")[1].split("\n\n")[0].splitlines()
+    nodes = []  # (depth, name, id)
+    for line in tree[1:]:
+        m = re.match(r"^([ :|+-]*)(\w[\w ]*?) \((\d+)\)", line)
+        if m:
+            nodes.append((len(m.group(1)), m.group(2), m.group(3)))
+    i = next(k for k, n in enumerate(nodes) if n[1] == "FlatMapCoGroupsInArrow")
+    depth = nodes[i][0]
+    firsts, seen_side = [], False
+    for d, name, nid in nodes[i + 1:]:
+        if d <= depth:
+            break
+        if d == depth + 3:  # a direct child starts a new side
+            seen_side = False
+        if name == "Exchange" and not seen_side:
+            seen_side = True
+            args = re.search(rf"\({nid}\) Exchange\n(?:.*\n)*?Arguments: (.*)", plan)
+            firsts.append(args.group(1))
+    return firsts
+
+
+def test_wave_sets_its_own_width(spark, web_dfs, golden, tmp_path_factory):
+    """At spark.sql.shuffle.partitions=200 the wave still runs at most
+    defaultParallelism Python tasks: both cogroup sides are repartitioned
+    on domain at the wave's own width, with no exchange between that
+    repartition and the cogroup, and the crawl is unchanged."""
+    pages, domains, specs = web_dfs
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    out = str(tmp_path_factory.mktemp("crawl_width"))
+    engine = SparkCrawlEngine(spark, out, seed=SEED, n_buckets=8)
+    engine.init_run(domains, specs)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    sc.setJobGroup("wave-width-test", "one wave at 200 shuffle partitions")
+    try:
+        assert engine.run_waves(pages, wave_budget=None) == 1
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tasks = [
+        tracker.getStageInfo(sid).numTasks
+        for jid in tracker.getJobIdsForGroup("wave-width-test")
+        for sid in tracker.getJobInfo(jid).stageIds
+        if tracker.getStageInfo(sid) is not None
+    ]
+    assert tasks and max(tasks) <= sc.defaultParallelism
+
+    store = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = [
+        p
+        for p in (store.apply(k).physicalPlanDescription() for k in range(store.size()))
+        if "FlatMapCoGroupsInArrow" in p and out in p
+    ]
+    assert plans
+    firsts = _first_exchanges_under_cogroup(plans[-1])
+    assert len(firsts) == 2
+    for args in firsts:
+        assert "REPARTITION_BY_NUM" in args
+        width = int(re.search(r"hashpartitioning\(domain#\d+, (\d+)\)", args).group(1))
+        assert width <= sc.defaultParallelism
+    _assert_matches_oracle(engine, golden)
 
 
 def test_crawl_meta(spark, web_dfs, golden, tmp_path_factory):
