@@ -7,4 +7,8 @@ politeness enforced by per-top-domain grouped UDFs, dedup by cuckoo-prefiltered
 anti-joins, payload validation in vectorized Arrow UDFs.  See SURVEY.md.
 """
 
+from . import worker_imports
+
+worker_imports.install()
+
 __version__ = "0.1.0"

@@ -399,9 +399,13 @@ def simhash_batch(texts, k: int = 4, seed: int = 42) -> np.ndarray:
             # per-bit vote counts via unpackbits on the little-endian
             # byte view: column c IS bit c of the uint64, and the (n, 64)
             # temp is uint8 — 8× smaller than the old shift-and-mask
-            # uint64 matrix (measured 140 → 115 µs/doc, bit-identical)
+            # uint64 matrix (measured 140 → 115 µs/doc, bit-identical).
+            # The explicit "<u8" makes the byte order hold on a big-endian
+            # host too (a no-op view on a little-endian one)
             bits = np.unpackbits(
-                sh.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little"
+                sh.astype("<u8", copy=False).view(np.uint8).reshape(-1, 8),
+                axis=1,
+                bitorder="little",
             )
             votes = bits.sum(axis=0, dtype=np.int64) * 2 > len(sh)
             # weighted sum folds the 64 votes in one vectorized op

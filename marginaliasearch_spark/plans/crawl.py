@@ -32,7 +32,8 @@ overlaid with the domain's latest ``domain_state`` row, and ``frontier``
 is the domain's rows from the latest wave that emitted any.  A domain
 that emits no frontier rows (faulted, permit-held, or terminal with an
 empty seen-set) keeps its previous rows.  ``compact_wave_out`` folds
-only those latest rows forward, which bounds the merge read.
+only those latest rows forward, which bounds the merge read; ``run_waves``
+folds on its own once ``FOLD_WAVES`` wave dirs are committed unfolded.
 
 Scale notes (10^10-URL frontier / 1000 executors):
 - the wave cogroup hash-partitions on ``domain`` at an explicit width,
@@ -123,6 +124,11 @@ WAVE_OUT_READ_SCHEMA = T.StructType(
     WAVE_OUT_SCHEMA.fields + [T.StructField("wave", T.IntegerType())]
 )
 
+# run_waves folds the committed wave_out dirs into one compacted table
+# (compact_wave_out's rewrite) when their list reaches this length, so
+# the per-wave merge read never lists and scans more than FOLD_WAVES dirs
+FOLD_WAVES = 16
+
 DOMAIN_STATE_SCHEMA = T.StructType(
     [
         T.StructField("domain", T.StringType()),
@@ -162,6 +168,23 @@ def _pinned(wave_out: DataFrame, kind: str, pin: DataFrame) -> DataFrame:
     reach any later shuffle."""
     return wave_out.filter(F.col("row_kind") == kind).join(
         F.broadcast(pin), ["domain", "wave"], "left_semi"
+    )
+
+
+def _latest_waves(wave_out: DataFrame) -> DataFrame:
+    """Per domain with wave_out state rows: ``state_wave``, the wave of its
+    latest domain_state row, and ``frontier_wave``, the latest wave that
+    emitted frontier rows for it (null when none has).  An aggregate over
+    integers only (a hash aggregate; the scan reads ``domain`` and the
+    partition columns)."""
+    kind = F.col("row_kind")
+    return (
+        wave_out.filter(kind.isin("domain_state", "frontier"))
+        .groupBy("domain")
+        .agg(
+            F.max(F.when(kind == "domain_state", F.col("wave"))).alias("state_wave"),
+            F.max(F.when(kind == "frontier", F.col("wave"))).alias("frontier_wave"),
+        )
     )
 
 
@@ -558,9 +581,7 @@ class SparkCrawlEngine:
             w = self._wave_out_all(tables)
             if w is None:
                 return None
-            pin = self._state(tables, w).select(
-                "domain", F.col("frontier_wave").alias("wave")
-            )
+            pin = _latest_waves(w).select("domain", F.col("frontier_wave").alias("wave"))
             return _pinned(w, "frontier", pin).select(
                 "domain", "url_hash", "url", "seq", "state",
                 self._bucket(F.col("domain")).alias("bucket"),
@@ -610,47 +631,38 @@ class SparkCrawlEngine:
 
     def _state(self, tables: dict, w: Optional[DataFrame]) -> DataFrame:
         """domain_state merge-on-read over the base table of ``tables`` and
-        its wave_out rows ``w``, with two more columns: ``state_wave``
-        (the wave of the domain's latest domain_state row, 0 for init_run's
-        base row) and ``frontier_wave`` (the latest wave that emitted
-        frontier rows for the domain; null when none has).
+        its wave_out rows ``w``, with the two columns of ``_latest_waves``
+        (``state_wave`` is 0 for a domain still on init_run's base row).
 
-        One per-domain aggregate over the base rows and the wave_out
-        domain_state/frontier rows: ``top_domain``/``info_json`` come from
-        the base row (the only one that carries them), ``phase``/
-        ``state_json`` from the newest domain_state row."""
+        ``top_domain``/``info_json`` come from the base row (the only one
+        that carries them), ``phase``/``state_json`` from the domain's
+        latest domain_state row, picked through the broadcast wave numbers:
+        only integers and the domain key are aggregated, so no other
+        string reaches a sort or an aggregate exchange."""
         base = self.spark.read.schema(DOMAIN_STATE_SCHEMA).parquet(*tables["domain_state"])
         if w is None:
             return base.withColumn("state_wave", F.lit(0)).withColumn(
                 "frontier_wave", F.lit(None).cast("int")
             )
-        none = F.lit(None).cast("string")
-        rows = base.select(
-            "domain", "top_domain", "info_json", "phase", "state_json",
-            F.lit("domain_state").alias("row_kind"), F.lit(0).alias("wave"),
-        ).unionByName(
-            w.filter(F.col("row_kind") == "domain_state").select(
-                "domain", none.alias("top_domain"), none.alias("info_json"),
-                F.col("state").alias("phase"), "state_json", "row_kind", "wave",
-            )
-        ).unionByName(
-            # a scan of its own, so the frontier files give only ``domain``
-            w.filter(F.col("row_kind") == "frontier").select(
-                "domain", none.alias("top_domain"), none.alias("info_json"),
-                none.alias("phase"), none.alias("state_json"), "row_kind", "wave",
+        # each domain's latest domain_state row, with its wave numbers (a
+        # domain with wave_out rows always has one: every advanced domain
+        # emits a domain_state row in the wave of its frontier rows)
+        latest = (
+            w.filter(F.col("row_kind") == "domain_state")
+            .join(F.broadcast(_latest_waves(w)), "domain")
+            .filter(F.col("wave") == F.col("state_wave"))
+            .select(
+                "domain", F.col("state").alias("_phase"), F.col("state_json").alias("_json"),
+                "state_wave", "frontier_wave",
             )
         )
-        is_ds = F.col("row_kind") == "domain_state"
-        ds_wave = F.when(is_ds, F.col("wave"))
-        return rows.groupBy("domain").agg(
-            F.max("top_domain").alias("top_domain"),
-            F.max("info_json").alias("info_json"),
-            F.max_by(F.struct("phase", "state_json"), ds_wave).alias("_s"),
-            F.max(ds_wave).alias("state_wave"),
-            F.max(F.when(~is_ds, F.col("wave"))).alias("frontier_wave"),
-        ).select(
-            "domain", "top_domain", "info_json", "_s.phase", "_s.state_json",
-            "state_wave", "frontier_wave",
+        moved = F.col("state_wave").isNotNull()
+        return base.join(latest, "domain", "left").select(
+            "domain", "top_domain", "info_json",
+            F.when(moved, F.col("_phase")).otherwise(F.col("phase")).alias("phase"),
+            F.when(moved, F.col("_json")).otherwise(F.col("state_json")).alias("state_json"),
+            F.coalesce(F.col("state_wave"), F.lit(0)).alias("state_wave"),
+            "frontier_wave",
         )
 
     def read_table(self, table: str) -> Optional[DataFrame]:
@@ -808,10 +820,20 @@ class SparkCrawlEngine:
             wave = manifest["wave"] + 1
 
             tables = manifest["tables"]
+            folded: dict[str, Optional[str]] = {}
+            if len(tables.get("wave_out", [])) >= FOLD_WAVES:
+                # bound the merge read: this wave reads, and commits, the
+                # committed wave_out dirs folded into one compacted table
+                cpath = self._fold(tables, wave)
+                folded = {"wave_out_compacted": cpath}
+                tables = {**tables, "wave_out": [], "wave_out_compacted": [cpath]}
             # one listing of this snapshot's wave_out files serves the state
             # merge and the frontier pin
             w = self._wave_out_all(tables)
-            active = self._state(tables, w).filter(F.col("phase").isin("pending", "active"))
+            state = self._state(tables, w)
+            if group_key == "top_domain":
+                state = state.persist()  # the offsets pass below reads it again
+            active = state.filter(F.col("phase").isin("pending", "active"))
             if group_key == "top_domain":
                 # PHYSICAL permit enforcement (the reference's semaphore is
                 # held for a domain's whole crawl —
@@ -869,6 +891,7 @@ class SparkCrawlEngine:
             n_active = active.count()
             if not n_active:
                 active.unpersist()
+                state.unpersist()
                 break
             width = min(n_active, self.spark.sparkContext.defaultParallelism)
 
@@ -949,7 +972,7 @@ class SparkCrawlEngine:
             )
             opath = self.catalog.wave_path("wave_out", wave)
             out.write.partitionBy("row_kind").mode("overwrite").parquet(opath)
-            table_paths: dict[str, Optional[str]] = {"wave_out": opath}
+            table_paths: dict[str, Optional[str]] = {"wave_out": opath, **folded}
 
             if group_key == "top_domain":
                 # Token-budget schedule, recomputed each wave from the
@@ -958,14 +981,22 @@ class SparkCrawlEngine:
                 # is held for a domain's entire crawl, so per-wave
                 # scheduling would both violate the permits invariant and
                 # break per-domain clock monotonicity across waves.
-                merged = {**tables, "wave_out": tables.get("wave_out", []) + [opath]}
+                # The state after this wave is the wave-start state with
+                # the domain_state rows this wave wrote laid over it.
+                wrote = (
+                    self._wave_out_all({"wave_out": [opath]})
+                    .filter(F.col("row_kind") == "domain_state")
+                    .select("domain", F.col("state_json").alias("_json"))
+                )
                 durs = (
-                    self._state(merged, self._wave_out_all(merged))
+                    state.join(F.broadcast(wrote), "domain", "left")
                     .select(
                         "top_domain",
                         "domain",
                         F.coalesce(
-                            F.get_json_object("state_json", "$.clock_ms").cast("long"),
+                            F.get_json_object(
+                                F.coalesce("_json", "state_json"), "$.clock_ms"
+                            ).cast("long"),
                             F.lit(0),
                         ).alias("dur_ms"),
                     )
@@ -978,8 +1009,11 @@ class SparkCrawlEngine:
                 offsets.write.mode("overwrite").parquet(offpath)
                 table_paths["wave_offsets"] = offpath
 
-            self.catalog.commit(wave, table_paths)
+            self.catalog.commit(
+                wave, table_paths, truncate_append={"wave_out"} if folded else None
+            )
             active.unpersist()
+            state.unpersist()
             waves_done += 1
             # termination: when no permit or cap held a runnable domain
             # back, every runnable domain ran this wave, and the observed
@@ -1005,33 +1039,39 @@ class SparkCrawlEngine:
         snapshots still reference the original files (time travel intact)
         until ``expire_snapshots()`` reclaims them.  At 10^4 waves this
         bounds the views' file listing at O(kinds) instead of
-        O(waves × kinds).
-
-        Only each domain's latest domain_state row and latest frontier
-        rows are folded forward (the rows the merge-on-read views use), so
-        the merge read after a compaction is bounded by the live state,
-        not by the number of waves before it."""
+        O(waves × kinds).  ``run_waves`` also folds on its own, every
+        ``FOLD_WAVES`` waves."""
         manifest = self.catalog.load()
         tables = manifest["tables"]
         if not tables.get("wave_out"):
             return None  # nothing new to fold
-        w = self._wave_out_all(tables)
-        state = self._state(tables, w)
-        df = (
-            w.filter(~F.col("row_kind").isin("domain_state", "frontier"))
-            .unionByName(
-                _pinned(w, "domain_state", state.select("domain", F.col("state_wave").alias("wave")))
-            )
-            .unionByName(
-                _pinned(w, "frontier", state.select("domain", F.col("frontier_wave").alias("wave")))
-            )
-        )
         snap = manifest["wave"] + 1
-        cpath = os.path.join(self.out_dir, "wave_out_compacted", f"v={snap:06d}")
-        df.write.partitionBy("row_kind").mode("overwrite").parquet(cpath)
+        cpath = self._fold(tables, snap)
         self.catalog.commit(
             snap, {"wave_out_compacted": cpath}, truncate_append={"wave_out"}
         )
+        return cpath
+
+    def _fold(self, tables: dict, snap: int) -> str:
+        """Write the wave_out rows of ``tables`` as one compacted table for
+        snapshot ``snap`` (uncommitted); returns its path.  Only each
+        domain's latest domain_state row and latest frontier rows are
+        folded forward (the rows the merge-on-read views use), so the merge
+        read after a fold is bounded by the live state, not by the number
+        of waves before it."""
+        w = self._wave_out_all(tables)
+        latest = _latest_waves(w)
+        df = (
+            w.filter(~F.col("row_kind").isin("domain_state", "frontier"))
+            .unionByName(
+                _pinned(w, "domain_state", latest.select("domain", F.col("state_wave").alias("wave")))
+            )
+            .unionByName(
+                _pinned(w, "frontier", latest.select("domain", F.col("frontier_wave").alias("wave")))
+            )
+        )
+        cpath = os.path.join(self.out_dir, "wave_out_compacted", f"v={snap:06d}")
+        df.write.partitionBy("row_kind").mode("overwrite").parquet(cpath)
         return cpath
 
     def expire_snapshots(self, keep_last: int = 1) -> list[str]:

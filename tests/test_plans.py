@@ -138,3 +138,31 @@ def test_cuckoo_anti_join_plan(spark):
     assert exact_check
     for b in exact_check:
         assert not {"HashAggregate", "Exchange"} & _names(b)
+
+
+def test_domain_state_read_aggregates_integers_only(spark, tmp_path):
+    """The merge-on-read domain_state view aggregates only the wave numbers
+    per domain (a hash aggregate); phase/state_json come through the
+    broadcast (domain, wave) pin, so no frontier row is sorted and no
+    state string is aggregated."""
+    from marginaliasearch_spark.plans.crawl import SparkCrawlEngine
+    from marginaliasearch_spark.sources.synthetic_web import (
+        generate_web,
+        spark_schemas,
+        web_to_frames,
+    )
+
+    web, _ = generate_web(seed=7, n_domains=4, mean_pages=6)
+    pages_pdf, domains_pdf = web_to_frames(web)
+    ps, ds = spark_schemas()
+    pages = spark.createDataFrame(pages_pdf, schema=ps)
+    domains = spark.createDataFrame(domains_pdf, schema=ds)
+    eng = SparkCrawlEngine(spark, str(tmp_path / "run"), seed=7, n_buckets=4)
+    eng.init_run(domains, domains.select("domain", "crawl_depth", "seed_urls"))
+    assert eng.run_waves(pages, wave_budget=2, max_waves=2) == 2
+
+    state = eng.read_table("domain_state")
+    names = _names(state._jdf.queryExecution().executedPlan())
+    assert "SortAggregate" not in names
+    assert "HashAggregate" in names
+    assert "BroadcastHashJoin" in names

@@ -183,3 +183,53 @@ def test_merge_on_read_time_travel(spark, tmp_path):
             assert r.compact_wave_out()
             assert _state_digests(r) == digests[latest]
             r.catalog.rollback_to(1)
+
+
+def test_run_waves_folds_the_wave_out_list(spark, tmp_path, monkeypatch):
+    """run_waves folds the committed wave_out dirs once their list reaches
+    FOLD_WAVES: a run of more than twice that many waves never commits a
+    longer list, and its visits and state equal a run that never folds."""
+    import pandas as pd
+
+    from marginaliasearch_spark.plans import crawl
+    from marginaliasearch_spark.sources.synthetic_web import normalize_pages_pdf
+
+    n = 2 * crawl.FOLD_WAVES + 3
+    chain = "chain.example.com"  # one fetch per wave along a link chain
+    rows = [_page(chain, "/", links=["/p0.html"])]
+    rows += [_page(chain, f"/p{k}.html", links=[f"/p{k + 1}.html"]) for k in range(n)]
+    wide = "wide.example.org"  # a frontier that drains over the same waves
+    rows.append(_page(wide, "/", links=[f"/w{k}.html" for k in range(n)]))
+    rows += [_page(wide, f"/w{k}.html") for k in range(n)]
+    drows = [
+        {
+            "domain": d, "top_domain": d.split(".", 1)[1], "proto": "https",
+            "probe": "ok", "robots_txt": None, "site_kind": "default",
+            "crawl_depth": 1000, "seed_urls": [], "sitemap_urls": [],
+            "generator_meta": "", "has_lemmy_config": False,
+        }
+        for d in (chain, wide)
+    ]
+    ps, ds = spark_schemas()
+    pages = spark.createDataFrame(normalize_pages_pdf(pd.DataFrame(rows)), schema=ps)
+    domains = spark.createDataFrame(pd.DataFrame(drows), schema=ds)
+    specs = domains.select("domain", "crawl_depth", "seed_urls")
+
+    def run(out):
+        e = SparkCrawlEngine(spark, str(tmp_path / out), seed=SEED, n_buckets=4)
+        e.init_run(domains, specs)
+        waves = e.run_waves(pages, wave_budget=1)
+        lists = [e.catalog.load(s)["tables"] for s in e.catalog._snapshots()]
+        return e, waves, lists
+
+    folds, waves, lists = run("folds")
+    assert waves > 2 * crawl.FOLD_WAVES
+    assert max(len(t["wave_out"]) for t in lists) == crawl.FOLD_WAVES
+    assert len({p for t in lists for p in t["wave_out_compacted"]}) >= 2
+
+    monkeypatch.setattr(crawl, "FOLD_WAVES", 10**9)
+    plain, plain_waves, plain_lists = run("plain")
+    assert plain_waves == waves
+    assert max(len(t["wave_out"]) for t in plain_lists) == waves
+    assert _visits(folds) == _visits(plain)
+    assert _state_digests(folds) == _state_digests(plain)

@@ -127,6 +127,34 @@ def test_simhash_pairs(spark, docs):
     assert any(r["id_a"] == 99990001 and r["id_b"] == 99990002 for r in pairs)
 
 
+def test_simhash_batch_matches_shift_and_mask_reference():
+    """The unpackbits vote kernel against an endian-neutral reference that
+    reads bit b of each hash as (h >> b) & 1, over a few hundred texts of
+    mixed lengths (empty, shorter than a shingle, multi-byte UTF-8)."""
+    import numpy as np
+
+    from marginaliasearch_spark.operators.dedup import _shingle_hashes, simhash_batch
+
+    rng = np.random.default_rng(5)
+    words = ["alpha", "beta", "gamma", "délta", "ε", "zeta", "eta", "θeta", "iota", "kappa"]
+    texts = ["", "ab", "abcd", None] + [
+        " ".join(rng.choice(words, size=int(n))) for n in rng.integers(1, 120, 300)
+    ]
+    salt = np.uint64(np.random.default_rng([42, 911]).integers(1, 1 << 62))
+    shifts = np.arange(64, dtype=np.uint64)
+    want = []
+    with np.errstate(over="ignore"):
+        for text in texts:
+            sh = np.unique(_shingle_hashes(text or "", 4)) * salt
+            sh ^= sh >> np.uint64(33)
+            sh *= np.uint64(0xFF51AFD7ED558CCD)
+            sh ^= sh >> np.uint64(29)
+            ones = ((sh[:, None] >> shifts) & np.uint64(1)).sum(axis=0)
+            sig = sum(1 << b for b in range(64) if 2 * int(ones[b]) > len(sh))
+            want.append(sig - (1 << 64) if sig >= 1 << 63 else sig)
+    assert simhash_batch(texts).tolist() == want
+
+
 def test_ngram_jaccard_exact(spark):
     from marginaliasearch_spark.operators.dedup import ngram_jaccard_pairs
 
