@@ -22,7 +22,7 @@ Two implementations are provided:
 - scalar (``hash_nearly_ascii``) — reference implementation, used by the
   single-threaded oracle and for golden-vector verification;
 - numpy batch (``hash_nearly_ascii_batch``) — vectorized over a padded byte
-  matrix, used inside pandas UDFs on the Spark side so the hot path does no
+  matrix, used inside Arrow UDFs on the Spark side so the hot path does no
   per-row Python.
 """
 
@@ -171,7 +171,7 @@ def hash_url_parts(domain: str, path: str, param: str | None) -> int:
 
 
 # ---------------------------------------------------------------------------
-# Vectorized batch implementation (numpy, used inside pandas UDFs)
+# Vectorized batch implementation (numpy, used inside Arrow UDFs)
 # ---------------------------------------------------------------------------
 
 _U64 = np.uint64

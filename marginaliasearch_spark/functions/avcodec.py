@@ -18,7 +18,7 @@ numpy math under every backend:
   shot-boundary detection by phash hamming jumps.
 
 Swap `decode_audio` / `iter_video_frames` for PyAV in production; the
-schemas, batch shapes and mapInPandas signatures do not change.
+schemas, batch shapes and mapInArrow signatures do not change.
 """
 
 from __future__ import annotations
@@ -27,7 +27,6 @@ import struct
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 
 from .imagecodec import decode_image, encode_image, hamming64, phash64
 

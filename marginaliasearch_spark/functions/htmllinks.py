@@ -27,15 +27,13 @@ values, first-wins duplicate attributes, case-insensitive tag/attr
 names, raw-text script/style content, skipped comments, and the
 trimmed case-insensitive ``[http-equiv=refresh]`` value match.
 
-Spark surface: ``with_html_links`` — an Arrow-batched pandas UDF (no
+Spark surface: ``with_html_links`` — an Arrow UDF (``arrow_udf``, no
 per-row Python boundary crossing; the parse itself is per-document by
 nature, like every HTML parser), body bytes stay executor-local.
 """
 
 from html.parser import HTMLParser
 from typing import Optional
-
-import pandas as pd
 
 from ..canon.linkparser import (
     get_base_link,
@@ -152,24 +150,25 @@ def with_html_links(df, html_col: str = "body_html", url_col: str = "url",
                     out_col: str = "links"):
     """DataFrame + ``out_col: array<string>`` of extracted candidate URLs.
 
-    Arrow-batched pandas UDF; accepts a string or binary HTML column
-    (bytes decode as UTF-8 with replacement — charset sniffing beyond
-    UTF-8 is the caller's concern, matching the WARC-recorded charset)."""
+    Arrow UDF; accepts a string or binary HTML column (bytes decode as
+    UTF-8 with replacement — charset sniffing beyond UTF-8 is the caller's
+    concern, matching the WARC-recorded charset).  A null body or URL
+    gives ``[]``."""
+    import pyarrow as pa
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
-    from pyspark.sql.pandas.functions import pandas_udf
 
-    @pandas_udf(T.ArrayType(T.StringType()))
-    def _links(html: pd.Series, urls: pd.Series) -> pd.Series:
+    @F.arrow_udf(T.ArrayType(T.StringType()))
+    def _links(html: pa.Array, urls: pa.Array) -> pa.Array:
         res = []
-        for h, u in zip(html, urls):
+        for h, u in zip(html.to_pylist(), urls.to_pylist()):
             if h is None or u is None:
                 res.append([])
                 continue
-            if isinstance(h, (bytes, bytearray)):
-                h = bytes(h).decode("utf-8", "replace")
+            if isinstance(h, bytes):
+                h = h.decode("utf-8", "replace")
             res.append(extract_links(h, u))
-        return pd.Series(res)
+        return pa.array(res, pa.list_(pa.string()))
 
     return df.withColumn(out_col, _links(F.col(html_col), F.col(url_col)))
 

@@ -11,7 +11,7 @@ Real PNG/JPEG/WEBP payloads decode through PIL when it is importable
 lossy compression at PSNR ≈ 46 dB) always works and is what this
 image-library-free sandbox exercises.  Which backend handled a payload is
 surfaced per row by the validate plan (``image_backend_of``).  The
-Spark-side plumbing — binary columns, Arrow batch shapes, mapInPandas
+Spark-side plumbing — binary columns, Arrow batch shapes, mapInArrow
 decode/validate signatures — is identical under both backends; a
 skipped-unless-PIL test drives the real path end-to-end.
 

@@ -23,7 +23,7 @@ combined); real-world robots files rarely duplicate a UA token, and no
 reference test exercises it.
 
 Rules serialize to/from a compact dict so they can live in a Spark
-``domain_state`` table column and be evaluated inside pandas UDFs.
+``domain_state`` table column and be evaluated inside Arrow UDFs.
 """
 
 from __future__ import annotations

@@ -1,17 +1,17 @@
 """Spark-facing vectorized wrappers for the canonicalization kernel.
 
-Batches flow through Arrow (pandas UDF); the murmur URL hash is numpy-
+Batches flow through Arrow (``arrow_udf``); the murmur URL hash is numpy-
 vectorized over the whole batch (canon/murmur.py), string parsing runs in
 optimized Python per batch — no row-at-a-time ``udf()`` anywhere.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from ..canon.murmur import hash_url_parts_batch
 from ..canon.url import parse_url
@@ -28,38 +28,32 @@ CANON_STRUCT = T.StructType(
 )
 
 
-@pandas_udf(CANON_STRUCT)
-def canonicalize(urls: pd.Series) -> pd.DataFrame:
-    n = len(urls)
-    out = {
-        "url_canon": [None] * n,
-        "domain": [None] * n,
-        "top_domain": [None] * n,
-        "path": [None] * n,
-        "param": [None] * n,
-    }
-    doms, paths, params, idxs = [], [], [], []
-    for i, raw in enumerate(urls):
-        u = parse_url(raw)
-        if u is None:
-            continue
-        out["url_canon"][i] = str(u)
-        out["domain"][i] = u.domain.address
-        out["top_domain"][i] = u.domain.top_domain
-        out["path"][i] = u.path
-        out["param"][i] = u.param
-        doms.append(u.domain.address)
-        paths.append(u.path)
-        params.append(u.param)
-        idxs.append(i)
-    hashes = pd.array([None] * n, dtype="Int64")
-    if idxs:
-        hs = hash_url_parts_batch(doms, paths, params)  # vectorized numpy
-        for j, i in enumerate(idxs):
-            hashes[i] = int(hs[j])
-    res = pd.DataFrame(out)
-    res["url_hash"] = hashes
-    return res
+# the string fields of CANON_STRUCT, in order, from a parsed EdgeUrl
+_CANON_PARTS = (
+    str,
+    lambda u: u.domain.address,
+    lambda u: u.domain.top_domain,
+    lambda u: u.path,
+    lambda u: u.param,
+)
+
+
+@arrow_udf(CANON_STRUCT)
+def canonicalize(urls: pa.Array) -> pa.Array:
+    parsed = [parse_url(raw) for raw in urls.to_pylist()]
+    ok = [u for u in parsed if u is not None]
+    failed = np.array([u is None for u in parsed], dtype=bool)
+    hashes = np.zeros(len(parsed), dtype=np.int64)
+    if ok:  # vectorized numpy over the whole batch
+        hashes[~failed] = hash_url_parts_batch(
+            [u.domain.address for u in ok], [u.path for u in ok], [u.param for u in ok]
+        )
+    arrays = [
+        pa.array([None if u is None else part(u) for u in parsed], pa.string())
+        for part in _CANON_PARTS
+    ]
+    arrays.append(pa.array(hashes, pa.int64(), mask=failed))
+    return pa.StructArray.from_arrays(arrays, names=CANON_STRUCT.names)
 
 
 def url_hash_col(url_col: Column) -> Column:

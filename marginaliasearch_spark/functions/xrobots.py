@@ -13,7 +13,7 @@ SlopCrawlDataRecord.java:165-259):
 
 In the image graft the accepted content types additionally include the
 image payload types.  Exposed as plain functions (batch-applied inside
-pandas UDFs over the header column).
+Arrow UDFs over the header column).
 """
 
 from __future__ import annotations

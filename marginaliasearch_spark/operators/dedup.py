@@ -1,7 +1,7 @@
 """Deduplication operators over document tables — the training-data side
 of the engine (exact, MinHash+LSH, SimHash, n-gram Jaccard, embedding
 near-dup).  All hot paths are built-in Spark expressions or numpy-batch
-pandas UDFs; no per-row Python.
+Arrow UDFs; no per-row Python.
 
 The crawler-side analogue is the reference's EasyLSH content-similarity
 check (ref: code/libraries/easy-lsh/java/nu/marginalia/lsh/EasyLSH.java:
@@ -20,14 +20,17 @@ Scale notes: every family is a shuffle-on-key design —
 
 from __future__ import annotations
 
+import warnings
 from typing import Optional
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.functions import pandas_udf
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 # ---------------------------------------------------------------------------
@@ -114,6 +117,11 @@ def minhash_signature_batch(texts, num_hashes: int = 64, k: int = 5, seed: int =
     return out
 
 
+def _resolve_uri(uri: str) -> tuple[pafs.FileSystem, str]:
+    """(filesystem, path) of an input-file URI in any scheme pyarrow opens."""
+    return pafs.FileSystem.from_uri(uri)
+
+
 def _spread_for_compute(df: DataFrame, always_spread_small: bool = True) -> DataFrame:
     """Signature computation is compute-bound, not byte-bound: an
     under-split input would serialize the UDF.  Spread to the cluster's
@@ -125,11 +133,15 @@ def _spread_for_compute(df: DataFrame, always_spread_small: bool = True) -> Data
     byte ranges, but a ROW GROUP is the atomic read unit — a 160 MB file
     written as one row group yields 32 nominal splits of which one holds
     every row (measured: the signature stage ran 1-core at 10× scale, 209 s
-    vs 6.6 s expected).  So decide from driver-side file metadata: a small
-    input (< parallelism × 64 MB) is spread — the shuffle is trivially
-    affordable and row balance is then guaranteed; a large one is spread
-    only when its (sampled) row-group count cannot feed the cluster.
-    Non-file sources fall back to the partition-count check.
+    vs 6.6 s expected).  So decide from driver-side file metadata, read
+    through ``pyarrow.fs``: a small input (< parallelism × 64 MB) is
+    spread — the shuffle is trivially affordable and row balance is then
+    guaranteed; a large one is spread only when its (sampled) row-group
+    count cannot feed the cluster.  Input files pyarrow cannot open (an
+    unknown scheme such as ``s3a:``, a missing client library) warn and
+    spread: the partition count is exactly what cannot be trusted there.
+    Non-file sources and non-parquet files keep the partition-count check
+    (their splits are real).
 
     ``always_spread_small=False`` is the LIGHT-kernel variant (winnowing
     fingerprint ≈ 84 µs/doc vs minhash ≈ 170+ µs/doc on bigger shingle
@@ -148,14 +160,21 @@ def _spread_for_compute(df: DataFrame, always_spread_small: bool = True) -> Data
         if df.rdd.getNumPartitions() >= n:
             return df
         return df.repartition(n)
-    import os as _os
-
-    local = [f[5:] if f.startswith("file:") else f for f in files]
     try:
-        total = sum(_os.path.getsize(p) for p in local)
-    except OSError:
-        total = None
-    if total is not None and total < (n << 26):  # < n × 64 MB
+        located = [_resolve_uri(f) for f in files]
+        infos = [fs.get_file_info(path) for fs, path in located]
+        if any(i.type != pafs.FileType.File for i in infos):
+            raise FileNotFoundError("an input file is missing")
+        total = sum(i.size for i in infos)
+    except (OSError, ValueError, pa.ArrowException) as e:
+        warnings.warn(
+            f"_spread_for_compute: cannot read the input files' layout ({e}); "
+            f"spreading to {n} partitions",
+            RuntimeWarning,
+            stacklevel=3,
+        )
+        return df.repartition(n)
+    if total < (n << 26):  # < n × 64 MB
         if always_spread_small:
             return df.repartition(n)
         if total < (32 << 20):
@@ -163,18 +182,17 @@ def _spread_for_compute(df: DataFrame, always_spread_small: bool = True) -> Data
         # light kernel, mid-size input: spread only if row groups can't
         # feed the cluster (fall through to the sampled footer check)
     try:
-        import pyarrow.parquet as _pq
-
         rgs = 0
-        for p in local[:64]:  # bounded footer reads
-            rgs += _pq.ParquetFile(p).metadata.num_row_groups
+        for fs, path in located[:64]:  # bounded footer reads
+            with fs.open_input_file(path) as fh:
+                rgs += pq.ParquetFile(fh).metadata.num_row_groups
             if rgs >= n:
                 break
         if len(files) > 64 and rgs < n:
             rgs = int(rgs * len(files) / 64)
         if rgs >= n:
             return df
-    except Exception:  # noqa: BLE001 — non-parquet / unreadable footers
+    except (OSError, ValueError, pa.ArrowException):  # non-parquet footers
         if df.rdd.getNumPartitions() >= n:
             return df
     return df.repartition(n)
@@ -187,10 +205,13 @@ def with_minhash(
     k: int = 5,
     seed: int = 42,
 ) -> DataFrame:
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def mh(texts: pd.Series) -> pd.Series:
-        sigs = minhash_signature_batch(texts.tolist(), num_hashes, k, seed)
-        return pd.Series([s.tolist() for s in sigs])
+    @F.arrow_udf(T.ArrayType(T.LongType()))
+    def mh(texts: pa.Array) -> pa.Array:
+        sigs = minhash_signature_batch(texts.to_pylist(), num_hashes, k, seed)
+        # every signature is num_hashes long: one flat values buffer
+        offsets = np.arange(len(sigs) + 1, dtype=np.int32) * num_hashes
+        values = np.concatenate(sigs) if sigs else np.empty(0, np.int64)
+        return pa.ListArray.from_arrays(offsets, values)
 
     return _spread_for_compute(docs).withColumn("minhash", mh(F.col(text_col)))
 
@@ -209,10 +230,10 @@ def minhash_lsh_pairs(
     """Near-duplicate candidate pairs via banded MinHash-LSH, verified by
     signature-estimated Jaccard.
 
-    shingle→minhash (pandas UDF, Arrow) → explode to band keys →
+    shingle→minhash (Arrow UDF) → explode to band keys →
     bucket-local pair scoring (one shuffle on the band hash, buckets
     contiguous via sortWithinPartitions, signatures compared as numpy
-    matrices inside mapInPandas) → cross-band pair dedup.
+    matrices inside mapInArrow) → cross-band pair dedup.
 
     A bucket of size s yields s(s-1)/2 candidates, and boilerplate-heavy
     corpora emit tens of millions of sub-threshold candidates from
@@ -251,6 +272,8 @@ def minhash_lsh_pairs(
             T.StructField("jaccard_est", T.DoubleType()),
         ]
     )
+    out_arrow = to_arrow_schema(out_schema)
+
     def score_buckets(it):
         """Partition stream sorted by band_hash: buckets arrive as
         contiguous runs, possibly split across Arrow batches — buffer the
@@ -259,23 +282,10 @@ def minhash_lsh_pairs(
 
         Arrow-native (mapInArrow, guide §4.2): the 64-long signature
         column is one contiguous int64 values buffer per batch, so the
-        [n × 64] scoring matrix is a zero-copy flatten+reshape — the
-        mapInPandas form paid a per-row python list materialization
+        [n × 64] scoring matrix is a zero-copy flatten+reshape — a
+        pandas-batch form paid a per-row python list materialization
         (``Series.tolist()`` → ``np.array``) that alone cost ~0.27 s per
         100k rows, ~4 core-seconds per sf1 scoring pass."""
-        import numpy as np
-        import pyarrow as pa
-
-        out_fields = None  # derived from the first batch's id type
-
-        def emit(a, b, e):
-            return pa.RecordBatch.from_arrays(
-                [pa.array(a, type=out_fields[0]),
-                 pa.array(b, type=out_fields[0]),
-                 pa.array(e, type=pa.float64())],
-                names=["id_a", "id_b", "jaccard_est"],
-            )
-
         def process(hashes, ids, M):
             change = np.nonzero(hashes[1:] != hashes[:-1])[0] + 1
             starts = np.concatenate(([0], change))
@@ -312,8 +322,9 @@ def minhash_lsh_pairs(
                 out_e.append(est[keep])
             if not out_a:
                 return None
-            return emit(
-                np.concatenate(out_a), np.concatenate(out_b), np.concatenate(out_e)
+            cols = (np.concatenate(out_a), np.concatenate(out_b), np.concatenate(out_e))
+            return pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(cols, out_arrow)], schema=out_arrow
             )
 
         buf_h = buf_i = buf_m = None
@@ -321,18 +332,12 @@ def minhash_lsh_pairs(
         for batch in it:
             if batch.num_rows == 0:
                 continue
-            if out_fields is None:
-                names = batch.schema.names
-                i_id, i_h, i_mh = (
-                    names.index(id_col), names.index("band_hash"), names.index("minhash")
-                )
-                out_fields = (batch.schema.field(i_id).type,)
-            hashes = batch.column(i_h).to_numpy(zero_copy_only=False)
-            ids = batch.column(i_id).to_numpy(zero_copy_only=False)
+            hashes = batch.column("band_hash").to_numpy(zero_copy_only=False)
+            ids = batch.column(id_col).to_numpy(zero_copy_only=False)
             # zero-copy [n × num_hashes] view: the list column's values
             # buffer is contiguous and every list is exactly num_hashes
             M = (
-                batch.column(i_mh)
+                batch.column("minhash")
                 .flatten()
                 .to_numpy(zero_copy_only=False)
                 .reshape(batch.num_rows, num_hashes)
@@ -417,9 +422,9 @@ def simhash_batch(texts, k: int = 4, seed: int = 42) -> np.ndarray:
 
 
 def with_simhash(docs: DataFrame, text_col: str = "text", seed: int = 42) -> DataFrame:
-    @pandas_udf(T.LongType())
-    def sh(texts: pd.Series) -> pd.Series:
-        return pd.Series(simhash_batch(texts.tolist(), seed=seed))
+    @F.arrow_udf(T.LongType())
+    def sh(texts: pa.Array) -> pa.Array:
+        return pa.array(simhash_batch(texts.to_pylist(), seed=seed), pa.int64())
 
     return _spread_for_compute(docs).withColumn("simhash", sh(F.col(text_col)))
 

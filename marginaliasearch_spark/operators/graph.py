@@ -155,8 +155,9 @@ def connected_components(
         )
 
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     spark = pairs.sparkSession
     edges = pairs.select(
@@ -178,20 +179,22 @@ def connected_components(
         edges.unpersist()
         return _restore(spark.createDataFrame([], out_schema))
 
-    if ne <= rows_per_task:
-        def solve(it):
-            chunks = list(it)
-            if not chunks:
-                yield pd.DataFrame(
-                    {"id": pd.Series(dtype="int64"),
-                     "component": pd.Series(dtype="int64")}
-                )
-                return
-            pdf = pd.concat(chunks)
-            nodes, roots = _numpy_cc(pdf["n"].to_numpy(), pdf["l"].to_numpy())
-            yield pd.DataFrame({"id": nodes, "component": roots})
+    def _edge_arrays(it):
+        """The task's (n, l) edge columns as int64 arrays."""
+        batches = list(it)
+        return tuple(
+            pa.chunked_array([b.column(c) for b in batches], pa.int64()).to_numpy()
+            for c in ("n", "l")
+        )
 
-        out = edges.coalesce(1).mapInPandas(solve, out_schema).localCheckpoint()
+    if ne <= rows_per_task:
+        out_arrow = to_arrow_schema(out_schema)
+
+        def solve(it):
+            nodes, roots = _numpy_cc(*_edge_arrays(it))
+            yield pa.RecordBatch.from_arrays([nodes, roots], schema=out_arrow)
+
+        out = edges.coalesce(1).mapInArrow(solve, out_schema).localCheckpoint()
         edges.unpersist()
         return _restore(out)
 
@@ -203,26 +206,18 @@ def connected_components(
         ]
     )
 
+    it_arrow = to_arrow_schema(it_schema)
+
     def contract(it):
-        chunks = list(it)
-        if not chunks:
-            yield pd.DataFrame(
-                {"n": pd.Series(dtype="int64"),
-                 "l": pd.Series(dtype="int64"),
-                 "ch": pd.Series(dtype="int32")}
-            )
-            return
-        pdf = pd.concat(chunks)
-        a = pdf["n"].to_numpy()
-        b = pdf["l"].to_numpy()
+        a, b = _edge_arrays(it)
         nodes, roots = _numpy_cc(a, b)
         before = _nontrivial_sorted(a, b)
         after = _nontrivial_sorted(nodes, roots)
         ch = np.int32(
             0 if before.shape == after.shape and np.array_equal(before, after) else 1
         )
-        yield pd.DataFrame(
-            {"n": nodes, "l": roots, "ch": np.full(len(nodes), ch, dtype=np.int32)}
+        yield pa.RecordBatch.from_arrays(
+            [nodes, roots, np.full(len(nodes), ch, dtype=np.int32)], schema=it_arrow
         )
 
     R = edges
@@ -237,7 +232,7 @@ def connected_components(
         R = (
             doubled.repartition(nparts, "key")
             .select("n", "l")
-            .mapInPandas(contract, it_schema)
+            .mapInArrow(contract, it_schema)
             .localCheckpoint()
         )
         if i == 0:

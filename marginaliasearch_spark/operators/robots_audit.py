@@ -19,17 +19,16 @@ domains it broadcast-joins (zero shuffle of the big side); above it, the
 corpus repartitions by domain and shuffle-hash joins (the corpus side
 shuffles ONCE on its natural key — the same key downstream recrawl
 scheduling partitions by).  Either way ``is_allowed`` evaluates in an
-Arrow-batched pandas UDF that parses each distinct robots text ONCE per
-worker (LRU over the text), never per row.
+Arrow UDF that parses each distinct robots text ONCE per batch (LRU over
+the text), never per row.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.functions import pandas_udf
 
 DEFAULT_USER_AGENT = "search.marginalia.nu"
 
@@ -61,8 +60,8 @@ def robots_audit(
     loop (or who already know the dimension's size) should pass an
     explicit mode."""
 
-    @pandas_udf(T.BooleanType())
-    def allowed(urls: pd.Series, robots_txt: pd.Series) -> pd.Series:
+    @F.arrow_udf(T.BooleanType())
+    def allowed(urls: pa.Array, robots_txt: pa.Array) -> pa.Array:
         from functools import lru_cache
 
         from ..functions.robots import parse_robots_txt
@@ -71,11 +70,12 @@ def robots_audit(
         def rules_for(txt):
             return parse_robots_txt(txt, user_agent)
 
-        return pd.Series(
+        return pa.array(
             [
-                rules_for(txt if isinstance(txt, str) else None).is_allowed(u)
-                for u, txt in zip(urls, robots_txt)
-            ]
+                rules_for(txt).is_allowed(u)
+                for u, txt in zip(urls.to_pylist(), robots_txt.to_pylist())
+            ],
+            pa.bool_(),
         )
 
     dim = robots.select(domain_col, robots_col)

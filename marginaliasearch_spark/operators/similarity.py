@@ -12,18 +12,17 @@
 - ``cosine_pairs_lsh`` — all-pairs near-dup by bucketed self-join (shared
   with dedup.embedding_near_dup_pairs).
 - ``ivf_topk`` — IVF-style variant: k-means-lite centroids sampled from
-  the data, vectors assigned to nearest centroid (one pandas-UDF pass),
+  the data, vectors assigned to nearest centroid (one Arrow-UDF pass),
   query probes the ``n_probe`` nearest centroids.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.functions import pandas_udf
 
 
 def _cosine_col(vec_col: str, query: list[float]):
@@ -67,6 +66,12 @@ def _planes(dim: int, n_planes: int, seed: int) -> np.ndarray:
     return rng.standard_normal((n_planes, dim))
 
 
+def _vec_matrix(vecs: pa.Array) -> np.ndarray:
+    """[n × dim] float64 view of an Arrow batch of equal-length vectors."""
+    flat = vecs.flatten().to_numpy(zero_copy_only=False)
+    return flat.reshape(len(vecs), -1).astype(np.float64, copy=False)
+
+
 def _sign_sig(mat: np.ndarray, planes: np.ndarray) -> np.ndarray:
     proj = mat @ planes.T  # [B, n_planes]
     bits = (proj > 0).astype(np.uint64)
@@ -81,10 +86,9 @@ def with_lsh_bucket(
 ) -> DataFrame:
     planes = _planes(dim, n_planes, seed)
 
-    @pandas_udf(T.LongType())
-    def bucket(vecs: pd.Series) -> pd.Series:
-        mat = np.vstack(vecs.to_numpy())
-        return pd.Series(_sign_sig(mat, planes))
+    @F.arrow_udf(T.LongType())
+    def bucket(vecs: pa.Array) -> pa.Array:
+        return pa.array(_sign_sig(_vec_matrix(vecs), planes), pa.int64())
 
     return emb.withColumn("lsh_bucket", bucket(F.col(vec_col)))
 
@@ -157,14 +161,15 @@ def cosine_pairs_lsh(
     dim = len(first[0])
     planes = _planes(dim, n_planes * n_bands, seed)
 
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def band_sigs(vecs: pd.Series) -> pd.Series:
-        mat = np.vstack(vecs.to_numpy()).astype(np.float64)
+    @F.arrow_udf(T.ArrayType(T.LongType()))
+    def band_sigs(vecs: pa.Array) -> pa.Array:
+        mat = _vec_matrix(vecs)
         sigs = []
         for b in range(n_bands):
             sigs.append(_sign_sig(mat, planes[b * n_planes : (b + 1) * n_planes]))
         arr = np.stack(sigs, axis=1)  # [B, n_bands]
-        return pd.Series(list(arr))
+        offsets = np.arange(len(arr) + 1, dtype=np.int32) * n_bands
+        return pa.ListArray.from_arrays(offsets, arr.reshape(-1))
 
     bucketed = (
         emb.withColumn("_sigs", band_sigs(F.col(vec_col)))
@@ -207,7 +212,7 @@ def ivf_topk(
     seed: int = 42,
 ) -> DataFrame:
     """IVF ANN: deterministic sampled centroids, one assignment pass
-    (vectorized pandas UDF), query probes the n_probe nearest lists.
+    (vectorized Arrow UDF), query probes the n_probe nearest lists.
 
     At scale the assignment is written once (partitioned by centroid_id =
     partition pruning on every query); here it is computed inline.
@@ -221,11 +226,11 @@ def ivf_topk(
     centroids = mat[idx]
     centroids /= np.maximum(np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12)
 
-    @pandas_udf(T.IntegerType())
-    def assign(vecs: pd.Series) -> pd.Series:
-        m = np.vstack(vecs.to_numpy()).astype(np.float64)
+    @F.arrow_udf(T.IntegerType())
+    def assign(vecs: pa.Array) -> pa.Array:
+        m = _vec_matrix(vecs)
         m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        return pd.Series(np.argmax(m @ centroids.T, axis=1).astype(np.int32))
+        return pa.array(np.argmax(m @ centroids.T, axis=1).astype(np.int32), pa.int32())
 
     q = np.asarray(query, dtype=np.float64)
     qn = q / max(np.linalg.norm(q), 1e-12)

@@ -1,17 +1,16 @@
 """Text-analysis operators over the documents table: language-ID, quality
 scoring, token counting, document fingerprinting.  All pure built-in
 column expressions (whole-stage codegen; SQL-oracle-checkable) except the
-rolling fingerprint, which is a numpy pandas UDF.
+rolling fingerprint, which is a numpy Arrow UDF.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.functions import pandas_udf
 
 # tiny stopword lists for the n-gram/stopword language heuristic
 _LANG_MARKERS = {
@@ -107,13 +106,13 @@ def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 def doc_fingerprint(docs: DataFrame, text_col: str = "text", window: int = 8) -> DataFrame:
     """Winnowing-style rolling-hash fingerprint: min rolling hash per window
-    over word hashes → a compact int64 sketch (numpy pandas UDF)."""
+    over word hashes → a compact int64 sketch (numpy Arrow UDF)."""
 
-    @pandas_udf(T.LongType())
-    def fp(texts: pd.Series) -> pd.Series:
+    @F.arrow_udf(T.LongType())
+    def fp(texts: pa.Array) -> pa.Array:
         out = np.empty(len(texts), dtype=np.int64)
         with np.errstate(over="ignore"):
-            for i, t in enumerate(texts):
+            for i, t in enumerate(texts.to_pylist()):
                 words = (t or "").lower().split()
                 if not words:
                     out[i] = 0
@@ -130,7 +129,7 @@ def doc_fingerprint(docs: DataFrame, text_col: str = "text", window: int = 8) ->
                     acc ^= m
                     acc *= np.uint64(1099511628211)
                 out[i] = int(acc.view(np.int64) if hasattr(acc, "view") else acc)
-        return pd.Series(out)
+        return pa.array(out, pa.int64())
 
     def hashsum(w: str) -> int:
         h = 14695981039346656037

@@ -1,6 +1,6 @@
 """Audio/video feature extraction over binary payload columns.
 
-mapInPandas Arrow batches over opaque `bytes` columns with typed
+mapInArrow batches over opaque `bytes` columns with typed
 metadata — the multimodal plumbing the task brief calls for, with the
 container format stubbed (functions/avcodec.py documents the boundary)
 and the batch shapes, schemas and numpy math real:
@@ -9,7 +9,7 @@ and the batch shapes, schemas and numpy math real:
 - video → frame-sample every k-th frame, per-frame phash, shot-boundary
   detection by phash hamming jump.
 
-Scale shape: one narrow mapInPandas pass, no shuffle; payload bytes never
+Scale shape: one narrow mapInArrow pass, no shuffle; payload bytes never
 leave the executor that scanned them.
 """
 
@@ -17,9 +17,10 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 AV_FEATURES_SCHEMA = T.StructType(
     [
@@ -34,12 +35,13 @@ AV_FEATURES_SCHEMA = T.StructType(
         T.StructField("codec", T.StringType()),       # which decoder handled the row
     ]
 )
+AV_FEATURES_ARROW = to_arrow_schema(AV_FEATURES_SCHEMA)
 
 
 def extract_av_features(clips: DataFrame, window: int = 1024) -> DataFrame:
     """One vectorized pass per Arrow batch; bytes stay executor-local."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from ..functions.avcodec import (
             audio_backend_of,
             audio_features,
@@ -50,9 +52,9 @@ def extract_av_features(clips: DataFrame, window: int = 1024) -> DataFrame:
         )
         from ..functions.imagecodec import hamming64, phash64
 
-        for pdf in batches:
+        for batch in batches:
             rows = []
-            for rec in pdf.to_dict("records"):
+            for rec in batch.to_pylist():
                 out = {
                     "clip_id": rec["clip_id"], "kind": rec["kind"],
                     "decode_ok": 0, "peak_mhz": 0, "n_windows": 0,
@@ -100,10 +102,6 @@ def extract_av_features(clips: DataFrame, window: int = 1024) -> DataFrame:
                 except Exception:  # noqa: BLE001 — corrupt payloads flagged, not fatal
                     pass
                 rows.append(out)
-            out_pdf = pd.DataFrame(rows)
-            out_pdf["peak_mhz"] = out_pdf["peak_mhz"].astype("int64")
-            for c in ("decode_ok", "n_windows", "n_frames", "n_sampled_k2", "cut_idx"):
-                out_pdf[c] = out_pdf[c].astype("int32")
-            yield out_pdf
+            yield pa.RecordBatch.from_pylist(rows, schema=AV_FEATURES_ARROW)
 
-    return clips.mapInPandas(extract, AV_FEATURES_SCHEMA)
+    return clips.mapInArrow(extract, AV_FEATURES_SCHEMA)

@@ -9,7 +9,7 @@ that loop at cluster scale:
    ``edges`` row (src_url, dst_url), INCLUDING cross-domain targets the
    per-domain frontier drops;
 2. cross-domain targets are canonicalized through the real kernel
-   (vectorized pandas UDF → bit-exact url_hash);
+   (vectorized Arrow UDF → bit-exact url_hash);
 3. the global URL-seen service (plans/frontier_dedup.py — partitioned
    incremental cuckoo filters) admits only never-seen URLs, so a URL
    discovered by thousands of referrers is fetched once, ever;

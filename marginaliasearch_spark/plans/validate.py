@@ -4,7 +4,7 @@ Per BASELINE.json ``input_hint``: every crawled row must satisfy
 decoded-pixel allclose vs the source (PSNR ≥ 40 dB for lossy formats) and
 exact caption equality; the phash column must match the decoded pixels.
 
-Implementation: ``mapInPandas`` over Arrow batches — bytes never pass
+Implementation: ``mapInArrow`` over Arrow batches — bytes never pass
 through per-row Python; decode + PSNR + phash run on numpy arrays per
 batch.  The validation stage joins crawl_data to the corpus on image_id
 (both sides bucketable on image_id for a shuffle-free sort-merge join at
@@ -16,10 +16,11 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions.imagecodec import (
     LOSSY_FORMATS,
@@ -29,7 +30,7 @@ from ..functions.imagecodec import (
     phash64,
     psnr,
 )
-from ..sources.corpus import make_caption, make_image
+from ..sources.corpus import encode_corpus_image, make_caption, make_image
 
 VERDICT_SCHEMA = T.StructType(
     [
@@ -44,30 +45,30 @@ VERDICT_SCHEMA = T.StructType(
         T.StructField("codec", T.StringType()),  # which decoder handled the row
     ]
 )
+VERDICT_ARROW = to_arrow_schema(VERDICT_SCHEMA)
 
 
 def validate_payloads(corpus: DataFrame, seed: int = 42, psnr_min: float = 40.0) -> DataFrame:
     """Verify every corpus row: decode, PSNR vs the regenerated source
     pixels, caption equality vs the generator, stored-phash match."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            n = len(pdf)
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in it:
+            rec = batch.to_pydict()
+            n = batch.num_rows
             out = {
-                "image_id": pdf["image_id"].tolist(),
-                "fmt": pdf["fmt"].tolist(),
+                "image_id": rec["image_id"],
+                "fmt": rec["fmt"],
                 "decode_ok": np.zeros(n, dtype=bool),
                 "psnr_db": np.zeros(n, dtype=np.float64),
                 "psnr_ok": np.zeros(n, dtype=bool),
                 "caption_ok": np.zeros(n, dtype=bool),
                 "phash_match": np.zeros(n, dtype=bool),
                 "phash_hamming": np.zeros(n, dtype=np.int32),
-                "codec": [
-                    image_backend_of(bytes(b)) for b in pdf["bytes"]
-                ],
+                "codec": [image_backend_of(b) for b in rec["bytes"]],
             }
             for i in range(n):
-                image_id = pdf["image_id"].iloc[i]
+                image_id = rec["image_id"][i]
                 try:
                     # a malformed image_id yields a failed verdict row,
                     # not a task failure (same contract as
@@ -75,7 +76,7 @@ def validate_payloads(corpus: DataFrame, seed: int = 42, psnr_min: float = 40.0)
                     idx = int(image_id.split("-")[1])
                     src, _fmt = make_image(seed, idx)
                     want_caption = make_caption(seed, idx)
-                    arr, fmt = decode_image(bytes(pdf["bytes"].iloc[i]))
+                    arr, fmt = decode_image(rec["bytes"][i])
                 except Exception:
                     continue
                 out["decode_ok"][i] = True
@@ -84,17 +85,17 @@ def validate_payloads(corpus: DataFrame, seed: int = 42, psnr_min: float = 40.0)
                 out["psnr_ok"][i] = (
                     p >= psnr_min if fmt in LOSSY_FORMATS else np.array_equal(src, arr)
                 )
-                out["caption_ok"][i] = pdf["caption"].iloc[i] == want_caption
+                out["caption_ok"][i] = rec["caption"][i] == want_caption
                 ph = phash64(arr)
-                stored = int(pdf["phash"].iloc[i])
+                stored = rec["phash"][i]
                 out["phash_hamming"][i] = hamming64(ph, stored)
                 out["phash_match"][i] = ph == stored
-            yield pd.DataFrame(out)
+            yield pa.RecordBatch.from_pydict(out, schema=VERDICT_ARROW)
 
     cols = ["image_id", "bytes", "fmt", "caption", "phash"]
     # compute-bound: spread small single-file inputs across the cluster
     n = corpus.sparkSession.sparkContext.defaultParallelism
-    return corpus.select(*cols).repartition(n).mapInPandas(batches, VERDICT_SCHEMA)
+    return corpus.select(*cols).repartition(n).mapInArrow(batches, VERDICT_SCHEMA)
 
 
 def validate_image_ids(df: DataFrame, seed: int = 42, psnr_min: float = 40.0) -> DataFrame:
@@ -113,17 +114,9 @@ def validate_image_ids(df: DataFrame, seed: int = 42, psnr_min: float = 40.0) ->
     NULL image_id are ignored)."""
     n = df.sparkSession.sparkContext.defaultParallelism
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.imagecodec import (
-            LOSSY_FORMATS,
-            decode_image,
-            phash64,
-            psnr,
-        )
-        from ..sources.corpus import encode_corpus_image, make_image
-
-        for pdf in it:
-            ids = pdf["image_id"].tolist()
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in it:
+            ids = batch.column("image_id").to_pylist()
             out = {
                 "image_id": ids,
                 "fmt": [""] * len(ids),
@@ -153,31 +146,28 @@ def validate_image_ids(df: DataFrame, seed: int = 42, psnr_min: float = 40.0) ->
                 out["psnr_ok"][i] = (
                     bool(p >= psnr_min) if fmt2 in LOSSY_FORMATS else True
                 )
-                out["phash_hamming"][i] = 0
                 _ = phash64(arr)
-            yield pd.DataFrame(out)
+            yield pa.RecordBatch.from_pydict(out, schema=VERDICT_ARROW)
 
     rows = df.filter(F.col("image_id").isNotNull()).select("image_id")
-    return rows.repartition(n).mapInPandas(batches, VERDICT_SCHEMA)
+    return rows.repartition(n).mapInArrow(batches, VERDICT_SCHEMA)
 
 
 def phash_column(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
     """Recompute phash from encoded bytes as a column (Arrow-batched)."""
     from ..functions.imagecodec import phash_batch
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            res = pdf.copy()
-            res["phash_computed"] = phash_batch(pdf[bytes_col].tolist())
-            yield res[["image_id", "phash_computed"]]
+    schema = "image_id string, phash_computed long"
+    out_arrow = to_arrow_schema(T.DataType.fromDDL(schema))
 
-    schema = T.StructType(
-        [
-            T.StructField("image_id", T.StringType()),
-            T.StructField("phash_computed", T.LongType()),
-        ]
-    )
-    return df.mapInPandas(batches, schema)
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in it:
+            ph = phash_batch(batch.column(bytes_col).to_pylist())
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("image_id"), pa.array(ph, pa.int64())], schema=out_arrow
+            )
+
+    return df.select("image_id", bytes_col).mapInArrow(batches, schema)
 
 
 def content_unchanged_pairs(

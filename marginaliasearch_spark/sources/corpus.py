@@ -12,7 +12,7 @@ which is how the 10^10-scale ladder works (FIXTURES.md §1, §6).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from ..functions.imagecodec import decode_image, encode_image, phash64
 
@@ -83,7 +83,10 @@ def corpus_row(seed: int, i: int) -> dict:
     }
 
 
-def generate_corpus(seed: int, n: int) -> pd.DataFrame:
+def generate_corpus(seed: int, n: int):
+    """The corpus as a driver-side pandas DataFrame (fixtures, tests)."""
+    import pandas as pd
+
     rows = [corpus_row(seed, i) for i in range(n)]
     df = pd.DataFrame(rows)
     df["w"] = df["w"].astype("int32")
@@ -107,20 +110,19 @@ def distributed_corpus(spark, seed: int, n: int):
     to ``spark.createDataFrame(generate_corpus(seed, n))``."""
     from typing import Iterator
 
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
     par = spark.sparkContext.defaultParallelism
+    out_arrow = to_arrow_schema(DataType.fromDDL(CORPUS_SCHEMA))
 
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = [corpus_row(seed, int(i)) for i in pdf["id"]]
-            if not rows:
-                continue
-            out = pd.DataFrame(rows)
-            out["w"] = out["w"].astype("int32")
-            out["h"] = out["h"].astype("int32")
-            out["phash"] = out["phash"].astype("int64")
-            yield out
+    def gen(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in it:
+            rows = [corpus_row(seed, i) for i in batch.column("id").to_pylist()]
+            if rows:
+                yield pa.RecordBatch.from_pylist(rows, schema=out_arrow)
 
-    return spark.range(n).repartition(par).mapInPandas(gen, CORPUS_SCHEMA)
+    return spark.range(n).repartition(par).mapInArrow(gen, CORPUS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -167,7 +169,10 @@ def av_clip_row(seed: int, i: int) -> dict:
     }
 
 
-def generate_av_corpus(seed: int, n: int) -> pd.DataFrame:
+def generate_av_corpus(seed: int, n: int):
+    """The planted AV corpus as a driver-side pandas DataFrame."""
+    import pandas as pd
+
     df = pd.DataFrame([av_clip_row(seed, i) for i in range(n)])
     for c in ("sample_rate", "fps", "n_frames"):
         df[c] = df[c].astype("int32")

@@ -7,13 +7,17 @@ items, skips URLs already present in the main crawl data, applies robots
 and the blocklist, fetches politely, and appends to the live table.
 
 Spark-first mapping: a ``readStream`` of feed items →
-canonicalize+hash (Arrow-batched pandas UDF) → *stream-static left-anti
+canonicalize+hash (Arrow UDF) → *stream-static left-anti
 join* against the frontier seen-set (the already-crawled skip) →
 blocklist Column filter → sink.  A watermarked tumbling-window rollup
 gives per-domain ingest metrics with late-data tolerance.
 
 Sinks use ``foreachBatch`` so each micro-batch lands as an atomic
 parquet append — the streaming counterpart of the wave snapshot.
+
+``polite_schedule`` is the package's one pandas boundary: its pandas-free
+4.1 successor ``transformWithState`` needs the RocksDB state-store
+provider in the session conf, which this operator does not own.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Audio/video payload plumbing: container round-trip, real numpy feature
 math (FFT peak, RMS), frame sampling + shot boundaries, and the Spark
-mapInPandas extractor over the planted AV corpus."""
+mapInArrow extractor over the planted AV corpus."""
 
 import numpy as np
 

@@ -147,6 +147,36 @@ def test_parse_url_failures():
     assert parse_url("no-scheme-here") is None
 
 
+def test_canonicalize_udf_nulls_and_64_bit_hash(spark):
+    """The Spark canonicalize kernel: a null and an unparseable URL give
+    null struct fields and a null url_hash; parsed URLs keep all 64 hash
+    bits (|h| >= 2^53 does not round through a double)."""
+    from pyspark.sql import functions as F
+
+    from marginaliasearch_spark.canon.murmur import hash_url_parts_batch
+    from marginaliasearch_spark.functions.udfs import canonicalize
+
+    urls = [f"https://www.example{i}.com/a/page{i}.html?id={i}" for i in range(6)]
+    df = spark.createDataFrame(
+        [(i, u) for i, u in enumerate([None, "no-scheme-here"] + urls)],
+        "i int, u string",
+    )
+    got = {
+        r["i"]: r["c"]
+        for r in df.select("i", canonicalize(F.col("u")).alias("c")).collect()
+    }
+    for i in (0, 1):
+        assert got[i].asDict() == dict.fromkeys(got[i].asDict())
+    parsed = [parse_url(u) for u in urls]
+    want = hash_url_parts_batch(
+        [u.domain.address for u in parsed], [u.path for u in parsed], [u.param for u in parsed]
+    ).tolist()
+    hashes = [got[i + 2]["url_hash"] for i in range(len(urls))]
+    assert hashes == want
+    assert any(abs(h) >= 1 << 53 for h in hashes)
+    assert [got[i + 2]["url_canon"] for i in range(len(urls))] == [str(u) for u in parsed]
+
+
 # --- LinkParser (LinkParserTest.java) -------------------------------------
 
 def _pl(href, rel_base):

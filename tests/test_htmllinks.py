@@ -117,6 +117,13 @@ def test_spark_kernel(spark):
     s = with_html_links(df, "body_html", "url").select("links").collect()[0]["links"]
     b = with_html_links(df, "body_bytes", "url").select("links").collect()[0]["links"]
     assert s == b == _golden()["basic.html"]
+    # a null body (either column type) gives no links, not a null array
+    nulls = spark.createDataFrame(
+        [("https://www.site.example.com/", None, None)],
+        "url string, body_html string, body_bytes binary",
+    )
+    for col in ("body_html", "body_bytes"):
+        assert with_html_links(nulls, col, "url").collect()[0]["links"] == []
     plan = (
         with_html_links(df, "body_html", "url")
         ._jdf.queryExecution().executedPlan().toString()

@@ -105,7 +105,7 @@ def test_q1_partial_aggregation(spark):
 def test_cuckoo_anti_join_plan(spark):
     """Cuckoo admission (round 5): the exact-check joins on the small
     maybe-positive key set must be broadcast, the per-bucket filter
-    build/probe must be cogrouped pandas stages, and the seen-set must
+    build/probe must be cogrouped Arrow stages, and the seen-set must
     never appear on the build side of a shuffled join."""
     import numpy as np
 

@@ -65,7 +65,7 @@ def test_wav_stereo_downmix():
 
 
 def test_av_pipeline_decodes_real_wav(spark):
-    """A real RIFF/WAVE payload through the full mapInPandas extractor:
+    """A real RIFF/WAVE payload through the full mapInArrow extractor:
     decode_ok, the planted spectral peak, and codec='wav' surfaced."""
     from marginaliasearch_spark.plans.av_pipeline import extract_av_features
 

@@ -15,6 +15,7 @@ def _fixture(spark):
             ("b.example", "https://b.example/anything.html"),  # no robots row
             ("c.example", "https://c.example/page.php"),
             ("c.example", "https://c.example/page.html"),
+            ("d.example", "https://d.example/page.html"),  # NULL robots text
         ],
         "domain string, url string",
     )
@@ -22,6 +23,7 @@ def _fixture(spark):
         [
             ("a.example", "User-agent: *\nDisallow: /private/\n"),
             ("c.example", "User-agent: *\nDisallow: /*.php$\n"),
+            ("d.example", None),  # a 404 robots.txt
         ],
         "domain string, robots_txt string",
     )
@@ -39,6 +41,7 @@ def test_audit_verdicts(spark):
         "https://b.example/anything.html": True,  # missing robots → ALLOW_ALL
         "https://c.example/page.php": False,
         "https://c.example/page.html": True,
+        "https://d.example/page.html": True,  # NULL robots → ALLOW_ALL
     }
     refused = {r["url"] for r in newly_refused(corpus, robots).collect()}
     assert refused == {

@@ -367,3 +367,54 @@ def test_spread_for_compute_kernel_weight(spark, docs, tmp_path):
     # non-file plans keep the partition-count fallback in both modes
     rng_df = spark.range(100, numPartitions=1)
     assert _spread_for_compute(rng_df, always_spread_small=False).rdd.getNumPartitions() == n
+
+
+def test_spread_for_compute_reads_non_local_uris(spark, monkeypatch):
+    """The spread decision reads file sizes through pyarrow.fs, so a
+    non-``file:`` input reaches the same decision as the same file opened
+    by local path: a ``memfs://`` scheme served by a local
+    SubTreeFileSystem (resolver patched, no network), in both kernel
+    modes, with no warning."""
+    import warnings
+
+    import pyarrow.fs as pafs
+
+    from marginaliasearch_spark.operators import dedup
+
+    local = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    n = spark.sparkContext.defaultParallelism
+    want = {
+        mode: dedup._spread_for_compute(local, always_spread_small=mode)
+        for mode in (True, False)
+    }
+    assert want[False] is local and want[True].rdd.getNumPartitions() == n
+
+    served = pafs.SubTreeFileSystem(SF_DIR, pafs.LocalFileSystem())
+    monkeypatch.setattr(
+        type(local), "inputFiles", lambda self: ["memfs://bucket/documents.parquet"]
+    )
+    monkeypatch.setattr(
+        dedup, "_resolve_uri", lambda uri: (served, uri.rsplit("/", 1)[1])
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        light = dedup._spread_for_compute(local, always_spread_small=False)
+        heavy = dedup._spread_for_compute(local, always_spread_small=True)
+    assert light is local
+    assert heavy.rdd.getNumPartitions() == want[True].rdd.getNumPartitions() == n
+
+
+def test_spread_for_compute_unresolvable_uri_warns_and_spreads(spark, monkeypatch):
+    """An input URI pyarrow cannot open warns and spreads to
+    defaultParallelism instead of trusting the partition count (here 2×
+    the parallelism, which the old fallback would have kept)."""
+    from marginaliasearch_spark.operators.dedup import _spread_for_compute
+
+    n = spark.sparkContext.defaultParallelism
+    split = spark.read.parquet(f"{SF_DIR}/documents.parquet").repartition(2 * n)
+    monkeypatch.setattr(
+        type(split), "inputFiles", lambda self: ["nosuchfs://bucket/documents.parquet"]
+    )
+    with pytest.warns(RuntimeWarning, match="cannot read the input files' layout"):
+        out = _spread_for_compute(split, always_spread_small=False)
+    assert out.rdd.getNumPartitions() == n
