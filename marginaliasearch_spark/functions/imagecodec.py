@@ -414,15 +414,3 @@ def phash64(arr: np.ndarray) -> int:
 
 def hamming64(a: int, b: int) -> int:
     return bin((a ^ b) & 0xFFFFFFFFFFFFFFFF).count("1")
-
-
-def phash_batch(bufs) -> np.ndarray:
-    """Decode+phash a batch of encoded images → int64 array (−1 on decode error)."""
-    out = np.empty(len(bufs), dtype=np.int64)
-    for i, buf in enumerate(bufs):
-        try:
-            arr, _ = decode_image(bytes(buf))
-            out[i] = phash64(arr)
-        except (ValueError, zlib.error):
-            out[i] = -1
-    return out

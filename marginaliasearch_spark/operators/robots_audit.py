@@ -19,11 +19,13 @@ domains it broadcast-joins (zero shuffle of the big side); above it, the
 corpus repartitions by domain and shuffle-hash joins (the corpus side
 shuffles ONCE on its natural key — the same key downstream recrawl
 scheduling partitions by).  Either way ``is_allowed`` evaluates in an
-Arrow UDF that parses each distinct robots text ONCE per batch (LRU over
-the text), never per row.
+iterator Arrow UDF that parses each distinct robots text ONCE per task
+(one LRU over the text, kept across the task's batches), never per row.
 """
 
 from __future__ import annotations
+
+from typing import Iterator, Tuple
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
@@ -61,7 +63,7 @@ def robots_audit(
     explicit mode."""
 
     @F.arrow_udf(T.BooleanType())
-    def allowed(urls: pa.Array, robots_txt: pa.Array) -> pa.Array:
+    def allowed(batches: Iterator[Tuple[pa.Array, pa.Array]]) -> Iterator[pa.Array]:
         from functools import lru_cache
 
         from ..functions.robots import parse_robots_txt
@@ -70,13 +72,14 @@ def robots_audit(
         def rules_for(txt):
             return parse_robots_txt(txt, user_agent)
 
-        return pa.array(
-            [
-                rules_for(txt).is_allowed(u)
-                for u, txt in zip(urls.to_pylist(), robots_txt.to_pylist())
-            ],
-            pa.bool_(),
-        )
+        for urls, robots_txt in batches:
+            yield pa.array(
+                [
+                    rules_for(txt).is_allowed(u)
+                    for u, txt in zip(urls.to_pylist(), robots_txt.to_pylist())
+                ],
+                pa.bool_(),
+            )
 
     dim = robots.select(domain_col, robots_col)
     if join_mode == "auto":

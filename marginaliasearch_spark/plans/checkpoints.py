@@ -6,7 +6,9 @@ so the same mechanics are provided over plain parquet:
 
 - every wave commits a numbered snapshot manifest (JSON) listing, per
   table, the live data paths (append tables accumulate paths, replace
-  tables point at the latest version);
+  tables point at the latest version), and whether a token-budgeted
+  (``group_key="top_domain"``) wave has run, the one flag the views read
+  besides the paths;
 - resume = load the last committed manifest and continue from its wave;
 - a killed run leaves at most an uncommitted wave directory behind, which
   the next run ignores (atomic commit = manifest write + rename).
@@ -19,7 +21,7 @@ time travel.  The analogue of the reference's WorkLog+WARC-resync resume
 (ref: code/processes/crawling-process/java/nu/marginalia/crawl/
 CrawlerMain.java:652-673, CrawlerWarcResynchronizer.java:31-103) comes
 for free: the state views at the last snapshot *are* the resync state,
-and they are a function of the snapshot's path lists alone.
+and they are a function of the snapshot's manifest alone.
 """
 
 from __future__ import annotations
@@ -31,7 +33,7 @@ from typing import Optional
 
 APPEND_TABLES = ("wave_out",)  # unified append log; crawl_data/fetch_log/
 # visits are row_kind-filtered views over it (one physical write per wave)
-REPLACE_TABLES = ("domain_state", "wave_offsets", "wave_out_compacted")
+REPLACE_TABLES = ("domain_state", "wave_out_compacted")
 # domain_state is init_run's base table, never rewritten by a wave: the
 # crawl state (frontier and each domain's phase/state_json) is read
 # merge-on-read from wave_out
@@ -41,10 +43,6 @@ REPLACE_TABLES = ("domain_state", "wave_offsets", "wave_out_compacted")
 # column) and truncates the wave_out append list; older snapshots keep
 # referencing the original files (time travel intact) until
 # expire_snapshots reclaims them
-# wave_offsets is REPLACED: the token-budget schedule is recomputed each
-# wave from cumulative per-domain durations (one offset per domain for
-# the whole run — the reference's semaphore is held for a domain's entire
-# crawl), so only the latest table is live
 
 
 class SnapshotCatalog:
@@ -90,13 +88,20 @@ class SnapshotCatalog:
         wave: int,
         table_paths: dict[str, Optional[str]],
         truncate_append: Optional[set] = None,
+        budgeted: bool = False,
     ) -> dict:
         """Commit wave N: append-table paths accumulate, replace-table paths
         supersede.  ``truncate_append`` names append tables whose
         accumulated path list restarts at this snapshot (compaction folded
-        them elsewhere).  Atomic via write-to-temp + rename."""
+        them elsewhere).  ``budgeted`` (a token-budgeted wave ran) is
+        carried forward, so it stays set for the rest of the run.  Atomic
+        via write-to-temp + rename."""
         prev = self.load()
-        manifest = {"wave": wave, "tables": {}}
+        manifest = {
+            "wave": wave,
+            "budgeted": budgeted or prev.get("budgeted", False),
+            "tables": {},
+        }
         for t in APPEND_TABLES:
             if truncate_append and t in truncate_append:
                 paths = []

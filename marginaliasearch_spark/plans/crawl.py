@@ -31,9 +31,11 @@ latest rows are its whole state: ``domain_state`` is init_run's base row
 overlaid with the domain's latest ``domain_state`` row, and ``frontier``
 is the domain's rows from the latest wave that emitted any.  A domain
 that emits no frontier rows (faulted, permit-held, or terminal with an
-empty seen-set) keeps its previous rows.  ``compact_wave_out`` folds
-only those latest rows forward, which bounds the merge read; ``run_waves``
-folds on its own once ``FOLD_WAVES`` wave dirs are committed unfolded.
+empty seen-set) keeps its previous rows.  fetch_log's token-budget
+offsets are a read-time view of the same kind, over domain_state's
+clocks.  ``compact_wave_out`` folds only those latest rows forward, which
+bounds the merge read; ``run_waves`` folds on its own once
+``FOLD_WAVES`` wave dirs are committed unfolded.
 
 Scale notes (10^10-URL frontier / 1000 executors):
 - the wave cogroup hash-partitions on ``domain`` at an explicit width,
@@ -124,6 +126,20 @@ WAVE_OUT_READ_SCHEMA = T.StructType(
     WAVE_OUT_SCHEMA.fields + [T.StructField("wave", T.IntegerType())]
 )
 
+# the views over wave_out and their columns (``_read`` maps a view to its
+# row_kind; the frontier view adds ``bucket``)
+_VIEW_COLS = {
+    "crawl_data": [
+        "domain", "url", "http_status", "content_type", "image_id", "etag",
+        "last_modified", "phash", "psnr_ok", "lsh64", "has_cookies", "ip",
+        "timestamp", "request_time_ms", "header", "wave", "idx",
+    ],
+    "fetch_log": ["domain", "url", "action", "http_status", "virtual_ms", "idx", "wave"],
+    "visits": ["domain", "url", "idx", "wave"],
+    "edges": ["domain", "url", "url2", "idx", "wave"],
+    "frontier": ["domain", "url_hash", "url", "seq", "state"],
+}
+
 # run_waves folds the committed wave_out dirs into one compacted table
 # (compact_wave_out's rewrite) when their list reaches this length, so
 # the per-wave merge read never lists and scans more than FOLD_WAVES dirs
@@ -140,11 +156,11 @@ DOMAIN_STATE_SCHEMA = T.StructType(
 )
 
 
-def _state_rows(df: DataFrame, kind: str, **cols) -> DataFrame:
+def _state_rows(df: DataFrame, kind, **cols) -> DataFrame:
     """One state-side input of the wave cogroup, in STATE_IN_SCHEMA column
-    order: ``domain`` from ``df``, ``row_kind`` = ``kind``, each given
-    column (a name or Column) cast to its schema type; a column not given
-    is a typed null."""
+    order: ``domain`` from ``df``, ``row_kind`` = ``kind`` (a literal or a
+    Column), each given column (a name or Column) cast to its schema type;
+    a column not given is a typed null."""
     given = {"domain": "domain", "row_kind": F.lit(kind), **cols}
     out = []
     for f in STATE_IN_SCHEMA.fields:
@@ -162,28 +178,43 @@ def _kind_rows(state: pa.Table, kind: str, cols: list) -> list[dict]:
     return rows.select(cols).to_pylist()
 
 
-def _pinned(wave_out: DataFrame, kind: str, pin: DataFrame) -> DataFrame:
-    """The ``kind`` rows of ``wave_out`` that come from each domain's wave
-    in ``pin`` (domain, wave); a broadcast semi-join, so only those rows
-    reach any later shuffle."""
-    return wave_out.filter(F.col("row_kind") == kind).join(
-        F.broadcast(pin), ["domain", "wave"], "left_semi"
+def _run_code(phase):
+    """A phase as the integer run code the state read carries: 2 = active,
+    1 = pending (both runnable; a mid-crawl domain outranks a waiting one),
+    0 = terminal."""
+    return F.when(phase == "active", 2).when(phase == "pending", 1).otherwise(0)
+
+
+def _pinned(wave_out: DataFrame, pin: DataFrame) -> DataFrame:
+    """Each domain's live state rows in ``wave_out``: its domain_state row
+    from ``state_wave`` and its frontier rows from ``frontier_wave`` (the
+    columns of ``pin``).  One broadcast semi-join on (domain, row_kind,
+    wave), so only live rows reach any later shuffle."""
+    keys = pin.selectExpr(
+        "domain",
+        "stack(2, 'domain_state', state_wave, 'frontier', frontier_wave) AS (row_kind, wave)",
+    )
+    return wave_out.filter(F.col("row_kind").isin("domain_state", "frontier")).join(
+        F.broadcast(keys), ["domain", "row_kind", "wave"], "left_semi"
     )
 
 
 def _latest_waves(wave_out: DataFrame) -> DataFrame:
     """Per domain with wave_out state rows: ``state_wave``, the wave of its
-    latest domain_state row, and ``frontier_wave``, the latest wave that
-    emitted frontier rows for it (null when none has).  An aggregate over
-    integers only (a hash aggregate; the scan reads ``domain`` and the
-    partition columns)."""
+    latest domain_state row; ``frontier_wave``, the latest wave that
+    emitted frontier rows for it (null when none has); and ``run``, the
+    ``_run_code`` of that latest domain_state row.  An aggregate over
+    integers only (a hash aggregate; ``max_by`` skips the frontier rows'
+    null ordering)."""
     kind = F.col("row_kind")
+    state_wave = F.when(kind == "domain_state", F.col("wave"))
     return (
         wave_out.filter(kind.isin("domain_state", "frontier"))
         .groupBy("domain")
         .agg(
-            F.max(F.when(kind == "domain_state", F.col("wave"))).alias("state_wave"),
+            F.max(state_wave).alias("state_wave"),
             F.max(F.when(kind == "frontier", F.col("wave"))).alias("frontier_wave"),
+            F.max_by(_run_code(F.col("state")), state_wave).alias("run"),
         )
     )
 
@@ -262,11 +293,10 @@ def _make_wave_fn(
             )
 
     def _wave_fn_inner(domain: str, state: pa.Table, pages: pa.Table) -> pa.Table:
-        ds_rows = _kind_rows(state, "domain_state", ["state_json", "info_json"])
-        if not ds_rows:
+        info_rows = _kind_rows(state, "info", ["info_json"])
+        if not info_rows:
             return _OUT_ARROW.empty_table()
-        ds = ds_rows[0]
-        info_d = json.loads(ds["info_json"])
+        info_d = json.loads(info_rows[0]["info_json"])
         info = DomainInfo(
             domain=domain,
             proto=info_d.get("proto") or "https",
@@ -295,7 +325,8 @@ def _make_wave_fn(
         else:
             web = DomainPagesWeb(domain, info.proto, pages)
 
-        state_json = ds["state_json"]
+        latest = _kind_rows(state, "domain_state", ["state_json"])
+        state_json = latest[0]["state_json"] if latest else None
         if state_json is None:
             # fresh domain: setup (+ recrawl replay if prev data present)
             # replay order = stored order (the reference iterates the prior
@@ -430,16 +461,16 @@ OFFSETS_SCHEMA = T.StructType(
 
 def _make_offsets_fn():
     """Per-top-domain token-budget schedule (wordpress.com 16, blogspot 8,
-    substack 1, default 2 — LocalDomainCoordinator.java:88-100) as a SMALL
-    post-wave pass: this derives each member's virtual-clock start offset
-    from the greedy list schedule of their crawl durations onto `permits`
-    slots with the 1 s grant cadence.  Offsets land in a side table the
-    fetch_log view applies — the audit-trail timestamps reflect the
-    semaphore's grant times.  The permit bound itself is enforced
-    PHYSICALLY by the per-wave slot claim in ``run_waves`` (≤
-    permits members advance per wave); this pass adds the clock model on
-    top, and a blogspot.com-scale top-domain never serializes its
-    thousands of members into one task (the wave groups by domain)."""
+    substack 1, default 2 — LocalDomainCoordinator.java:88-100), applied
+    when ``fetch_log`` is read: each member's virtual-clock start offset is
+    the greedy list schedule of the members' cumulative crawl durations
+    onto `permits` slots with the 1 s grant cadence, so the audit-trail
+    timestamps reflect the semaphore's grant times.  The permit bound
+    itself is enforced PHYSICALLY by the per-wave slot claim in
+    ``run_waves`` (≤ permits members advance per wave); this adds the
+    clock model on top, grouped per top-domain only at read time (the wave
+    groups by domain, so a blogspot.com-scale top-domain never serializes
+    its thousands of members into one task)."""
     from ..operators.scheduling import DEFAULT_PERMITS, TOP_DOMAIN_PERMITS
 
     def offsets_fn(key, table):
@@ -536,82 +567,50 @@ class SparkCrawlEngine:
         return F.pmod(F.xxhash64(col), F.lit(self.n_buckets)).cast("int")
 
     def _read(self, table: str) -> Optional[DataFrame]:
-        if table == "crawl_data":
-            return self._wave_view(
-                "crawl_data",
-                ["domain", "url", "http_status", "content_type", "image_id",
-                 "etag", "last_modified", "phash", "psnr_ok", "lsh64",
-                 "has_cookies", "ip", "timestamp", "request_time_ms",
-                 "header", "wave", "idx"],
-            )
-        if table == "fetch_log":
-            v = self._wave_view(
-                "fetch_log", ["domain", "url", "action", "http_status", "virtual_ms", "idx", "wave"]
-            )
-            offp = self.catalog.paths("wave_offsets")
-            if v is not None and offp:
-                # token-budget offsets (top_domain mode): ONE offset per
-                # domain for the whole run (latest replaced table), shifting
-                # the audit trail by the domain's semaphore-grant time
-                off = self.spark.read.schema(OFFSETS_SCHEMA).parquet(*offp)
-                v = (
-                    v.join(F.broadcast(off), ["domain"], "left")
-                    .withColumn(
-                        "virtual_ms",
-                        F.col("virtual_ms") + F.coalesce(F.col("offset_ms"), F.lit(0)),
-                    )
-                    .drop("offset_ms")
-                )
-            return v
-        if table == "visits":
-            return self._wave_view("visits", ["domain", "url", "idx", "wave"], kind="visit")
-        if table == "edges":
-            v = self._wave_view("edges", ["domain", "url", "url2", "idx", "wave"], kind="edge")
-            if v is None:
-                return None
-            return v.withColumnRenamed("url", "src").withColumnRenamed("url2", "dst")
-        tables = self.catalog.load()["tables"]
+        manifest = self.catalog.load()
+        tables = manifest["tables"]
+        if table not in _VIEW_COLS and table not in ("domain_state", "wave_offsets"):
+            paths = tables.get(table)
+            return self.spark.read.parquet(*paths) if paths else None
+        w = self._wave_out_all(tables)
         if table == "domain_state":
-            if not tables.get("domain_state"):
-                return None
-            return self._state(tables, self._wave_out_all(tables)).select(
-                *DOMAIN_STATE_SCHEMA.names
-            )
+            return self._domain_state(tables, w)
+        if table == "wave_offsets":
+            return self._offsets(tables, w) if manifest.get("budgeted") else None
+        if w is None:
+            return None
         if table == "frontier":
-            w = self._wave_out_all(tables)
-            if w is None:
-                return None
-            pin = _latest_waves(w).select("domain", F.col("frontier_wave").alias("wave"))
-            return _pinned(w, "frontier", pin).select(
-                "domain", "url_hash", "url", "seq", "state",
-                self._bucket(F.col("domain")).alias("bucket"),
+            return (
+                _pinned(w, _latest_waves(w))
+                .filter(F.col("row_kind") == "frontier")
+                .select(*_VIEW_COLS["frontier"], self._bucket(F.col("domain")).alias("bucket"))
             )
-        paths = tables.get(table)
-        if not paths:
-            return None
-        return self.spark.read.parquet(*paths)
+        # append views: wave_out is written partitionBy(row_kind) under
+        # wave=NNNNNN dirs, so with basePath at the table root BOTH wave and
+        # row_kind are partition columns and the kind filter prunes whole
+        # directories at planning time (a 10^4-wave run's fetch_log query
+        # opens only fetch_log files); a compacted table unions in
+        kind = {"visits": "visit", "edges": "edge"}.get(table, table)
+        v = w.filter(F.col("row_kind") == kind).select(*_VIEW_COLS[table])
+        if table == "edges":
+            return v.withColumnRenamed("url", "src").withColumnRenamed("url2", "dst")
+        if table == "fetch_log" and manifest.get("budgeted"):
+            # token-budget offsets (a top_domain wave ran at or before this
+            # snapshot): ONE offset per domain for the whole run, shifting
+            # the audit trail by the domain's semaphore-grant time
+            v = (
+                v.join(F.broadcast(self._offsets(tables, w)), ["domain"], "left")
+                .withColumn(
+                    "virtual_ms",
+                    F.col("virtual_ms") + F.coalesce(F.col("offset_ms"), F.lit(0)),
+                )
+                .drop("offset_ms")
+            )
+        return v
 
-    def _wave_view(self, table: str, cols: list, kind: Optional[str] = None) -> Optional[DataFrame]:
-        """row_kind-filtered view over the wave output log.
-
-        wave_out is written partitionBy(row_kind) under wave=NNNNNN dirs,
-        so with basePath at the table root BOTH wave and row_kind are
-        Hive-style partition columns: the kind filter prunes whole
-        directories at planning time — a 10^4-wave run's fetch_log query
-        opens only fetch_log files, not every wave's every kind.  A
-        compaction snapshot (compact_wave_out) folds prior waves into one
-        row_kind-partitioned table that unions in here."""
-        df = self._wave_out_all()
-        if df is None:
-            return None
-        return df.filter(F.col("row_kind") == (kind or table)).select(*cols)
-
-    def _wave_out_all(self, tables: Optional[dict] = None) -> Optional[DataFrame]:
-        """Every wave_out row of ``tables`` (default: the latest snapshot's):
-        the per-wave dirs unioned with any compacted table (None when there
-        are neither)."""
-        if tables is None:
-            tables = self.catalog.load()["tables"]
+    def _wave_out_all(self, tables: dict) -> Optional[DataFrame]:
+        """Every wave_out row of ``tables``: the per-wave dirs unioned with
+        any compacted table (None when there are neither)."""
         reader = self.spark.read.schema(WAVE_OUT_READ_SCHEMA)
         parts = []
         if tables.get("wave_out"):
@@ -630,40 +629,59 @@ class SparkCrawlEngine:
         return df
 
     def _state(self, tables: dict, w: Optional[DataFrame]) -> DataFrame:
-        """domain_state merge-on-read over the base table of ``tables`` and
-        its wave_out rows ``w``, with the two columns of ``_latest_waves``
-        (``state_wave`` is 0 for a domain still on init_run's base row).
-
-        ``top_domain``/``info_json`` come from the base row (the only one
-        that carries them), ``phase``/``state_json`` from the domain's
-        latest domain_state row, picked through the broadcast wave numbers:
-        only integers and the domain key are aggregated, so no other
-        string reaches a sort or an aggregate exchange."""
-        base = self.spark.read.schema(DOMAIN_STATE_SCHEMA).parquet(*tables["domain_state"])
+        """The state read of ``tables``: init_run's base rows (the columns
+        of DOMAIN_STATE_SCHEMA, phase/state_json as init_run wrote them)
+        joined with the ``_latest_waves`` columns of its wave_out rows
+        ``w``; ``run`` falls back to the base phase's code for a domain
+        with no wave_out rows.  Only integers and the domain key are
+        aggregated; a domain's latest state_json is read through
+        ``_pinned``."""
+        base = self._base(tables)
+        run = _run_code(F.col("phase"))
         if w is None:
-            return base.withColumn("state_wave", F.lit(0)).withColumn(
-                "frontier_wave", F.lit(None).cast("int")
-            )
-        # each domain's latest domain_state row, with its wave numbers (a
-        # domain with wave_out rows always has one: every advanced domain
-        # emits a domain_state row in the wave of its frontier rows)
-        latest = (
-            w.filter(F.col("row_kind") == "domain_state")
-            .join(F.broadcast(_latest_waves(w)), "domain")
-            .filter(F.col("wave") == F.col("state_wave"))
-            .select(
-                "domain", F.col("state").alias("_phase"), F.col("state_json").alias("_json"),
-                "state_wave", "frontier_wave",
-            )
+            return base.withColumn("run", run)
+        return base.join(_latest_waves(w), "domain", "left").withColumn(
+            "run", F.coalesce(F.col("run"), run)
         )
-        moved = F.col("state_wave").isNotNull()
-        return base.join(latest, "domain", "left").select(
+
+    def _base(self, tables: dict) -> DataFrame:
+        return self.spark.read.schema(DOMAIN_STATE_SCHEMA).parquet(*tables["domain_state"])
+
+    def _domain_state(self, tables: dict, w: Optional[DataFrame]) -> Optional[DataFrame]:
+        """The domain_state view of ``tables`` (wave_out rows ``w``):
+        init_run's base rows with each moved domain's pinned latest
+        domain_state row laid over phase/state_json."""
+        if not tables.get("domain_state"):
+            return None
+        base = self._base(tables)
+        if w is None:
+            return base
+        live = (
+            _pinned(w, _latest_waves(w))
+            .filter(F.col("row_kind") == "domain_state")
+            .select("domain", F.col("state").alias("_phase"), F.col("state_json").alias("_json"))
+        )
+        moved = F.col("_phase").isNotNull()
+        return base.join(live, "domain", "left").select(
             "domain", "top_domain", "info_json",
             F.when(moved, F.col("_phase")).otherwise(F.col("phase")).alias("phase"),
             F.when(moved, F.col("_json")).otherwise(F.col("state_json")).alias("state_json"),
-            F.coalesce(F.col("state_wave"), F.lit(0)).alias("state_wave"),
-            "frontier_wave",
         )
+
+    def _offsets(self, tables: dict, w: Optional[DataFrame]) -> DataFrame:
+        """The token-budget offsets (domain, offset_ms) of ``tables``, a
+        pure function of its domain_state view: each domain's cumulative
+        ``clock_ms`` scheduled per top-domain (``_make_offsets_fn``); a
+        domain that never started holds no slot."""
+        dur = F.coalesce(
+            F.get_json_object("state_json", "$.clock_ms").cast("long"), F.lit(0)
+        )
+        durs = (
+            self._domain_state(tables, w)
+            .select("top_domain", "domain", dur.alias("dur_ms"))
+            .filter(F.col("dur_ms") > 0)
+        )
+        return durs.groupBy("top_domain").applyInArrow(_make_offsets_fn(), OFFSETS_SCHEMA)
 
     def read_table(self, table: str) -> Optional[DataFrame]:
         return self._read(table)
@@ -797,10 +815,18 @@ class SparkCrawlEngine:
         budget PHYSICALLY (at most `permits` member domains advance per
         wave, mid-crawl members holding their slot — the reference's
         semaphore, LocalDomainCoordinator.java:22-122) and additionally
-        models the 1 s grant cadence on the virtual clock via the offsets
-        side table; per-domain order and seen-set are unchanged.  The wave
-        still groups by domain, so a giant top-domain's runnable members
-        stay spread across tasks.
+        models the 1 s grant cadence on the virtual clock: the run's
+        manifest records that a top_domain wave ran, and the ``fetch_log``
+        view then shifts each domain's audit trail by its scheduled grant
+        time; per-domain order and seen-set are unchanged.  The wave still
+        groups by domain, so a giant top-domain's runnable members stay
+        spread across tasks.
+
+        The state read is one integer aggregate (``_state``): each
+        domain's ``run`` code picks the runnable set, and one broadcast
+        pin of the runnable domains' live rows (``_pinned``) feeds the
+        cogroup their latest state_json and frontier.  ``wave_out`` is the
+        wave's only write.
 
         The wave sets its own width: both cogroup sides are hash-partitioned
         on ``domain`` into min(runnable domains, defaultParallelism)
@@ -828,32 +854,28 @@ class SparkCrawlEngine:
                 folded = {"wave_out_compacted": cpath}
                 tables = {**tables, "wave_out": [], "wave_out_compacted": [cpath]}
             # one listing of this snapshot's wave_out files serves the state
-            # merge and the frontier pin
+            # read and the live-row pin
             w = self._wave_out_all(tables)
-            state = self._state(tables, w)
-            if group_key == "top_domain":
-                state = state.persist()  # the offsets pass below reads it again
-            active = state.filter(F.col("phase").isin("pending", "active"))
+            active = self._state(tables, w).filter(F.col("run") > 0)
             if group_key == "top_domain":
                 # PHYSICAL permit enforcement (the reference's semaphore is
                 # held for a domain's whole crawl —
                 # LocalDomainCoordinator.java:22-122): at most `permits`
                 # member domains of a top-domain run per wave.  Mid-crawl
-                # members keep their slot (phase='active' outranks
-                # 'pending'); freed slots go to pending members in
+                # members keep their slot (run code 2, active, outranks 1,
+                # pending); freed slots go to pending members in
                 # deterministic domain order (the lock-retry loop of
                 # CrawlerMain.java:405-457, with domain order as the
                 # determinism pin).  Held domains simply skip the wave —
-                # they emit no rows, so their latest rows stay their state.  The
-                # offsets side table below stays as the 1 s-cadence
+                # they emit no rows, so their latest rows stay their state.
+                # The fetch_log view's offsets are the 1 s-cadence
                 # virtual-clock audit model of the same semaphore.
                 from pyspark.sql import Window
 
                 from ..operators.scheduling import permits_col
 
                 slot_w = Window.partitionBy("top_domain").orderBy(
-                    F.desc((F.col("phase") == "active").cast("int")),
-                    F.col("domain"),
+                    F.desc("run"), F.col("domain")
                 )
                 active = (
                     active.withColumn("_slot", F.row_number().over(slot_w))
@@ -867,49 +889,42 @@ class SparkCrawlEngine:
                 # sort-limit compiles to TakeOrderedAndProject — a top-C
                 # selection, not a single-partition shuffle of the state.
                 launching = (
-                    active.filter(F.col("phase") == "pending")
+                    active.filter(F.col("run") == 1)
                     .orderBy("domain")
                     .limit(int(self.conn_launches_per_wave))
                 )
-                active = active.filter(F.col("phase") == "active").unionByName(
-                    launching
-                )
+                active = active.filter(F.col("run") == 2).unionByName(launching)
             if self.global_request_cap is not None:
                 # global request semaphore: at most N domains in flight
-                # per quantum; holders (phase='active') outrank waiters,
-                # ties broken by domain — the same grant discipline as the
+                # per quantum; holders (run code 2) outrank waiters, ties
+                # broken by domain — the same grant discipline as the
                 # per-top-domain permits above.  Skipped domains emit no
                 # rows, keep their latest state and retry next wave.
-                active = active.orderBy(
-                    F.desc((F.col("phase") == "active").cast("int")),
-                    F.col("domain"),
-                ).limit(int(self.global_request_cap))
-            # the runnable set feeds the state side, the frontier pin and
+                active = active.orderBy(F.desc("run"), F.col("domain")).limit(
+                    int(self.global_request_cap)
+                )
+            # the runnable set feeds the state side, the live-row pin and
             # the pages semi-join: cache it, and count it once — the count
             # is both the wave's width and the termination test
             active = active.persist()
             n_active = active.count()
             if not n_active:
                 active.unpersist()
-                state.unpersist()
                 break
             width = min(n_active, self.spark.sparkContext.defaultParallelism)
 
-            left = _state_rows(
-                active, "domain_state", state_json="state_json", info_json="info_json"
-            )
+            left = _state_rows(active, "info", info_json="info_json")
             if w is not None:
-                # each runnable domain's frontier is its rows from its latest
-                # frontier wave; older waves' rows never reach the shuffle
-                pin = active.select("domain", F.col("frontier_wave").alias("wave"))
-                fr = _pinned(w, "frontier", pin)
+                # each runnable domain's live rows: its latest domain_state
+                # row (its state_json) and its latest frontier wave's rows;
+                # older waves' rows never reach the shuffle
                 left = left.unionByName(
                     _state_rows(
-                        fr, "frontier", url_hash="url_hash", url="url", seq="seq",
-                        state="state",
+                        _pinned(w, active), F.col("row_kind"), url_hash="url_hash",
+                        url="url", seq="seq", state="state", state_json="state_json",
                     )
                 )
-            pending = active.filter(F.col("phase") == "pending").select("domain")
+            pending = active.filter(F.col("run") == 1).select("domain")
             if prev_crawl_df is not None:
                 pcd = prev_crawl_df
                 # older prev-crawl tables may lack the validator columns
@@ -972,48 +987,13 @@ class SparkCrawlEngine:
             )
             opath = self.catalog.wave_path("wave_out", wave)
             out.write.partitionBy("row_kind").mode("overwrite").parquet(opath)
-            table_paths: dict[str, Optional[str]] = {"wave_out": opath, **folded}
-
-            if group_key == "top_domain":
-                # Token-budget schedule, recomputed each wave from the
-                # CUMULATIVE per-domain durations and REPLACED: one offset
-                # per domain for the whole run — the reference's semaphore
-                # is held for a domain's entire crawl, so per-wave
-                # scheduling would both violate the permits invariant and
-                # break per-domain clock monotonicity across waves.
-                # The state after this wave is the wave-start state with
-                # the domain_state rows this wave wrote laid over it.
-                wrote = (
-                    self._wave_out_all({"wave_out": [opath]})
-                    .filter(F.col("row_kind") == "domain_state")
-                    .select("domain", F.col("state_json").alias("_json"))
-                )
-                durs = (
-                    state.join(F.broadcast(wrote), "domain", "left")
-                    .select(
-                        "top_domain",
-                        "domain",
-                        F.coalesce(
-                            F.get_json_object(
-                                F.coalesce("_json", "state_json"), "$.clock_ms"
-                            ).cast("long"),
-                            F.lit(0),
-                        ).alias("dur_ms"),
-                    )
-                    .filter(F.col("dur_ms") > 0)  # never-started domains hold no slot
-                )
-                offsets = durs.groupBy("top_domain").applyInArrow(
-                    _make_offsets_fn(), OFFSETS_SCHEMA
-                )
-                offpath = self.catalog.wave_path("wave_offsets", wave)
-                offsets.write.mode("overwrite").parquet(offpath)
-                table_paths["wave_offsets"] = offpath
-
             self.catalog.commit(
-                wave, table_paths, truncate_append={"wave_out"} if folded else None
+                wave,
+                {"wave_out": opath, **folded},
+                truncate_append={"wave_out"} if folded else None,
+                budgeted=group_key == "top_domain",
             )
             active.unpersist()
-            state.unpersist()
             waves_done += 1
             # termination: when no permit or cap held a runnable domain
             # back, every runnable domain ran this wave, and the observed
@@ -1060,15 +1040,8 @@ class SparkCrawlEngine:
         read after a fold is bounded by the live state, not by the number
         of waves before it."""
         w = self._wave_out_all(tables)
-        latest = _latest_waves(w)
-        df = (
-            w.filter(~F.col("row_kind").isin("domain_state", "frontier"))
-            .unionByName(
-                _pinned(w, "domain_state", latest.select("domain", F.col("state_wave").alias("wave")))
-            )
-            .unionByName(
-                _pinned(w, "frontier", latest.select("domain", F.col("frontier_wave").alias("wave")))
-            )
+        df = w.filter(~F.col("row_kind").isin("domain_state", "frontier")).unionByName(
+            _pinned(w, _latest_waves(w))
         )
         cpath = os.path.join(self.out_dir, "wave_out_compacted", f"v={snap:06d}")
         df.write.partitionBy("row_kind").mode("overwrite").parquet(cpath)

@@ -12,9 +12,10 @@ SnapshotCatalog operation maps onto the corresponding Iceberg call.
 | checkpoints.py operation | Iceberg call | semantic notes |
 |---|---|---|
 | `commit()` append-table path accumulation (`wave_out`) | `df.writeTo(t).append()` (AppendFiles) | both are O(new files); old files untouched |
-| `commit()` replace tables (`domain_state` base, `wave_offsets`) | `df.writeTo(t).createOrReplace()` (ReplaceTable as one snapshot) | whole-table supersede; prior version still time-travelable |
+| `commit()` replace tables (`domain_state` base, `wave_out_compacted`) | `df.writeTo(t).createOrReplace()` (ReplaceTable as one snapshot) | whole-table supersede; prior version still time-travelable |
 | frontier / domain_state views: each domain's latest rows in `wave_out` | merge-on-read (format v2 `write.merge.mode=merge-on-read`): the wave's rows are the delta, readers merge them at scan time | no wave rewrites state it already wrote, so `commit_wave` has no partition-overwrite arm |
 | manifest write + `os.replace` atomicity | Iceberg snapshot commit (atomic metadata swap) | identical all-or-nothing visibility |
+| manifest `budgeted` flag (carried forward by `commit()`) | snapshot summary property on each `wave_out` append (`writeTo(t).option("snapshot-property.budgeted", …)`), read from `t.snapshots` at the wave tag | per snapshot, so rollback and time travel see the flag as it stood; the fetch_log view's offsets are computed from it |
 | wave number in manifest | `ALTER TABLE t CREATE TAG wave_N` | a named ref per wave pins every table version for resume |
 | `load(n)` / `paths(table, n)` | `SELECT … VERSION AS OF 'wave_N'` | time travel read |
 | `latest_snapshot()` + resume | read current table state (+ `t.refs` metadata table for the newest wave tag) | a killed run's uncommitted write never produced a snapshot → invisible, exactly like our ignored uncommitted wave dir |

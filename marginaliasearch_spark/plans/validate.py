@@ -153,23 +153,6 @@ def validate_image_ids(df: DataFrame, seed: int = 42, psnr_min: float = 40.0) ->
     return rows.repartition(n).mapInArrow(batches, VERDICT_SCHEMA)
 
 
-def phash_column(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
-    """Recompute phash from encoded bytes as a column (Arrow-batched)."""
-    from ..functions.imagecodec import phash_batch
-
-    schema = "image_id string, phash_computed long"
-    out_arrow = to_arrow_schema(T.DataType.fromDDL(schema))
-
-    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in it:
-            ph = phash_batch(batch.column(bytes_col).to_pylist())
-            yield pa.RecordBatch.from_arrays(
-                [batch.column("image_id"), pa.array(ph, pa.int64())], schema=out_arrow
-            )
-
-    return df.select("image_id", bytes_col).mapInArrow(batches, schema)
-
-
 def content_unchanged_pairs(
     a: DataFrame, b: DataFrame, id_col: str = "image_id", max_hamming: int = 4
 ) -> DataFrame:

@@ -93,7 +93,8 @@ def test_resume_across_mid_crawl_compaction(spark, tmp_path):
 
 
 def test_compaction_keeps_fetch_log_offsets_join(spark, tmp_path):
-    """Budget mode's offsets join still applies over the compacted view."""
+    """Budget mode's offsets join still applies over the compacted view,
+    and after the expiry that ``submit_crawl.py --compact`` runs next."""
     pages, domains, specs = _mkweb(spark, n_domains=12)
     eng = SparkCrawlEngine(spark, str(tmp_path / "td"), seed=SEED, n_buckets=4)
     eng.init_run(domains, specs)
@@ -104,3 +105,6 @@ def test_compaction_keeps_fetch_log_offsets_join(spark, tmp_path):
     eng.compact_wave_out()
     after = sorted(tuple(r) for r in eng.read_table("fetch_log").collect())
     assert after == before
+    assert eng.expire_snapshots(keep_last=1)
+    expired = sorted(tuple(r) for r in eng.read_table("fetch_log").collect())
+    assert expired == before

@@ -58,7 +58,7 @@ def test_commit_wave_sequence(rig, spark):
     a.commit_wave(
         7,
         wave_out_df=_FakeDF(rec),
-        replace_dfs={"domain_state": _FakeDF(rec), "wave_offsets": _FakeDF(rec)},
+        replace_dfs={"domain_state": _FakeDF(rec), "wave_out_compacted": _FakeDF(rec)},
     )
     kinds = [c[0] for c in rec.calls]
     assert kinds == ["append", "createOrReplace", "createOrReplace",
@@ -67,7 +67,7 @@ def test_commit_wave_sequence(rig, spark):
     tags = [c[1] for c in rec.calls if c[0] == "sql"]
     assert all("CREATE OR REPLACE TAG `wave_000007`" in t for t in tags)
     assert {t.split(" ")[2] for t in tags} == {
-        "msx.crawl.wave_out", "msx.crawl.domain_state", "msx.crawl.wave_offsets",
+        "msx.crawl.wave_out", "msx.crawl.domain_state", "msx.crawl.wave_out_compacted",
     }
 
 

@@ -32,10 +32,7 @@ def _fixture(spark):
 
 def test_audit_verdicts(spark):
     corpus, robots = _fixture(spark)
-    got = {
-        r["url"]: r["allowed"] for r in robots_audit(corpus, robots).collect()
-    }
-    assert got == {
+    want = {
         "https://a.example/ok.html": True,
         "https://a.example/private/x.html": False,
         "https://b.example/anything.html": True,  # missing robots → ALLOW_ALL
@@ -43,6 +40,25 @@ def test_audit_verdicts(spark):
         "https://c.example/page.html": True,
         "https://d.example/page.html": True,  # NULL robots → ALLOW_ALL
     }
+    got = {
+        r["url"]: r["allowed"] for r in robots_audit(corpus, robots).collect()
+    }
+    assert got == want
+    # the parse cache spans a task's batches: two-row batches, same verdicts
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old_batch = spark.conf.get(key, None)
+    spark.conf.set(key, "2")
+    try:
+        got = {
+            r["url"]: r["allowed"]
+            for r in robots_audit(corpus.coalesce(1), robots).collect()
+        }
+        assert got == want
+    finally:
+        if old_batch is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old_batch)
     refused = {r["url"] for r in newly_refused(corpus, robots).collect()}
     assert refused == {
         "https://a.example/private/x.html",

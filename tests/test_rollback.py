@@ -83,6 +83,8 @@ def _digest(df, cols):
 
 
 def _state_digests(engine):
+    """Digests of the state views and of fetch_log (its token-budget
+    offsets are computed from the state when it is read)."""
     return (
         _digest(
             engine.read_table("frontier"),
@@ -92,12 +94,16 @@ def _state_digests(engine):
             engine.read_table("domain_state"),
             ["domain", "top_domain", "info_json", "phase", "state_json"],
         ),
+        _digest(
+            engine.read_table("fetch_log"),
+            ["domain", "url", "action", "http_status", "virtual_ms", "idx", "wave"],
+        ),
     )
 
 
 def test_merge_on_read_time_travel(spark, tmp_path):
-    """frontier and domain_state are merge-on-read views over wave_out.
-    Planted: a domain poisoned after wave 1 (its wave-2 fault barrier emits
+    """frontier and domain_state are merge-on-read views over wave_out, and
+    fetch_log's offsets are a view over the state.  Planted: a domain poisoned after wave 1 (its wave-2 fault barrier emits
     no frontier rows, so it keeps its wave-1 rows) and a permit-held member
     (example.net has 2 permits, 3 members).  Every snapshot's views are
     reproduced by rollback_to and by compaction, and a fresh engine resumed

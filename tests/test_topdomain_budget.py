@@ -87,7 +87,7 @@ def test_topdomain_grouping_equivalence(spark, tmp_path):
 def test_hundred_member_topdomain_budget_and_parallelism(spark, tmp_path):
     """A blogspot.com-scale top-domain (100 members, permits=8): the wave
     spreads members across per-domain tasks (no serial mega-group), and the
-    offsets side table reproduces the greedy permit schedule exactly —
+    offsets view reproduces the greedy permit schedule exactly —
     ≤8 concurrent members, ≥1 s grant cadence."""
     import pandas as pd
 
@@ -125,13 +125,10 @@ def test_hundred_member_topdomain_budget_and_parallelism(spark, tmp_path):
     eng.init_run(doms, doms.select("domain", "crawl_depth", "seed_urls"))
     eng.run_waves(pages, wave_budget=None, group_key="top_domain")
 
-    # offsets side table: one row per member
-    offp = eng.catalog.paths("wave_offsets")
-    assert offp, "budget mode writes the offsets side table"
-    offs = {
-        r["domain"]: r["offset_ms"]
-        for r in spark.read.parquet(*offp).collect()
-    }
+    # offsets view: one row per member
+    off = eng.read_table("wave_offsets")
+    assert off is not None, "budget mode schedules offsets"
+    offs = {r["domain"]: r["offset_ms"] for r in off.collect()}
     assert len(offs) == n
 
     # exact budget semantics: recompute the greedy schedule from the
@@ -187,9 +184,9 @@ def test_hundred_member_topdomain_budget_and_parallelism(spark, tmp_path):
 
 
 def test_multiwave_budget_offsets_consistent(spark, tmp_path):
-    """wave_budget + top_domain mode: the offsets table is recomputed from
-    CUMULATIVE durations and replaced (one offset per domain for the run),
-    so the shifted audit trail stays monotonic per domain and the permit
+    """wave_budget + top_domain mode: the offsets are scheduled from
+    CUMULATIVE durations (one offset per domain for the run), so the
+    shifted audit trail stays monotonic per domain and the permit
     schedule holds across waves."""
     web, _ = generate_web(seed=SEED, n_domains=12, mean_pages=10)
     pages_pdf, domains_pdf = web_to_frames(web)
@@ -216,8 +213,7 @@ def test_multiwave_budget_offsets_consistent(spark, tmp_path):
         TOP_DOMAIN_PERMITS,
     )
 
-    offp = e.catalog.paths("wave_offsets")
-    offs = {r["domain"]: r["offset_ms"] for r in spark.read.parquet(*offp).collect()}
+    offs = {r["domain"]: r["offset_ms"] for r in e.read_table("wave_offsets").collect()}
     durs = {
         r["domain"]: int(r["crawl_time_ms"] or 0)
         for r in e.crawl_meta().select("domain", "crawl_time_ms").collect()
@@ -231,3 +227,95 @@ def test_multiwave_budget_offsets_consistent(spark, tmp_path):
         permits = TOP_DOMAIN_PERMITS.get(top, DEFAULT_PERMITS)
         expected.update(_schedule_offsets(sorted(items), permits))
     assert offs == expected
+
+
+def test_mixed_mode_offsets_follow_the_state(spark, tmp_path):
+    """domain waves, then top_domain waves, then one domain wave: fetch_log
+    applies no offsets until a top_domain wave has run; from then on, at
+    every snapshot, it shifts each domain's trail by the greedy schedule of
+    the cumulative durations at that snapshot.  After the closing domain
+    wave that is the whole run's clocks, not the last budgeted wave's
+    schedule, so the offsets move with the domains that wave advanced."""
+    import os
+
+    from marginaliasearch_spark.operators.scheduling import (
+        DEFAULT_PERMITS,
+        TOP_DOMAIN_PERMITS,
+    )
+
+    import pandas as pd
+
+    # 3 members of a 2-permit top-domain and 2 of a 1-permit one, each a
+    # 21-page site: many waves at wave_budget=3, so the budgeted waves
+    # hold members back and the closing domain wave advances them all
+    doms = ["a1.example.net", "a2.example.net", "a3.example.net",
+            "s1.substack.com", "s2.substack.com"]
+    rows, drows = [], []
+    for d in doms:
+        for path, links in [("/", [f"/p{k}.html" for k in range(20)])] + [
+            (f"/p{k}.html", []) for k in range(20)
+        ]:
+            rows.append({
+                "domain": d, "path": path, "param": None, "url": f"https://{d}{path}",
+                "status": 200, "redirect_to": None, "content_type": "text/html",
+                "image_id": None, "base_href": None, "links": links, "feed_links": [],
+                "body_marker": None, "etag": None, "last_modified": None, "body_text": None,
+            })
+        drows.append({
+            "domain": d, "top_domain": d.split(".", 1)[1], "proto": "https",
+            "probe": "ok", "robots_txt": None, "site_kind": "default",
+            "crawl_depth": 100, "seed_urls": [], "sitemap_urls": [],
+            "generator_meta": "", "has_lemmy_config": False,
+        })
+    ps, ds = spark_schemas()
+    pages = spark.createDataFrame(normalize_pages_pdf(pd.DataFrame(rows)), schema=ps)
+    domains = spark.createDataFrame(pd.DataFrame(drows), schema=ds)
+    out = str(tmp_path / "mixed")
+    e = SparkCrawlEngine(spark, out, seed=SEED, n_buckets=4)
+    e.init_run(domains, domains.select("domain", "crawl_depth", "seed_urls"))
+
+    def schedule():
+        state = e.read_table("domain_state").select(
+            "domain", "top_domain",
+            F.get_json_object("state_json", "$.clock_ms").cast("long").alias("ms"),
+        )
+        by_top: dict = {}
+        for r in state.collect():
+            if (r["ms"] or 0) > 0:
+                by_top.setdefault(r["top_domain"], []).append((r["domain"], r["ms"]))
+        offs: dict = {}
+        for top, items in by_top.items():
+            permits = TOP_DOMAIN_PERMITS.get(top, DEFAULT_PERMITS)
+            offs.update(_schedule_offsets(sorted(items), permits))
+        return offs
+
+    def check(budgeted):
+        off = e.read_table("wave_offsets")
+        if budgeted:
+            offs = {r["domain"]: r["offset_ms"] for r in off.collect()}
+            assert offs and offs == schedule()
+        else:
+            assert off is None
+            offs = {}
+        raw = (
+            spark.read.option("basePath", os.path.join(out, "wave_out"))
+            .parquet(*e.catalog.paths("wave_out"))
+            .filter(F.col("row_kind") == "fetch_log")
+        )
+        key = lambda r: (r["domain"], r["wave"], r["idx"])  # noqa: E731
+        want = {key(r): r["virtual_ms"] + offs.get(r["domain"], 0) for r in raw.collect()}
+        got = {key(r): r["virtual_ms"] for r in e.read_table("fetch_log").collect()}
+        assert got == want
+        return offs
+
+    def wave(group_key):
+        assert e.run_waves(pages, wave_budget=3, max_waves=1, group_key=group_key) == 1
+
+    for _ in range(2):
+        wave("domain")
+        check(budgeted=False)
+    for _ in range(2):
+        wave("top_domain")
+        last_budgeted = check(budgeted=True)
+    wave("domain")
+    assert check(budgeted=True) != last_budgeted
