@@ -726,8 +726,8 @@ def q_doc_fingerprint(spark, sf_dir):
 
 
 def q_payload_validate(spark, sf_dir):
-    """Image payload validation (decode/PSNR/caption/phash via mapInPandas
-    Arrow batches) over a deterministic corpus slice.  The oracle declares
+    """Image payload validation (decode/PSNR/caption/phash via mapInArrow
+    batches) over a deterministic corpus slice.  The oracle declares
     the input_hint's per-row invariant (decode ok, PSNR≥40 dB for lossy,
     caption equality, stored-phash match) must hold for EVERY row — the
     engine earns each flag through the real decode path."""

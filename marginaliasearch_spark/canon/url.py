@@ -668,15 +668,6 @@ class EdgeUrl:
             self._str = "".join(out)
         return self._str
 
-    def display(self) -> str:
-        out = [self.proto, "://", self.domain.address]
-        if self.port is not None:
-            out.append(f":{self.port}")
-        out.append(self.path)
-        if self.param is not None:
-            out.append("?" + self.param)
-        return "".join(out)
-
     def with_path_and_param(self, path: str, param: Optional[str]) -> "EdgeUrl":
         return EdgeUrl(self.proto, self.domain, self.port, path, param)
 

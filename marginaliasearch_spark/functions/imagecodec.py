@@ -134,16 +134,6 @@ def encode_png(arr: np.ndarray, filter_type: int = 0) -> bytes:
     )
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
-
-
 def _defilter_row(
     ftype: int, line: np.ndarray, prev: np.ndarray, bpp: int, stride: int
 ) -> np.ndarray:

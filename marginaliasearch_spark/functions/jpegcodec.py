@@ -523,13 +523,6 @@ class _BitReader:
         return v
 
 
-def _extend(v: int, size: int) -> int:
-    """Undo magnitude-category coding (T.81 F.2.2.1 EXTEND)."""
-    if size == 0:
-        return 0
-    return v if v >= (1 << (size - 1)) else v - (1 << size) + 1
-
-
 def _destuff(scan: bytes) -> tuple[bytes, list[int]]:
     """Remove 0x00 stuffing after 0xFF; record byte offsets (in the
     de-stuffed stream) where RSTn markers sat, for restart handling."""

@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import Column
 from pyspark.sql import types as T
 from pyspark.sql.functions import arrow_udf
 
@@ -54,7 +53,3 @@ def canonicalize(urls: pa.Array) -> pa.Array:
     ]
     arrays.append(pa.array(hashes, pa.int64(), mask=failed))
     return pa.StructArray.from_arrays(arrays, names=CANON_STRUCT.names)
-
-
-def url_hash_col(url_col: Column) -> Column:
-    return canonicalize(url_col)["url_hash"]

@@ -75,13 +75,6 @@ def _fp_and_buckets(keys: np.ndarray, m: int) -> tuple[np.ndarray, np.ndarray, n
     return fp, i1, i2
 
 
-def _alt_bucket(i: np.ndarray, fp: np.ndarray, m: int) -> np.ndarray:
-    mask = np.uint64(m - 1)
-    with np.errstate(over="ignore"):
-        fph = (fp.astype(np.uint64) * np.uint64(0x5BD1E995)) & mask
-    return (i.astype(np.uint64) ^ fph).astype(np.int64)
-
-
 def _place_round(table: np.ndarray, b: np.ndarray, fp: np.ndarray) -> np.ndarray:
     """One vectorized placement round: try to put fp[k] into bucket b[k].
     Returns a bool mask of the keys that were placed."""

@@ -50,20 +50,6 @@ def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     )
 
 
-def exact_dup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Duplicate groups with >1 member (the audit view)."""
-    return (
-        docs.withColumn("content_hash", F.md5(F.col(text_col)))
-        .groupBy("content_hash")
-        .agg(
-            F.count("*").alias("dup_count"),
-            F.min(id_col).alias("keeper_id"),
-            F.sort_array(F.collect_list(id_col)).alias("member_ids"),
-        )
-        .filter(F.col("dup_count") > 1)
-    )
-
-
 # ---------------------------------------------------------------------------
 # shingling + MinHash + LSH
 # ---------------------------------------------------------------------------
@@ -564,28 +550,4 @@ def ngram_jaccard_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
-    )
-
-
-# ---------------------------------------------------------------------------
-# embedding near-dup (cosine over a similarity threshold)
-# ---------------------------------------------------------------------------
-
-
-def embedding_near_dup_pairs(
-    emb: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.98,
-    n_planes: int = 8,
-    n_bands: int = 8,
-    seed: int = 42,
-) -> DataFrame:
-    """Near-duplicate vectors by cosine ≥ threshold, banded random-
-    hyperplane-LSH bucketed so the self-join never goes all-pairs (see
-    similarity.py for the shared plumbing)."""
-    from .similarity import cosine_pairs_lsh
-
-    return cosine_pairs_lsh(
-        emb, vec_col, id_col, threshold, n_planes=n_planes, n_bands=n_bands, seed=seed
     )

@@ -11,9 +11,6 @@ Kinds: default, blogspot, substack, lemmy, discourse, mediawiki.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from ..canon.url import EdgeUrl
 
 KINDS = ("default", "blogspot", "substack", "lemmy", "discourse", "mediawiki")
@@ -58,18 +55,3 @@ def link_filter_allows(kind: str, url: EdgeUrl) -> bool:
     if kind == "mediawiki":
         return not (path.endswith(".php") or "Special:" in path or "Talk:" in path)
     return True
-
-
-def link_filter_col(kind: Column, path: Column) -> Column:
-    """Spark Column form — a when/otherwise ladder over the kind column."""
-    return (
-        F.when(kind == "blogspot", ~path.startswith("/feeds"))
-        .when(kind == "substack", ~path.endswith("/comments"))
-        .when(kind == "lemmy", path.startswith("/post/") | (path.startswith("/c/") & ~path.contains("@")))
-        .when(kind == "discourse", path.startswith("/t/") | path.contains("/latest"))
-        .when(
-            kind == "mediawiki",
-            ~(path.endswith(".php") | path.contains("Special:") | path.contains("Talk:")),
-        )
-        .otherwise(F.lit(True))
-    )

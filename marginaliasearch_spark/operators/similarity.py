@@ -9,8 +9,7 @@
   buckets whose sign-signature is within ``probe_hamming`` of the query's
   (multi-probe), then exact re-rank.  The scale path: touches a fraction
   of rows with no shuffle at all (bucket pruning via a broadcast set).
-- ``cosine_pairs_lsh`` — all-pairs near-dup by bucketed self-join (shared
-  with dedup.embedding_near_dup_pairs).
+- ``cosine_pairs_lsh`` — all-pairs near-dup by bucketed self-join.
 - ``ivf_topk`` — IVF-style variant: k-means-lite centroids sampled from
   the data, vectors assigned to nearest centroid (one Arrow-UDF pass),
   query probes the ``n_probe`` nearest centroids.

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from collections import deque
 from functools import lru_cache
-from typing import Callable, Optional
+from typing import Optional
 
 from ..canon.domain import EdgeDomain
 from ..canon.murmur import hash_url_parts
@@ -79,9 +79,6 @@ class DomainFrontier:
 
     def is_visited(self, url: EdgeUrl) -> bool:
         return self.visited.get(self.hash_url(url)) is IS_VISITED
-
-    def is_known(self, url: EdgeUrl) -> bool:
-        return self.hash_url(url) in self.visited
 
     # -- queue --------------------------------------------------------------
 

@@ -164,13 +164,11 @@ class DomainCrawlSession:
         info: DomainInfo,
         web: WebLike,
         seed: int = 42,
-        validate_payload: bool = False,
         body_cap_bytes: int = MAX_BODY_BYTES,
     ):
         self.info = info
         self.web = web
         self.seed = seed
-        self.validate_payload = validate_payload
         # per-request body budget (WarcRecorder.java:41-45 hardcodes 32 MB;
         # parameterized here so the clip boundary is gate-testable at
         # fixture scale — the default IS the reference constant)
@@ -558,27 +556,6 @@ class DomainCrawlSession:
                 else None
             ),
         }
-        if self.validate_payload and page.image_id:
-            # inline payload validation: decode the fetched image (numpy)
-            # and verify the PSNR invariant + compute the phash — the real
-            # per-document CPU cost of the image-crawl pipeline
-            from ..functions.imagecodec import (
-                LOSSY_FORMATS,
-                decode_image,
-                phash64,
-                psnr,
-            )
-            from ..sources.corpus import encode_corpus_image, make_image
-
-            idx = int(page.image_id.split("-")[1])
-            src, fmt = make_image(self.seed, idx)
-            # same backend policy as the corpus generator — the stored
-            # phash contract requires decoding the SAME bytes the corpus
-            # carries (real jpeg/png, stub webp)
-            arr, fmt2 = decode_image(encode_corpus_image(src, fmt))
-            p = psnr(src, arr)
-            rec["phash"] = phash64(arr)
-            rec["psnr_ok"] = bool(p >= 40.0) if fmt2 in LOSSY_FORMATS else True
         self.new_crawl_data.append(rec)
 
     def _enqueue_links(self, base_url: EdgeUrl, page: Page) -> None:

@@ -107,8 +107,6 @@ WAVE_OUT_SCHEMA = T.StructType(
         T.StructField("virtual_ms", T.LongType()),
         T.StructField("idx", T.LongType()),
         T.StructField("url2", T.StringType()),  # edge rows: url=src, url2=dst
-        T.StructField("phash", T.LongType()),    # inline payload validation
-        T.StructField("psnr_ok", T.IntegerType()),
         T.StructField("lsh64", T.LongType()),    # content fingerprint (revisit)
         T.StructField("has_cookies", T.IntegerType()),  # Slop `cookies` column
         # Slop at-rest parity (SlopCrawlDataRecord.java:35-54)
@@ -131,8 +129,8 @@ WAVE_OUT_READ_SCHEMA = T.StructType(
 _VIEW_COLS = {
     "crawl_data": [
         "domain", "url", "http_status", "content_type", "image_id", "etag",
-        "last_modified", "phash", "psnr_ok", "lsh64", "has_cookies", "ip",
-        "timestamp", "request_time_ms", "header", "wave", "idx",
+        "last_modified", "lsh64", "has_cookies", "ip", "timestamp",
+        "request_time_ms", "header", "wave", "idx",
     ],
     "fetch_log": ["domain", "url", "action", "http_status", "virtual_ms", "idx", "wave"],
     "visits": ["domain", "url", "idx", "wave"],
@@ -269,17 +267,16 @@ def _schedule_offsets(durations: list[tuple[str, int]], permits: int) -> dict[st
 def _make_wave_fn(
     wave_budget: Optional[int],
     seed: int,
-    validate_payload: bool = False,
     transport: Optional[dict] = None,
     body_cap_bytes: Optional[int] = None,
 ):
     """Build the cogrouped wave UDF (runs once per domain per wave).
 
     Fault isolation: an exception while crawling one domain (bad state,
-    malformed robots, codec error) terminates that domain with
-    phase='error' and the exception recorded in its state_json — it never
-    fails the whole wave task (the reference likewise catches per-domain
-    exceptions in CrawlTask — CrawlerMain.java:700-716)."""
+    malformed robots) terminates that domain with phase='error' and the
+    exception recorded in its state_json — it never fails the whole wave
+    task (the reference likewise catches per-domain exceptions in
+    CrawlTask — CrawlerMain.java:700-716)."""
 
     def wave_fn(key, state, pages):
         domain = key[0].as_py()
@@ -340,7 +337,6 @@ def _make_wave_fn(
                 info,
                 web,
                 seed=seed,
-                validate_payload=validate_payload,
                 **({"body_cap_bytes": body_cap_bytes} if body_cap_bytes else {}),
             )
             phase = sess.setup(prev_crawl=prev or None, atag_urls=atags or None)
@@ -354,7 +350,6 @@ def _make_wave_fn(
                 seed=seed,
                 **({"body_cap_bytes": body_cap_bytes} if body_cap_bytes else {}),
             )
-            sess.validate_payload = validate_payload
             phase = sess.phase
 
         if phase == "active":
@@ -411,11 +406,6 @@ def _make_wave_fn(
                         "image_id": [r["image_id"] for r in crawl_data],
                         "etag": [r["etag"] for r in crawl_data],
                         "last_modified": [r["last_modified"] for r in crawl_data],
-                        "phash": [r.get("phash") for r in crawl_data],
-                        "psnr_ok": [
-                            (None if "psnr_ok" not in r else int(r["psnr_ok"]))
-                            for r in crawl_data
-                        ],
                         "lsh64": [r.get("lsh64") for r in crawl_data],
                         "has_cookies": [int(r.get("has_cookies", 0)) for r in crawl_data],
                         "ip": [r.get("ip") for r in crawl_data],
@@ -500,7 +490,6 @@ class SparkCrawlEngine:
         out_dir: str,
         seed: int = 42,
         n_buckets: int = 32,
-        validate_inline: bool = False,
         global_request_cap: Optional[int] = None,
         conn_launches_per_wave: Optional[int] = None,
         transport: Optional[dict] = None,
@@ -511,7 +500,6 @@ class SparkCrawlEngine:
         self.catalog = SnapshotCatalog(out_dir)
         self.seed = seed
         self.n_buckets = n_buckets
-        self.validate_inline = validate_inline
         # opt-in politeness analogues of the reference's two global
         # throttles (both default OFF — they are single-JVM niceness
         # mechanisms, meaningless for result semantics):
@@ -959,7 +947,6 @@ class SparkCrawlEngine:
             wave_fn = _make_wave_fn(
                 wave_budget,
                 self.seed,
-                self.validate_inline,
                 self.transport,
                 self.body_cap_bytes,
             )
@@ -1053,10 +1040,6 @@ class SparkCrawlEngine:
         return self.catalog.expire_snapshots(keep_last=keep_last)
 
     # -- result accessors ---------------------------------------------------
-
-    def visits_in_order(self) -> DataFrame:
-        v = self._read("visits")
-        return v.orderBy("domain", "wave", "idx") if v is not None else None
 
     def lineage(self) -> list[dict]:
         """Per-partition lineage: every committed snapshot with its table

@@ -4,11 +4,12 @@ Per BASELINE.json ``input_hint``: every crawled row must satisfy
 decoded-pixel allclose vs the source (PSNR ≥ 40 dB for lossy formats) and
 exact caption equality; the phash column must match the decoded pixels.
 
-Implementation: ``mapInArrow`` over Arrow batches — bytes never pass
-through per-row Python; decode + PSNR + phash run on numpy arrays per
-batch.  The validation stage joins crawl_data to the corpus on image_id
-(both sides bucketable on image_id for a shuffle-free sort-merge join at
-scale) and emits one verdict row per payload.
+Implementation: ``mapInArrow`` over Arrow batches, repartitioned by row so
+the codec cost balances across every core.  Both validators emit one
+verdict row per payload from the same per-row check (``_verdict``): a
+corpus row is checked on its bytes, caption and stored phash; a crawl row
+carries only its ``image_id`` and is checked on the corpus encoding of
+that id, with the caption and phash verdicts null (nothing to compare).
 """
 
 from __future__ import annotations
@@ -48,124 +49,75 @@ VERDICT_SCHEMA = T.StructType(
 VERDICT_ARROW = to_arrow_schema(VERDICT_SCHEMA)
 
 
+def _verdict(row: dict, seed: int, psnr_min: float) -> dict:
+    """One payload's verdict.  ``row`` carries ``image_id`` and whatever
+    the stored row holds of ``bytes``, ``fmt``, ``caption`` and ``phash``.
+    Without ``bytes`` the id's corpus encoding is checked (same backend
+    policy as the corpus generator); a caption or phash the row does not
+    carry is not checked and its verdict is null, never true.  A malformed
+    id or an undecodable payload yields ``decode_ok`` false, not a task
+    failure: under the live transport the id arrives from wire HTML."""
+    v = {
+        "image_id": row["image_id"],
+        "fmt": row.get("fmt", ""),
+        "decode_ok": False,
+        "psnr_db": 0.0,
+        "psnr_ok": False,
+        "caption_ok": False if "caption" in row else None,
+        "phash_match": False if "phash" in row else None,
+        "phash_hamming": 0 if "phash" in row else None,
+        "codec": image_backend_of(row["bytes"]) if "bytes" in row else "",
+    }
+    try:
+        idx = int(row["image_id"].split("-")[1])
+        src, fmt = make_image(seed, idx)
+        data = row["bytes"] if "bytes" in row else encode_corpus_image(src, fmt)
+        arr, fmt = decode_image(data)
+    except Exception:
+        return v
+    p = psnr(src, arr)
+    v["fmt"] = row.get("fmt", fmt)
+    v["codec"] = image_backend_of(data)
+    v["decode_ok"] = True
+    v["psnr_db"] = float(p) if np.isfinite(p) else 999.0
+    v["psnr_ok"] = bool(p >= psnr_min) if fmt in LOSSY_FORMATS else np.array_equal(src, arr)
+    if "caption" in row:
+        v["caption_ok"] = row["caption"] == make_caption(seed, idx)
+    if "phash" in row:
+        ph, stored = phash64(arr), row["phash"]
+        v["phash_match"] = ph == stored
+        v["phash_hamming"] = None if stored is None else hamming64(ph, stored)
+    return v
+
+
+def _validate(df: DataFrame, cols: list, seed: int, psnr_min: float) -> DataFrame:
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in it:
+            yield pa.RecordBatch.from_pylist(
+                [_verdict(row, seed, psnr_min) for row in batch.to_pylist()],
+                schema=VERDICT_ARROW,
+            )
+
+    # compute-bound: spread small single-file inputs across the cluster
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return df.select(*cols).repartition(n).mapInArrow(batches, VERDICT_SCHEMA)
+
+
 def validate_payloads(corpus: DataFrame, seed: int = 42, psnr_min: float = 40.0) -> DataFrame:
     """Verify every corpus row: decode, PSNR vs the regenerated source
     pixels, caption equality vs the generator, stored-phash match."""
-
-    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in it:
-            rec = batch.to_pydict()
-            n = batch.num_rows
-            out = {
-                "image_id": rec["image_id"],
-                "fmt": rec["fmt"],
-                "decode_ok": np.zeros(n, dtype=bool),
-                "psnr_db": np.zeros(n, dtype=np.float64),
-                "psnr_ok": np.zeros(n, dtype=bool),
-                "caption_ok": np.zeros(n, dtype=bool),
-                "phash_match": np.zeros(n, dtype=bool),
-                "phash_hamming": np.zeros(n, dtype=np.int32),
-                "codec": [image_backend_of(b) for b in rec["bytes"]],
-            }
-            for i in range(n):
-                image_id = rec["image_id"][i]
-                try:
-                    # a malformed image_id yields a failed verdict row,
-                    # not a task failure (same contract as
-                    # validate_image_ids below)
-                    idx = int(image_id.split("-")[1])
-                    src, _fmt = make_image(seed, idx)
-                    want_caption = make_caption(seed, idx)
-                    arr, fmt = decode_image(rec["bytes"][i])
-                except Exception:
-                    continue
-                out["decode_ok"][i] = True
-                p = psnr(src, arr)
-                out["psnr_db"][i] = p if np.isfinite(p) else 999.0
-                out["psnr_ok"][i] = (
-                    p >= psnr_min if fmt in LOSSY_FORMATS else np.array_equal(src, arr)
-                )
-                out["caption_ok"][i] = rec["caption"][i] == want_caption
-                ph = phash64(arr)
-                stored = rec["phash"][i]
-                out["phash_hamming"][i] = hamming64(ph, stored)
-                out["phash_match"][i] = ph == stored
-            yield pa.RecordBatch.from_pydict(out, schema=VERDICT_ARROW)
-
-    cols = ["image_id", "bytes", "fmt", "caption", "phash"]
-    # compute-bound: spread small single-file inputs across the cluster
-    n = corpus.sparkSession.sparkContext.defaultParallelism
-    return corpus.select(*cols).repartition(n).mapInArrow(batches, VERDICT_SCHEMA)
+    return _validate(corpus, ["image_id", "bytes", "fmt", "caption", "phash"], seed, psnr_min)
 
 
 def validate_image_ids(df: DataFrame, seed: int = 42, psnr_min: float = 40.0) -> DataFrame:
-    """Payload validation over crawl output rows keyed by image_id (the
-    at-rest FK) — the scale topology for the per-document codec cost.
+    """Validate crawled images: any DataFrame with an ``image_id`` column
+    (the at-rest FK of ``crawl_data``; NULL ids are ignored).  Each id's
+    corpus bytes are regenerated, decoded and PSNR-checked against the
+    source pixels; ``caption_ok``, ``phash_match`` and ``phash_hamming``
+    are null, since a crawl row stores neither caption nor phash.
 
-    Validating INSIDE the fetch wave (SparkCrawlEngine validate_inline)
-    couples codec CPU to the per-domain politeness loop: a domain with
-    many images becomes a straggler task and N->4N scaling efficiency
-    drops below the 0.8 criterion once the lossy codec is real (measured
-    round 5, BENCH.md).  This stage does the SAME work — regenerate
-    source pixels, encode with the corpus backend policy (real jpeg/png),
-    decode, PSNR, phash — but repartitioned BY ROW over Arrow batches, so
-    the codec cost balances across every core regardless of the domain
-    layout.  Input: any DataFrame with an ``image_id`` column (rows with
-    NULL image_id are ignored)."""
-    n = df.sparkSession.sparkContext.defaultParallelism
-
-    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in it:
-            ids = batch.column("image_id").to_pylist()
-            out = {
-                "image_id": ids,
-                "fmt": [""] * len(ids),
-                "decode_ok": np.zeros(len(ids), dtype=bool),
-                "psnr_db": np.zeros(len(ids), dtype=np.float64),
-                "psnr_ok": np.zeros(len(ids), dtype=bool),
-                "caption_ok": np.ones(len(ids), dtype=bool),  # no caption at rest
-                "phash_match": np.ones(len(ids), dtype=bool),
-                "phash_hamming": np.zeros(len(ids), dtype=np.int32),
-                "codec": [""] * len(ids),
-            }
-            for i, image_id in enumerate(ids):
-                try:
-                    # the id arrives from wire HTML under the live
-                    # transport: a malformed one must yield a failed
-                    # verdict row, not a task failure
-                    idx = int(image_id.split("-")[1])
-                    src, fmt = make_image(seed, idx)
-                    arr, fmt2 = decode_image(encode_corpus_image(src, fmt))
-                except Exception:
-                    continue
-                out["decode_ok"][i] = True
-                out["fmt"][i] = fmt2
-                out["codec"][i] = fmt2 if fmt2 in ("png", "jpeg") else "stub"
-                p = psnr(src, arr)
-                out["psnr_db"][i] = p if np.isfinite(p) else 999.0
-                out["psnr_ok"][i] = (
-                    bool(p >= psnr_min) if fmt2 in LOSSY_FORMATS else True
-                )
-                _ = phash64(arr)
-            yield pa.RecordBatch.from_pydict(out, schema=VERDICT_ARROW)
-
-    rows = df.filter(F.col("image_id").isNotNull()).select("image_id")
-    return rows.repartition(n).mapInArrow(batches, VERDICT_SCHEMA)
-
-
-def content_unchanged_pairs(
-    a: DataFrame, b: DataFrame, id_col: str = "image_id", max_hamming: int = 4
-) -> DataFrame:
-    """The EasyLSH 'is same content' analogue for images: join two crawls
-    on id, flag rows whose phash hamming distance < max_hamming
-    (ref semantics: CrawlDataReference.isContentBodySame, hamming < 4 —
-    code/processes/crawling-process/java/nu/marginalia/crawl/retreival/
-    CrawlDataReference.java:84-121).  Pure Column ops: xor + bit_count."""
-    pa = a.select(F.col(id_col), F.col("phash").alias("phash_a"))
-    pb = b.select(F.col(id_col), F.col("phash").alias("phash_b"))
-    ham = F.bit_count(F.col("phash_a").bitwiseXOR(F.col("phash_b")))
-    return (
-        pa.join(pb, id_col)
-        .withColumn("phash_hamming", ham.cast("int"))
-        .withColumn("unchanged", F.col("phash_hamming") < max_hamming)
-    )
+    This is the only place a crawled image is checked: a row-balanced
+    stage downstream of the crawl, not the per-domain wave, so per-domain
+    image skew never becomes task skew (decoding inside the wave dropped
+    N->4N scaling efficiency to 0.77/0.78, BENCH.md round 5)."""
+    return _validate(df.filter(F.col("image_id").isNotNull()), ["image_id"], seed, psnr_min)

@@ -57,8 +57,8 @@ def make_caption(seed: int, i: int) -> str:
 
 
 def encode_corpus_image(arr: np.ndarray, fmt: str) -> bytes:
-    """The corpus backend policy, shared with the session's inline
-    validation (oracle/session.py::_record): png and jpeg rows carry REAL
+    """The corpus backend policy, shared with the crawled-image check
+    (plans/validate.py::validate_image_ids): png and jpeg rows carry REAL
     bytes (stdlib/numpy codecs, always decodable — jpeg is genuinely
     lossy DCT so the PSNR>=40dB invariant executes against real lossy
     compression); webp uses the deterministic stand-in container (no

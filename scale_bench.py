@@ -2,11 +2,11 @@
 """Scaling-efficiency evidence for the north rule.
 
 The authoritative criterion is ≥0.8 throughput scaling efficiency from N
-to 4N executors.  This sandbox has no multi-node cluster, so (per the
-driver instruction) the identical crawl job — fetch waves + inline
-image-decode/phash payload validation, i.e. the full per-document CPU
-cost of the image-crawl pipeline — runs at two local parallelism levels
-on the same input, and we report throughput at both plus
+to 4N executors.  Without a multi-node cluster, the identical crawl
+job — fetch waves + the image decode/PSNR payload validation stage,
+i.e. the full per-document CPU cost of the image-crawl pipeline — runs
+at two local parallelism levels on the same input, and we report
+throughput at both plus
 efficiency = (T_N→4N speedup) / 4.
 
 Defaults compare local[2] vs local[8] ("N and 4N cores" per the driver
@@ -87,12 +87,11 @@ def _crawl_child(cpus: int, web_dir: str) -> None:
             .count()
         )
         # payload validation as its own ROW-BALANCED Arrow stage inside
-        # the timed wall (plans/validate.py::validate_image_ids): same
-        # codec work as validate_inline=True, but repartitioned by row —
-        # per-domain image skew cannot create straggler tasks.  Round 5
-        # made the lossy codec real (baseline JPEG); inline validation
-        # then dropped N->4N efficiency below 0.8 by coupling codec CPU
-        # to the politeness loop, which is the wrong topology at scale.
+        # the timed wall (plans/validate.py::validate_image_ids),
+        # repartitioned by row — per-domain image skew cannot create
+        # straggler tasks.  Round 5 made the lossy codec real (baseline
+        # JPEG); decoding inside the wave then dropped N->4N efficiency
+        # below 0.8 by coupling codec CPU to the politeness loop.
         from marginaliasearch_spark.plans.validate import validate_image_ids
 
         verdicts = validate_image_ids(engine.read_table("crawl_data"), seed=42)
@@ -170,8 +169,8 @@ def main() -> None:
 
     md = (
         "\n## Scaling evidence (north rule row 12)\n\n"
-        f"Identical crawl job — politeness-scheduled fetch waves + inline\n"
-        f"image decode/PSNR/phash payload validation — over the same synthetic\n"
+        f"Identical crawl job — politeness-scheduled fetch waves + the\n"
+        f"image decode/PSNR payload validation stage — over the same synthetic\n"
         f"web ({n_domains} domains, {visited_n} URLs visited, {seen_n} URLs\n"
         "seen+deduped) at two parallelism levels (plus a 32-thread datapoint):\n\n"
         "| parallelism | wall (s) | URLs fetched+deduped+validated/s |\n|---|---|---|\n"

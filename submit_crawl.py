@@ -7,6 +7,7 @@ Usage (north-rule launch shape):
     spark-submit --master <cluster> --py-files /tmp/msx.zip \
         submit_crawl.py --out /data/crawl_run_1 \
         [--domains 256 --pages 40 --wave-budget 100 --group-key top_domain]
+        [--validate]
 
 In the sandbox the master defaults to local[*]; on a cluster pass the real
 master + executor confs.  The job generates (or reads) the synthetic web,
@@ -28,7 +29,11 @@ def main() -> None:
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument("--wave-budget", type=int, default=None)
     ap.add_argument("--group-key", choices=["domain", "top_domain"], default="domain")
-    ap.add_argument("--validate-inline", action="store_true")
+    ap.add_argument(
+        "--validate", action="store_true",
+        help="after the crawl, check every crawled image "
+        "(plans/validate.py::validate_image_ids over crawl_data) and "
+        "report the failed-row count")
     ap.add_argument(
         "--max-run-seconds", type=float, default=None,
         help="timed-run wall budget (TimedRun, default unbounded; the "
@@ -86,7 +91,7 @@ def main() -> None:
         pages = spark.createDataFrame([], schema=ps)
 
     engine = SparkCrawlEngine(
-        spark, args.out, seed=args.seed, validate_inline=args.validate_inline,
+        spark, args.out, seed=args.seed,
         global_request_cap=args.global_request_cap,
         conn_launches_per_wave=args.conn_launches_per_wave,
         transport=transport,
@@ -109,19 +114,23 @@ def main() -> None:
         .count()
     )
     wall = time.perf_counter() - t0
-    print(
-        json.dumps(
-            {
-                "out": args.out,
-                "waves": waves,
-                "urls_visited": visited,
-                "urls_seen": seen,
-                "wall_sec": round(wall, 2),
-                "urls_per_sec": round(visited / wall, 2),
-                "transport": args.transport,
-            }
-        )
-    )
+    summary = {
+        "out": args.out,
+        "waves": waves,
+        "urls_visited": visited,
+        "urls_seen": seen,
+        "wall_sec": round(wall, 2),
+        "urls_per_sec": round(visited / wall, 2),
+        "transport": args.transport,
+    }
+    if args.validate:
+        from marginaliasearch_spark.plans.validate import validate_image_ids
+
+        verdicts = validate_image_ids(engine.read_table("crawl_data"), seed=args.seed)
+        summary["images_failed"] = verdicts.filter(
+            ~F.col("decode_ok") | ~F.col("psnr_ok")
+        ).count()
+    print(json.dumps(summary))
     if server is not None:
         server.close()
     spark.stop()

@@ -317,8 +317,9 @@ def test_minhash_lsh_pairs_matches_numpy_banded_reference(spark, docs):
                         want[(a, b)] = est
         return want
 
-    old_batch = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old_batch = spark.conf.get(key, None)
+    spark.conf.set(key, "64")
     try:
         for cap in (1000, 8):
             want = reference(cap)
@@ -335,8 +336,10 @@ def test_minhash_lsh_pairs_matches_numpy_banded_reference(spark, docs):
             else:
                 assert sum(1 for a, b in got if a >= 900000 and b >= 900000) == 276
     finally:
-        if old_batch is not None:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old_batch)
+        if old_batch is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old_batch)
 
 
 def test_spread_for_compute_kernel_weight(spark, docs, tmp_path):
