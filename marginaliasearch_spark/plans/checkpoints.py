@@ -4,19 +4,23 @@ The north rule requires runs "resumable from Iceberg snapshot checkpoints
 with per-partition lineage".  Iceberg jars are not in this sandbox image,
 so the same mechanics are provided over plain parquet:
 
-- every wave commits a numbered snapshot manifest (JSON) listing, per
+- every commit writes a numbered snapshot manifest (JSON) listing, per
   table, the live data paths (append tables accumulate paths, replace
-  tables point at the latest version), and whether a token-budgeted
-  (``group_key="top_domain"``) wave has run, the one flag the views read
-  besides the paths;
+  tables point at the latest version), plus the owner's scalar fields
+  (the crawl's ``budgeted``/``n_buckets``/``seed``, the URL-seen store's
+  ``n_buckets``/``max_fill_est``), each carried forward from the previous
+  snapshot unless the commit sets it;
 - resume = load the last committed manifest and continue from its wave;
 - a killed run leaves at most an uncommitted wave directory behind, which
   the next run ignores (atomic commit = manifest write + rename).
 
-In production this maps 1:1 onto Iceberg: appends → AppendFiles, replaces
-→ ReplaceTable, the merge-on-read frontier/domain_state views over
-``wave_out`` → Iceberg v2 merge-on-read, compaction → rewrite_data_files,
-the manifest → the snapshot metadata, and ``load(n)``/``rollback_to`` →
+The crawl engine (plans/crawl.py) and the URL-seen store
+(plans/frontier_dedup.py) each own one catalog and name its tables.  In
+production this maps 1:1 onto Iceberg: appends → AppendFiles, replaces
+→ ReplaceTable, carried fields → snapshot properties, the merge-on-read
+frontier/domain_state views over ``wave_out`` → Iceberg v2 merge-on-read,
+compaction → rewrite_data_files, the manifest → the snapshot metadata,
+expiry → expire_snapshots, and ``load(n)``/``rollback_to`` →
 time travel.  The analogue of the reference's WorkLog+WARC-resync resume
 (ref: code/processes/crawling-process/java/nu/marginalia/crawl/
 CrawlerMain.java:652-673, CrawlerWarcResynchronizer.java:31-103) comes
@@ -31,23 +35,21 @@ import os
 import shutil
 from typing import Optional
 
-APPEND_TABLES = ("wave_out",)  # unified append log; crawl_data/fetch_log/
-# visits are row_kind-filtered views over it (one physical write per wave)
-REPLACE_TABLES = ("domain_state", "wave_out_compacted")
-# domain_state is init_run's base table, never rewritten by a wave: the
-# crawl state (frontier and each domain's phase/state_json) is read
-# merge-on-read from wave_out
-# wave_out_compacted: the rewrite_data_files analogue — a compaction
-# snapshot folds the committed wave_out dirs (each domain's latest state
-# rows only) into one row_kind-partitioned table (wave carried as a data
-# column) and truncates the wave_out append list; older snapshots keep
-# referencing the original files (time travel intact) until
-# expire_snapshots reclaims them
-
 
 class SnapshotCatalog:
-    def __init__(self, root: str):
+    def __init__(
+        self,
+        root: str,
+        append_tables: tuple[str, ...],
+        replace_tables: tuple[str, ...],
+        fields: dict,
+    ):
+        """``fields`` holds the carried scalar fields with the values a
+        first snapshot (or one after ``reset``) starts from."""
         self.root = root
+        self.append_tables = append_tables
+        self.replace_tables = replace_tables
+        self.fields = fields
         self.snap_dir = os.path.join(root, "_snapshots")
         os.makedirs(self.snap_dir, exist_ok=True)
 
@@ -79,30 +81,31 @@ class SnapshotCatalog:
         if n is None:
             n = self.latest_snapshot()
         if n is None:
-            return {"wave": -1, "tables": {t: [] for t in APPEND_TABLES + REPLACE_TABLES}}
+            tables = self.append_tables + self.replace_tables
+            return {"wave": -1, **self.fields, "tables": {t: [] for t in tables}}
         with open(self._snap_path(n)) as f:
-            return json.load(f)
+            return {**self.fields, **json.load(f)}
 
     def commit(
         self,
         wave: int,
         table_paths: dict[str, Optional[str]],
         truncate_append: Optional[set] = None,
-        budgeted: bool = False,
+        **fields,
     ) -> dict:
-        """Commit wave N: append-table paths accumulate, replace-table paths
-        supersede.  ``truncate_append`` names append tables whose
+        """Commit snapshot N: append-table paths accumulate, replace-table
+        paths supersede.  ``truncate_append`` names append tables whose
         accumulated path list restarts at this snapshot (compaction folded
-        them elsewhere).  ``budgeted`` (a token-budgeted wave ran) is
-        carried forward, so it stays set for the rest of the run.  Atomic
-        via write-to-temp + rename."""
+        them elsewhere).  Carried fields keep their previous value unless
+        ``fields`` sets them.  Atomic via write-to-temp + rename."""
         prev = self.load()
         manifest = {
             "wave": wave,
-            "budgeted": budgeted or prev.get("budgeted", False),
+            **{k: prev[k] for k in self.fields},
+            **fields,
             "tables": {},
         }
-        for t in APPEND_TABLES:
+        for t in self.append_tables:
             if truncate_append and t in truncate_append:
                 paths = []
             else:
@@ -110,7 +113,7 @@ class SnapshotCatalog:
             if table_paths.get(t):
                 paths.append(table_paths[t])
             manifest["tables"][t] = paths
-        for t in REPLACE_TABLES:
+        for t in self.replace_tables:
             if table_paths.get(t):
                 manifest["tables"][t] = [table_paths[t]]
             else:

@@ -143,6 +143,20 @@ _VIEW_COLS = {
 # the per-wave merge read never lists and scans more than FOLD_WAVES dirs
 FOLD_WAVES = 16
 
+# the run's snapshot catalog tables
+APPEND_TABLES = ("wave_out",)  # unified append log; crawl_data/fetch_log/
+# visits are row_kind-filtered views over it (one physical write per wave)
+REPLACE_TABLES = ("domain_state", "wave_out_compacted")
+# domain_state is init_run's base table, never rewritten by a wave: the
+# crawl state (frontier and each domain's phase/state_json) is read
+# merge-on-read from wave_out
+# wave_out_compacted: the rewrite_data_files analogue — a compaction
+# snapshot folds the committed wave_out dirs (each domain's latest state
+# rows only) into one row_kind-partitioned table (wave carried as a data
+# column) and truncates the wave_out append list; older snapshots keep
+# referencing the original files (time travel intact) until
+# expire_snapshots reclaims them
+
 DOMAIN_STATE_SCHEMA = T.StructType(
     [
         T.StructField("domain", T.StringType()),
@@ -497,9 +511,17 @@ class SparkCrawlEngine:
     ):
         self.spark = spark
         self.out_dir = out_dir
-        self.catalog = SnapshotCatalog(out_dir)
-        self.seed = seed
-        self.n_buckets = n_buckets
+        # the bucket layout is a property of the PERSISTED run, not the
+        # instance: a resume engine constructed with a different n_buckets
+        # would give the frontier view different bucket keys mid-run, so
+        # the constructor's layout is only the catalog's starting value
+        self.catalog = SnapshotCatalog(
+            out_dir,
+            APPEND_TABLES,
+            REPLACE_TABLES,
+            {"budgeted": False, "n_buckets": n_buckets, "seed": seed},
+        )
+        self._adopt_layout()
         # opt-in politeness analogues of the reference's two global
         # throttles (both default OFF — they are single-JVM niceness
         # mechanisms, meaningless for result semantics):
@@ -533,21 +555,10 @@ class SparkCrawlEngine:
         # None = the reference's 32 MB constant (session default); a gate
         # fixture overrides it to test the clip boundary at small scale
         self.body_cap_bytes = body_cap_bytes
-        # the bucket layout is a property of the PERSISTED run, not the
-        # instance: a resume engine constructed with a different n_buckets
-        # would give the frontier view different bucket keys mid-run
-        self._ctor_n_buckets, self._ctor_seed = n_buckets, seed
-        cfg = os.path.join(out_dir, "engine.json")
-        if os.path.exists(cfg):
-            with open(cfg) as f:
-                persisted = json.load(f)
-            self.n_buckets = int(persisted.get("n_buckets", n_buckets))
-            self.seed = int(persisted.get("seed", seed))
 
-    def _write_engine_config(self) -> None:
-        cfg = os.path.join(self.out_dir, "engine.json")
-        with open(cfg, "w") as f:
-            json.dump({"n_buckets": self.n_buckets, "seed": self.seed}, f)
+    def _adopt_layout(self) -> None:
+        m = self.catalog.load()
+        self.n_buckets, self.seed = m["n_buckets"], m["seed"]
 
     # -- helpers ---------------------------------------------------------
 
@@ -564,7 +575,7 @@ class SparkCrawlEngine:
         if table == "domain_state":
             return self._domain_state(tables, w)
         if table == "wave_offsets":
-            return self._offsets(tables, w) if manifest.get("budgeted") else None
+            return self._offsets(tables, w) if manifest["budgeted"] else None
         if w is None:
             return None
         if table == "frontier":
@@ -582,7 +593,7 @@ class SparkCrawlEngine:
         v = w.filter(F.col("row_kind") == kind).select(*_VIEW_COLS[table])
         if table == "edges":
             return v.withColumnRenamed("url", "src").withColumnRenamed("url2", "dst")
-        if table == "fetch_log" and manifest.get("budgeted"):
+        if table == "fetch_log" and manifest["budgeted"]:
             # token-budget offsets (a top_domain wave ran at or before this
             # snapshot): ONE offset per domain for the whole run, shifting
             # the audit trail by the domain's semaphore-grant time
@@ -773,11 +784,11 @@ class SparkCrawlEngine:
             .dropDuplicates(["domain"])  # duplicate specs dedup (CrawlerMain:550-552)
         )
         # init starts a NEW run: forget any leftover snapshots (commit(0)
-        # would otherwise merge with a previous run's latest manifest) and
-        # pin this run's bucket layout for future resume engines
+        # would otherwise merge with a previous run's latest manifest, its
+        # budgeted flag included); snapshot 0 pins the constructor's bucket
+        # layout for future resume engines
         self.catalog.reset()
-        self.n_buckets, self.seed = self._ctor_n_buckets, self._ctor_seed
-        self._write_engine_config()
+        self._adopt_layout()
         path = self.catalog.wave_path("domain_state", 0)
         ds.write.mode("overwrite").parquet(path)
         self.catalog.commit(0, {"domain_state": path})
@@ -978,7 +989,7 @@ class SparkCrawlEngine:
                 wave,
                 {"wave_out": opath, **folded},
                 truncate_append={"wave_out"} if folded else None,
-                budgeted=group_key == "top_domain",
+                budgeted=manifest["budgeted"] or group_key == "top_domain",
             )
             active.unpersist()
             waves_done += 1

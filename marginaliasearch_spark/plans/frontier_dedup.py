@@ -25,14 +25,21 @@ Design for 10^10 keys:
 - the per-bucket kernels run in min(n_buckets, default parallelism)
   tasks behind one explicit ``repartition``, so neither AQE coalescing
   nor ``spark.sql.shuffle.partitions`` sets their width;
-- crash-safe: a snapshot manifest (JSON, atomic rename) lists the live
-  seen paths + the current filter table path (``blooms_path``, the key
-  name older stores used); an interrupted ingest leaves only an orphaned
-  uncommitted directory.
-- stores written in an older filter format (manifest ``filter_kind``
-  missing or "bloom", or cuckoo blobs without ``filter_codec`` "zstd")
-  are migrated once: the filters are rebuilt from the seen-set and
-  committed as a new snapshot before the store is used.
+- crash-safe: the store commits through a ``SnapshotCatalog``
+  (plans/checkpoints.py) over its root — ``seen`` is an append table (the
+  accepted-* deltas, or one compacted/forget-rewritten dir after a
+  truncating commit), ``filters`` a replace table (the blooms-* filter
+  table), and ``n_buckets``/``max_fill_est`` are carried fields.  An
+  interrupted ingest leaves only an orphaned uncommitted directory;
+- retention: ``ingest``'s auto-compaction (once the live seen list
+  exceeds ``MAX_SEEN_PATHS``) ends with ``expire_snapshots(keep_last=
+  MAX_SEEN_PATHS)``, which reclaims the accepted-*, blooms-* and
+  superseded seen dirs that only expired snapshots reference.  An
+  accepted-* dir is also the DataFrame its ingest returned: the second
+  compaction-and-expiry that follows its write reclaims it, so it stays
+  readable through at least the next ``MAX_SEEN_PATHS - 1`` admitting
+  ingests (an ingest that admits nothing commits nothing and leaves
+  nothing on disk).
 
 Sizing: ``cuckoo_m_buckets`` defaults to 2^17 table buckets (1 MiB
 uncompressed per frontier bucket, ~440k keys at the 0.84 design load); at
@@ -42,7 +49,6 @@ filter stays one task's working set, never the driver's.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import warnings
@@ -60,10 +66,12 @@ from ..operators.cuckoo import (
     cuckoo_delete_keys,
     cuckoo_insert_new_keys,
 )
+from .checkpoints import SnapshotCatalog
 
-# the persisted filter format; a manifest that differs in any field is
-# migrated by rebuilding its filters from the seen-set
-_FORMAT = {"filter_kind": "cuckoo", "filter_codec": "zstd"}
+KEY_COL = "url_hash"  # the canonicalized-URL hash every batch is keyed by
+# the live seen-path bound: an ingest that leaves more compacts them into
+# one, then expires all but this many snapshots
+MAX_SEEN_PATHS = 16
 
 
 class FrontierDedup:
@@ -72,90 +80,46 @@ class FrontierDedup:
         spark: SparkSession,
         root: str,
         n_buckets: int = 64,
-        key_col: str = "url_hash",
-        max_seen_paths: int = 16,
         cuckoo_m_buckets: int = 1 << 17,
     ):
         self.spark = spark
         self.root = root
-        self.n_buckets = n_buckets
-        self.key_col = key_col
-        self.max_seen_paths = max_seen_paths
         self.cuckoo_m_buckets = cuckoo_m_buckets
-        os.makedirs(root, exist_ok=True)
-
-    # -- snapshot manifest -------------------------------------------------
-
-    def _manifest_path(self, n: int) -> str:
-        return os.path.join(self.root, f"dedup-snap-{n:06d}.json")
-
-    def latest_snapshot(self) -> Optional[int]:
-        snaps = [
-            int(f[11:17])
-            for f in os.listdir(self.root)
-            if f.startswith("dedup-snap-") and f.endswith(".json")
-        ]
-        return max(snaps) if snaps else None
-
-    def _commit(self, manifest: dict) -> None:
-        tmp = self._manifest_path(manifest["snapshot"]) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path(manifest["snapshot"]))
+        self.catalog = SnapshotCatalog(
+            root, ("seen",), ("filters",), {"n_buckets": n_buckets, "max_fill_est": 0.0}
+        )
+        if self.catalog.latest_snapshot() is None and any(
+            f.startswith("dedup-snap-") for f in os.listdir(root)
+        ):
+            raise ValueError(
+                f"{root} holds a URL-seen store in the retired dedup-snap-*.json "
+                "layout; re-ingest its keys into a new root"
+            )
+        self._load()
 
     def _load(self) -> dict:
-        n = self.latest_snapshot()
-        if n is None:
-            return {
-                "snapshot": -1,
-                "seen_paths": [],
-                "blooms_path": None,
-                "n_buckets": self.n_buckets,
-                **_FORMAT,
-            }
-        with open(self._manifest_path(n)) as f:
-            m = json.load(f)
-        # the bucket layout is a property of the PERSISTED table, not the
-        # instance: adopt it, or probes would hit the wrong buckets'
-        # filters and re-admit seen URLs
-        self.n_buckets = int(m.get("n_buckets", self.n_buckets))
-        if any(m.get(k) != v for k, v in _FORMAT.items()):
-            m = self._migrate_legacy(m)
-        return m
-
-    def _migrate_legacy(self, m: dict) -> dict:
-        """One-time upgrade of a store whose filters are in an older format
-        (Bloom bitsets, uncompressed cuckoo blobs): rebuild cuckoo filters
-        from the seen-set (already bucketed) and commit them as a new
-        snapshot; the old filter table stays on disk as part of the
-        superseded snapshot."""
-        snap = m["snapshot"] + 1
-        bpath = os.path.join(self.root, f"blooms-{snap:06d}")
-        max_fill = self._write_filters(
-            build_cuckoo_per_bucket(
-                self._by_bucket(self._seen(m)),
-                key_col=self.key_col,
-                m_buckets=self.cuckoo_m_buckets,
-            ),
-            bpath,
-        )
-        manifest = {
-            "snapshot": snap,
-            "seen_paths": m["seen_paths"],
-            "blooms_path": bpath,
-            "n_buckets": self.n_buckets,
-            **_FORMAT,
-            "max_fill_est": max_fill,
+        """The latest snapshot as a flat view: ``snapshot``, ``seen_paths``,
+        ``blooms_path`` (None before the first commit) and the carried
+        fields.  The bucket layout is a property of the PERSISTED table,
+        not the instance: it is adopted here, or probes would hit the
+        wrong buckets' filters and re-admit seen URLs."""
+        m = self.catalog.load()
+        self.n_buckets = m["n_buckets"]
+        filters = m["tables"]["filters"]
+        return {
+            "snapshot": m["wave"],
+            "seen_paths": m["tables"]["seen"],
+            "blooms_path": filters[0] if filters else None,
+            "n_buckets": m["n_buckets"],
+            "max_fill_est": m["max_fill_est"],
         }
-        self._commit(manifest)
-        return manifest
 
     # -- the store's own reads and writes ----------------------------------
 
     def _seen(self, m: dict) -> DataFrame:
         """The ``(bucket, key)`` columns of every live seen path.  The
         store's reads pin their schemas: inference costs a job per read."""
-        return self.spark.read.schema(f"bucket int, `{self.key_col}` long").parquet(
+        return self.spark.read.schema(f"bucket int, `{KEY_COL}` long").parquet(
             *m["seen_paths"]
         )
 
@@ -208,9 +172,9 @@ class FrontierDedup:
         # one exchange feeds both the in-batch dedup and the probe cogroup
         cand = self._by_bucket(
             candidates.withColumn(
-                "bucket", F.pmod(F.col(self.key_col), F.lit(self.n_buckets)).cast("int")
+                "bucket", F.pmod(F.col(KEY_COL), F.lit(self.n_buckets)).cast("int")
             )
-        ).dropDuplicates(["bucket", self.key_col])
+        ).dropDuplicates(["bucket", KEY_COL])
 
         transients: list = []
         filters, accepted = None, cand
@@ -219,7 +183,7 @@ class FrontierDedup:
             accepted = cuckoo_anti_join(
                 cand,
                 self._seen(m),
-                key_col=self.key_col,
+                key_col=KEY_COL,
                 filters=filters,
                 transients=transients,
             )
@@ -229,49 +193,43 @@ class FrontierDedup:
         accepted.observe(n_accepted, F.count(F.lit(1)).alias("n")).write.mode(
             "overwrite"
         ).parquet(apath)
-        accepted_w = self.spark.read.schema(cand.schema).parquet(apath)
         for df in transients:  # the probe intermediate is materialized now
             df.unpersist()
 
         # steady-state short-circuit: an ingest that admits nothing must
-        # not grow the table — no new seen path, no filter rewrite, no new
-        # snapshot.  Without this, idle recrawl cycles accumulate empty
+        # not grow the store — its empty accepted dir is removed, and there
+        # is no filter rewrite and no new snapshot.  Without this, idle recrawl cycles accumulate empty
         # seen files and rewrite the full filter table every cycle
         # (VERDICT r4 item 1: per-cycle cost must stay flat on a static web).
-        if filters is not None and n_accepted.get["n"] == 0:
-            return accepted_w.drop("bucket")
+        if n_accepted.get["n"] == 0:
+            shutil.rmtree(apath)
+            return self.spark.createDataFrame([], cand.drop("bucket").schema)
+        accepted_w = self.spark.read.schema(cand.schema).parquet(apath)
 
-        new_keys = self._by_bucket(accepted_w.select("bucket", self.key_col))
+        new_keys = self._by_bucket(accepted_w.select("bucket", KEY_COL))
         bpath = os.path.join(self.root, f"blooms-{snap:06d}")
         if filters is None:
             nb = build_cuckoo_per_bucket(
-                new_keys, key_col=self.key_col, m_buckets=self.cuckoo_m_buckets
+                new_keys, key_col=KEY_COL, m_buckets=self.cuckoo_m_buckets
             )
         else:
             nb = cuckoo_insert_new_keys(
                 filters,
                 new_keys,
-                key_col=self.key_col,
+                key_col=KEY_COL,
                 default_m_buckets=self.cuckoo_m_buckets,
             )
         max_fill = self._write_filters(nb, bpath)
-
-        manifest = {
-            "snapshot": snap,
-            # the accepted dir is the seen delta: its keys are the new ones
-            "seen_paths": m["seen_paths"] + [apath],
-            "blooms_path": bpath,
-            "n_buckets": self.n_buckets,
-            **_FORMAT,
-            "max_fill_est": max_fill,
-        }
-        self._commit(manifest)
+        # the accepted dir is the seen delta: its keys are the new ones
+        m = self.catalog.commit(snap, {"seen": apath, "filters": bpath}, max_fill_est=max_fill)
 
         # keep the live-path list bounded: many small ingests (one per
         # crawl cycle) would otherwise make every later probe's exact
-        # check union an ever-growing file list
-        if len(manifest["seen_paths"]) > self.max_seen_paths:
+        # check union an ever-growing file list; the expiry then reclaims
+        # what only the older snapshots still reference
+        if len(m["tables"]["seen"]) > MAX_SEEN_PATHS:
             self.compact_seen()
+            self.catalog.expire_snapshots(keep_last=MAX_SEEN_PATHS)
         return accepted_w.drop("bucket")
 
     def forget(self, removed: DataFrame) -> int:
@@ -286,52 +244,52 @@ class FrontierDedup:
             return 0
         snap = m["snapshot"] + 1
         rm = removed.withColumn(
-            "bucket", F.pmod(F.col(self.key_col), F.lit(self.n_buckets)).cast("int")
-        ).dropDuplicates([self.key_col])
+            "bucket", F.pmod(F.col(KEY_COL), F.lit(self.n_buckets)).cast("int")
+        ).dropDuplicates([KEY_COL])
 
         seen = self._seen(m)
         # only keys actually present may be deleted from the filters
         # (standard cuckoo contract: deleting a never-inserted key could
         # evict a same-fingerprint twin); a left-semi join already ignores
         # duplicate keys on its right side
-        present = rm.join(seen.select(self.key_col), self.key_col, "left_semi")
+        present = rm.join(seen.select(KEY_COL), KEY_COL, "left_semi")
         ppath = os.path.join(self.root, f"forgotten-{snap:06d}")
         present.write.mode("overwrite").parquet(ppath)
         present_w = self.spark.read.schema(rm.schema).parquet(ppath)
         n_forgotten = present_w.count()
-        if n_forgotten == 0:
-            # nothing to forget: remove the empty present-keys dir so the
-            # zero path leaves no orphan parquet no manifest references
-            shutil.rmtree(ppath, ignore_errors=True)
-            return 0
-
-        spath = os.path.join(self.root, f"seen-forget-{snap:06d}")
-        (
-            seen.join(present_w.select(self.key_col), self.key_col, "left_anti")
-            .repartition(self.n_buckets, "bucket")
-            .write.mode("overwrite")
-            .parquet(spath)
-        )
-        bpath = os.path.join(self.root, f"blooms-{snap:06d}")
-        # deletion lowers the fill: the manifest records the new one
-        max_fill = self._write_filters(
-            cuckoo_delete_keys(self._filters(m), present_w, key_col=self.key_col), bpath
-        )
-        self._commit(
-            dict(
-                m, snapshot=snap, seen_paths=[spath], blooms_path=bpath, max_fill_est=max_fill
+        if n_forgotten:
+            spath = os.path.join(self.root, f"seen-forget-{snap:06d}")
+            (
+                seen.join(present_w.select(KEY_COL), KEY_COL, "left_anti")
+                .repartition(self.n_buckets, "bucket")
+                .write.mode("overwrite")
+                .parquet(spath)
             )
-        )
+            bpath = os.path.join(self.root, f"blooms-{snap:06d}")
+            # deletion lowers the fill: the snapshot records the new one
+            max_fill = self._write_filters(
+                cuckoo_delete_keys(self._filters(m), present_w, key_col=KEY_COL), bpath
+            )
+            self.catalog.commit(
+                snap,
+                {"seen": spath, "filters": bpath},
+                truncate_append={"seen"},
+                max_fill_est=max_fill,
+            )
+        # the present keys are in no table: drop them once the rewrite
+        # that read them has committed (or when there was nothing to do)
+        shutil.rmtree(ppath)
         return n_forgotten
 
     def compact_seen(self) -> Optional[str]:
         """Fold all live seen paths into one (Iceberg rewrite_data_files
-        analogue): rewrites the key table bucket-partitioned, commits a
-        snapshot whose ``seen_paths`` is the single compacted path, and
-        deletes the superseded store-owned key files.  accepted-* dirs are
-        kept: they are also the DataFrames ``ingest`` returned, which their
-        callers read lazily.  The filters are untouched (they are already
-        one consolidated table per snapshot)."""
+        analogue): rewrites the key table bucket-partitioned and commits a
+        snapshot whose seen list is the single compacted path.  The
+        superseded dirs stay on disk for the older snapshots (the accepted-*
+        ones are also the DataFrames ``ingest`` returned, which their
+        callers read lazily) until ``catalog.expire_snapshots`` reclaims
+        them.  The filters are untouched (they are already one
+        consolidated table per snapshot)."""
         m = self._load()
         if len(m["seen_paths"]) <= 1:
             return None
@@ -343,8 +301,5 @@ class FrontierDedup:
             .write.mode("overwrite")
             .parquet(cpath)
         )
-        self._commit(dict(m, snapshot=snap, seen_paths=[cpath]))
-        for p in m["seen_paths"]:
-            if not os.path.basename(p).startswith("accepted-"):
-                shutil.rmtree(p, ignore_errors=True)
+        self.catalog.commit(snap, {"seen": cpath}, truncate_append={"seen"})
         return cpath

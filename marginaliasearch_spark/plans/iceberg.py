@@ -15,7 +15,9 @@ SnapshotCatalog operation maps onto the corresponding Iceberg call.
 | `commit()` replace tables (`domain_state` base, `wave_out_compacted`) | `df.writeTo(t).createOrReplace()` (ReplaceTable as one snapshot) | whole-table supersede; prior version still time-travelable |
 | frontier / domain_state views: each domain's latest rows in `wave_out` | merge-on-read (format v2 `write.merge.mode=merge-on-read`): the wave's rows are the delta, readers merge them at scan time | no wave rewrites state it already wrote, so `commit_wave` has no partition-overwrite arm |
 | manifest write + `os.replace` atomicity | Iceberg snapshot commit (atomic metadata swap) | identical all-or-nothing visibility |
-| manifest `budgeted` flag (carried forward by `commit()`) | snapshot summary property on each `wave_out` append (`writeTo(t).option("snapshot-property.budgeted", …)`), read from `t.snapshots` at the wave tag | per snapshot, so rollback and time travel see the flag as it stood; the fetch_log view's offsets are computed from it |
+| carried manifest fields (`commit()` keeps each unless the commit sets it): the crawl's `budgeted`/`n_buckets`/`seed`, the URL-seen store's `n_buckets`/`max_fill_est` | snapshot summary properties on each commit (`writeTo(t).option("snapshot-property.budgeted", …)`), read from `t.snapshots` at the tag | per snapshot, so rollback and time travel see the fields as they stood; the fetch_log view's offsets are computed from `budgeted`, resume engines and reopened stores adopt `n_buckets`/`seed` |
+| URL-seen store (`frontier_dedup.py`): an admitting `ingest` appends its accepted dir to `seen` and replaces `filters`; `compact_seen`/`forget` commit with `truncate_append={"seen"}` | `seen`: `writeTo(t).append()` per ingest, `rewrite_data_files` for the compaction, `DELETE FROM t WHERE url_hash IN …` (a merge-on-read delete) for `forget`; `filters`: `createOrReplace()` | same atomic per-snapshot visibility as the crawl tables |
+| `ingest`'s auto-compaction then `expire_snapshots(keep_last=MAX_SEEN_PATHS)` | `rewrite_data_files` then `expire_snapshots(table => seen, retain_last => k)` | superseded accepted/filter/seen files are deleted once no retained snapshot reaches them |
 | wave number in manifest | `ALTER TABLE t CREATE TAG wave_N` | a named ref per wave pins every table version for resume |
 | `load(n)` / `paths(table, n)` | `SELECT … VERSION AS OF 'wave_N'` | time travel read |
 | `latest_snapshot()` + resume | read current table state (+ `t.refs` metadata table for the newest wave tag) | a killed run's uncommitted write never produced a snapshot → invisible, exactly like our ignored uncommitted wave dir |

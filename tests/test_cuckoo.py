@@ -6,20 +6,20 @@ Contracts pinned here:
   cuckoo_anti_join ≡ the exact left-anti join;
 - deletion really removes (and only removes) the requested keys;
 - FrontierDedup admits exactly the never-seen rows over multi-snapshot
-  histories, forget() makes it re-admit expired keys, a reopened store
-  adopts the persisted bucket layout, and a store written with Bloom
-  filters or uncompressed cuckoo blobs is migrated before its first
-  probe.
+  histories, forget() makes it re-admit expired keys and leaves no
+  present-keys dir behind, and a reopened store adopts the persisted
+  bucket layout.
 """
 
 from __future__ import annotations
+
+import os
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from marginaliasearch_spark.operators.cuckoo import (
-    _CUCKOO_ARROW,
     SLOTS,
     _contains,
     _delete,
@@ -189,6 +189,8 @@ def test_frontier_dedup_forget_readmits(spark, tmp_path):
     assert store.forget(
         spark.createDataFrame([(999999,)], "url_hash long")
     ) == 0
+    # both forgets dropped their present-keys dir (no manifest names it)
+    assert not [f for f in os.listdir(store.root) if f.startswith("forgotten-")]
 
 
 def test_reopen_adopts_persisted_bucket_layout(spark, tmp_path):
@@ -202,87 +204,3 @@ def test_reopen_adopts_persisted_bucket_layout(spark, tmp_path):
     assert got == set(range(300, 400))
     assert again.n_buckets == 4
     assert again._load()["n_buckets"] == 4
-
-
-@pytest.mark.parametrize("legacy_kind", [None, "bloom", "cuckoo"])
-def test_legacy_bloom_store_is_migrated(spark, tmp_path, legacy_kind):
-    """A store written in an older filter format gets cuckoo filters
-    rebuilt from its seen-set and committed before the first probe: Bloom
-    (manifest filter_kind missing or "bloom", Bloom-schema filter rows) or
-    uncompressed cuckoo blobs (filter_kind "cuckoo", no filter_codec).
-    The next ingests keep exact set semantics."""
-    import json
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    root = tmp_path / "legacy"
-    n_buckets = 4
-    seen_keys = list(range(0, 3000, 3))
-    spath, bpath = root / "seen-000000", root / "blooms-000000"
-    os.makedirs(spath)
-    os.makedirs(bpath)
-    pq.write_table(
-        pa.table(
-            {
-                "bucket": pa.array([k % n_buckets for k in seen_keys], pa.int32()),
-                "url_hash": pa.array(seen_keys, pa.int64()),
-            }
-        ),
-        spath / "part-0.parquet",
-    )
-    manifest = {
-        "snapshot": 0,
-        "seen_paths": [str(spath)],
-        "blooms_path": str(bpath),
-        "n_buckets": n_buckets,
-    }
-    if legacy_kind == "cuckoo":
-        # the raw blob layout: [m, n_stash] int64, the uint16 table, the
-        # int64 stash, uncompressed — decoding it as a compressed blob
-        # would fail
-        m_raw = 1 << 10
-        rows = {"bucket": [], "n_keys": [], "m_buckets": [], "cuckoo": []}
-        for b in range(n_buckets):
-            keys = np.array([k for k in seen_keys if k % n_buckets == b], dtype=np.uint64)
-            table = np.zeros((m_raw, SLOTS), dtype=np.uint16)
-            stash: list[int] = []
-            _insert_all(table, stash, keys)
-            head = np.array([m_raw, len(stash)], dtype=np.int64).tobytes()
-            rows["bucket"].append(b)
-            rows["n_keys"].append(len(keys))
-            rows["m_buckets"].append(m_raw)
-            rows["cuckoo"].append(head + table.tobytes() + np.array(stash, np.int64).tobytes())
-        filters = pa.table(rows, schema=_CUCKOO_ARROW)
-        manifest.update(filter_kind="cuckoo", max_fill_est=0.0623)
-    else:
-        # Bloom-schema rows: probing these as cuckoo tables would fail
-        filters = pa.table(
-            {
-                "bucket": pa.array(range(n_buckets), pa.int32()),
-                "n_keys": pa.array([250] * n_buckets, pa.int64()),
-                "m_bits": pa.array([1 << 16] * n_buckets, pa.int64()),
-                "bloom": pa.array([b"\xff" * 8192] * n_buckets, pa.binary()),
-            }
-        )
-        manifest.update(m_bits=1 << 16, max_fill_est=0.0233)
-        if legacy_kind is not None:
-            manifest["filter_kind"] = legacy_kind
-    pq.write_table(filters, bpath / "part-0.parquet")
-    with open(root / "dedup-snap-000000.json", "w") as f:
-        json.dump(manifest, f)
-
-    store = FrontierDedup(spark, str(root), n_buckets=8, cuckoo_m_buckets=1 << 10)
-    exact_seen = set(seen_keys)
-    for batch in (range(0, 4000), range(3500, 4500)):
-        got = set(r["url_hash"] for r in _ingest_rows(store, spark, batch).collect())
-        want = set(batch) - exact_seen
-        assert got == want
-        exact_seen |= want
-    m = store._load()
-    assert m["filter_kind"] == "cuckoo" and "m_bits" not in m
-    assert m["filter_codec"] == "zstd"
-    assert m["snapshot"] == 3  # migration + two admitting ingests
-    assert store.n_buckets == n_buckets
-    assert set(spark.read.parquet(m["blooms_path"]).columns) >= {"cuckoo", "m_buckets"}

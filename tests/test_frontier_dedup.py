@@ -1,13 +1,14 @@
 """Global URL-seen dedup plan: snapshot-incremental cuckoo-filter admission
 (plans/frontier_dedup.py) — correctness vs exact set semantics, resume
-from disk, only-new-keys snapshot appends, the fill watch, and
-compaction that never deletes a returned accepted-* dir."""
+from disk, only-new-keys snapshot appends, the fill watch, compaction
+that keeps the returned accepted-* dirs, and snapshot-expiry retention."""
 
 import os
 
 import pyspark.sql.functions as F
 import pytest
 
+from marginaliasearch_spark.plans import frontier_dedup
 from marginaliasearch_spark.plans.frontier_dedup import FrontierDedup
 
 
@@ -64,7 +65,8 @@ def test_snapshot_appends_only_new_keys(spark, tmp_path):
 
 def test_empty_ingest_is_a_noop(spark, tmp_path):
     """Steady-state flatness: a replay that admits nothing must not grow
-    the table — no new seen path, no filter rewrite, no new snapshot."""
+    the store — no new seen path, no filter rewrite, no new snapshot, and
+    no new file or dir under the root."""
     root = str(tmp_path / "fd4")
     fd = FrontierDedup(spark, root, n_buckets=8, cuckoo_m_buckets=1 << 10)
     fd.ingest(_cand(spark, 0, 2000))
@@ -78,15 +80,12 @@ def test_empty_ingest_is_a_noop(spark, tmp_path):
     assert m1["snapshot"] == m0["snapshot"]
     assert m1["seen_paths"] == m0["seen_paths"]
     assert m1["blooms_path"] == m0["blooms_path"]
-    # only the non-admitting ingests' accepted-* outputs (the empty
-    # DataFrames they returned, in no seen path) may differ
-    grown = set(sorted(os.listdir(root))) - set(before)
-    assert all(f.startswith("accepted-") for f in grown)
+    assert sorted(os.listdir(root)) == before
     # and admission still works afterwards
     assert fd.ingest(_cand(spark, 2000, 2500)).count() == 500
 
 
-def test_compact_seen_folds_paths(spark, tmp_path):
+def test_compact_seen_folds_paths(spark, tmp_path, monkeypatch):
     root = str(tmp_path / "fd5")
     fd = FrontierDedup(spark, root, n_buckets=8, cuckoo_m_buckets=1 << 10)
     for i in range(4):
@@ -102,10 +101,8 @@ def test_compact_seen_folds_paths(spark, tmp_path):
     assert fd.ingest(_cand(spark, 2000, 2200)).count() == 200
 
     # auto-compaction keeps the list bounded
-    fd2 = FrontierDedup(
-        spark, str(tmp_path / "fd6"), n_buckets=8,
-        cuckoo_m_buckets=1 << 10, max_seen_paths=3,
-    )
+    monkeypatch.setattr(frontier_dedup, "MAX_SEEN_PATHS", 3)
+    fd2 = FrontierDedup(spark, str(tmp_path / "fd6"), n_buckets=8, cuckoo_m_buckets=1 << 10)
     for i in range(6):
         fd2.ingest(_cand(spark, i * 100, (i + 1) * 100))
     assert len(fd2._load()["seen_paths"]) <= 4
@@ -148,17 +145,18 @@ def test_fill_warning_and_exact_max_fill(spark, tmp_path):
     assert worst == 140 / 64 and est == round(worst, 4)
 
 
-def test_compaction_keeps_returned_accepted_dirs(spark, tmp_path):
+def test_compaction_keeps_returned_accepted_dirs(spark, tmp_path, monkeypatch):
     """The seen-set's paths are the ingests' own accepted-* dirs, which are
     also the DataFrames ingest returned: auto-compaction must fold them
     without deleting any, so an ingest that triggers it still returns a
     collectable, exact result."""
+    monkeypatch.setattr(frontier_dedup, "MAX_SEEN_PATHS", 2)
     root = str(tmp_path / "fd7")
-    fd = FrontierDedup(spark, root, n_buckets=8, cuckoo_m_buckets=1 << 10, max_seen_paths=2)
+    fd = FrontierDedup(spark, root, n_buckets=8, cuckoo_m_buckets=1 << 10)
     returned = [fd.ingest(_cand(spark, 0, 300)), fd.ingest(_cand(spark, 200, 500))]
     assert len(fd._load()["seen_paths"]) == 2
 
-    # the third admitting ingest makes 3 > max_seen_paths live paths
+    # the third admitting ingest makes 3 > MAX_SEEN_PATHS live paths
     last = fd.ingest(_cand(spark, 400, 700))
     m = fd._load()
     assert len(m["seen_paths"]) == 1 and "seen-compact-" in m["seen_paths"][0]
@@ -170,3 +168,53 @@ def test_compaction_keeps_returned_accepted_dirs(spark, tmp_path):
     ]
     assert fd.seen().columns == ["bucket", "url_hash"]
     assert fd.seen().count() == 700
+
+
+def _store_dirs(root):
+    return [d for d in os.listdir(root) if d.startswith(("accepted-", "blooms-", "seen-"))]
+
+
+def test_expiry_reclaims_superseded_dirs(spark, tmp_path, monkeypatch):
+    """Planted retention.  compact_seen then expire_snapshots(keep_last=1)
+    leaves each key stored once under the root (the accepted-* copies are
+    gone).  Over 12 admitting ingests with the path bound at 2, the
+    store's dirs on disk stay bounded (without expiry they would reach 12
+    accepted + 12 blooms + 5 compacted), and the frames the last ingests
+    returned still collect exactly."""
+    root = str(tmp_path / "fd8")
+    fd = FrontierDedup(spark, root, n_buckets=8, cuckoo_m_buckets=1 << 10)
+    for i in range(3):
+        fd.ingest(_cand(spark, i * 100, (i + 1) * 100))
+    fd.compact_seen()
+    fd.catalog.expire_snapshots(keep_last=1)
+    key_dirs = [os.path.join(root, d) for d in _store_dirs(root) if not d.startswith("blooms-")]
+    stored = spark.read.schema("url_hash long").parquet(*key_dirs)
+    assert stored.count() == stored.distinct().count() == 300
+    assert fd.ingest(_cand(spark, 0, 400)).count() == 100
+
+    monkeypatch.setattr(frontier_dedup, "MAX_SEEN_PATHS", 2)
+    root = str(tmp_path / "fd9")
+    fd = FrontierDedup(spark, root, n_buckets=8, cuckoo_m_buckets=1 << 10)
+    returned, peak = [], 0
+    for i in range(12):
+        returned.append(fd.ingest(_cand(spark, i * 50, (i + 1) * 50)))
+        peak = max(peak, len(_store_dirs(root)))
+    # the two snapshots an expiry keeps reference the previous compacted
+    # dir, 2 accepted dirs, their filter table and the new compacted dir;
+    # the next ingest adds one accepted and one blooms dir before its own
+    # compaction and expiry
+    assert peak <= 7
+    for i, frame in enumerate(returned[-2:], start=10):
+        got = sorted(r["url_hash"] for r in frame.collect())
+        assert got == sorted(r["url_hash"] for r in _cand(spark, i * 50, (i + 1) * 50).collect())
+    assert fd.seen().count() == 600
+
+
+def test_retired_manifest_layout_raises(spark, tmp_path):
+    """A root that holds only the retired dedup-snap-*.json manifests must
+    not open as an empty seen-set (which would re-admit every URL)."""
+    root = tmp_path / "old"
+    root.mkdir()
+    (root / "dedup-snap-000000.json").write_text("{}")
+    with pytest.raises(ValueError, match="dedup-snap"):
+        FrontierDedup(spark, str(root))
