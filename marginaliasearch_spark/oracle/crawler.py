@@ -9,7 +9,7 @@ Spark pipeline's equivalence.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Optional
 
 from ..sources.synthetic_web import SyntheticWeb
@@ -31,21 +31,12 @@ class DomainCrawlResult:
 
 
 def info_from_web(web: SyntheticWeb, domain: str) -> DomainInfo:
-    spec = web.domains.get(domain)
-    if spec is None:
+    """A copy of the web's facts for ``domain`` (the caller may override
+    its depth and seeds); a domain the web lacks probes as an error."""
+    info = web.domains.get(domain)
+    if info is None:
         return DomainInfo(domain=domain, probe="error")
-    return DomainInfo(
-        domain=spec.domain,
-        proto=spec.proto,
-        probe=spec.probe,
-        robots_txt=spec.robots_txt,
-        site_kind=spec.site_kind,
-        generator_meta=spec.generator_meta,
-        has_lemmy_config=spec.has_lemmy_config,
-        sitemap_urls=spec.sitemap_urls,
-        crawl_depth=spec.crawl_depth,
-        seed_urls=spec.seed_urls,
-    )
+    return replace(info)
 
 
 class OracleCrawler:

@@ -19,7 +19,6 @@ a session serialized at any fetch boundary and rehydrated resumes exactly.
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from typing import Optional, Protocol
 
@@ -36,7 +35,7 @@ from ..canon.url import EdgeUrl, parse_url
 from ..functions.robots import RobotRules, parse_robots_txt
 from ..operators.blocklist import is_url_blocked
 from ..operators.linkfilter import select_filter_kind
-from ..sources.synthetic_web import Page, fetch_time_ms
+from ..sources.synthetic_web import DomainInfo, Page, fetch_time_ms
 from .frontier import DomainFrontier
 
 MAX_ERRORS = 20
@@ -104,6 +103,10 @@ def _lsh64_signed(body: str) -> int:
 
 
 class WebLike(Protocol):
+    """What a session fetches from: ``SyntheticWeb`` in memory (the whole
+    generated web in the oracle, one domain's cogrouped pages in a Spark
+    wave) or ``HttpWeb`` over real sockets (sources/httpweb.py)."""
+
     def fetch(self, url: EdgeUrl) -> Page: ...
     def fetch_attempt(self, url: EdgeUrl, attempt: int = 1) -> Page: ...
     def fetch_conditional(
@@ -114,22 +117,6 @@ class WebLike(Protocol):
         attempt: int = 1,
     ) -> tuple[Page, bool]: ...
     def page_at(self, url: EdgeUrl) -> Optional[Page]: ...
-
-
-@dataclass
-class DomainInfo:
-    """Static per-domain facts the session needs (from web_domains/specs)."""
-
-    domain: str
-    proto: str = "https"
-    probe: str = "ok"
-    robots_txt: Optional[str] = None
-    site_kind: str = "default"
-    generator_meta: str = ""
-    has_lemmy_config: bool = False
-    sitemap_urls: list = field(default_factory=list)
-    crawl_depth: int = 1000
-    seed_urls: list = field(default_factory=list)
 
 
 class Timer:

@@ -5,8 +5,9 @@ with per-partition lineage".  Iceberg jars are not in this sandbox image,
 so the same mechanics are provided over plain parquet:
 
 - every commit writes a numbered snapshot manifest (JSON) listing, per
-  table, the live data paths (append tables accumulate paths, replace
-  tables point at the latest version), plus the owner's scalar fields
+  table, the live data paths relative to the root, so a copied root is
+  a store of its own (append tables accumulate paths, replace tables
+  point at the latest version), plus the owner's scalar fields
   (the crawl's ``budgeted``/``n_buckets``/``seed``, the URL-seen store's
   ``n_buckets``/``max_fill_est``), each carried forward from the previous
   snapshot unless the commit sets it;
@@ -84,7 +85,13 @@ class SnapshotCatalog:
             tables = self.append_tables + self.replace_tables
             return {"wave": -1, **self.fields, "tables": {t: [] for t in tables}}
         with open(self._snap_path(n)) as f:
-            return {**self.fields, **json.load(f)}
+            m = {**self.fields, **json.load(f)}
+        # manifests hold root-relative paths (a copied root names its own
+        # dirs); an absolute path, as older manifests hold, stays as it is
+        m["tables"] = {
+            t: [os.path.join(self.root, p) for p in ps] for t, ps in m["tables"].items()
+        }
+        return m
 
     def commit(
         self,
@@ -118,9 +125,16 @@ class SnapshotCatalog:
                 manifest["tables"][t] = [table_paths[t]]
             else:
                 manifest["tables"][t] = list(prev["tables"].get(t, []))
+        stored = {
+            **manifest,
+            "tables": {
+                t: [os.path.relpath(p, self.root) for p in ps]
+                for t, ps in manifest["tables"].items()
+            },
+        }
         tmp = self._snap_path(wave) + ".tmp"
         with open(tmp, "w") as f:
-            json.dump(manifest, f)
+            json.dump(stored, f)
         os.replace(tmp, self._snap_path(wave))
         return manifest
 

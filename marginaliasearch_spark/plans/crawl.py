@@ -54,6 +54,7 @@ from __future__ import annotations
 
 import json
 import os
+from dataclasses import fields
 from typing import Optional
 
 import pyarrow as pa
@@ -63,8 +64,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..oracle.session import DomainCrawlSession, DomainInfo
-from ..sources.synthetic_web import DomainPagesWeb
+from ..oracle.session import DomainCrawlSession
+from ..sources.synthetic_web import DomainInfo, SyntheticWeb, from_row, pages_by_key
 from .checkpoints import SnapshotCatalog
 
 # ---------------------------------------------------------------------------
@@ -81,6 +82,22 @@ STATE_IN_SCHEMA = T.StructType(
         T.StructField("state", T.StringType()),
         T.StructField("state_json", T.StringType()),
         T.StructField("info_json", T.StringType()),
+        T.StructField("http_status", T.IntegerType()),
+        T.StructField("image_id", T.StringType()),
+        T.StructField("etag", T.StringType()),
+        T.StructField("last_modified", T.StringType()),
+        T.StructField("lsh64", T.LongType()),
+    ]
+)
+
+# the previous crawl a recrawl replays (``run_waves(prev_crawl_df=...)``):
+# per domain, its stored records in ``pos`` order with their validators
+# (etag/last_modified for conditional GETs, lsh64 for the content arm)
+PREV_CRAWL_SCHEMA = T.StructType(
+    [
+        T.StructField("domain", T.StringType()),
+        T.StructField("pos", T.LongType()),
+        T.StructField("url", T.StringType()),
         T.StructField("http_status", T.IntegerType()),
         T.StructField("image_id", T.StringType()),
         T.StructField("etag", T.StringType()),
@@ -124,8 +141,8 @@ WAVE_OUT_READ_SCHEMA = T.StructType(
     WAVE_OUT_SCHEMA.fields + [T.StructField("wave", T.IntegerType())]
 )
 
-# the views over wave_out and their columns (``_read`` maps a view to its
-# row_kind; the frontier view adds ``bucket``)
+# the views over wave_out and their columns (``read_table`` maps a view to
+# its row_kind; the frontier view adds ``bucket``)
 _VIEW_COLS = {
     "crawl_data": [
         "domain", "url", "http_status", "content_type", "image_id", "etag",
@@ -137,6 +154,9 @@ _VIEW_COLS = {
     "edges": ["domain", "url", "url2", "idx", "wave"],
     "frontier": ["domain", "url_hash", "url", "seq", "state"],
 }
+
+# every name read_table serves
+READ_TABLES = (*_VIEW_COLS, "domain_state", "wave_offsets")
 
 # run_waves folds the committed wave_out dirs into one compacted table
 # (compact_wave_out's rewrite) when their list reaches this length, so
@@ -166,6 +186,10 @@ DOMAIN_STATE_SCHEMA = T.StructType(
         T.StructField("state_json", T.StringType()),
     ]
 )
+
+# the DomainInfo fields init_run takes from the crawl specs; the others
+# come from the web's domains table (info_json holds all but ``domain``)
+_SPEC_FIELDS = ("crawl_depth", "seed_urls")
 
 
 def _state_rows(df: DataFrame, kind, **cols) -> DataFrame:
@@ -307,18 +331,10 @@ def _make_wave_fn(
         info_rows = _kind_rows(state, "info", ["info_json"])
         if not info_rows:
             return _OUT_ARROW.empty_table()
-        info_d = json.loads(info_rows[0]["info_json"])
-        info = DomainInfo(
-            domain=domain,
-            proto=info_d.get("proto") or "https",
-            probe=info_d.get("probe") or "error",
-            robots_txt=info_d.get("robots_txt"),
-            site_kind=info_d.get("site_kind") or "default",
-            generator_meta=info_d.get("generator_meta") or "",
-            has_lemmy_config=bool(info_d.get("has_lemmy_config")),
-            sitemap_urls=info_d.get("sitemap_urls") or [],
-            crawl_depth=int(info_d.get("crawl_depth") or 1000),
-            seed_urls=info_d.get("seed_urls") or [],
+        # a spec domain with no web row has no web facts: it probes as
+        # an error
+        info = from_row(
+            DomainInfo, json.loads(info_rows[0]["info_json"]), domain=domain, probe="error"
         )
 
         if transport is not None and transport.get("kind") == "http":
@@ -334,7 +350,7 @@ def _make_wave_fn(
                 transport["ports"], host=transport.get("host", "127.0.0.1")
             )
         else:
-            web = DomainPagesWeb(domain, info.proto, pages)
+            web = SyntheticWeb({domain: info}, pages_by_key(pages.to_pylist()))
 
         latest = _kind_rows(state, "domain_state", ["state_json"])
         state_json = latest[0]["state_json"] if latest else None
@@ -565,12 +581,13 @@ class SparkCrawlEngine:
     def _bucket(self, col):
         return F.pmod(F.xxhash64(col), F.lit(self.n_buckets)).cast("int")
 
-    def _read(self, table: str) -> Optional[DataFrame]:
+    def read_table(self, table: str) -> Optional[DataFrame]:
+        """The ``table`` view at the latest snapshot (None while it has no
+        rows): one of ``READ_TABLES``."""
+        if table not in READ_TABLES:
+            raise ValueError(f"no table {table!r}; the engine serves {', '.join(READ_TABLES)}")
         manifest = self.catalog.load()
         tables = manifest["tables"]
-        if table not in _VIEW_COLS and table not in ("domain_state", "wave_offsets"):
-            paths = tables.get(table)
-            return self.spark.read.parquet(*paths) if paths else None
         w = self._wave_out_all(tables)
         if table == "domain_state":
             return self._domain_state(tables, w)
@@ -682,9 +699,6 @@ class SparkCrawlEngine:
         )
         return durs.groupBy("top_domain").applyInArrow(_make_offsets_fn(), OFFSETS_SCHEMA)
 
-    def read_table(self, table: str) -> Optional[DataFrame]:
-        return self._read(table)
-
     # -- run lifecycle -----------------------------------------------------
 
     def init_run(
@@ -765,15 +779,12 @@ class SparkCrawlEngine:
                 top.alias("top_domain"),
                 F.to_json(
                     F.struct(
-                        F.col("w.proto").alias("proto"),
-                        F.col("w.probe").alias("probe"),
-                        F.col("w.robots_txt").alias("robots_txt"),
-                        F.col("w.site_kind").alias("site_kind"),
-                        F.col("w.generator_meta").alias("generator_meta"),
-                        F.col("w.has_lemmy_config").alias("has_lemmy_config"),
-                        F.col("w.sitemap_urls").alias("sitemap_urls"),
-                        F.col("s.crawl_depth").alias("crawl_depth"),
-                        F.col("s.seed_urls").alias("seed_urls"),
+                        *[
+                            F.col(f"{'s' if f.name in _SPEC_FIELDS else 'w'}.{f.name}")
+                            .alias(f.name)
+                            for f in fields(DomainInfo)
+                            if f.name != "domain"
+                        ]
                     )
                 ).alias("info_json"),
                 F.when(F.col("_ip_blocked"), F.lit("blocked_ip"))
@@ -836,6 +847,13 @@ class SparkCrawlEngine:
         """
         import time as _time
 
+        if prev_crawl_df is not None:
+            # a missing column is an error: a filled-in null one would
+            # silently turn off conditional GETs or the LSH retention arm
+            missing = [c for c in PREV_CRAWL_SCHEMA.names if c not in prev_crawl_df.columns]
+            if missing:
+                raise ValueError(f"prev_crawl_df lacks column(s) {', '.join(missing)}")
+            prev_crawl_df = prev_crawl_df.select(*PREV_CRAWL_SCHEMA.names)
         waves_done = 0
         t_start = _time.monotonic()
         while waves_done < max_waves:
@@ -925,13 +943,7 @@ class SparkCrawlEngine:
                 )
             pending = active.filter(F.col("run") == 1).select("domain")
             if prev_crawl_df is not None:
-                pcd = prev_crawl_df
-                # older prev-crawl tables may lack the validator columns
-                if "last_modified" not in pcd.columns:
-                    pcd = pcd.withColumn("last_modified", F.lit(None).cast("string"))
-                if "lsh64" not in pcd.columns:
-                    pcd = pcd.withColumn("lsh64", F.lit(None).cast("long"))
-                pc = pcd.join(pending, "domain", "left_semi")
+                pc = prev_crawl_df.join(pending, "domain", "left_semi")
                 left = left.unionByName(
                     _state_rows(
                         pc, "prev_crawl", url="url", seq="pos",
@@ -1084,8 +1096,8 @@ class SparkCrawlEngine:
         (domain, pos, url)."""
         from pyspark.sql import Window
 
-        fr = self._read("frontier")
-        log = self._read("fetch_log")
+        fr = self.read_table("frontier")
+        log = self.read_table("fetch_log")
         parts = []
         if fr is not None:
             parts.append(
@@ -1117,7 +1129,7 @@ class SparkCrawlEngine:
     def dedup_metrics(self) -> Optional[DataFrame]:
         """Fetch/dedup metrics per domain: URLs seen (KNOWN+REFUSED+VISITED),
         visited, still queued, robots refusals, fetch attempts."""
-        fr = self._read("frontier")
+        fr = self.read_table("frontier")
         if fr is None:
             return None
         agg = fr.groupBy("domain").agg(
@@ -1128,7 +1140,7 @@ class SparkCrawlEngine:
             F.sum(F.when(F.col("state") == "REFUSED", 1).otherwise(0)).alias("n_refused"),
             F.sum(F.when(F.col("state") == "QUEUED", 1).otherwise(0)).alias("n_queued"),
         )
-        log = self._read("fetch_log")
+        log = self.read_table("fetch_log")
         if log is not None:
             acts = log.groupBy("domain").agg(
                 F.sum(F.when(F.col("action") == "REFUSED_ROBOTS", 1).otherwise(0)).alias(
@@ -1144,7 +1156,7 @@ class SparkCrawlEngine:
     def crawl_meta(self) -> DataFrame:
         """Per-domain crawl metrics (§2.5/§2.11 analogue of DomainStateDb
         CrawlMeta), computed relationally from the state + output tables."""
-        ds = self._read("domain_state")
+        ds = self.read_table("domain_state")
         meta = ds.select(
             "domain",
             "phase",
@@ -1170,7 +1182,7 @@ class SparkCrawlEngine:
                 "favicon_content_type"
             ),
         )
-        cd = self._read("crawl_data")
+        cd = self.read_table("crawl_data")
         if cd is not None:
             good = (
                 cd.filter(F.col("http_status").isin(200, 206))
@@ -1185,7 +1197,7 @@ class SparkCrawlEngine:
         wall-clock model (permits + makespan; scheduling.py §2.9)."""
         from ..operators.scheduling import top_domain_makespan
 
-        ds = self._read("domain_state").select("domain", "top_domain")
+        ds = self.read_table("domain_state").select("domain", "top_domain")
         meta = self.crawl_meta().join(ds, "domain", "left")
         budget = top_domain_makespan(
             meta.select("domain", "top_domain", F.coalesce("crawl_time_ms", F.lit(0)).alias("crawl_time_ms"))

@@ -57,7 +57,14 @@ from typing import Optional
 
 from ..canon.url import EdgeUrl, parse_url
 from ..functions.htmllinks import extract_link_elements
-from .synthetic_web import Page, SyntheticWeb, conditional_304
+from .synthetic_web import (
+    DomainInfo,
+    Page,
+    SyntheticWeb,
+    conditional_304,
+    from_row,
+    pages_by_key,
+)
 
 _BODY_OPEN = "<!--mspk:body-->"
 _BODY_CLOSE = "<!--/mspk:body-->"
@@ -449,8 +456,8 @@ class HttpWeb:
 
     def fetch_robots_txt(self, domain: str, proto: str) -> Optional[str]:
         """Fetch /robots.txt over the wire (the simulated path reads it
-        from the DomainSpec; a live session populates DomainInfo with
-        this)."""
+        from the web's DomainInfo; a live session populates DomainInfo
+        with this)."""
         url = parse_url(f"{proto}://{domain}/robots.txt")
         if url is None:
             return None
@@ -469,50 +476,5 @@ def web_from_rows(pages_rows: list[dict], domains_rows: list[dict]) -> Synthetic
     """Build a SyntheticWeb from the engine's synthetic-web frame-schema
     row dicts (what gate_web generators emit) — lets the HTTP server serve
     the exact fixture webs the driver gates crawl."""
-    from .synthetic_web import HTML, DomainSpec
-
-    def _nn(v):
-        return None if v is None else v
-
-    domains: dict[str, DomainSpec] = {}
-    for rec in domains_rows:
-        domains[rec["domain"]] = DomainSpec(
-            domain=rec["domain"],
-            proto=rec.get("proto", "https"),
-            probe=rec.get("probe", "ok"),
-            robots_txt=_nn(rec.get("robots_txt")),
-            site_kind=rec.get("site_kind", "default"),
-            crawl_depth=int(rec.get("crawl_depth", 1000)),
-            seed_urls=list(rec.get("seed_urls") or []),
-            sitemap_urls=list(rec.get("sitemap_urls") or []),
-            generator_meta=rec.get("generator_meta", "") or "",
-            has_lemmy_config=bool(rec.get("has_lemmy_config", False)),
-        )
-    pages: dict = {}
-    for rec in pages_rows:
-        page = Page(
-            url=rec["url"],
-            domain=rec["domain"],
-            path=rec["path"],
-            param=_nn(rec.get("param")),
-            status=int(rec["status"]),
-            redirect_to=_nn(rec.get("redirect_to")),
-            content_type=_nn(rec.get("content_type")) or HTML,
-            image_id=_nn(rec.get("image_id")),
-            base_href=_nn(rec.get("base_href")),
-            links=list(rec.get("links") or []),
-            feed_links=list(rec.get("feed_links") or []),
-            body_marker=_nn(rec.get("body_marker")),
-            etag=_nn(rec.get("etag")),
-            last_modified=_nn(rec.get("last_modified")),
-            body_text=_nn(rec.get("body_text")),
-            transient_status=int(rec.get("transient_status") or 0),
-            transient_count=int(rec.get("transient_count") or 0),
-            retry_after=_nn(rec.get("retry_after")),
-            head_status=int(rec.get("head_status") or 0),
-            icon_href=_nn(rec.get("icon_href")),
-            set_cookie=_nn(rec.get("set_cookie")),
-            x_robots=_nn(rec.get("x_robots")),
-        )
-        pages[(page.domain, page.path, page.param)] = page
-    return SyntheticWeb(domains, pages)
+    domains = {rec["domain"]: from_row(DomainInfo, rec) for rec in domains_rows}
+    return SyntheticWeb(domains, pages_by_key(pages_rows))

@@ -23,7 +23,7 @@ Fetch semantics implemented by ``SyntheticWeb.fetch``:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import MISSING, dataclass, field, fields
 from functools import lru_cache
 from typing import Optional
 
@@ -78,17 +78,54 @@ class Page:
 
 
 @dataclass
-class DomainSpec:
+class DomainInfo:
+    """Static per-domain facts the crawl session needs: a row of the
+    domains table without ``top_domain``.  The field order is the key
+    order of the ``info_json`` that ``SparkCrawlEngine.init_run`` stores."""
+
     domain: str
-    proto: str  # preferred proto ("https"/"http")
-    probe: str  # "ok" | "redirect:<domain>" | "error"
-    robots_txt: Optional[str]
-    site_kind: str
-    crawl_depth: int
-    seed_urls: list[str]
-    sitemap_urls: list[str] = field(default_factory=list)
+    proto: str = "https"  # preferred proto ("https"/"http")
+    probe: str = "ok"  # "ok" | "redirect:<domain>" | "error"
+    robots_txt: Optional[str] = None
+    site_kind: str = "default"
     generator_meta: str = ""
     has_lemmy_config: bool = False
+    sitemap_urls: list = field(default_factory=list)
+    crawl_depth: int = 1000
+    seed_urls: list = field(default_factory=list)
+
+
+@lru_cache(maxsize=None)
+def _field_names(cls) -> tuple[tuple[str, bool], ...]:
+    """(name, has no default) per field of the dataclass ``cls``."""
+    return tuple(
+        (f.name, f.default is MISSING and f.default_factory is MISSING) for f in fields(cls)
+    )
+
+
+def from_row(cls, row: dict, **defaults):
+    """The ``Page`` or ``DomainInfo`` of one table row (a dict; other keys
+    are ignored).  A field the row lacks or holds as null takes
+    ``defaults[name]`` if given, else the field's own default; a field
+    with no default is passed as it is."""
+    kw = {}
+    for name, required in _field_names(cls):
+        v = row.get(name)
+        if v is None:
+            v = defaults.get(name)
+        if v is not None or required:
+            kw[name] = v
+    return cls(**kw)
+
+
+def pages_by_key(rows) -> dict:
+    """(domain, path, param) → ``Page`` for rows of the pages table, the
+    page map a ``SyntheticWeb`` serves."""
+    pages = {}
+    for row in rows:
+        page = from_row(Page, row)
+        pages[(page.domain, page.path, page.param)] = page
+    return pages
 
 
 def conditional_304(page: Page, etag: Optional[str], last_modified: Optional[str]) -> bool:
@@ -122,7 +159,7 @@ def _apply_transient(page: Page, url: EdgeUrl, attempt: int) -> Page:
 
 
 class SyntheticWeb:
-    def __init__(self, domains: dict[str, DomainSpec], pages: dict):
+    def __init__(self, domains: dict[str, DomainInfo], pages: dict):
         self.domains = domains
         self._pages = pages  # (domain_address, path, param) → Page
 
@@ -132,8 +169,8 @@ class SyntheticWeb:
     def fetch(self, url: EdgeUrl) -> Page:
         """Returns a Page; synthesizes 404 / -1 rows for misses and
         wrong-proto fetches (wrong proto = connection failure)."""
-        spec = self.domains.get(url.domain.address)
-        if spec is None or url.proto != spec.proto:
+        info = self.domains.get(url.domain.address)
+        if info is None or url.proto != info.proto:
             return Page(str(url), url.domain.address, url.path, url.param, -1)
         page = self.page_at(url)
         if page is None:
@@ -346,7 +383,7 @@ def generate_web(
 
     ``heavy_domain_pages`` > 0 makes domain 0 that large (skew testing).
     """
-    domains: dict[str, DomainSpec] = {}
+    domains: dict[str, DomainInfo] = {}
     pages: dict = {}
     img_counter = 0
 
@@ -395,7 +432,7 @@ def generate_web(
         if i % 6 == 0 and len(canonical) > 3:
             seed_urls.append(canonical[2].replace("https://", "http://", 1))
 
-        spec = DomainSpec(
+        domains[name] = DomainInfo(
             domain=name,
             proto=proto,
             probe=probe,
@@ -410,7 +447,6 @@ def generate_web(
             ),
             has_lemmy_config=(kind == "lemmy"),
         )
-        domains[name] = spec
 
         # per-page records
         for idx, (path, param) in enumerate(path_list):
@@ -631,84 +667,33 @@ def generate_web(
 
 
 def web_to_frames(web: SyntheticWeb):
-    """(pages_df, domains_df) as pandas — the parquet/Spark representation."""
+    """(pages_df, domains_df) as pandas — the parquet/Spark representation,
+    with the ``spark_schemas`` columns in their order (createDataFrame maps
+    pandas columns by position; ``url`` is Page's first field but the
+    schema's fourth).  Columns are read with getattr: ``dataclasses.asdict``
+    deep-copies every record."""
     import pandas as pd
 
-    prows = []
-    for p in web.all_pages():
-        prows.append(
-            {
-                "domain": p.domain,
-                "path": p.path,
-                "param": p.param,
-                "url": p.url,
-                "status": p.status,
-                "redirect_to": p.redirect_to,
-                "content_type": p.content_type,
-                "image_id": p.image_id,
-                "base_href": p.base_href,
-                "links": p.links,
-                "feed_links": p.feed_links,
-                "body_marker": p.body_marker,
-                "etag": p.etag,
-                "last_modified": p.last_modified,
-                "body_text": p.body_text,
-                "transient_status": p.transient_status,
-                "transient_count": p.transient_count,
-                "retry_after": p.retry_after,
-                "head_status": p.head_status,
-                "icon_href": p.icon_href,
-                "set_cookie": p.set_cookie,
-                "x_robots": p.x_robots,
-            }
-        )
-    drows = []
-    for d in web.domains.values():
-        drows.append(
-            {
-                "domain": d.domain,
-                "top_domain": top_domain_of(d.domain),
-                "proto": d.proto,
-                "probe": d.probe,
-                "robots_txt": d.robots_txt,
-                "site_kind": d.site_kind,
-                "crawl_depth": d.crawl_depth,
-                "seed_urls": d.seed_urls,
-                "sitemap_urls": d.sitemap_urls,
-                "generator_meta": d.generator_meta,
-                "has_lemmy_config": d.has_lemmy_config,
-            }
-        )
-    return pd.DataFrame(prows), pd.DataFrame(drows)
-
-
-_PAGE_DEFAULTS = {
-    "transient_status": 0,
-    "transient_count": 0,
-    "retry_after": None,
-    "head_status": 0,
-    "icon_href": None,
-    "set_cookie": None,
-    "x_robots": None,
-}
-
-
-_PAGE_COLUMNS = [
-    "domain", "path", "param", "url", "status", "redirect_to",
-    "content_type", "image_id", "base_href", "links", "feed_links",
-    "body_marker", "etag", "last_modified", "body_text",
-    "transient_status", "transient_count", "retry_after", "head_status",
-    "icon_href", "set_cookie", "x_robots",
-]
+    ps, ds = spark_schemas()
+    pages = web.all_pages()
+    domains = list(web.domains.values())
+    top = [top_domain_of(d.domain) for d in domains]
+    return (
+        pd.DataFrame({c: [getattr(p, c) for p in pages] for c in ps.names}),
+        pd.DataFrame(
+            {c: top if c == "top_domain" else [getattr(d, c) for d in domains] for c in ds.names}
+        ),
+    )
 
 
 def normalize_pages_pdf(pdf):
-    """Fill schema columns a hand-built fixture omitted with their defaults
-    and put columns in schema order (createDataFrame maps by position)."""
-    for col, default in _PAGE_DEFAULTS.items():
-        if col not in pdf.columns:
-            pdf[col] = default
-    return pdf[_PAGE_COLUMNS]
+    """Fill schema columns a hand-built fixture omitted with the ``Page``
+    field's scalar default and put columns in schema order
+    (createDataFrame maps by position)."""
+    for f in fields(Page):
+        if f.name not in pdf.columns and f.default is not MISSING:
+            pdf[f.name] = f.default
+    return pdf[spark_schemas()[0].names]
 
 
 def spark_schemas():
@@ -759,69 +744,6 @@ def spark_schemas():
         ]
     )
     return pages, domains
-
-
-class DomainPagesWeb:
-    """WebLike view over one domain's pages (the cogrouped Arrow slice a
-    Spark wave UDF receives, a ``pyarrow.Table`` in the pages schema).
-    Same fetch semantics as SyntheticWeb."""
-
-    def __init__(self, domain: str, proto: str, pages):
-        self.domain = domain
-        self.proto = proto
-        self._pages: dict = {}
-        for rec in pages.to_pylist():
-            links = rec.get("links")
-            feeds = rec.get("feed_links")
-            page = Page(
-                url=rec["url"],
-                domain=rec["domain"],
-                path=rec["path"],
-                param=rec.get("param"),
-                status=int(rec["status"]),
-                redirect_to=rec.get("redirect_to"),
-                content_type=rec.get("content_type") or HTML,
-                image_id=rec.get("image_id"),
-                base_href=rec.get("base_href"),
-                links=list(links) if links is not None else [],
-                feed_links=list(feeds) if feeds is not None else [],
-                body_marker=rec.get("body_marker"),
-                etag=rec.get("etag"),
-                last_modified=rec.get("last_modified"),
-                body_text=rec.get("body_text"),
-                transient_status=int(rec.get("transient_status") or 0),
-                transient_count=int(rec.get("transient_count") or 0),
-                retry_after=rec.get("retry_after"),
-                head_status=int(rec.get("head_status") or 0),
-                icon_href=rec.get("icon_href"),
-                set_cookie=rec.get("set_cookie"),
-                x_robots=rec.get("x_robots"),
-            )
-            self._pages[(page.domain, page.path, page.param)] = page
-
-    def page_at(self, url: EdgeUrl) -> Optional[Page]:
-        return self._pages.get((url.domain.address, url.path, url.param))
-
-    def fetch(self, url: EdgeUrl) -> Page:
-        if url.domain.address != self.domain or url.proto != self.proto:
-            return Page(str(url), url.domain.address, url.path, url.param, -1)
-        page = self.page_at(url)
-        if page is None:
-            return Page(str(url), url.domain.address, url.path, url.param, 404)
-        return page
-
-    def fetch_attempt(self, url: EdgeUrl, attempt: int = 1) -> Page:
-        return _apply_transient(self.fetch(url), url, attempt)
-
-    def fetch_conditional(
-        self,
-        url: EdgeUrl,
-        etag: Optional[str] = None,
-        last_modified: Optional[str] = None,
-        attempt: int = 1,
-    ) -> tuple[Page, bool]:
-        page = self.fetch_attempt(url, attempt)
-        return page, conditional_304(page, etag, last_modified)
 
 
 @lru_cache(maxsize=1 << 16)

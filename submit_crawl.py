@@ -52,8 +52,9 @@ def main() -> None:
         help="at most C domains may start crawling per wave (the "
         "reference's connection-launch stagger; niceness-only)")
     ap.add_argument(
-        "--transport", choices=["pandas", "http"], default="pandas",
-        help="'http' serves the generated web over localhost sockets "
+        "--transport", choices=["arrow", "http"], default="arrow",
+        help="'arrow' feeds each domain's pages to the wave UDF as its "
+        "cogrouped Arrow slice; 'http' serves the generated web over localhost sockets "
         "(sources/httpweb.SyntheticWebServer) and the wave UDF's Python "
         "workers fetch it with real HTTP connections — the live-fetch "
         "launch shape; on a multi-node cluster the server host must be "

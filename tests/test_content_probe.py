@@ -12,8 +12,9 @@ from marginaliasearch_spark.functions.contenttype import (
 )
 from marginaliasearch_spark.oracle.session import DomainCrawlSession, DomainInfo
 from marginaliasearch_spark.sources.synthetic_web import (
-    DomainPagesWeb,
+    SyntheticWeb,
     normalize_pages_pdf,
+    pages_by_key,
 )
 
 NAME = "ctp.example.org"
@@ -53,7 +54,7 @@ def _session(rows):
     pages = pa.Table.from_pandas(
         normalize_pages_pdf(pd.DataFrame(full, dtype=object)), preserve_index=False
     )
-    web = DomainPagesWeb(NAME, "https", pages)
+    web = SyntheticWeb({NAME: DomainInfo(domain=NAME)}, pages_by_key(pages.to_pylist()))
     return DomainCrawlSession(DomainInfo(domain=NAME, crawl_depth=100), web)
 
 

@@ -8,8 +8,9 @@ import pyarrow as pa
 from marginaliasearch_spark.canon.url import EdgeUrl
 from marginaliasearch_spark.oracle.session import DomainCrawlSession, DomainInfo
 from marginaliasearch_spark.sources.synthetic_web import (
-    DomainPagesWeb,
+    SyntheticWeb,
     normalize_pages_pdf,
+    pages_by_key,
 )
 
 NAME = "pw.example.org"
@@ -26,7 +27,8 @@ def _web(rows, proto="https"):
     pages = pa.Table.from_pandas(
         normalize_pages_pdf(pd.DataFrame(full)), preserve_index=False
     )
-    return DomainPagesWeb(NAME, proto, pages)
+    info = DomainInfo(domain=NAME, proto=proto)
+    return SyntheticWeb({NAME: info}, pages_by_key(pages.to_pylist()))
 
 
 def _session(web, proto="https"):

@@ -128,7 +128,7 @@ def test_spark_recrawl_matches_oracle(spark, web, round1, tmp_path_factory):
 # ---------------------------------------------------------------------------
 
 from marginaliasearch_spark.oracle.session import DomainCrawlSession, DomainInfo, _lsh64_signed
-from marginaliasearch_spark.sources.synthetic_web import DomainSpec, Page, SyntheticWeb
+from marginaliasearch_spark.sources.synthetic_web import Page, SyntheticWeb
 
 _RC_DOMAIN = "rc.example.org"
 _BODY = "<html><body>" + "the quick brown fox jumps over the lazy dog " * 20 + "</body></html>"
@@ -169,7 +169,7 @@ def _rc_web():
             _rc_page("/g.html", etag='"G2"', lm="Tue, 02 Jan 2024 00:00:00 GMT", body=_BODY_DIFF),
         ]
     }
-    spec = DomainSpec(
+    spec = DomainInfo(
         domain=_RC_DOMAIN, proto="https", probe="ok", robots_txt=None,
         site_kind="default", crawl_depth=10_000, seed_urls=[],
     )
@@ -250,7 +250,7 @@ def test_body_budget_clips_before_fingerprinting(monkeypatch):
             _rc_page("/big.html", body=big),  # no validators → LSH arm
         ]
     }
-    spec = DomainSpec(
+    spec = DomainInfo(
         domain=_RC_DOMAIN, proto="https", probe="ok", robots_txt=None,
         site_kind="default", crawl_depth=10_000, seed_urls=[],
     )

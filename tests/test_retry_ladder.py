@@ -7,9 +7,10 @@ import pyarrow as pa
 from marginaliasearch_spark.oracle.session import DomainCrawlSession, DomainInfo
 from marginaliasearch_spark.sources.gate_web import _RETRY_CASES, generate_retry_fixture
 from marginaliasearch_spark.sources.synthetic_web import (
-    DomainPagesWeb,
+    SyntheticWeb,
     fetch_time_ms,
     normalize_pages_pdf,
+    pages_by_key,
 )
 
 
@@ -23,7 +24,8 @@ def _session_for_domain(i: int = 0) -> DomainCrawlSession:
         robots_txt=d["robots_txt"], site_kind=d["site_kind"],
         crawl_depth=d["crawl_depth"], seed_urls=d["seed_urls"],
     )
-    return DomainCrawlSession(info, DomainPagesWeb(d["domain"], d["proto"], pages))
+    web = SyntheticWeb({d["domain"]: info}, pages_by_key(pages.to_pylist()))
+    return DomainCrawlSession(info, web)
 
 
 def test_retry_interval_arithmetic():
