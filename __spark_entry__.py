@@ -983,7 +983,7 @@ def q_ip_admission(spark, sf_dir):
     19-42) as pure Column predicates over planted domain facts: .cn TLD,
     4-digit-run hostnames, CIDR range hit, geo-graylist non-www subdomain.
     The oracle declares the planted truth per case."""
-    from marginaliasearch_spark.operators.ipblocklist import domain_blocked_col
+    from marginaliasearch_spark.operators.ipblocklist import domain_blocked_expr
 
     docs = _t(spark, sf_dir, "documents")
     k = F.col("doc_id") % 6
@@ -1002,10 +1002,14 @@ def q_ip_admission(spark, sf_dir):
         F.lit(10 << 24) + F.col("doc_id") % 250
     )
     cidr_lo, cidr_hi = (10 << 24) | (9 << 16), ((10 << 24) | (9 << 16)) + 0xFFFF
-    blocked = domain_blocked_col(domain, sub, country) | ip_int.between(cidr_lo, cidr_hi)
-    return docs.select(
-        "doc_id", domain.alias("domain"), blocked.cast("int").alias("blocked")
+    facts = docs.select(
+        "doc_id", domain.alias("domain"), sub.alias("sub"), country.alias("country"),
+        ip_int.alias("ip_int"),
     )
+    blocked = F.expr(domain_blocked_expr("domain", "sub", "country")) | F.col("ip_int").between(
+        cidr_lo, cidr_hi
+    )
+    return facts.select("doc_id", "domain", blocked.cast("int").alias("blocked"))
 
 
 def q_minhash_dup_pairs(spark, sf_dir):

@@ -10,7 +10,7 @@ IpBlockList.java:61-93, GeoIpBlocklist.java:19-42):
 - geo graylist {CN,HK,RU,TW,IN,ZA,SG,UA}: allowed only for bare or
   ``www.`` hosts.
 
-Provided as predicate + Column forms; the CIDR check uses an int-range
+Provided as predicate + SQL forms; the CIDR check uses an int-range
 join (ip int BETWEEN lo AND hi) against a broadcast ranges table.
 """
 
@@ -19,7 +19,7 @@ from __future__ import annotations
 import re
 from typing import Optional
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 GEO_GRAYLIST = frozenset({"CN", "HK", "RU", "TW", "IN", "ZA", "SG", "UA"})
@@ -69,14 +69,14 @@ def is_domain_blocked(
     return False
 
 
-def domain_blocked_col(
-    domain: Column, sub_domain: Column, country: Column
-) -> Column:
-    """Column form (CIDR check joins separately via blocked_by_cidr)."""
+def domain_blocked_expr(domain: str, sub_domain: str, country: str) -> str:
+    """SQL form over SQL expressions for the three inputs (CIDR check
+    joins separately via blocked_by_cidr); a caller plans it with the rest
+    of its projection, in one py4j call."""
+    gray = ", ".join(f"'{c}'" for c in sorted(GEO_GRAYLIST))
     return (
-        domain.endswith(".cn")
-        | domain.rlike(r"\d{4,}")
-        | (country.isin(*GEO_GRAYLIST) & ~sub_domain.isin("", "www"))
+        f"endswith({domain}, '.cn') OR {domain} RLIKE '[0-9]{{4,}}'"
+        f" OR ({country} IN ({gray}) AND {sub_domain} NOT IN ('', 'www'))"
     )
 
 

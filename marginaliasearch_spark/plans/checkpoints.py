@@ -8,9 +8,9 @@ so the same mechanics are provided over plain parquet:
   table, the live data paths relative to the root, so a copied root is
   a store of its own (append tables accumulate paths, replace tables
   point at the latest version), plus the owner's scalar fields
-  (the crawl's ``budgeted``/``n_buckets``/``seed``, the URL-seen store's
-  ``n_buckets``/``max_fill_est``), each carried forward from the previous
-  snapshot unless the commit sets it;
+  (the crawl's ``budgeted``/``n_buckets``/``seed``/``runnable``, the
+  URL-seen store's ``n_buckets``/``max_fill_est``), each carried forward
+  from the previous snapshot unless the commit sets it;
 - resume = load the last committed manifest and continue from its wave;
 - a killed run leaves at most an uncommitted wave directory behind, which
   the next run ignores (atomic commit = manifest write + rename).

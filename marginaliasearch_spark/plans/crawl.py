@@ -55,6 +55,7 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import fields
+from functools import reduce
 from typing import Optional
 
 import pyarrow as pa
@@ -192,19 +193,20 @@ DOMAIN_STATE_SCHEMA = T.StructType(
 _SPEC_FIELDS = ("crawl_depth", "seed_urls")
 
 
-def _state_rows(df: DataFrame, kind, **cols) -> DataFrame:
-    """One state-side input of the wave cogroup, in STATE_IN_SCHEMA column
-    order: ``domain`` from ``df``, ``row_kind`` = ``kind`` (a literal or a
-    Column), each given column (a name or Column) cast to its schema type;
-    a column not given is a typed null."""
-    given = {"domain": "domain", "row_kind": F.lit(kind), **cols}
-    out = []
-    for f in STATE_IN_SCHEMA.fields:
-        c = given.get(f.name, F.lit(None))
-        if isinstance(c, str):
-            c = F.col(c)
-        out.append(c.cast(f.dataType).alias(f.name))
-    return df.select(*out)
+def _state_rows(df: DataFrame, *extra: str, **cols: str) -> DataFrame:
+    """One state-side input of the wave cogroup: the STATE_IN_SCHEMA
+    columns in order, each given column (a SQL expression over ``df``;
+    ``domain`` defaults to ``domain``) cast to its schema type and a column
+    not given a typed null, then the ``extra`` expressions.  One
+    ``selectExpr``: the projection is planned in one py4j call."""
+    given = {"domain": "domain", **cols}
+    return df.selectExpr(
+        *(
+            f"CAST({given.get(f.name, 'NULL')} AS {f.dataType.simpleString()}) AS {f.name}"
+            for f in STATE_IN_SCHEMA.fields
+        ),
+        *extra,
+    )
 
 
 def _kind_rows(state: pa.Table, kind: str, cols: list) -> list[dict]:
@@ -214,25 +216,35 @@ def _kind_rows(state: pa.Table, kind: str, cols: list) -> list[dict]:
     return rows.select(cols).to_pylist()
 
 
-def _run_code(phase):
-    """A phase as the integer run code the state read carries: 2 = active,
-    1 = pending (both runnable; a mid-crawl domain outranks a waiting one),
-    0 = terminal."""
-    return F.when(phase == "active", 2).when(phase == "pending", 1).otherwise(0)
+def _run_code(phase: str) -> str:
+    """The SQL run code of the phase expression ``phase``, as the state
+    read carries it: 2 = active, 1 = pending (both runnable; a mid-crawl
+    domain outranks a waiting one), 0 = terminal."""
+    return f"CASE {phase} WHEN 'active' THEN 2 WHEN 'pending' THEN 1 ELSE 0 END"
 
 
-def _pinned(wave_out: DataFrame, pin: DataFrame) -> DataFrame:
-    """Each domain's live state rows in ``wave_out``: its domain_state row
-    from ``state_wave`` and its frontier rows from ``frontier_wave`` (the
-    columns of ``pin``).  One broadcast semi-join on (domain, row_kind,
-    wave), so only live rows reach any later shuffle."""
-    keys = pin.selectExpr(
-        "domain",
-        "stack(2, 'domain_state', state_wave, 'frontier', frontier_wave) AS (row_kind, wave)",
-    )
-    return wave_out.filter(F.col("row_kind").isin("domain_state", "frontier")).join(
-        F.broadcast(keys), ["domain", "row_kind", "wave"], "left_semi"
-    )
+# the state row kinds of wave_out: the merge-on-read views read each
+# domain's latest ones
+_STATE_KINDS = "row_kind IN ('domain_state', 'frontier')"
+
+# a pin's columns (the runnable set's, or ``_latest_waves``'), and the
+# condition that keeps a row joined with its domain's pin row: a
+# domain_state row of the domain's state_wave, a frontier row of its
+# frontier_wave, any other row (prev_crawl, atag) while the domain is
+# pending.  It reads both sides, so it is never pushed into the pin.
+_PIN_COLS = ("run", "state_wave", "frontier_wave")
+_LIVE = (
+    "CASE row_kind WHEN 'domain_state' THEN wave = state_wave"
+    " WHEN 'frontier' THEN wave = frontier_wave ELSE run = 1 END"
+)
+
+
+def _live_state(wave_out: DataFrame) -> DataFrame:
+    """Each domain's live state rows in ``wave_out`` (its columns), the
+    rows the merge-on-read views read: one broadcast join on domain."""
+    latest = F.broadcast(_latest_waves(wave_out))
+    live = wave_out.filter(_STATE_KINDS).join(latest, "domain").filter(_LIVE)
+    return live.select(*wave_out.columns)
 
 
 def _latest_waves(wave_out: DataFrame) -> DataFrame:
@@ -242,15 +254,14 @@ def _latest_waves(wave_out: DataFrame) -> DataFrame:
     ``_run_code`` of that latest domain_state row.  An aggregate over
     integers only (a hash aggregate; ``max_by`` skips the frontier rows'
     null ordering)."""
-    kind = F.col("row_kind")
-    state_wave = F.when(kind == "domain_state", F.col("wave"))
+    state_wave = "CASE WHEN row_kind = 'domain_state' THEN wave END"
     return (
-        wave_out.filter(kind.isin("domain_state", "frontier"))
+        wave_out.filter(_STATE_KINDS)
         .groupBy("domain")
         .agg(
-            F.max(state_wave).alias("state_wave"),
-            F.max(F.when(kind == "frontier", F.col("wave"))).alias("frontier_wave"),
-            F.max_by(_run_code(F.col("state")), state_wave).alias("run"),
+            F.expr(f"max({state_wave}) AS state_wave"),
+            F.expr("max(CASE WHEN row_kind = 'frontier' THEN wave END) AS frontier_wave"),
+            F.expr(f"max_by({_run_code('state')}, {state_wave}) AS run"),
         )
     )
 
@@ -328,6 +339,7 @@ def _make_wave_fn(
             )
 
     def _wave_fn_inner(domain: str, state: pa.Table, pages: pa.Table) -> pa.Table:
+        state = pa.Table.from_struct_array(state.column("state"))
         info_rows = _kind_rows(state, "info", ["info_json"])
         if not info_rows:
             return _OUT_ARROW.empty_table()
@@ -350,7 +362,7 @@ def _make_wave_fn(
                 transport["ports"], host=transport.get("host", "127.0.0.1")
             )
         else:
-            web = SyntheticWeb({domain: info}, pages_by_key(pages.to_pylist()))
+            web = SyntheticWeb({domain: info}, pages_by_key(pages.column("page").to_pylist()))
 
         latest = _kind_rows(state, "domain_state", ["state_json"])
         state_json = latest[0]["state_json"] if latest else None
@@ -530,12 +542,15 @@ class SparkCrawlEngine:
         # the bucket layout is a property of the PERSISTED run, not the
         # instance: a resume engine constructed with a different n_buckets
         # would give the frontier view different bucket keys mid-run, so
-        # the constructor's layout is only the catalog's starting value
+        # the constructor's layout is only the catalog's starting value.
+        # ``runnable`` is the number of pending or active domains at the
+        # snapshot: init_run sets it, each wave commits what it left
+        # (None = no run of this layout, which run_waves refuses)
         self.catalog = SnapshotCatalog(
             out_dir,
             APPEND_TABLES,
             REPLACE_TABLES,
-            {"budgeted": False, "n_buckets": n_buckets, "seed": seed},
+            {"budgeted": False, "n_buckets": n_buckets, "seed": seed, "runnable": None},
         )
         self._adopt_layout()
         # opt-in politeness analogues of the reference's two global
@@ -597,7 +612,7 @@ class SparkCrawlEngine:
             return None
         if table == "frontier":
             return (
-                _pinned(w, _latest_waves(w))
+                _live_state(w)
                 .filter(F.col("row_kind") == "frontier")
                 .select(*_VIEW_COLS["frontier"], self._bucket(F.col("domain")).alias("bucket"))
             )
@@ -649,15 +664,19 @@ class SparkCrawlEngine:
         of DOMAIN_STATE_SCHEMA, phase/state_json as init_run wrote them)
         joined with the ``_latest_waves`` columns of its wave_out rows
         ``w``; ``run`` falls back to the base phase's code for a domain
-        with no wave_out rows.  Only integers and the domain key are
-        aggregated; a domain's latest state_json is read through
-        ``_pinned``."""
+        with no wave_out rows (whose state_wave and frontier_wave are
+        null).  Only integers and the domain key are aggregated; a domain's
+        latest state_json is read through the pin (``_LIVE``)."""
         base = self._base(tables)
-        run = _run_code(F.col("phase"))
+        code = _run_code("phase")
         if w is None:
-            return base.withColumn("run", run)
-        return base.join(_latest_waves(w), "domain", "left").withColumn(
-            "run", F.coalesce(F.col("run"), run)
+            return base.selectExpr(
+                *DOMAIN_STATE_SCHEMA.names, f"{code} AS run",
+                "CAST(NULL AS INT) AS state_wave", "CAST(NULL AS INT) AS frontier_wave",
+            )
+        return base.join(_latest_waves(w), "domain", "left").selectExpr(
+            *DOMAIN_STATE_SCHEMA.names, f"coalesce(run, {code}) AS run",
+            "state_wave", "frontier_wave",
         )
 
     def _base(self, tables: dict) -> DataFrame:
@@ -673,7 +692,7 @@ class SparkCrawlEngine:
         if w is None:
             return base
         live = (
-            _pinned(w, _latest_waves(w))
+            _live_state(w)
             .filter(F.col("row_kind") == "domain_state")
             .select("domain", F.col("state").alias("_phase"), F.col("state_json").alias("_json"))
         )
@@ -722,78 +741,70 @@ class SparkCrawlEngine:
         domains are RECORDED with terminal phase 'blocked_ip' (never
         crawled, visible in domain_state) rather than silently dropped.
         """
-        from ..operators.ipblocklist import domain_blocked_col
+        from ..operators.ipblocklist import domain_blocked_expr
 
-        wd = web_domains_df
-        joined = specs_df.alias("s").join(wd.alias("w"), on="domain", how="left")
-        top = F.coalesce(F.col("w.top_domain"), F.col("domain"))
+        joined = specs_df.alias("s").join(web_domains_df.alias("w"), on="domain", how="left")
+        # the projections are SQL expressions (each is planned in one py4j
+        # call, not one per Column operation)
+        top = "coalesce(w.top_domain, domain)"
         # sub_domain = hostname minus ".top_domain" ("" when they coincide)
-        sub = F.when(F.col("domain") == top, F.lit("")).otherwise(
-            F.col("domain").substr(F.lit(1), F.length(F.col("domain")) - F.length(top) - 1)
+        sub = (
+            f"CASE WHEN domain = {top} THEN '' "
+            f"ELSE substr(domain, 1, length(domain) - length({top}) - 1) END"
         )
+        country, ip_int = "CAST(NULL AS STRING)", "CAST(NULL AS BIGINT)"
         if ip_facts_df is not None:
             # deterministic single fact per domain (a multi-homed host with
             # several fact rows must not make admission partition-order
             # dependent): keep the lexicographic minimum
-            ip_one = ip_facts_df.groupBy("domain").agg(
-                F.min(F.struct(*[c for c in ip_facts_df.columns if c != "domain"])).alias("_f")
-            )
-            ip_one = ip_one.select(
-                "domain",
-                *[
-                    F.col(f"_f.{c}").alias(c)
-                    for c in ip_facts_df.columns
-                    if c != "domain"
-                ],
+            facts = ", ".join(f"`{c}`" for c in ip_facts_df.columns if c != "domain")
+            ip_one = (
+                ip_facts_df.groupBy("domain")
+                .agg(F.expr(f"min(struct({facts})) AS _f"))
+                .selectExpr("domain", "_f.*")
             )
             joined = joined.join(F.broadcast(ip_one), "domain", "left")
-            country = F.col("country")
-            ip_int = F.col("ip_int") if "ip_int" in ip_facts_df.columns else F.lit(None)
-        else:
-            country = F.lit(None).cast("string")
-            ip_int = F.lit(None).cast("long")
-        blocked = domain_blocked_col(F.col("domain"), sub, country)
-        joined = joined.withColumn("_ip_blocked", blocked).withColumn("_ip_int", ip_int)
+            country = "country"
+            if "ip_int" in ip_facts_df.columns:
+                ip_int = "ip_int"
+        blocked = domain_blocked_expr("domain", sub, country)
         if cidr_df is not None:
             # range-join against the broadcast CIDR dimension; the hit set
             # is tiny → broadcast it back as a flag
-            cidr_hit = joined.select("domain", "_ip_int").join(
-                F.broadcast(cidr_df),
-                (F.col("_ip_int") >= F.col("range_lo"))
-                & (F.col("_ip_int") <= F.col("range_hi")),
-                "left_semi",
+            cidr_hit = joined.selectExpr("domain", f"{ip_int} AS _ip_int").join(
+                F.broadcast(cidr_df), F.expr("_ip_int BETWEEN range_lo AND range_hi"), "left_semi"
             )
             joined = joined.join(
-                F.broadcast(
-                    cidr_hit.select("domain").withColumn("_cidr_hit", F.lit(True))
-                ),
-                "domain",
-                "left",
-            ).withColumn(
-                "_ip_blocked",
-                F.col("_ip_blocked") | F.coalesce(F.col("_cidr_hit"), F.lit(False)),
+                F.broadcast(cidr_hit.selectExpr("domain", "true AS _cidr_hit")), "domain", "left"
             )
-        ds = (
-            joined.select(
-                "domain",
-                top.alias("top_domain"),
-                F.to_json(
-                    F.struct(
-                        *[
-                            F.col(f"{'s' if f.name in _SPEC_FIELDS else 'w'}.{f.name}")
-                            .alias(f.name)
-                            for f in fields(DomainInfo)
-                            if f.name != "domain"
-                        ]
-                    )
-                ).alias("info_json"),
-                F.when(F.col("_ip_blocked"), F.lit("blocked_ip"))
-                .otherwise(F.lit("pending"))
-                .alias("phase"),
-                F.lit(None).cast("string").alias("state_json"),
-            )
-            .dropDuplicates(["domain"])  # duplicate specs dedup (CrawlerMain:550-552)
+            blocked = f"({blocked}) OR coalesce(_cidr_hit, false)"
+        info = ", ".join(
+            f"{'s' if f.name in _SPEC_FIELDS else 'w'}.{f.name} AS {f.name}"
+            for f in fields(DomainInfo)
+            if f.name != "domain"
         )
+        # duplicate specs of a domain (CrawlerMain.java:550-552 keeps the
+        # first in submission order): the largest crawl_depth wins, ties
+        # go to the smallest seed_urls — a function of the rows, not of
+        # their order or partitioning (DIVERGENCES.md)
+        pick = (
+            "row_number() OVER (PARTITION BY domain"
+            " ORDER BY s.crawl_depth DESC NULLS LAST, s.seed_urls NULLS LAST)"
+        )
+        ds = (
+            joined.withColumn("_pick", F.expr(pick))
+            .filter("_pick = 1")
+            .selectExpr(
+                "domain",
+                f"{top} AS top_domain",
+                f"to_json(struct({info})) AS info_json",
+                f"CASE WHEN {blocked} THEN 'blocked_ip' ELSE 'pending' END AS phase",
+                "CAST(NULL AS STRING) AS state_json",
+            )
+        )
+        # the run's runnable count rides its manifest: counted on the write
+        runnable = Observation()
+        ds = ds.observe(runnable, F.expr("count_if(phase = 'pending') AS n"))
         # init starts a NEW run: forget any leftover snapshots (commit(0)
         # would otherwise merge with a previous run's latest manifest, its
         # budgeted flag included); snapshot 0 pins the constructor's bucket
@@ -802,7 +813,7 @@ class SparkCrawlEngine:
         self._adopt_layout()
         path = self.catalog.wave_path("domain_state", 0)
         ds.write.mode("overwrite").parquet(path)
-        self.catalog.commit(0, {"domain_state": path})
+        self.catalog.commit(0, {"domain_state": path}, runnable=runnable.get["n"])
 
     def run_waves(
         self,
@@ -832,34 +843,45 @@ class SparkCrawlEngine:
         groups by domain, so a giant top-domain's runnable members stay
         spread across tasks.
 
-        The state read is one integer aggregate (``_state``): each
-        domain's ``run`` code picks the runnable set, and one broadcast
-        pin of the runnable domains' live rows (``_pinned``) feeds the
-        cogroup their latest state_json and frontier.  ``wave_out`` is the
-        wave's only write.
+        A wave plans from its snapshot: the manifest carries the number of
+        runnable (pending or active) domains, so the loop stops on it
+        before any job, and init_run's write and each wave's write keep it
+        exact.  The state read is one integer aggregate (``_state``): each
+        domain's ``run`` code picks the runnable set, and one broadcast of
+        it (``_LIVE``) prunes the pages and feeds the cogroup the
+        runnable domains' latest state_json and frontier.  ``wave_out`` is
+        the wave's only write.
 
         The wave sets its own width: both cogroup sides are hash-partitioned
         on ``domain`` into min(runnable domains, defaultParallelism)
-        partitions.  The wave groups are tiny in bytes but heavy in compute
-        (the per-domain crawl loop); AQE does not coalesce a repartition
-        with an explicit partition count, and ``spark.sql.shuffle.partitions``
-        does not set the number of Python tasks.
+        partitions, the runnable count read from the manifest.  The wave
+        groups are tiny in bytes but heavy in compute (the per-domain crawl
+        loop); AQE does not coalesce a repartition with an explicit
+        partition count, and ``spark.sql.shuffle.partitions`` does not set
+        the number of Python tasks.
         """
         import time as _time
 
         if prev_crawl_df is not None:
             # a missing column is an error: a filled-in null one would
             # silently turn off conditional GETs or the LSH retention arm
-            missing = [c for c in PREV_CRAWL_SCHEMA.names if c not in prev_crawl_df.columns]
+            missing = sorted(set(PREV_CRAWL_SCHEMA.names) - set(prev_crawl_df.columns))
             if missing:
                 raise ValueError(f"prev_crawl_df lacks column(s) {', '.join(missing)}")
-            prev_crawl_df = prev_crawl_df.select(*PREV_CRAWL_SCHEMA.names)
         waves_done = 0
         t_start = _time.monotonic()
         while waves_done < max_waves:
             if deadline_s is not None and _time.monotonic() - t_start >= deadline_s:
                 break  # timed-run deadline: stop submitting waves, stay resumable
             manifest = self.catalog.load()
+            runnable = manifest["runnable"]
+            if runnable is None:
+                raise ValueError(
+                    f"{self.out_dir} holds no run with a runnable count in its "
+                    "manifest; start the run with init_run"
+                )
+            if not runnable:
+                break  # before any job, and before any fold
             wave = manifest["wave"] + 1
 
             tables = manifest["tables"]
@@ -873,7 +895,7 @@ class SparkCrawlEngine:
             # one listing of this snapshot's wave_out files serves the state
             # read and the live-row pin
             w = self._wave_out_all(tables)
-            active = self._state(tables, w).filter(F.col("run") > 0)
+            active = self._state(tables, w).filter("run > 0")
             if group_key == "top_domain":
                 # PHYSICAL permit enforcement (the reference's semaphore is
                 # held for a domain's whole crawl —
@@ -920,80 +942,92 @@ class SparkCrawlEngine:
                 active = active.orderBy(F.desc("run"), F.col("domain")).limit(
                     int(self.global_request_cap)
                 )
-            # the runnable set feeds the state side, the live-row pin and
-            # the pages semi-join: cache it, and count it once — the count
-            # is both the wave's width and the termination test
-            active = active.persist()
-            n_active = active.count()
-            if not n_active:
-                active.unpersist()
-                break
-            width = min(n_active, self.spark.sparkContext.defaultParallelism)
-
-            left = _state_rows(active, "info", info_json="info_json")
+            width = min(runnable, self.spark.sparkContext.defaultParallelism)
+            # the runnable set is not cached: each reference below re-plans
+            # it within the one write query, and every one sees the same
+            # set (the slot claim and the limits order by (run, domain)).
+            # ONE broadcast of the runnable set prunes every wave input:
+            # the pages, each runnable domain's live wave_out rows (its
+            # latest domain_state row, its state_json, and its latest
+            # frontier wave's rows) and a pending domain's prev_crawl/atag
+            # rows, so nothing else reaches the shuffle — in late waves
+            # (1 % of domains runnable) the pruned shuffle is ~100×
+            # smaller.  Its columns ride along on both cogroup sides (the
+            # wave UDF ignores them): a broadcast side is pruned to the
+            # columns its join's output uses, and only equal broadcast
+            # sides share one exchange.
+            pin = F.broadcast(active.selectExpr("domain", *_PIN_COLS))
+            # (re-aliased: the two cogroup sides may not share attributes,
+            # and the pages side carries the pin's own)
+            left = _state_rows(
+                active, *(f"{c} AS {c}" for c in _PIN_COLS), row_kind="'info'",
+                info_json="info_json",
+            )
+            pruned = []
             if w is not None:
-                # each runnable domain's live rows: its latest domain_state
-                # row (its state_json) and its latest frontier wave's rows;
-                # older waves' rows never reach the shuffle
-                left = left.unionByName(
+                pruned.append(
                     _state_rows(
-                        _pinned(w, active), F.col("row_kind"), url_hash="url_hash",
-                        url="url", seq="seq", state="state", state_json="state_json",
+                        w.filter(_STATE_KINDS), "wave", row_kind="row_kind",
+                        url_hash="url_hash", url="url", seq="seq", state="state",
+                        state_json="state_json",
                     )
                 )
-            pending = active.filter(F.col("run") == 1).select("domain")
             if prev_crawl_df is not None:
-                pc = prev_crawl_df.join(pending, "domain", "left_semi")
-                left = left.unionByName(
+                pruned.append(
                     _state_rows(
-                        pc, "prev_crawl", url="url", seq="pos",
-                        http_status="http_status", image_id="image_id", etag="etag",
-                        last_modified="last_modified", lsh64="lsh64",
+                        prev_crawl_df, "CAST(NULL AS INT) AS wave", row_kind="'prev_crawl'",
+                        url="url", seq="pos", http_status="http_status", image_id="image_id",
+                        etag="etag", last_modified="last_modified", lsh64="lsh64",
                     )
                 )
             if atags_df is not None:
-                at = atags_df.join(pending, "domain", "left_semi")
-                left = left.unionByName(_state_rows(at, "atag", url="url", seq="pos"))
-
-            # prune the pages side to ACTIVE domains before the cogroup:
-            # terminal domains' pages would otherwise be shuffled every
-            # wave for nothing — in late waves (1% of domains active) the
-            # pruned shuffle is ~100× smaller.  The active list is tiny →
-            # broadcast semi-join, no extra shuffle.
-            pages_active = web_pages_df.join(
-                F.broadcast(active.select("domain")), "domain", "left_semi"
-            )
+                pruned.append(
+                    _state_rows(
+                        atags_df, "CAST(NULL AS INT) AS wave", row_kind="'atag'",
+                        url="url", seq="pos",
+                    )
+                )
+            if pruned:
+                rows = reduce(DataFrame.unionByName, pruned).join(pin, "domain")
+                if w is not None:
+                    # (in the first wave every runnable domain is pending,
+                    # and a condition on the pin alone would be pushed into
+                    # the broadcast side)
+                    rows = rows.filter(_LIVE)
+                left = left.unionByName(rows.drop("wave"))
+            pages = web_pages_df.join(pin, "domain")
             # the wave ALWAYS groups by domain — budget mode bounds WHICH
             # domains run (slot claim above) but never merges them into a
             # top-domain mega-group, so giant top-domains stay spread
             # across tasks
-            wave_fn = _make_wave_fn(
-                wave_budget,
-                self.seed,
-                self.transport,
-                self.body_cap_bytes,
-            )
-            out = (
-                left.repartition(width, "domain")
+            wave_fn = _make_wave_fn(wave_budget, self.seed, self.transport, self.body_cap_bytes)
+            # each side crosses into the UDF as (domain, one struct column
+            # of its rows): planning a cogroup side costs py4j calls per
+            # column
+            sides = [
+                df.selectExpr("domain", f"struct(*) AS {name}")
+                .repartition(width, "domain")
                 .groupby("domain")
-                .cogroup(pages_active.repartition(width, "domain").groupby("domain"))
-                .applyInArrow(wave_fn, WAVE_OUT_SCHEMA)
-            )
+                for df, name in ((left, "state"), (pages, "page"))
+            ]
+            out = sides[0].cogroup(sides[1]).applyInArrow(wave_fn, WAVE_OUT_SCHEMA)
 
             # ONE physical write per wave, and the wave's only state write:
             # the unified output log, partitioned by row_kind (the
             # wave=NNNNNN dir name is the outer partition).  The append
             # tables are row_kind-filtered views; frontier and domain_state
-            # are merge-on-read views over it.
-            # the write also counts the domains still runnable after this
-            # wave (observed in the same job)
-            still_runnable = Observation()
+            # are merge-on-read views over it.  The write also counts the
+            # domains this wave left terminal (observed in the same job):
+            # only a domain that runs emits a domain_state row, a held one
+            # stays runnable, and nothing makes a terminal domain runnable
+            # again, so the count the next snapshot carries is exact.
+            ended = Observation()
             out = out.observe(
-                still_runnable,
-                F.count_if(
-                    (F.col("row_kind") == "domain_state")
-                    & F.col("state").isin("pending", "active")
-                ).alias("n"),
+                ended,
+                F.expr(
+                    "count_if(row_kind = 'domain_state'"
+                    " AND state NOT IN ('pending', 'active')) AS n"
+                ),
             )
             opath = self.catalog.wave_path("wave_out", wave)
             out.write.partitionBy("row_kind").mode("overwrite").parquet(opath)
@@ -1002,18 +1036,9 @@ class SparkCrawlEngine:
                 {"wave_out": opath, **folded},
                 truncate_append={"wave_out"} if folded else None,
                 budgeted=manifest["budgeted"] or group_key == "top_domain",
+                runnable=runnable - ended.get["n"],
             )
-            active.unpersist()
             waves_done += 1
-            # termination: when no permit or cap held a runnable domain
-            # back, every runnable domain ran this wave, and the observed
-            # count says whether any is left; otherwise the NEXT
-            # iteration's runnable-set count decides
-            uncapped = group_key != "top_domain" and (
-                self.conn_launches_per_wave is None and self.global_request_cap is None
-            )
-            if uncapped and not still_runnable.get["n"]:
-                break
 
         return waves_done
 
@@ -1050,9 +1075,7 @@ class SparkCrawlEngine:
         read after a fold is bounded by the live state, not by the number
         of waves before it."""
         w = self._wave_out_all(tables)
-        df = w.filter(~F.col("row_kind").isin("domain_state", "frontier")).unionByName(
-            _pinned(w, _latest_waves(w))
-        )
+        df = w.filter(f"NOT {_STATE_KINDS}").unionByName(_live_state(w))
         cpath = os.path.join(self.out_dir, "wave_out_compacted", f"v={snap:06d}")
         df.write.partitionBy("row_kind").mode("overwrite").parquet(cpath)
         return cpath

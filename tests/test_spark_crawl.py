@@ -342,3 +342,52 @@ def test_refused_reprobe_candidates(spark, tmp_path):
     assert got == again
     refused_urls = {r["url"] for r in refused.collect()}
     assert set(got) <= refused_urls
+
+
+def test_one_wave_plan_is_small(spark, web_dfs, golden, tmp_path_factory, monkeypatch):
+    """A wave plans from its snapshot: a one-wave run submits at most 4
+    jobs (the runnable set's broadcast, the two cogroup sides' map stages,
+    the UDF and write), its write plan holds exactly one broadcast
+    exchange, and init_run + run_waves plan in at most 300 py4j round
+    trips."""
+    import threading
+
+    import py4j.clientserver
+
+    pages, domains, specs = web_dfs
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    out = str(tmp_path_factory.mktemp("crawl_plan"))
+    engine = SparkCrawlEngine(spark, out, seed=SEED, n_buckets=8)
+    round_trips = [0]
+    send = py4j.clientserver.ClientServerConnection.send_command
+    planner = threading.get_ident()
+
+    def counted(self, command):
+        # py4j's finalizer thread sends object-release commands on its
+        # own, asynchronously: the plans are built by the calling thread
+        round_trips[0] += threading.get_ident() == planner
+        return send(self, command)
+
+    monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counted)
+    engine.init_run(domains, specs)
+    sc.setJobGroup("one-wave-plan-test", "one wave")
+    try:
+        assert engine.run_waves(pages, wave_budget=None) == 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        monkeypatch.undo()
+    assert round_trips[0] <= 300
+    assert 0 < len(tracker.getJobIdsForGroup("one-wave-plan-test")) <= 4
+
+    store = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = [
+        p
+        for p in (store.apply(k).physicalPlanDescription() for k in range(store.size()))
+        if "FlatMapCoGroupsInArrow" in p and out in p
+    ]
+    assert plans
+    final = plans[-1].split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    assert len(re.findall(r"\bBroadcastExchange \(\d+\)", final)) == 1
+    _assert_matches_oracle(engine, golden)
